@@ -102,7 +102,7 @@ def connected_components(
     # joins run broadcast-hash over the PINNED edge partitions — per
     # round 3 Exchange → 1 (only the label groupBy). At scale |V| blows
     # the threshold and the shuffled path below runs unchanged.
-    # Same-JVM A/B (_ab_cc_bcast.py, identical pinned feed): broadcast
+    # Same-JVM A/B (OPTIMIZATION_r13.md, identical pinned feed): broadcast
     # faster in all 4 interleaved rounds, min 3.38 → 2.42 s, signatures
     # identical.
     from cumulus_etl_spark.operators.dedup import _parse_bytes

@@ -93,8 +93,6 @@ def _has_field(df: DataFrame, dotted: str) -> bool:
     guard silently disables when the frame doesn't carry the field (e.g.
     i2b2-sourced resources have no meta), matching the reference's
     only-guard-when-present behavior."""
-    from pyspark.sql.types import StructType
-
     dtype = df.schema
     for part in dotted.split("."):
         if not isinstance(dtype, StructType) or part not in dtype.fieldNames():
@@ -396,18 +394,16 @@ class ManagedTable:
 
         merged = allr.filter(keep)
 
+        # Every helper column this merge may add; drop() skips absent ones.
+        helper = ("__src", "__rn", "__have_upd", "__have_ex", "__take_upd", "__g", BUCKET_COL)
         change_parts: list[DataFrame] = []
         if policy.change_feed:
             # Classification reuses the window flags already computed for
             # the merge itself — no extra shuffle, one extra write.
-            helper = ["__src", "__rn", "__have_upd", "__have_ex"] + (
-                [BUCKET_COL] if fuse_bucket else []
-            )
             # __src == 1 parts take only the batch winner (__rn == 1),
             # matching what the pre-fusion standalone dedup emitted.
             win1 = (F.col("__src") == 1) & (F.col("__rn") == 1)
             if policy.update_existing:
-                helper.append("__take_upd")
                 change_parts.append(
                     allr.filter(win1 & ~F.col("__have_ex"))
                     .drop(*helper).withColumn("_change_type", F.lit("insert"))
@@ -437,11 +433,8 @@ class ManagedTable:
             )
             stale = (F.col("__src") == 0) & ~F.col("__have_upd") & F.col("__g").isNotNull()
             if policy.change_feed:
-                helper2 = ["__src", "__rn", "__have_upd", "__have_ex", "__g"] + (
-                    ["__take_upd"] if policy.update_existing else []
-                ) + ([BUCKET_COL] if fuse_bucket else [])
                 change_parts.append(
-                    merged.filter(stale).drop(*helper2)
+                    merged.filter(stale).drop(*helper)
                     .withColumn("_change_type", F.lit("delete"))
                 )
             merged = merged.filter(~stale).drop("__g")

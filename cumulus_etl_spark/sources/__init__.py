@@ -1,7 +1,6 @@
 from cumulus_etl_spark.sources.ndjson import (
     detect_resources,
     read_deleted_ids,
-    scan_one,
     scan_resources,
     scan_with_quarantine,
 )
@@ -12,7 +11,6 @@ __all__ = [
     "table",
     "register_views",
     "scan_resources",
-    "scan_one",
     "scan_with_quarantine",
     "detect_resources",
     "read_deleted_ids",

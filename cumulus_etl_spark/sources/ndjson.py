@@ -2,14 +2,17 @@
 
 The reference streams dict-per-line with a Python iterator
 (cumulus_etl/common.py:134-168) and stages remote inputs to local disk
-first (loaders/fhir/ndjson_loader.py:40-69). Spark-first, the whole layer
-collapses to a schema'd ``spark.read.json`` with ``recursiveFileLookup``:
-predicate pushdown prunes non-matching resourceType rows at scan time, and
-S3 is read natively (s3a) with no staging copy.
+first (loaders/fhir/ndjson_loader.py:40-69). Here every resource read,
+batch or streaming, goes through one path: :func:`read_lines` reads the
+raw text lines of every ``*.ndjson`` under a root (recursively, object
+stores natively, no staging copy), and :func:`parse_lines` dispatches
+each line on its ``resourceType`` and parses it under that type's exact
+schema with ``from_json``.
 
-Malformed lines are quarantined, not dropped silently: PERMISSIVE mode
-routes them to ``_corrupt_record`` and callers can split good/bad with
-:func:`scan_with_quarantine` (parity: common.py:159-168 warns and skips).
+Malformed lines are quarantined, not dropped silently: a line that is
+not JSON, has no resourceType, or breaks its type's schema lands on the
+bad side with its raw text and source file (parity: common.py:159-168
+warns and skips; etl/tasks/base.py:356-364 spills them).
 """
 
 from __future__ import annotations
@@ -49,63 +52,18 @@ def _conform(df: DataFrame, own: StructType, wide: StructType) -> DataFrame:
     return df.select(*cols)
 
 
-def scan_resources(
-    spark: SparkSession,
-    root: str,
-    resource_types: list[str] | tuple[str, ...],
-) -> DataFrame:
-    """S1: read every ``*.ndjson`` under ``root`` (recursively), keep rows of
-    the requested resource types, under the contractual union schema.
+def read_lines(reader, root: str) -> DataFrame:
+    """Every ``*.ndjson`` line under ``root`` (recursively) as
+    ``(raw_line, source_file, _rt)``, where ``_rt`` is the line's
+    resourceType read without a schema parse (null when the line is not
+    JSON or has none). ``reader`` is ``spark.read`` or
+    ``spark.readStream``, so batch and streaming scans share it.
 
-    Each type parses under its OWN exact schema (a resourceType dispatch,
-    like the reference's per-task scans — common.py:144-156); frames are
-    conformed to the wide schema and unioned by name. The resourceType
-    filter is a plain predicate Catalyst pushes into each scan. The common
-    single-type call is exactly one pass over the files.
-    """
-    types = list(resource_types)
-    wide = wide_schema(types)
-    frames = []
-    for rt in types:
-        own = schema_for(rt)
-        df = (
-            spark.read.schema(_with_corrupt(own))
-            .option("recursiveFileLookup", "true")
-            .option("pathGlobFilter", "*.ndjson")
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-            .json(root)
-        )
-        df = df.filter(
-            F.col(CORRUPT_COL).isNull() & (F.col("resourceType") == rt)
-        ).drop(CORRUPT_COL)
-        frames.append(_conform(df, own, wide))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def scan_with_quarantine(
-    spark: SparkSession,
-    root: str,
-    resource_types: list[str] | tuple[str, ...],
-) -> tuple[DataFrame, DataFrame]:
-    """S1 + K7: (good rows, quarantined raw lines) from one scan.
-
-    The quarantine side carries the raw line plus its source file so a
-    run can spill them to ``errors/`` (parity: etl/tasks/base.py:356-364).
-    """
-    types = list(resource_types)
-    wide = wide_schema(types)
-    # Text-then-parse, not read.json: Spark disallows queries that touch
-    # only the corrupt-record column, and this keeps the raw line available
-    # for the quarantine side.  Lines are dispatched on resourceType BEFORE
-    # any schema parse (ref common.py:144-156 filters before validating):
-    # a foreign-type line is simply skipped — it is someone else's input,
-    # not an error — and only same-type parse failures quarantine.
-    raw = (
-        spark.read.option("recursiveFileLookup", "true")
+    Text, not ``read.json``: Spark disallows queries that touch only the
+    corrupt-record column, and the raw line must survive for the
+    quarantine side."""
+    return (
+        reader.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.ndjson")
         .text(root)
         .select(
@@ -114,14 +72,29 @@ def scan_with_quarantine(
             F.get_json_object(F.col("value"), "$.resourceType").alias("_rt"),
         )
     )
+
+
+def parse_lines(
+    lines: DataFrame, resource_types: list[str] | tuple[str, ...]
+) -> tuple[DataFrame, DataFrame]:
+    """S1 + K7: split a :func:`read_lines` frame into (good rows under the
+    wide schema of ``resource_types``, quarantined ``(raw_line,
+    source_file)``).
+
+    Lines are dispatched on resourceType BEFORE any schema parse (ref
+    common.py:144-156 filters before validating): a foreign-type line is
+    simply skipped — it is someone else's input, not an error — and only
+    same-type parse failures quarantine, along with lines that are not
+    JSON or lack a resourceType.
+    """
+    types = list(resource_types)
+    wide = wide_schema(types)
     goods = []
-    bads = [
-        # Unparseable JSON / missing resourceType: malformed for every type.
-        raw.filter(F.col("_rt").isNull()).select("raw_line", "source_file")
-    ]
+    # Unparseable JSON / missing resourceType: malformed for every type.
+    bad = lines.filter(F.col("_rt").isNull()).select("raw_line", "source_file")
     for rt in types:
         own = schema_for(rt)
-        mine = raw.filter(F.col("_rt") == rt).withColumn(
+        mine = lines.filter(F.col("_rt") == rt).withColumn(
             "parsed",
             # PERMISSIVE + corrupt column: field-level type mismatches
             # (e.g. a singleton object where FHIR requires an array)
@@ -137,37 +110,47 @@ def scan_with_quarantine(
         goods.append(
             _conform(mine.filter(ok).select("parsed.*").drop(CORRUPT_COL), own, wide)
         )
-        bads.append(mine.filter(~ok).select("raw_line", "source_file"))
+        bad = bad.unionByName(mine.filter(~ok).select("raw_line", "source_file"))
     good = goods[0]
     for g in goods[1:]:
         good = good.unionByName(g)
-    bad = bads[0]
-    for b in bads[1:]:
-        bad = bad.unionByName(b)
     return good, bad
 
 
-def scan_one(spark: SparkSession, root: str, resource_type: str) -> DataFrame:
-    """Single-resource-type scan under its exact contractual schema."""
-    # per-type parsing means a single-type scan IS the exact schema
-    return scan_resources(spark, root, [resource_type])
+def scan_with_quarantine(
+    spark: SparkSession,
+    root: str,
+    resource_types: list[str] | tuple[str, ...],
+) -> tuple[DataFrame, DataFrame]:
+    """S1 + K7: (good rows, quarantined raw lines) of every ``*.ndjson``
+    under ``root``: :func:`read_lines` then :func:`parse_lines`.
+
+    Both sides are lazy plans over the same files; each action on either
+    one scans them again. The quarantine side carries the raw line plus
+    its source file so a run can spill them to ``errors/`` (parity:
+    etl/tasks/base.py:356-364).
+    """
+    return parse_lines(read_lines(spark.read, root), resource_types)
+
+
+def scan_resources(
+    spark: SparkSession,
+    root: str,
+    resource_types: list[str] | tuple[str, ...],
+) -> DataFrame:
+    """S1/F1: the rows of the requested resource types under ``root``, in
+    the contractual union schema — the good side of
+    :func:`scan_with_quarantine`."""
+    return scan_with_quarantine(spark, root, resource_types)[0]
 
 
 def detect_resources(spark: SparkSession, root: str) -> set[str]:
-    """S2: which resource types are present under ``root``?
-
-    Reads only the ``resourceType`` column (column pruning keeps the scan
-    cheap) — drives task selection like ndjson_loader.py:36-38.
-    """
+    """S2: which resource types are present under ``root``? Drives task
+    selection like ndjson_loader.py:36-38."""
     if not _has_ndjson(root):
         return set()
-    df = (
-        spark.read.schema(StructType([StructField("resourceType", StringType(), True)]))
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.ndjson")
-        .json(root)
-    )
-    return {r["resourceType"] for r in df.distinct().collect() if r["resourceType"]}
+    rts = read_lines(spark.read, root).select("_rt").distinct()
+    return {r["_rt"] for r in rts.collect() if r["_rt"]}
 
 
 def read_deleted_ids(spark: SparkSession, root: str) -> DataFrame:

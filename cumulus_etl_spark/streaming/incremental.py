@@ -20,12 +20,14 @@ size the way ``--batch-size`` bounded the reference's memory
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.deid import Codebook, Scrubber
-from cumulus_etl_spark.schemas import wide_schema
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
+from cumulus_etl_spark.sources.ndjson import parse_lines, read_lines
 
 
 def incremental_etl(
@@ -42,7 +44,11 @@ def incremental_etl(
     """Checkpointed scan→scrub→merge over an NDJSON landing directory.
 
     Each invocation processes exactly the files that arrived since the
-    last run (file-source checkpoint), then stops.
+    last run (file-source checkpoint), then stops. Each micro-batch is
+    parsed like a batch ``etl`` scan (:func:`~cumulus_etl_spark.sources.
+    ndjson.parse_lines`): malformed lines are appended to
+    ``<phi_dir>/errors/<table>`` — raw lines are PHI, so never under
+    ``output_dir`` — instead of loading with silently-nulled fields.
 
     ``athena``: optional :class:`~cumulus_etl_spark.sinks.catalog_ddl.
     AthenaRegistrar` — fired after each committed micro-batch; registers
@@ -53,20 +59,19 @@ def incremental_etl(
     scrubber = Scrubber(salt=codebook.salt, philter_enabled=philter)
     table = ManagedTable(spark, output_dir, resource_type.lower())
     policy = MergePolicy()
+    errors_dir = os.path.join(phi_dir, "errors", table.name)
 
-    reader = (
-        spark.readStream.schema(wide_schema([resource_type]))
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.ndjson")
-    )
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(input_dir)
+    stream = read_lines(reader, input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        good = batch_df.filter(F.col("resourceType") == resource_type)
+        good, bad = parse_lines(batch_df, [resource_type])
         codebook.save_mappings(good, resource_type)
         table.merge(scrubber.scrub(good, resource_type), policy)
+        if not bad.isEmpty():
+            bad.write.mode("append").json(errors_dir)
         if athena is not None:
             athena.on_batch(batch_id)
 

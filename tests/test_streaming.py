@@ -38,6 +38,31 @@ def test_incremental_etl_checkpoint_resume(spark, tmp_path):
     assert tbl.read().count() == 3
 
 
+def test_incremental_etl_quarantines_malformed_lines(spark, tmp_path):
+    """A micro-batch is parsed like a batch etl scan: a schema-breaking
+    line (an object where FHIR requires an array) and an unparseable line
+    are quarantined PHI-side, not loaded with silently-nulled fields."""
+    import os
+
+    input_dir = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    phi = str(tmp_path / "phi")
+    os.makedirs(input_dir)
+    with open(os.path.join(input_dir, "b1.ndjson"), "w") as fh:
+        fh.write(json.dumps({"resourceType": "Patient", "id": "good", "gender": "female"}) + "\n")
+        fh.write(json.dumps({"resourceType": "Patient", "id": "bad", "name": {"family": "X"}}) + "\n")
+        fh.write('{"resourceType": "Patient", "id": \n')
+    incremental_etl(spark, input_dir, out, phi, "Patient", str(tmp_path / "ckpt"))
+
+    rows = ManagedTable(spark, out, "patient").read().collect()
+    assert [r["gender"] for r in rows] == ["female"]
+    quarantined = spark.read.json(os.path.join(phi, "errors", "patient")).collect()
+    assert len(quarantined) == 2
+    assert any('"name": {"family": "X"}' in r["raw_line"] for r in quarantined)
+    assert all(r["source_file"].endswith("b1.ndjson") for r in quarantined)
+    assert os.listdir(out) == ["patient"]
+
+
 def test_incremental_etl_registers_athena_after_first_batch(spark, tmp_path):
     """Registration-after-first-batch (ref formats/nlp.py:50-57): the DDL
     runs through the connection exactly once, triggered by the FIRST
