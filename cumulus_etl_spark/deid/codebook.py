@@ -51,7 +51,7 @@ class Codebook:
             with open(path, "w") as fh:
                 json.dump({"version": 1, "id": self.codebook_id, "salt": self.salt}, fh)
 
-    def anonymize(self, df: DataFrame, id_col: str = "id"):
+    def anonymize(self, id_col: str = "id"):
         """Column expression for this codebook's pseudonym of ``id_col``."""
         return anon_id(F.col(id_col), self.salt)
 

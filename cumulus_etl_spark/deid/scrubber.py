@@ -10,10 +10,15 @@ optional pandas_udf).
 
 Semantics covered (SURVEY §2.3): P1 allow-list projection, P2 masks,
 P3/P7 anon-id, P4 anon-ref, P5 year, P6 zip, P8 philter, P9 check-system,
-P10 extension allow-list + modifier-extension veto (at any nesting depth,
-threaded up through array ``exists`` and applied as a filter on the
-ORIGINAL frame before the projection drops the fields), P11
-resource-level filter, P12 trim/empty-drop.
+P10 extension allow-list + modifier-extension veto, P11 resource-level
+filter, P12 trim/empty-drop.
+
+Veto builders come from the same walk as the projection: at each position
+it returns the rebuilt value and, if a modifier extension can occur below,
+a function from the value there to the drop-the-resource condition. A struct
+ORs its fields' builders and an array applies its element's inside one
+``exists``, so each element is built once; the top-level builders filter the
+ORIGINAL frame, before the projection drops the fields they read.
 
 Masked values become nulls plus the FHIR primitive-extension sibling
 ``_<field>`` carrying a ``data-absent-reason: masked`` extension when a
@@ -26,7 +31,10 @@ write time, which yields the same serialized form).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
+from operator import and_, or_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,6 +55,9 @@ EPIC_SYSTEM_PREFIX = "urn:oid:1.2.840.114350."
 
 DATA_ABSENT_URL = "http://hl7.org/fhir/StructureDefinition/data-absent-reason"
 
+# The value at one rule position → its drop-the-resource condition.
+VetoBuilder = Callable[[Column], Column]
+
 
 def _data_absent_marker(orig: Column, dtype: DataType) -> Column:
     """FHIR primitive extension for a masked field: the ``_<field>`` sibling
@@ -62,28 +73,8 @@ def _data_absent_marker(orig: Column, dtype: DataType) -> Column:
     return F.when(present, F.struct(ext.alias("extension")))
 
 
-def _rules_can_veto(dtype: DataType, rules: dict[str, object]) -> bool:
-    """Schema-only walk: does any reachable field carry a modifier-extension
-    veto? Decides whether to emit exists() veto conditions for arrays."""
-    if isinstance(dtype, ArrayType):
-        return _rules_can_veto(dtype.elementType, rules)
-    if not isinstance(dtype, StructType):
-        return False
-    for sf in dtype.fields:
-        spec = rules.get(sf.name)
-        if spec is None:
-            continue
-        if spec in ("ModifierExtension", "Contained"):
-            return True  # contained elements can carry vetoing modifiers
-        if isinstance(spec, dict):
-            child = {**resolve_node("BackboneElement"), **spec}
-            if _rules_can_veto(sf.dataType, child):
-                return True
-        elif isinstance(spec, str) and spec[:1].isupper() and spec != "Extension":
-            node_name = spec.split(";", 1)[0]  # strip conditional part
-            if _rules_can_veto(sf.dataType, resolve_node(node_name)):
-                return True
-    return False
+def _unknown_modifier(mods: Column) -> Column:
+    return F.exists(mods, lambda m: ~m["url"].isin(*ALLOWED_MODIFIER_EXTENSION_URLS))
 
 
 @dataclass
@@ -101,10 +92,6 @@ class Scrubber:
     # conservative but still heuristic, so off unless the operator asks
     philter_bare_names: bool = False
     nlp_mode: bool = False
-    allowed_extensions: frozenset[str] = field(default_factory=lambda: ALLOWED_EXTENSION_URLS)
-    allowed_modifier_extensions: frozenset[str] = field(
-        default_factory=lambda: ALLOWED_MODIFIER_EXTENSION_URLS
-    )
 
     # ---- public API ----
 
@@ -116,30 +103,13 @@ class Scrubber:
         """
         if resource_type not in NODE_RULES:
             raise ValueError(f"no scrub rules for resource type {resource_type!r}")
-        rules = resolve_node(resource_type)
-        exprs: list[Column] = []
-        vetoes: list[Column] = []
-        for sf in df.schema.fields:
-            spec = rules.get(sf.name)
-            if spec is None:
-                continue  # allow-list: unlisted fields are dropped
-            expr, veto = self._field_expr(F.col(sf.name), sf.dataType, sf.name, spec)
-            if expr is not None:
-                exprs.append(expr.alias(sf.name))
-            if veto is not None:
-                vetoes.append(veto)
-            if self._is_masked(spec):
-                exprs.append(
-                    _data_absent_marker(F.col(sf.name), sf.dataType).alias(f"_{sf.name}")
-                )
+        exprs, vetoes = self._fields(None, df.schema, resolve_node(resource_type))
         # Veto conditions reference fields (modifierExtension at any depth)
         # that the projection drops, so the filter runs against the ORIGINAL
         # frame, before the select. Catalyst pushes the filter into the scan
         # either way; ordering here is a correctness constraint, not a cost.
         if vetoes:
-            keep = ~vetoes[0]
-            for v in vetoes[1:]:
-                keep = keep & ~v
+            keep = reduce(and_, (~veto(F.col(name)) for name, veto in vetoes))
             # coalesce: a null veto condition (e.g. null array) means "no veto"
             df = df.filter(F.coalesce(keep, F.lit(True)))
         return df.select(*exprs)
@@ -152,7 +122,7 @@ class Scrubber:
             return df.sparkSession.createDataFrame([], "resource_type string, url string, n bigint")
         return (
             df.select(F.explode("extension").alias("ext"))
-            .filter(~F.col("ext.url").isin(*self.allowed_extensions))
+            .filter(~F.col("ext.url").isin(*ALLOWED_EXTENSION_URLS))
             .groupBy(F.col("ext.url").alias("url"))
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.lit(resource_type).alias("resource_type"), "url", "n")
@@ -164,19 +134,36 @@ class Scrubber:
         """Does this rule null the value out (⇒ synthesize ``_<field>``)?"""
         return spec == "mask" or (spec == "mask-note" and not self.nlp_mode)
 
+    def _fields(
+        self, col: Column | None, dtype: StructType, rules: dict[str, object]
+    ) -> tuple[list[Column], list[tuple[str, VetoBuilder]]]:
+        """The allow-listed fields of a struct (of the row when ``col`` is
+        None): their output columns, with ``_<field>`` mask markers, and the
+        veto builder of each field that has one."""
+        parts: list[Column] = []
+        vetoes: list[tuple[str, VetoBuilder]] = []
+        for sf in dtype.fields:
+            spec = rules.get(sf.name)
+            if spec is None:
+                continue  # allow-list: unlisted fields are dropped
+            value = F.col(sf.name) if col is None else col[sf.name]
+            expr, veto = self._field_expr(value, sf.dataType, spec, parent=col)
+            if expr is not None:
+                parts.append(expr.alias(sf.name))
+            if veto is not None:
+                vetoes.append((sf.name, veto))
+            if self._is_masked(spec):
+                parts.append(_data_absent_marker(value, sf.dataType).alias(f"_{sf.name}"))
+        return parts, vetoes
+
     def _field_expr(
-        self, col: Column, dtype: DataType, name: str, spec: object, parent: Column | None = None
-    ) -> tuple[Column | None, Column | None]:
-        """Returns (rewritten expression | None-to-drop, veto condition | None)."""
+        self, col: Column, dtype: DataType, spec: object, parent: Column | None = None
+    ) -> tuple[Column | None, VetoBuilder | None]:
+        """Returns (rewritten expression | None-to-drop, veto builder | None)."""
         if spec == "ModifierExtension":
             # Unknown modifier extension → veto the resource; the field
             # itself is dropped from output (nothing allowed survives).
-            allowed = list(self.allowed_modifier_extensions)
-            if allowed:
-                unknown = F.exists(col, lambda x: ~x["url"].isin(*allowed))
-            else:
-                unknown = F.size(col) > 0
-            return None, F.coalesce(unknown, F.lit(False))
+            return None, lambda mods: F.coalesce(_unknown_modifier(mods), F.lit(False))
         if spec == "Extension":
             return self._extension_expr(col, dtype), None
         if spec == "Contained":
@@ -206,7 +193,7 @@ class Scrubber:
 
     def _node_expr(
         self, col: Column, dtype: DataType, rules: dict[str, object]
-    ) -> tuple[Column | None, Column | None]:
+    ) -> tuple[Column | None, VetoBuilder | None]:
         if isinstance(dtype, ArrayType):
             elem_type = dtype.elementType
             if not isinstance(elem_type, StructType):
@@ -214,13 +201,7 @@ class Scrubber:
                 return F.transform(col, lambda x: nullif_empty(x)) if isinstance(
                     elem_type, StringType
                 ) else col, None
-            # Veto inside arrays: exists(arr, elem-veto) — checked first via
-            # a schema-only walk so we don't emit a needless exists().
-            rebuilt = F.transform(col, lambda x: self._struct_expr(x, elem_type, rules)[0])
-            veto = None
-            if _rules_can_veto(elem_type, rules):
-                veto = F.exists(col, lambda x: self._struct_expr(x, elem_type, rules)[1])
-            return rebuilt, veto
+            return self._elements_expr(col, elem_type, rules)
         if isinstance(dtype, StructType):
             expr, veto = self._struct_expr(col, dtype, rules)
             return F.when(col.isNotNull(), expr), veto
@@ -233,51 +214,58 @@ class Scrubber:
         rules: dict[str, object],
         cond_field: str,
         values: list[str],
-    ) -> tuple[Column | None, Column | None]:
+    ) -> tuple[Column | None, VetoBuilder | None]:
         """Node kept only where ``cond_field`` ∈ ``values`` (null → drop).
         Arrays filter elements; structs gate the whole value."""
         if isinstance(dtype, ArrayType) and isinstance(dtype.elementType, StructType):
-            kept = F.filter(col, lambda x: x[cond_field].isin(*values))
-            elem_type = dtype.elementType
-            rebuilt = F.transform(kept, lambda x: self._struct_expr(x, elem_type, rules)[0])
-            veto = None
-            if _rules_can_veto(elem_type, rules):
-                veto = F.exists(kept, lambda x: self._struct_expr(x, elem_type, rules)[1])
+
+            def kept(arr: Column) -> Column:
+                return F.filter(arr, lambda x: x[cond_field].isin(*values))
+
+            rebuilt, any_kept = self._elements_expr(kept(col), dtype.elementType, rules)
+            veto = None if any_kept is None else (lambda arr: any_kept(kept(arr)))
             return F.when(F.size(rebuilt) > 0, rebuilt), veto
         if isinstance(dtype, StructType):
-            expr, veto = self._struct_expr(col, dtype, rules)
-            gate = F.coalesce(col[cond_field].isin(*values), F.lit(False))
-            if veto is not None:
-                veto = veto & gate
-            return F.when(col.isNotNull() & gate, expr), veto
+
+            def gate(c: Column) -> Column:
+                return F.coalesce(c[cond_field].isin(*values), F.lit(False))
+
+            expr, inner = self._struct_expr(col, dtype, rules)
+            veto = None if inner is None else (lambda c: inner(c) & gate(c))
+            return F.when(col.isNotNull() & gate(col), expr), veto
         raise ValueError(
             f"conditional node rules applied to non-struct type {dtype.simpleString()}"
         )
 
     def _struct_expr(
         self, col: Column, dtype: StructType, rules: dict[str, object]
-    ) -> tuple[Column, Column | None]:
-        parts: list[Column] = []
-        vetoes: list[Column] = []
-        for sf in dtype.fields:
-            spec = rules.get(sf.name)
-            if spec is None:
-                continue
-            expr, veto = self._field_expr(col[sf.name], sf.dataType, sf.name, spec, parent=col)
-            if expr is not None:
-                parts.append(expr.alias(sf.name))
-            if veto is not None:
-                vetoes.append(veto)
-            if self._is_masked(spec):
-                parts.append(
-                    _data_absent_marker(col[sf.name], sf.dataType).alias(f"_{sf.name}")
-                )
+    ) -> tuple[Column, VetoBuilder | None]:
+        parts, vetoes = self._fields(col, dtype, rules)
         if not parts:
             parts = [F.lit(None).cast("string").alias("__empty__")]
-        veto_out: Column | None = None
-        for v in vetoes:
-            veto_out = v if veto_out is None else (veto_out | v)
-        return F.struct(*parts), veto_out
+
+        def veto(c: Column) -> Column:  # any field's builder fires
+            return reduce(or_, (field_veto(c[name]) for name, field_veto in vetoes))
+
+        return F.struct(*parts), (veto if vetoes else None)
+
+    def _elements_expr(
+        self, col: Column, elem_type: StructType, rules: dict[str, object]
+    ) -> tuple[Column, VetoBuilder | None]:
+        """``transform`` an array of structs, building the element once; the
+        element's veto builder, kept from that build, vetoes the array when
+        it fires on any element (one ``exists``)."""
+        elem_veto: VetoBuilder | None = None
+
+        def element(x: Column) -> Column:
+            nonlocal elem_veto
+            expr, elem_veto = self._struct_expr(x, elem_type, rules)
+            return expr
+
+        rebuilt = F.transform(col, element)
+        if elem_veto is None:
+            return rebuilt, None
+        return rebuilt, lambda arr: F.exists(arr, elem_veto)
 
     # Resource types whose full rules apply inside `contained` (matches
     # the union CONTAINED schema, schemas/fhir.py). Any other contained
@@ -288,7 +276,7 @@ class Scrubber:
 
     def _contained_expr(
         self, col: Column, dtype: DataType
-    ) -> tuple[Column | None, Column | None]:
+    ) -> tuple[Column | None, VetoBuilder | None]:
         """DomainResource.contained: heterogeneous array scrubbed with
         per-resourceType gating over ONE shared struct shape (a CASE per
         field, not per branch, so every branch yields the same type).
@@ -327,7 +315,7 @@ class Scrubber:
         def build(x: Column) -> Column:
             parts = []
             for name, ftype, spec, keepers in plans:
-                expr, _ = self._field_expr(x[name], ftype, name, spec, parent=x)
+                expr, _ = self._field_expr(x[name], ftype, spec, parent=x)
                 if expr is None:
                     continue
                 if keepers is not None:
@@ -337,27 +325,18 @@ class Scrubber:
 
         rebuilt = F.when(col.isNotNull(), F.transform(col, build))
 
-        allowed = list(self.allowed_modifier_extensions)
-
         def mod_veto(x: Column) -> Column:
-            mods = x["modifierExtension"]
-            if allowed:
-                unknown = F.exists(mods, lambda m: ~m["url"].isin(*allowed))
-            else:
-                unknown = F.size(mods) > 0
+            unknown = _unknown_modifier(x["modifierExtension"])
             understood = x["resourceType"].isin(list(self.CONTAINED_TYPES))
             return F.coalesce(understood & unknown, F.lit(False))
 
-        veto = F.coalesce(F.exists(col, mod_veto), F.lit(False))
-        return rebuilt, veto
+        return rebuilt, lambda arr: F.coalesce(F.exists(arr, mod_veto), F.lit(False))
 
     def _extension_expr(self, col: Column, dtype: DataType) -> Column:
         """P10: keep only allow-listed extension URLs, preserving payloads."""
         if not isinstance(dtype, ArrayType):
             return F.lit(None).cast(dtype)
-        if not self.allowed_extensions:
-            return F.lit(None).cast(dtype)
-        kept = F.filter(col, lambda x: x["url"].isin(*self.allowed_extensions))
+        kept = F.filter(col, lambda x: x["url"].isin(*ALLOWED_EXTENSION_URLS))
         return F.when(F.size(kept) > 0, kept)
 
     def _leaf_expr(
@@ -365,7 +344,7 @@ class Scrubber:
     ) -> Column | None:
         if action.startswith("check-system;"):
             # Trust gate on the sibling `system` value; `parent` is the
-            # enclosing Coding struct (wired by _struct_expr caller below).
+            # enclosing Coding struct (wired by _fields).
             sub = action.split(";", 1)[1]
             inner = self._leaf_expr(col, dtype, sub, parent=None)
             if parent is None:

@@ -69,6 +69,7 @@ def run_etl(
         group_name=group_name,
         export_datetime=export_datetime,
         philter=philter,
+        batch_size=batch_size,
     )
     config.save()
 
@@ -141,7 +142,7 @@ def _run_task(
     # through an anti-join, never a driver-side id list (bulk deletes at
     # scale would bottleneck on collect).
     dead = deleted.filter(F.col("resource_type") == task.resource_type)
-    dead_anon = dead.select(codebook.anonymize(dead, "id").alias("id"))
+    dead_anon = dead.select(codebook.anonymize("id").alias("id"))
     have_dead = not dead_anon.isEmpty()
 
     if output_format == "ndjson":

@@ -18,22 +18,25 @@ RESTRICTED_ZIP_PREFIXES = (
 )
 
 
+def _hmac_key(salt: str) -> bytes:
+    """HMAC key bytes for a salt: a hex salt is unhexlified (the reference
+    stores ``secrets.token_hex`` and unhexlifies, codebook.py:213-217); a
+    non-hex salt string is keyed by its UTF-8 bytes."""
+    import binascii
+
+    try:
+        return binascii.unhexlify(salt)
+    except (binascii.Error, ValueError):
+        return salt.encode("utf-8")
+
+
 def hmac_pads(salt_hex: str) -> tuple[bytes, bytes]:
     """HMAC-SHA256 inner/outer key pads for a hex-encoded salt.
 
     The key schedule is a pure function of the (driver-known) salt, so
     it's computed once here and shipped as two 64-byte binary literals —
-    the per-row work stays two sha2 calls inside codegen.
-
-    A hex salt is unhexlified to key bytes (the reference stores
-    ``secrets.token_hex`` and unhexlifies, codebook.py:213-217); a
-    non-hex salt string is keyed by its UTF-8 bytes."""
-    import binascii
-
-    try:
-        key = binascii.unhexlify(salt_hex)
-    except (binascii.Error, ValueError):
-        key = salt_hex.encode("utf-8")
+    the per-row work stays two sha2 calls inside codegen."""
+    key = _hmac_key(salt_hex)
     if len(key) > 64:
         import hashlib
 
@@ -50,15 +53,10 @@ def anon_id_py(salt: str, real_id: str) -> str:
     bytes) for the small, already-collected frames (Label Studio chart
     payloads) where a Column expression has nowhere to run. Must stay
     byte-identical to the Column form — test_deid_golden pins both."""
-    import binascii
     import hashlib
     import hmac as hmac_mod
 
-    try:
-        key = binascii.unhexlify(salt)
-    except (binascii.Error, ValueError):
-        key = salt.encode("utf-8")
-    return hmac_mod.new(key, real_id.encode(), hashlib.sha256).hexdigest()
+    return hmac_mod.new(_hmac_key(salt), real_id.encode(), hashlib.sha256).hexdigest()
 
 
 def anon_id(real_id: Column | str, salt: str) -> Column:

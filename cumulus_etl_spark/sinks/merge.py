@@ -111,10 +111,6 @@ class MergePolicy:
     # dotted path of the ISO-string timestamp used as the freshness guard;
     # None disables the guard (always update on match)
     last_updated_field: str | None = "meta.lastUpdated"
-    # range-cluster data files by key so parquet min/max footers prune key
-    # lookups — the fallback's analog of Delta liquid clustering
-    # (clusterBy(uniqueness_fields), ref deltalake.py:103-106)
-    cluster_on_keys: bool = True
     # hive-partition count for bucket-pruned merges; size so one bucket is
     # one comfortable task (64 locally, ~4096 at 100 TB)
     num_buckets: int = 64
@@ -637,10 +633,12 @@ class ManagedTable:
         prev: dict | None,
         pre_bucketed: bool = False,
     ) -> int:
-        sort_cols = policy.keys if policy.cluster_on_keys else policy.bucket_cols
+        # range-cluster data files by key so parquet min/max footers prune key
+        # lookups — the fallback's analog of Delta liquid clustering
+        # (clusterBy(uniqueness_fields), ref deltalake.py:103-106)
         return self._write_raw(
             df, policy.bucket_cols, policy.num_buckets,
-            sort_cols=sort_cols, touched=touched, prev=prev,
+            sort_cols=policy.keys, touched=touched, prev=prev,
             zorder_cols=policy.zorder_cols, change_feed=policy.change_feed,
             pre_bucketed=pre_bucketed,
         )

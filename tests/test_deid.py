@@ -161,6 +161,36 @@ def test_nested_modifier_extension_veto(spark, tmp_path):
     assert "modifierExtension" not in part_type.fieldNames()
 
 
+def test_modifier_veto_allow_list_and_contained(spark, tmp_path):
+    """An allow-listed modifier URL keeps the row wherever it sits: top
+    level, a backbone array element, a contained resource. An unknown one
+    in a contained element vetoes the host only when the element's type is
+    one the scrubber understands (``Scrubber.CONTAINED_TYPES``)."""
+    polarity = "http://fhir-registry.smarthealthit.org/StructureDefinition/nlp-polarity"
+    ok = [{"url": polarity, "valueBoolean": True}]
+    bad = [{"url": "https://example.com/not-really", "valueBoolean": True}]
+    write_ndjson(str(tmp_path), "encs.ndjson", [
+        {"resourceType": "Encounter", "id": "top", "status": "finished",
+         "modifierExtension": ok},
+        {"resourceType": "Encounter", "id": "participant", "status": "finished",
+         "participant": [{"individual": {"reference": "Practitioner/pr1"},
+                          "modifierExtension": ok}]},
+    ])
+    write_ndjson(str(tmp_path), "conds.ndjson", [
+        {"resourceType": "Condition", "id": "med-ok",
+         "contained": [{"resourceType": "Medication", "id": "#m1", "modifierExtension": ok}]},
+        {"resourceType": "Condition", "id": "med-bad",
+         "contained": [{"resourceType": "Medication", "id": "#m1", "modifierExtension": bad}]},
+        {"resourceType": "Condition", "id": "basic-bad",
+         "contained": [{"resourceType": "Basic", "id": "#b1", "modifierExtension": bad}]},
+    ])
+    scrubber = Scrubber(salt=SALT)
+    encs = scrubber.scrub(scan_resources(spark, str(tmp_path), ["Encounter"]), "Encounter")
+    assert {r["id"] for r in encs.collect()} == {sha("top"), sha("participant")}
+    conds = scrubber.scrub(scan_resources(spark, str(tmp_path), ["Condition"]), "Condition")
+    assert {r["id"] for r in conds.collect()} == {sha("med-ok"), sha("basic-bad")}
+
+
 def test_epic_check_system_guard(spark, tmp_path):
     write_ndjson(str(tmp_path), "conds.ndjson", [
         {

@@ -3,6 +3,7 @@ de-identified managed tables → SQL."""
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -230,16 +231,19 @@ def test_convert_roundtrip(spark, dirs, tmp_path):
 def test_job_context_recorded(spark, dirs):
     from cumulus_etl_spark.etl.context import JobContext
 
-    run_etl(spark, dirs["input"], dirs["output"], dirs["phi"], tasks=["patient"])
+    run_etl(spark, dirs["input"], dirs["output"], dirs["phi"], tasks=["patient"], batch_size=1234)
     ctx = JobContext(dirs["phi"])
     assert ctx.last_successful_input == dirs["input"]
     assert ctx.last_successful_output == dirs["output"]
     assert ctx.last_successful_datetime is not None
+    (saved,) = glob.glob(os.path.join(dirs["output"], "JobConfig", "*", "job_config.json"))
+    with open(saved) as fh:
+        assert json.load(fh)["batch_size"] == 1234
 
 
 def test_merge_clustering_prunes_key_lookups(spark, tmp_path):
-    """cluster_on_keys range-partitions version files by key; a point
-    lookup pushes its predicate to the parquet scan."""
+    """Merge writes range-partition version files by key; a point lookup
+    pushes its predicate to the parquet scan."""
     from pyspark.sql import functions as F
 
     tbl = ManagedTable(spark, str(tmp_path), "clustered")
