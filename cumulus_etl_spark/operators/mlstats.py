@@ -228,7 +228,7 @@ def nb_train(
     per-class vocabulary size; nothing is collected to the driver."""
     # No parallelism floor (r14): the split+explode below the first
     # exchange is too light to amortize the floor's repartition —
-    # same-JVM interleaved A/B (_ab_floor.py): nb rig floor ON min
+    # same-JVM interleaved A/B (OPTIMIZATION_r14.md §1): nb rig floor ON min
     # 2.57 s vs OFF 2.17 s, signatures identical.
     w = docs.select(
         label.cast("string").alias("label"),

@@ -494,7 +494,7 @@ def bm25_topk(
     # No parallelism floor here (r14): the per-row work below the first
     # exchange is a bare split+explode (no hashing), too light to
     # amortize the floor's repartition — same-JVM interleaved A/B
-    # (_ab_floor.py): floor ON min 1.77 s vs OFF 1.67 s, and the r13
+    # (OPTIMIZATION_r14.md §1): floor ON min 1.77 s vs OFF 1.67 s, and the r13
     # driver measured the floored form 2.65x slower. The floor stays on
     # the shingle-hashing call sites where the same A/B shows it winning
     # (operators/dedup.py).

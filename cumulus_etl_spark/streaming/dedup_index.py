@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from cumulus_etl_spark.operators.dedup import banded_signatures, shingle_hashes
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
+from cumulus_etl_spark.streaming.ckpt import fold_stream
 
 INDEX_TABLE = "lsh_index"
 SHINGLE_TABLE = "shingles"
@@ -133,18 +134,11 @@ def incremental_dedup_ingest(
     LSH-indexed batch by batch; each run processes exactly the files
     that arrived since the last one (file-source checkpoint)."""
     idx = DedupIndex(spark, index_root, **index_kwargs)
-    stream = (
+    fold_stream(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.ndjson")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, batch_id: idx.ingest_batch(batch_df)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .json(input_dir),
+        checkpoint_dir,
+        lambda batch_df, batch_id: idx.ingest_batch(batch_df),
     )
     return idx

@@ -36,6 +36,12 @@ from pyspark.sql import functions as F
 
 from cumulus_etl_spark.operators.sketch import _cms_bucket, countmin_table
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
+from cumulus_etl_spark.streaming.ckpt import (
+    add_counts,
+    batch_to_fold,
+    fold_stream,
+    pin_checkpoint_identity,
+)
 
 CELLS_TABLE = "cms_cells"
 TOPK_TABLE = "cms_topk"
@@ -103,10 +109,8 @@ class StreamingCountMin:
         between the cells merge and the topk merge would permanently
         drop that batch's keys from the candidate set."""
         prior = self.cells.read()
-        prior_batch = self._prior_batch(prior)
+        batch_id = batch_to_fold(prior, batch_id)
         if batch_id is None:
-            batch_id = prior_batch + 1
-        if batch_id <= prior_batch:
             # Already folded: reuse the stored cells for the (idempotent)
             # candidate refresh instead of double-counting the batch.
             # prior can still be None here if a caller hands a negative
@@ -117,13 +121,7 @@ class StreamingCountMin:
             delta = countmin_table(
                 rows, key_col, depth=self.depth, width=self.width, salt=self.salt
             )
-            summed = (
-                delta
-                if prior is None
-                else delta.unionByName(prior.select("seed", "bucket", "cnt"))
-                .groupBy("seed", "bucket")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
+            summed = add_counts(delta, prior, ("seed", "bucket"), "cnt")
             # d*w rows max: pin them so estimate() below and the merge don't
             # recompute the union against a table mid-rewrite.
             cells = summed.withColumn(
@@ -138,15 +136,6 @@ class StreamingCountMin:
         return self.spark.createDataFrame(
             [], "seed int, bucket int, cnt bigint, last_batch bigint"
         )
-
-    def _prior_batch(self, prior: DataFrame | None) -> int:
-        """The stored batch watermark; -1 for a missing OR empty table
-        (max() over a zero-row table is NULL — a zero-row first
-        micro-batch must not wedge ingest with a TypeError)."""
-        if prior is None:
-            return -1
-        row = prior.agg(F.max("last_batch")).collect()[0][0]
-        return -1 if row is None else row
 
     def _query_cells(self, cells: DataFrame) -> DataFrame:
         """Hook: the (seed, bucket, cnt) frame estimates run against.
@@ -302,10 +291,8 @@ class WindowedCountMin(StreamingCountMin):
         self, rows: DataFrame, key_col: str, batch_id: int | None = None
     ) -> None:
         prior = self.cells.read()
-        prior_batch = self._prior_batch(prior)
+        batch_id = batch_to_fold(prior, batch_id)
         if batch_id is None:
-            batch_id = prior_batch + 1
-        if batch_id <= prior_batch:
             # replay: slot already written; refresh topk only
             stored = prior if prior is not None else self._empty_cells()
         else:
@@ -346,8 +333,6 @@ def streaming_heavy_hitters(
     exactly the files that arrived since the last one.
     ``window_batches > 0`` selects the sliding-window ring
     (WindowedCountMin) instead of the all-time sketch."""
-    from cumulus_etl_spark.streaming.ckpt import pin_checkpoint_identity
-
     # CMS cell addition is non-idempotent: the replay watermark only
     # holds if this sketch always folds from the SAME checkpoint
     # (streaming/ckpt.py — batch ids are per-checkpoint)
@@ -358,20 +343,13 @@ def streaming_heavy_hitters(
         )
     else:
         cms = StreamingCountMin(spark, sketch_root, **cms_kwargs)
-    stream = (
+    fold_stream(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.ndjson")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, batch_id: cms.ingest_batch(
-                batch_df, key_col, batch_id=batch_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .json(input_dir),
+        checkpoint_dir,
+        lambda batch_df, batch_id: cms.ingest_batch(
+            batch_df, key_col, batch_id=batch_id
+        ),
     )
     return cms

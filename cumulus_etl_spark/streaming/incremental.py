@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from cumulus_etl_spark.deid import Codebook, Scrubber
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
 from cumulus_etl_spark.sources.ndjson import parse_lines, read_lines
+from cumulus_etl_spark.streaming.ckpt import fold_stream
 
 
 def incremental_etl(
@@ -75,13 +76,7 @@ def incremental_etl(
         if athena is not None:
             athena.on_batch(batch_id)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    fold_stream(stream, checkpoint_dir, process_batch)
 
 
 def windowed_event_counts(

@@ -23,10 +23,11 @@ ilog2 is ``length(bin(v)) − 1`` — the same exact-integer log the
 `text_lm_surprisal` oracle uses, so every bucket id and bound replays
 in plain SQL.
 
-Replay safety mirrors the CMS sketch: the micro-batch id is written
-into the cells table and a replayed batch (crash between the cells
-merge and the stream's offset commit) is detected by its watermark and
-skipped instead of double-counted.
+Replay safety is the shared fold contract (streaming/ckpt.py), as for
+the CMS sketch: the micro-batch id is written into the cells table and
+a replayed batch (crash between the cells merge and the stream's
+offset commit) is detected by its watermark and skipped instead of
+double-counted.
 
 The invariant this buys (pinned in tests/test_streaming.py): after any
 sequence of batches, the stored histogram EQUALS the batch-built
@@ -40,6 +41,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
+from cumulus_etl_spark.streaming.ckpt import (
+    add_counts,
+    batch_to_fold,
+    fold_stream,
+    pin_checkpoint_identity,
+)
 
 HDR_CELLS_TABLE = "hdr_cells"
 
@@ -150,30 +157,15 @@ class StreamingHdrHistogram:
         stored watermark is skipped (a replayed fold is the only
         non-idempotent operation here)."""
         prior = self.cells.read()
-        prior_batch = self._prior_batch(prior)
+        batch_id = batch_to_fold(prior, batch_id)
         if batch_id is None:
-            batch_id = prior_batch + 1
-        if batch_id <= prior_batch:
             return  # already folded; nothing derived to refresh
         delta = hdr_histogram(rows, value_col, self.sub_bits, key_col=self.key_col)
-        cell_keys = list(self._policy.keys)
-        summed = (
-            delta
-            if prior is None
-            else delta.unionByName(prior.select(*cell_keys, "n"))
-            .groupBy(*cell_keys)
-            .agg(F.sum("n").cast("bigint").alias("n"))
-        )
+        summed = add_counts(delta, prior, self._policy.keys)
         cells = summed.withColumn(
             "last_batch", F.lit(batch_id).cast("bigint")
         ).localCheckpoint(eager=True)  # bounded rows; pin across the merge
         self.cells.merge(cells, self._policy)
-
-    def _prior_batch(self, prior: DataFrame | None) -> int:
-        if prior is None:
-            return -1
-        row = prior.agg(F.max("last_batch")).collect()[0][0]
-        return -1 if row is None else row
 
     # ---- queries ----
 
@@ -248,28 +240,19 @@ def streaming_quantiles(
     into the persistent histogram batch by batch; each run processes
     exactly the files that arrived since the last one (same shape as
     streaming_heavy_hitters)."""
-    from cumulus_etl_spark.streaming.ckpt import pin_checkpoint_identity
-
     # HDR bucket addition is non-idempotent: same checkpoint-identity
     # contract as the CMS / PSI siblings (streaming/ckpt.py)
     pin_checkpoint_identity(spark, sketch_root, checkpoint_dir)
     hdr = StreamingHdrHistogram(
         spark, sketch_root, sub_bits=sub_bits, key_col=key_col
     )
-    stream = (
+    fold_stream(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.ndjson")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, batch_id: hdr.ingest_batch(
-                batch_df, value_col, batch_id=batch_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .json(input_dir),
+        checkpoint_dir,
+        lambda batch_df, batch_id: hdr.ingest_batch(
+            batch_df, value_col, batch_id=batch_id
+        ),
     )
     return hdr

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
+from cumulus_etl_spark.streaming.ckpt import fold_stream
 
 RESERVOIR_TABLE = "reservoir"
 _MD5_BITS = 60
@@ -178,20 +179,13 @@ def streaming_reservoir(
     into the persistent reservoir batch by batch (availableNow; same
     shape as streaming_quantiles/streaming_heavy_hitters)."""
     res = StreamingReservoir(spark, sketch_root, k)
-    stream = (
+    fold_stream(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.ndjson")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, batch_id: res.ingest_batch(
-                batch_df, id_col, weight_col=weight_col, batch_id=batch_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .json(input_dir),
+        checkpoint_dir,
+        lambda batch_df, batch_id: res.ingest_batch(
+            batch_df, id_col, weight_col=weight_col, batch_id=batch_id
+        ),
     )
     return res

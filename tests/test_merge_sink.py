@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 import cumulus_etl_spark.sinks.merge as merge_mod
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy, dedupe_last_wins
 from cumulus_etl_spark.sinks.batched import read_meta, write_ndjson_batches
+from cumulus_etl_spark.sinks.incremental_view import IncrementalRollup
 
 _UNSET = object()
 
@@ -790,3 +791,105 @@ def test_merge_upsert_throughput_rig_accounting(spark):
     assert row["n_final"] == row["n_base"]
     assert row["n_updated"] == row["n_inserted"] > 0
     assert set(glob.glob("/tmp/merge_bench_*")) == before  # tmp cleaned
+
+
+# ---- change-feed retention, rollup rebuild, publish race -------------------
+
+
+def _mk(spark, tmp_path, feed=True):
+    t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
+    pol = MergePolicy(keys=("id",), last_updated_field=None,
+                      num_buckets=4, change_feed=feed)
+    t.merge(spark.createDataFrame(
+        [("a", 1), ("b", 2)], "id string, val int"
+    ), pol)
+    return t, pol
+
+
+def test_retention_larger_than_feed_drops_nothing(spark, tmp_path):
+    """keep_changes > len(feed) promised to keep everything; the
+    unclamped feed[:len(feed)-N] negative slice instead deleted the
+    OLDEST entries (advice r4 high)."""
+    t, pol = _mk(spark, tmp_path)
+    for v in ("c", "d"):
+        t.merge(spark.createDataFrame([(v, 1)], "id string, val int"), pol)
+    assert t.change_versions() == [1, 2, 3]
+    t.finalize(keep_changes=4)  # > feed length: nothing may be dropped
+    assert t.change_versions() == [1, 2, 3]
+    t.finalize(keep_changes=3)  # == feed length: still nothing
+    assert t.change_versions() == [1, 2, 3]
+    t.finalize(keep_changes=2)  # < feed length: oldest goes
+    assert t.change_versions() == [2, 3]
+
+
+def test_rebuild_pins_version_before_scan(spark, tmp_path, monkeypatch):
+    """rebuild() must capture current_version() FIRST and scan that
+    pinned snapshot; a merge committing between a floating read() and a
+    later version read makes the state claim rows the rollup lacks
+    (advice r4 medium). Simulated: a concurrent merge fires inside the
+    source scan — the state must still point at the pre-merge version so
+    refresh() picks the concurrent commit up afterwards."""
+    t, pol = _mk(spark, tmp_path)
+    roll = IncrementalRollup(spark, t, str(tmp_path / "views"), "by_id", ["id"], "val")
+
+    seen_versions = []
+    real_read = ManagedTable.read
+
+    def racing_read(self, version=None):
+        if self is t:
+            seen_versions.append(version)
+            if len(seen_versions) == 1:
+                # concurrent writer lands v2 mid-rebuild
+                t.merge(spark.createDataFrame(
+                    [("c", 30)], "id string, val int"), pol)
+        return real_read(self, version=version)
+
+    monkeypatch.setattr(ManagedTable, "read", racing_read)
+    assert roll.rebuild() == 1          # reflects the PRE-merge version
+    assert seen_versions[0] == 1        # and scanned that pinned snapshot
+    monkeypatch.setattr(ManagedTable, "read", real_read)
+
+    got = {(r["id"], r["sum_value"]) for r in roll.read().collect()}
+    assert got == {("a", 1.0), ("b", 2.0)}  # v2 not yet applied, not lost
+    assert roll.refresh() == 1              # the racing commit arrives now
+    got = {(r["id"], r["sum_value"]) for r in roll.read().collect()}
+    assert got == {("a", 1.0), ("b", 2.0), ("c", 30.0)}
+
+
+def test_rebuild_raises_on_delta_source(spark, tmp_path, monkeypatch):
+    """rebuild() needs the same native-Delta guard as refresh(): the
+    fallback state handshake is meaningless against Delta commit
+    numbering (advice r4 low)."""
+    t, pol = _mk(spark, tmp_path)
+    roll = IncrementalRollup(spark, t, str(tmp_path / "views"), "by_id", ["id"], "val")
+    monkeypatch.setattr(ManagedTable, "_is_delta", lambda self: True)
+    with pytest.raises(NotImplementedError, match="rebuild over a native Delta"):
+        roll.rebuild()
+
+
+def test_publish_race_loser_treats_done_as_success(spark, tmp_path, monkeypatch):
+    """Two processes (stream reader + table writer) sweeping the same
+    staged version: the loser's os.replace hits FileNotFoundError after
+    the winner moved the dir — that is success, not a crash
+    (advice r4 low)."""
+    t, pol = _mk(spark, tmp_path)
+    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)
+    # re-stage v2 so a publish is pending
+    os.makedirs(os.path.dirname(t._staging_dir(2)), exist_ok=True)
+    os.replace(t._changes_dir(2), t._staging_dir(2))
+
+    real_replace = os.replace
+    src = t._staging_dir(2)
+
+    def winner_intervenes(a, b, *args, **kw):
+        if a == src:
+            # the other process completes the identical publish first
+            real_replace(a, b)
+            raise FileNotFoundError(a)
+        return real_replace(a, b, *args, **kw)
+
+    monkeypatch.setattr(merge_mod.os, "replace", winner_intervenes)
+    t._publish_changes(2)  # must not raise
+    monkeypatch.setattr(merge_mod.os, "replace", real_replace)
+    assert t.change_versions() == [1, 2]
+    assert {r["id"] for r in t.read_changes(2, 2).collect()} == {"c"}

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.sinks import ManagedTable
@@ -950,17 +951,62 @@ def test_streaming_countmin_replay_still_refreshes_topk(spark, tmp_path):
     assert est["hot"] == 9  # not double-counted
 
 
-def test_streaming_countmin_empty_first_batch(spark, tmp_path):
-    """A zero-row first micro-batch (availableNow on an empty file)
-    must not wedge ingest with a NULL watermark (round-6 ADVICE)."""
-    from cumulus_etl_spark.streaming.heavy_hitters import StreamingCountMin
+def _watermarked(kind, spark, root):
+    """One sketch on the shared replay watermark (streaming/ckpt.py):
+    (row schema, one row, ingest(rows, batch_id), rows folded so far)."""
+    from cumulus_etl_spark.streaming.drift import (
+        StreamingCategoricalMonitor,
+        StreamingDriftMonitor,
+        StreamingPsiMonitor,
+    )
+    from cumulus_etl_spark.streaming.heavy_hitters import (
+        StreamingCountMin,
+        WindowedCountMin,
+    )
+    from cumulus_etl_spark.streaming.quantiles import StreamingHdrHistogram
 
-    cms = StreamingCountMin(spark, str(tmp_path / "cms"), width=64, top_k=5)
-    empty = spark.createDataFrame([], "k string")
-    cms.ingest_batch(empty, "k", batch_id=0)
-    cms.ingest_batch(spark.createDataFrame([("a",)] * 2, ["k"]), "k", batch_id=1)
-    est = {r["k"]: r["estimate"] for r in cms.estimate(["a"]).collect()}
-    assert est["a"] == 2
+    if kind in ("countmin", "windowed_countmin"):
+        cls = StreamingCountMin if kind == "countmin" else WindowedCountMin
+        cms = cls(spark, root, width=64, top_k=5)
+        return ("k string", ("a",),
+                lambda df, b: cms.ingest_batch(df, "k", batch_id=b),
+                lambda: cms.estimate(["a"]).collect()[0]["estimate"])
+    if kind == "hdr":
+        hdr = StreamingHdrHistogram(spark, root)
+        return ("v long", (7,),
+                lambda df, b: hdr.ingest_batch(df, "v", batch_id=b),
+                lambda: sum(r["n"] for r in hdr.histogram().collect()))
+    schema, row, mon = {
+        "psi": ("x double", (0.5,),
+                lambda: StreamingPsiMonitor(spark, root, "x", 1.0, 4)),
+        "multi": ("a double", (0.5,),
+                  lambda: StreamingDriftMonitor(spark, root, ["a"], 4)),
+        "categorical": ("src string", ("a",),
+                        lambda: StreamingCategoricalMonitor(spark, root, "src", 3)),
+    }[kind]
+    mon = mon()
+    mon.set_reference(spark.createDataFrame([row] * 4, schema))
+    return (schema, row,
+            lambda df, b: mon.ingest_batch(df, batch_id=b),
+            lambda: sum(r["n_actual"] for r in mon.report().collect()))
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["countmin", "windowed_countmin", "hdr", "psi", "multi", "categorical"],
+)
+def test_replay_watermark_empty_first_batch(spark, tmp_path, kind):
+    """The shared watermark's contract, for every sketch that uses it: a
+    zero-row first micro-batch (availableNow on an empty file) stores no
+    watermark, so it must not wedge ingest (round-6 ADVICE); batch 1
+    then folds, and a replay of batch 1 is skipped."""
+    schema, row, ingest, folded = _watermarked(kind, spark, str(tmp_path / kind))
+    ingest(spark.createDataFrame([], schema), 0)
+    batch = spark.createDataFrame([row] * 2, schema)
+    ingest(batch, 1)
+    assert folded() == 2
+    ingest(batch, 1)  # crash replay
+    assert folded() == 2
 
 
 def test_windowed_countmin_planted_drift(spark, tmp_path):

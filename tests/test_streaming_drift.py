@@ -606,3 +606,58 @@ def test_streaming_categorical_availablenow_and_cli(spark, tmp_path, capsys):
         main(["drift-monitor", landing, str(tmp_path / "m2"),
               "--column", "src", "--categorical", "--bucket-width", "1.0",
               "--schema", "src string"])
+
+
+# ---- shared driver: a crash before the reference histogram commits --------
+
+
+@pytest.mark.parametrize("kind", ["multi", "categorical", "psi"])
+def test_crash_before_reference_merge_recovers(spark, tmp_path, monkeypatch, kind):
+    """A first run that crashes between the config-sidecar write and the
+    expected-histogram merge must not wedge the monitor: the driver asks
+    the TABLE, not the sidecar, whether a baseline exists, so a re-run
+    with the same reference freezes it and folds the landing data like
+    the batch operator."""
+    from cumulus_etl_spark.operators.drift import categorical_drift, psi_drift_multi
+    from cumulus_etl_spark.sinks import ManagedTable
+    from cumulus_etl_spark.streaming.drift import (
+        streaming_categorical_drift,
+        streaming_drift_multi,
+    )
+
+    if kind == "multi":
+        ref = _snap2(spark, [(i % 8, (i * 3) % 12) for i in range(60)])
+        wave = _snap2(spark, [(i % 5, (i * 7) % 6) for i in range(30)])
+        schema, want = "a double, b double", psi_drift_multi(ref, wave, ["a", "b"], 4)
+        run = lambda root, ckpt: streaming_drift_multi(
+            spark, landing, root, ckpt, schema, ["a", "b"], ref, 4)
+    elif kind == "categorical":
+        ref = _cats(spark, ["a"] * 6 + ["b"] * 4 + ["c"] * 2)
+        wave = _cats(spark, ["a"] * 2 + ["c"] * 5 + ["zz"] * 3)
+        schema, want = "src string", categorical_drift(ref, wave, "src", top_k=2)
+        run = lambda root, ckpt: streaming_categorical_drift(
+            spark, landing, root, ckpt, schema, "src", ref, 2)
+    else:
+        ref = _snap(spark, [0.5] * 6 + [1.5] * 4)
+        wave = _snap(spark, [0.5] * 2 + [2.5] * 5)
+        schema, want = "x double", psi_drift(ref, wave, "x", 1.0, 4)
+        run = lambda root, ckpt: streaming_psi(
+            spark, landing, root, ckpt, schema, "x", ref, 1.0, 4)
+    landing = str(tmp_path / "landing")
+    wave.write.parquet(landing)
+
+    real_merge = ManagedTable.merge
+    calls = []
+
+    def crash_first_merge(self, *args, **kwargs):
+        calls.append(self.name)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash before the reference merge")
+        return real_merge(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManagedTable, "merge", crash_first_merge)
+    root, ckpt = str(tmp_path / "mon"), str(tmp_path / "ckpt")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(root, ckpt)
+    mon = run(root, ckpt)  # same reference, same checkpoint
+    assert _rows(mon.report()) == _rows(want)
