@@ -158,29 +158,6 @@ def main() -> None:
     load_end = os.getloadavg()
 
     total = round(sum(timings.values()), 3)
-    # The 14-query set benched in rounds 1-2, for round-over-round
-    # comparability: round 3 added three multi-stage training-data
-    # pipelines (corpus_prepare_pipeline, text_dedup_clusters,
-    # vector_ann_lsh) to the headline set, which grows `value` without
-    # any regression in the original queries.
-    legacy = {
-        "dedup_last_wins", "deid_anonymize_customers", "events_hourly_rollup",
-        "join_asof_last_purchase", "q18_large_orders", "q1_pricing_summary",
-        "q3_shipping_priority", "q5_local_supplier_volume", "q6_forecast_revenue",
-        "text_fingerprint_dedup", "text_minhash_dedup", "text_token_stats",
-        "vector_knn_bruteforce", "window_topk_per_customer",
-    }
-    core14 = round(sum(t for n, t in timings.items() if n in legacy), 3)
-    # The exact 20-query set benched in round 6, for r6-comparability:
-    # round 7 added graph_triangle_count, join_sorted_neighborhood,
-    # agg_association_rules, agg_countmin_topk (round-6 verdict ask 8),
-    # which grows `value` without touching these.
-    r6_set = legacy | {
-        "corpus_prepare_pipeline", "deid_scrub_throughput", "ml_gram_matrix",
-        "text_dedup_clusters", "vector_ann_lsh", "vector_semdedup",
-    }
-    r6_20 = round(sum(t for n, t in timings.items() if n in r6_set), 3)
-
     # (The one-shot r8 A/B regression-attribution rig was removed after
     # VERDICT r8 adjudicated both r7 readings as noise; min-of-2 + the
     # loadavg record below remain the standing noise defenses.)
@@ -268,8 +245,6 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": {n: round(t, 2) for n, t in timings.items()},
-        "core14_r1r2_comparable_seconds": core14,
-        "r6_20query_comparable_seconds": r6_20,
         "sf": sf,
         "scale": scale_summary,
         "load": noise["loadavg_start"][0],

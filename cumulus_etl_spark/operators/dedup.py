@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.sources.hadoop_io import file_lengths
+
 # Mersenne prime 2^31-1: keeps a*h+b inside int64 (ANSI overflow-safe)
 # while giving a big enough universal-hash family for MinHash.
 _MINHASH_PRIME = (1 << 31) - 1
@@ -45,27 +47,6 @@ _EXPAND_ITEMS_PER_TASK = 200_000
 _VERIFY_ITEMS_PER_TASK = 250_000
 
 
-def _parse_bytes(spark, s: str | None, default: int) -> int:
-    """Spark-semantics byte-size parse ('10m', '1g', '512k', '-1',
-    plain bytes) via the JVM's own JavaUtils, falling back to
-    ``default`` on anything unparseable (r13 ADVICE: int(str.rstrip('b'))
-    raised on size suffixes and silently discarded the user's value).
-    Plain integers — including '-1' (disable), which JavaUtils rejects —
-    parse first without a py4j round trip."""
-    try:
-        return int(s)
-    except (TypeError, ValueError):
-        pass
-    try:
-        return int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-                str(s)
-            )
-        )
-    except Exception:
-        return default
-
-
 def _scan_splits(df: DataFrame) -> int | None:
     """Estimated scan-task count of a FILE-SOURCED frame, from the plan's
     file index only — never ``df.rdd`` (r13 ADVICE medium: converting a
@@ -91,22 +72,9 @@ def _scan_splits(df: DataFrame) -> int | None:
     dp = spark.sparkContext.defaultParallelism
     if len(files) >= dp:
         return len(files)
-    max_split = _parse_bytes(
-        spark,
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"),
-        128 << 20,
-    )
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    splits = 0
-    for uri in files:
-        try:
-            p = jvm.org.apache.hadoop.fs.Path(uri)
-            n = int(p.getFileSystem(hconf).getFileStatus(p).getLen())
-        except Exception:
-            n = 0  # unstat-able file counts as one task (narrow-scan assumption)
-        splits += max(1, -(-n // max_split))
-    return splits
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    # an unstat-able file (length 0) counts as one task (narrow-scan assumption)
+    return sum(max(1, -(-n // max_split)) for n in file_lengths(spark, files))
 
 
 def _parallel_floor(df: DataFrame) -> DataFrame:

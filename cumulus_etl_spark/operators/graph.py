@@ -105,13 +105,7 @@ def connected_components(
     # Same-JVM A/B (OPTIMIZATION_r13.md, identical pinned feed): broadcast
     # faster in all 4 interleaved rounds, min 3.38 → 2.42 s, signatures
     # identical.
-    from cumulus_etl_spark.operators.dedup import _parse_bytes
-
-    _thr = _parse_bytes(
-        labels.sparkSession,
-        labels.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", None),
-        10 * 1024 * 1024,
-    )
+    _thr = labels.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     # ~32 bytes/row estimate (two 64-bit ids + row overhead); _thr <= 0
     # means the user disabled auto-broadcast — respect that here too.
     # (The eager localCheckpoint above already ran the job, so the

@@ -48,9 +48,7 @@ class IncrementalRollup:
         self.group_cols = list(group_cols)
         self.value_col = value_col
         self.table = ManagedTable(spark, root, name)
-        self.policy = MergePolicy(
-            keys=tuple(group_cols), last_updated_field=None, num_buckets=16
-        )
+        self.policy = MergePolicy(keys=tuple(group_cols), last_updated_field=None)
         self._state_path = os.path.join(root, f"{name}.{_APPLIED_STATE}")
 
     def _state(self) -> dict:

@@ -17,10 +17,19 @@ file-pruned, transactional, liquid-clustered on the keys. Without Delta,
 the fallback is a *bucket-pruned versioned-parquet* table:
 
 - Every version directory is hive-partitioned by ``__bucket =
-  pmod(xxhash64(bucket cols), num_buckets)``. The bucket columns are the
+  pmod(xxhash64(bucket cols), n)``. The bucket columns are the
   ``group_field`` when the policy has one (group replacement must see
   every row of a touched group), else the uniqueness keys.
-- A merge computes the batch's touched buckets (≤ num_buckets ints on
+- ``n`` is sized by bytes, as Delta sizes files: the fewest power-of-two
+  buckets of one scan task (``spark.sql.files.maxPartitionBytes``) each,
+  at most MAX_BUCKETS (~25 GB buckets at 100 TB). A merge keeps the
+  pointer's count while the current version's bytes on disk fit it, and
+  rewrites a table that outgrew it whole, once (O(1) rewrites per row).
+  A whole-table write is routed by an upper bound (current bytes plus
+  every file the batch scans: an ETL frame filters the whole export),
+  then folded down to the count its written bytes need, never below the
+  pointer's, by moving bucket ``b``'s files into bucket ``b mod m``.
+- A merge computes the batch's touched buckets (≤ n ints on
   the driver), reads ONLY those partitions of the current version
   (partition pruning — ``PartitionFilters`` in the scan), resolves
   winners with one shuffle over the touched subset, and writes only the
@@ -30,7 +39,7 @@ the fallback is a *bucket-pruned versioned-parquet* table:
   NOT table size; this is the fallback's answer to Delta file pruning.
   On an object store without cheap links you'd run the Delta branch;
   the merge COMPUTE is bucket-pruned either way.
-- The ``_CURRENT`` pointer (version + schema + num_buckets) flips
+- The ``_CURRENT`` pointer (version, schema, bucket layout) flips
   atomically at the end, so readers never see a half-written table and
   a crashed merge is invisible. ``finalize()`` drops superseded version
   dirs (vacuum analog; hardlinked files survive via the live version).
@@ -40,9 +49,6 @@ groups (true for every reference table — NLP row ids embed note_ref,
 completion keys embed group_name). A migrating key would strand its old
 row in the old group's bucket, exactly as Delta's group-scoped
 ``whenNotMatchedBySourceDelete`` would.
-
-Scaling num_buckets: size so a bucket ≈ one comfortable task
-(64 locally; ~4096 at 100 TB keeps buckets ~25 GB before compression).
 """
 
 from __future__ import annotations
@@ -66,11 +72,17 @@ except ImportError:
 
 CURRENT_POINTER = "_CURRENT"
 BUCKET_COL = "__bucket"
+MAX_BUCKETS = 4096
 
 
 def _bucket_expr(cols: tuple[str, ...], num_buckets: int) -> Column:
     """Deterministic bucket id for a row: pmod(xxhash64(cols), n)."""
     return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(num_buckets)).cast("int")
+
+
+def _touched_buckets(df: DataFrame, cols: tuple[str, ...], n: int) -> list[int]:
+    """The buckets ``df``'s rows hash into (at most ``n`` ints on the driver)."""
+    return sorted(r[0] for r in df.select(_bucket_expr(cols, n).alias("b")).distinct().collect())
 
 
 def _link_tree(src: str, dst: str) -> None:
@@ -86,6 +98,42 @@ def _link_tree(src: str, dst: str) -> None:
             os.link(s, d)
         except OSError:  # pragma: no cover - cross-device / FS without links
             shutil.copy2(s, d)
+
+
+def _tree_bytes(path: str) -> int:
+    """On-disk bytes of the data files (not ``.``/``_`` ones) under ``path``."""
+    return sum(os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(path)
+               for f in fs if not f.startswith((".", "_")))
+
+
+def _input_bytes(df: DataFrame) -> int:
+    """Bytes of every file ``df`` scans, from the file indexes Spark listed
+    when it planned the scan (no per-file filesystem call); 0 in memory."""
+    sizes = {}  # per index: a union of filters lists one scan twice
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        rel = leaves.next()
+        rel = rel.relation() if rel.getClass().getSimpleName() == "LogicalRelation" else rel
+        if rel.getClass().getSimpleName() == "HadoopFsRelation":
+            sizes[rel.location().hashCode()] = rel.location().sizeInBytes()
+    return sum(sizes.values())
+
+
+def _fold_buckets(vdir: str, n: int, m: int) -> int:
+    """Fold an ``n``-bucket version dir to ``m`` (dividing ``n``) buckets,
+    no row rewritten: bucket ``b``'s files move into bucket ``b mod m``,
+    prefixed ``b<b>-`` as one task names its file alike in every bucket."""
+    if n % m:  # e.g. a recorded count that is not a power of two
+        return n
+    for b in range(m, n):
+        src, dst = (os.path.join(vdir, f"{BUCKET_COL}={c}") for c in (b, b % m))
+        if os.path.isdir(src):
+            os.makedirs(dst, exist_ok=True)
+            for f in os.listdir(src):
+                dot = f[:1] == "."  # a checksum file keeps its leading dot
+                os.rename(os.path.join(src, f), os.path.join(dst, f"{'.' * dot}b{b}-{f[dot:]}"))
+            os.rmdir(src)
+    return min(n, m)
 
 
 def _has_field(df: DataFrame, dotted: str) -> bool:
@@ -111,9 +159,6 @@ class MergePolicy:
     # dotted path of the ISO-string timestamp used as the freshness guard;
     # None disables the guard (always update on match)
     last_updated_field: str | None = "meta.lastUpdated"
-    # hive-partition count for bucket-pruned merges; size so one bucket is
-    # one comfortable task (64 locally, ~4096 at 100 TB)
-    num_buckets: int = 64
     # multi-column file clustering: interleave the bits of these numeric
     # columns (Z-order / Morton, the strategy behind Delta OPTIMIZE
     # ZORDER) so min/max footers prune on ALL of them, not just the
@@ -274,12 +319,13 @@ class ManagedTable:
         ptr = self._pointer()
         fuse_bucket = policy.bucket_cols == tuple(policy.keys)
         if ptr is None:
+            n = self._sized(_input_bytes(updates))
             if fuse_bucket:
                 # Bootstrap, bucket = f(keys): route to the output bucket
                 # first and dedupe on that same exchange — ONE shuffle
                 # where dedupe-then-write was two.
                 bucketed = updates.withColumn(
-                    BUCKET_COL, _bucket_expr(policy.bucket_cols, policy.num_buckets)
+                    BUCKET_COL, _bucket_expr(policy.bucket_cols, n)
                 ).repartition(F.col(BUCKET_COL))
                 w0 = Window.partitionBy(BUCKET_COL, *policy.keys).orderBy(
                     *_dedupe_order(updates, policy)
@@ -300,7 +346,7 @@ class ManagedTable:
                         ),
                     )
                 self._write_version(
-                    deduped, policy, touched=None, prev=None, pre_bucketed=True
+                    deduped, policy, n, touched=None, prev=None, pre_bucketed=True
                 )
             else:
                 deduped = _dedupe_updates(updates, policy)
@@ -308,27 +354,20 @@ class ManagedTable:
                     self._write_changes(
                         1, deduped.withColumn("_change_type", F.lit("insert"))
                     )
-                self._write_version(deduped, policy, touched=None, prev=None)
+                self._write_version(deduped, policy, n, touched=None, prev=None)
             self._publish_changes(1)
             return
-        relayout = tuple(ptr.get("bucket_cols") or ()) != policy.bucket_cols or int(
-            ptr.get("num_buckets") or 0
-        ) != policy.num_buckets
-        if relayout:
-            # bucketing layout changed: merge against the whole table once
-            # and rewrite every bucket under the new layout
+        n = int(ptr.get("num_buckets") or 0)
+        on_disk = _tree_bytes(self._vdir(int(ptr["version"])))
+        if tuple(ptr.get("bucket_cols") or ()) != policy.bucket_cols or self._sized(on_disk) > n:
+            # bucket columns changed or the table outgrew its count: merge
+            # against the whole table once, rewriting every bucket
+            n = max(n, self._sized(on_disk + _input_bytes(updates)))
             touched = None
         else:
             # Bucket pruning: only the batch's buckets are read, shuffled,
             # and rewritten; the rest of the table is re-linked untouched.
-            touched = sorted(
-                r[0]
-                for r in updates.select(
-                    _bucket_expr(policy.bucket_cols, policy.num_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
+            touched = _touched_buckets(updates, policy.bucket_cols, n)
         existing = self._read_version(ptr, buckets=touched)
 
         keys = list(policy.keys)
@@ -351,7 +390,7 @@ class ManagedTable:
         # write shuffle on bucket = two full-data exchanges.
         if fuse_bucket:
             allr = allr.withColumn(
-                BUCKET_COL, _bucket_expr(policy.bucket_cols, policy.num_buckets)
+                BUCKET_COL, _bucket_expr(policy.bucket_cols, n)
             ).repartition(F.col(BUCKET_COL))
             w = Window.partitionBy(BUCKET_COL, *keys)
         else:
@@ -447,7 +486,7 @@ class ManagedTable:
             # _publish_pending_changes).
             self._write_changes(next_v, changes)
         self._write_version(
-            out, policy, touched=touched, prev=ptr, pre_bucketed=fuse_bucket
+            out, policy, n, touched=touched, prev=ptr, pre_bucketed=fuse_bucket
         )
         self._publish_changes(next_v)
 
@@ -487,16 +526,8 @@ class ManagedTable:
 
         bucket_cols = tuple(ptr.get("bucket_cols") or (id_col,))
         num_buckets = int(ptr.get("num_buckets") or 1)
-        touched: list[int] | None = None
-        if bucket_cols == (id_col,):
-            touched = sorted(
-                r[0]
-                for r in ids.select(
-                    _bucket_expr(("__del_id",), num_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
+        by_id = bucket_cols == (id_col,)
+        touched = _touched_buckets(ids, ("__del_id",), num_buckets) if by_id else None
         if change_feed is None:
             # Inherit from the table: a feed-maintained table must never
             # commit a silent hole that CDF consumers would skip forever.
@@ -625,22 +656,24 @@ class ManagedTable:
     def _vdir(self, v: int) -> str:
         return os.path.join(self.path, f"v{v}")
 
+    def _sized(self, nbytes: int) -> int:
+        """Fewest power-of-two buckets (<= MAX_BUCKETS) of one scan task each for ``nbytes``."""
+        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        tasks = max(1, -(-nbytes // split))
+        return min(MAX_BUCKETS, 1 << (tasks - 1).bit_length())
+
     def _write_version(
-        self,
-        df: DataFrame,
-        policy: MergePolicy,
-        touched: list[int] | None,
-        prev: dict | None,
-        pre_bucketed: bool = False,
+        self, df: DataFrame, policy: MergePolicy, num_buckets: int,
+        touched: list[int] | None, prev: dict | None, pre_bucketed: bool = False,
     ) -> int:
         # range-cluster data files by key so parquet min/max footers prune key
         # lookups — the fallback's analog of Delta liquid clustering
         # (clusterBy(uniqueness_fields), ref deltalake.py:103-106)
         return self._write_raw(
-            df, policy.bucket_cols, policy.num_buckets,
+            df, policy.bucket_cols, num_buckets,
             sort_cols=policy.keys, touched=touched, prev=prev,
             zorder_cols=policy.zorder_cols, change_feed=policy.change_feed,
-            pre_bucketed=pre_bucketed,
+            pre_bucketed=pre_bucketed, fold=touched is None,
         )
 
     def _write_raw(
@@ -654,6 +687,7 @@ class ManagedTable:
         zorder_cols: tuple[str, ...] | None = None,
         change_feed: bool = False,
         pre_bucketed: bool = False,
+        fold: bool = False,
     ) -> int:
         """Write the next version: hive-partition by bucket; one shuffle
         routes rows to their bucket, rows sorted by ``sort_cols`` within
@@ -663,7 +697,8 @@ class ManagedTable:
 
         ``pre_bucketed``: the caller already attached BUCKET_COL and
         hash-partitioned the frame on it (merge fuses that exchange with
-        its window — r13 opt), so the routing shuffle is skipped here."""
+        its window — r13 opt), so the routing shuffle is skipped here.
+        ``fold``: fold a whole-table write (module docstring)."""
         v = (self.current_version() or 0) + 1
         out = self._vdir(v)
         if pre_bucketed:
@@ -689,6 +724,9 @@ class ManagedTable:
             .partitionBy(BUCKET_COL)
             .parquet(out)
         )
+        if fold:  # never below the recorded count
+            floor = int(prev.get("num_buckets") or 0) if prev else 0
+            num_buckets = _fold_buckets(out, num_buckets, max(floor, self._sized(_tree_bytes(out))))
         if touched is not None and prev is not None:
             prev_dir = self._vdir(int(prev["version"]))
             keep = {f"{BUCKET_COL}={t}" for t in touched}

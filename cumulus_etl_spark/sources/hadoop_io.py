@@ -9,14 +9,15 @@ local paths.  These helpers route those few bytes through the same
 session's Hadoop configuration), so a component whose bulk I/O is
 already Spark-native becomes genuinely root-scheme-agnostic.
 
-Deliberately tiny: text blobs of config/state size (KBs), not a general
-file layer.  The versioned-parquet merge sink stays POSIX-local by
-design (it relies on hardlinks); these helpers are for components like
-the ANN index whose layout has no such dependency.
+Deliberately tiny: text blobs of config/state size (KBs) and file
+lengths, not a general file layer.  The versioned-parquet merge sink
+stays POSIX-local by design (it relies on hardlinks); these helpers are
+for components like the ANN index whose layout has no such dependency.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -63,3 +64,16 @@ def read_text(spark: SparkSession, path: str) -> str:
         )
     finally:
         stream.close()
+
+
+def file_lengths(spark: SparkSession, uris: list[str]) -> list[int]:
+    """Byte length of each file (0 if it cannot be stat'ed), to size scan
+    tasks from a frame's ``inputFiles()``."""
+    out = []
+    for uri in uris:
+        try:
+            fs, jpath = _fs_and_path(spark, uri)
+            out.append(int(fs.getFileStatus(jpath).getLen()))
+        except Py4JJavaError:
+            out.append(0)
+    return out

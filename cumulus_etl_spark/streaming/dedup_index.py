@@ -61,10 +61,8 @@ class DedupIndex:
         self.shingles = ManagedTable(spark, root, SHINGLE_TABLE)
         self.dups = ManagedTable(spark, root, DUPS_TABLE)
         # one index row per (doc, band); one shingle row per doc
-        self._index_policy = MergePolicy(
-            keys=("id", "band_idx"), last_updated_field=None, num_buckets=8
-        )
-        self._row_policy = MergePolicy(keys=("id",), last_updated_field=None, num_buckets=8)
+        self._index_policy = MergePolicy(keys=("id", "band_idx"), last_updated_field=None)
+        self._row_policy = MergePolicy(keys=("id",), last_updated_field=None)
 
     def ingest_batch(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> None:
         """Index a batch of new docs and record verified near-dups
@@ -112,7 +110,7 @@ class DedupIndex:
             )
         )
         if verified.limit(1).count() > 0:
-            dup_policy = MergePolicy(keys=("id", "dup_of"), last_updated_field=None, num_buckets=8)
+            dup_policy = MergePolicy(keys=("id", "dup_of"), last_updated_field=None)
             self.dups.merge(verified, dup_policy)
         self.index.merge(banded, self._index_policy)
         self.shingles.merge(sh, self._row_policy)

@@ -155,7 +155,6 @@ class _ReferenceMonitor:
             keys=("side", *self.KEYS),
             group_field="side",
             last_updated_field=None,
-            num_buckets=1,
         )
 
     def _configure(self, **params) -> dict:

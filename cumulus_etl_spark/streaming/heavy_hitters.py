@@ -66,12 +66,8 @@ class StreamingCountMin:
         self.top_k = top_k
         self.cells = ManagedTable(spark, root, CELLS_TABLE)
         self.topk = ManagedTable(spark, root, TOPK_TABLE)
-        self._cell_policy = MergePolicy(
-            keys=("seed", "bucket"), last_updated_field=None, num_buckets=4
-        )
-        self._topk_policy = MergePolicy(
-            keys=("k",), last_updated_field=None, num_buckets=4
-        )
+        self._cell_policy = MergePolicy(keys=("seed", "bucket"), last_updated_field=None)
+        self._topk_policy = MergePolicy(keys=("k",), last_updated_field=None)
         if type(self) is StreamingCountMin:
             self._guard_mode(root, WIN_CELLS_TABLE, "WindowedCountMin")
 
@@ -250,9 +246,7 @@ class WindowedCountMin(StreamingCountMin):
         self.cells = ManagedTable(spark, root, WIN_CELLS_TABLE)
         self.topk = ManagedTable(spark, root, WIN_TOPK_TABLE)
         self._guard_mode(root, CELLS_TABLE, "StreamingCountMin (all-time)")
-        self._cell_policy = MergePolicy(
-            keys=("slot", "seed", "bucket"), last_updated_field=None, num_buckets=4
-        )
+        self._cell_policy = MergePolicy(keys=("slot", "seed", "bucket"), last_updated_field=None)
 
     def _dense_grid(self) -> DataFrame:
         n = self.depth * self.width

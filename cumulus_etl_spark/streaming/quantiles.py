@@ -133,9 +133,7 @@ class StreamingHdrHistogram:
         self.key_col = key_col
         self.cells = ManagedTable(spark, root, HDR_CELLS_TABLE)
         keys = ("key", "bucket") if key_col is not None else ("bucket",)
-        self._policy = MergePolicy(
-            keys=keys, last_updated_field=None, num_buckets=4
-        )
+        self._policy = MergePolicy(keys=keys, last_updated_field=None)
         prior = self.cells.read()
         if prior is not None and ("key" in prior.columns) != (key_col is not None):
             stored = "per-key" if "key" in prior.columns else "global"

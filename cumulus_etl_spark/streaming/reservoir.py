@@ -117,7 +117,6 @@ class StreamingReservoir:
             keys=("rid",),
             group_field="grp",
             last_updated_field=None,
-            num_buckets=1,
         )
         prior = self.table.read()
         if prior is not None:

@@ -165,7 +165,7 @@ def test_real_delta_merge_end_to_end(spark, tmp_path):
     except Exception as e:  # session lacks delta extensions/jars
         pytest.skip(f"delta-spark installed but session can't write delta: {e}")
     t = ManagedTable(spark, str(tmp_path), "patients")
-    pol = MergePolicy(keys=("id",), last_updated_field=None, num_buckets=2)
+    pol = MergePolicy(keys=("id",), last_updated_field=None)
     t.merge(spark.createDataFrame([("a", 1), ("b", 2)], "id string, v int"), pol)
     t.merge(spark.createDataFrame([("b", 9), ("c", 3)], "id string, v int"), pol)
     got = {r["id"]: r["v"] for r in t.read().collect()}

@@ -12,10 +12,12 @@ the insert clause, and the delete-by-merge path."""
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import glob
 import json
 import os
+import tempfile
 
 import pytest
 from pyspark.sql import Row
@@ -285,45 +287,87 @@ def test_crash_safety_and_finalize(spark, tmp_path):
     assert set(rows_of(tbl)) == {"a", "b"}
 
 
+# ---- derived bucket count ---------------------------------------------------
+# The sink sizes a table to spark.sql.files.maxPartitionBytes per bucket.
+# Tests that need several buckets lower that conf for their own scope: at
+# 32 KB a 2,000-row _hex_rows table (~190 KB on disk) lays out as 8 buckets,
+# with each bucket file well under one task, so the count is stable.
+
+@contextlib.contextmanager
+def _split_bytes(spark):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(32 << 10))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _hex_rows(spark, n, start=0):
+    """(id, val) rows k<start>.. of ~70 B each: the 64-hex val outweighs
+    the parquet footers."""
+    return spark.range(start, start + n).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("id"),
+        F.sha2(F.col("id").cast("string"), 256).alias("val"),
+    )
+
+
+def _on_disk(tmp_path, df):
+    """``df`` as a file-sourced batch, whose input bytes the sink counts."""
+    path = tempfile.mkdtemp(dir=tmp_path)
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def _recorded_buckets(tbl):
+    with open(os.path.join(tbl.path, "_CURRENT")) as fh:
+        return json.load(fh)["num_buckets"]
+
+
+def _bucket_inodes(tbl):
+    vdir = os.path.join(tbl.path, f"v{tbl.current_version()}")
+    return {
+        d: {f: os.stat(os.path.join(vdir, d, f)).st_ino for f in os.listdir(os.path.join(vdir, d))}
+        for d in os.listdir(vdir) if d.startswith("__bucket=")
+    }
+
+
+def _rewritten_buckets(tbl, change):
+    """Run ``change``; every bucket must survive it, and the count of
+    buckets whose files changed is returned — the rest were re-linked
+    (same inodes, no data copied)."""
+    before = _bucket_inodes(tbl)
+    change()
+    after = _bucket_inodes(tbl)
+    assert set(after) == set(before)
+    return sum(after[d] != before[d] for d in after)
+
+
 def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     """The scale property: a small batch into a big table re-links every
     untouched bucket (same inode — no data copied) and only rewrites the
     buckets the batch hashes into."""
     tbl = ManagedTable(spark, str(tmp_path), "t")
-    pol = MergePolicy(last_updated_field=None, num_buckets=16)
-    base = spark.createDataFrame([(f"k{i}", "v0") for i in range(200)], "id string, val string")
-    tbl.merge(base, pol)
-    v1 = tbl.path + "/v1"
-    inode_before = {
-        d: {f: os.stat(os.path.join(v1, d, f)).st_ino for f in os.listdir(os.path.join(v1, d))}
-        for d in os.listdir(v1) if d.startswith("__bucket=")
-    }
-    tbl.merge(spark.createDataFrame([("k3", "v1")], "id string, val string"), pol)
-    v2 = tbl.path + "/v2"
-    dirs2 = [d for d in os.listdir(v2) if d.startswith("__bucket=")]
-    assert set(dirs2) == set(inode_before)  # all buckets present in v2
-    relinked = rewritten = 0
-    for d in dirs2:
-        files = {f: os.stat(os.path.join(v2, d, f)).st_ino for f in os.listdir(os.path.join(v2, d))}
-        if files == inode_before[d]:
-            relinked += 1
-        else:
-            rewritten += 1
-    assert rewritten == 1  # exactly the one touched bucket
-    assert relinked == len(dirs2) - 1
+    pol = MergePolicy(last_updated_field=None)
+    with _split_bytes(spark):
+        tbl.merge(_on_disk(tmp_path, _hex_rows(spark, 2000)), pol)
+        assert _recorded_buckets(tbl) == 8
+        one = spark.createDataFrame([("k3", "v1")], "id string, val string")
+        assert _rewritten_buckets(tbl, lambda: tbl.merge(one, pol)) == 1
     # and the data is still right
     got = {r["id"]: r["val"] for r in tbl.read().collect()}
-    assert got["k3"] == "v1" and got["k7"] == "v0" and len(got) == 200
+    assert got["k3"] == "v1" and got["k7"] != "v1" and len(got) == 2000
 
 
 def test_merge_reads_prune_partitions(spark, tmp_path):
     """The pruned scan must carry a PartitionFilters entry on __bucket —
     i.e. the merge never lists untouched buckets' files."""
     tbl = ManagedTable(spark, str(tmp_path), "t")
-    pol = MergePolicy(last_updated_field=None, num_buckets=16)
-    tbl.merge(spark.createDataFrame([(f"k{i}", "x") for i in range(50)], "id string, val string"), pol)
-    pruned = tbl._read_version(tbl._pointer(), buckets=[3])
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    with _split_bytes(spark):
+        tbl.merge(_on_disk(tmp_path, _hex_rows(spark, 2000)), MergePolicy(last_updated_field=None))
+        pruned = tbl._read_version(tbl._pointer(), buckets=[3])
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__bucket" in plan
 
 
@@ -332,53 +376,136 @@ def test_group_bucketing_replacement_across_buckets(spark, tmp_path):
     re-run of one group finds all its stale rows without touching other
     groups' buckets."""
     tbl = ManagedTable(spark, str(tmp_path), "t")
-    pol = MergePolicy(keys=("id",), group_field="grp", last_updated_field=None, num_buckets=8)
-    df1 = spark.createDataFrame(
-        [(f"r{g}_{i}", f"g{g}", "x") for g in range(20) for i in range(3)],
-        "id string, grp string, val string",
-    )
-    tbl.merge(df1, pol)
-    # re-run group g5 with 2 rows where 3 existed
-    df2 = spark.createDataFrame(
-        [("r5_0", "g5", "y"), ("r5_1", "g5", "y")], "id string, grp string, val string"
-    )
-    tbl.merge(df2, pol)
+    pol = MergePolicy(keys=("id",), group_field="grp", last_updated_field=None)
+    # 20 groups of 50 rows, r<g>_<i> in group g<g>
+    g, i = (F.col("id") / 50).cast("int").cast("string"), (F.col("id") % 50).cast("string")
+    df1 = _on_disk(tmp_path, spark.range(1000).select(
+        F.concat(F.lit("r"), g, F.lit("_"), i).alias("id"),
+        F.concat(F.lit("g"), g).alias("grp"),
+        F.sha2(F.col("id").cast("string"), 256).alias("val"),
+    ))
+    with _split_bytes(spark):
+        tbl.merge(df1, pol)
+        assert _recorded_buckets(tbl) > 1
+        # re-run group g5 with 2 rows where 50 existed
+        df2 = spark.createDataFrame(
+            [("r5_0", "g5", "y"), ("r5_1", "g5", "y")], "id string, grp string, val string"
+        )
+        assert _rewritten_buckets(tbl, lambda: tbl.merge(df2, pol)) == 1
     got = {r["id"]: r["val"] for r in tbl.read().collect()}
     assert got["r5_0"] == "y" and got["r5_1"] == "y"
-    assert "r5_2" not in got  # stale row of the re-run group dropped
-    assert sum(1 for k in got if k.startswith("r7_")) == 3  # other groups intact
-    assert len(got) == 20 * 3 - 1
+    assert sum(1 for k in got if k.startswith("r5_")) == 2  # stale rows dropped
+    assert sum(1 for k in got if k.startswith("r7_")) == 50  # other groups intact
+    assert len(got) == 20 * 50 - 48
 
 
 def test_delete_ids_bucket_pruned(spark, tmp_path):
     tbl = ManagedTable(spark, str(tmp_path), "t")
-    pol = MergePolicy(last_updated_field=None, num_buckets=16)
-    tbl.merge(spark.createDataFrame([(f"k{i}", "x") for i in range(100)], "id string, val string"), pol)
-    v1_inodes = {}
-    v1 = tbl.path + "/v1"
-    for d in os.listdir(v1):
-        if d.startswith("__bucket="):
-            v1_inodes[d] = {f: os.stat(os.path.join(v1, d, f)).st_ino
-                            for f in os.listdir(os.path.join(v1, d))}
-    tbl.delete_ids(["k42"])
+    with _split_bytes(spark):
+        tbl.merge(_on_disk(tmp_path, _hex_rows(spark, 2000)), MergePolicy(last_updated_field=None))
+        assert _rewritten_buckets(tbl, lambda: tbl.delete_ids(["k42"])) == 1
     assert "k42" not in {r["id"] for r in tbl.read().collect()}
-    assert tbl.read().count() == 99
-    v2 = tbl.path + "/v2"
-    changed = [d for d in os.listdir(v2) if d.startswith("__bucket=")
-               and {f: os.stat(os.path.join(v2, d, f)).st_ino
-                    for f in os.listdir(os.path.join(v2, d))} != v1_inodes.get(d)]
-    assert len(changed) == 1  # only k42's bucket rewritten
+    assert tbl.read().count() == 1999
 
 
-def test_bucket_relayout_on_policy_change(spark, tmp_path):
+def test_bucket_count_grows_with_the_table(spark, tmp_path):
+    """A table that outgrows its bucket count re-lays out on the next
+    merge, once, at the smallest power of two that fits it, data intact;
+    the recorded count then wins, so with the conf restored the grown
+    table keeps it and stays bucket-pruned."""
     tbl = ManagedTable(spark, str(tmp_path), "t")
-    tbl.merge(make_df(spark, [("a", "1", None), ("b", "1", None)]), MergePolicy(num_buckets=4))
-    # same table merged under a different bucket count: full re-layout, data intact
-    tbl.merge(make_df(spark, [("a", "2", None), ("c", "1", None)]), MergePolicy(num_buckets=16))
-    got = rows_of(tbl)
-    assert got["a"][0] == "2" and got["b"][0] == "1" and got["c"][0] == "1"
-    with open(os.path.join(tbl.path, "_CURRENT")) as fh:
-        assert json.load(fh)["num_buckets"] == 16
+    pol = MergePolicy(last_updated_field=None)
+    one = spark.createDataFrame([("k3", "v1")], "id string, val string")
+    with _split_bytes(spark):
+        tbl.merge(_on_disk(tmp_path, _hex_rows(spark, 200)), pol)  # ~20 KB: one bucket
+        assert _recorded_buckets(tbl) == 1
+        # +160 KB lands in the one bucket: growth is judged on the bytes
+        # already on disk, not on the batch's scan
+        tbl.merge(_on_disk(tmp_path, _hex_rows(spark, 2000, start=200)), pol)
+        assert _recorded_buckets(tbl) == 1
+        tbl.merge(one, pol)  # the table outgrew its one bucket: re-layout
+        assert _recorded_buckets(tbl) == 8 and len(_bucket_inodes(tbl)) == 8
+    want = {r["id"]: r["val"] for r in _hex_rows(spark, 2200).collect()}
+    assert {r["id"]: r["val"] for r in tbl.read().collect()} == {**want, "k3": "v1"}
+    one = spark.createDataFrame([("k5", "v1")], "id string, val string")
+    assert _rewritten_buckets(tbl, lambda: tbl.merge(one, pol)) == 1
+    assert _rewritten_buckets(tbl, lambda: tbl.delete_ids(["k42"])) == 1
+    assert _recorded_buckets(tbl) == 8
+    got = {r["id"]: r["val"] for r in tbl.read().collect()}
+    assert len(got) == 2199 and got["k3"] == got["k5"] == "v1" and "k42" not in got
+
+
+def test_small_type_of_a_skewed_export_keeps_one_bucket(spark, tmp_path):
+    """An ETL table's frame filters a scan of the whole export, so its
+    input files overstate the table: the first write is routed by that
+    bound, then folded (files moved, no row rewritten) to the count the
+    written bytes need. The small type's table ends at one bucket and
+    stays there; the large type's table keeps several."""
+    from cumulus_etl_spark.sources.ndjson import read_lines
+
+    export = tmp_path / "export"
+    export.mkdir()
+    (export / "Patient.ndjson").write_text("".join(
+        json.dumps({"resourceType": "Patient", "id": f"p{i}"}) + "\n" for i in range(20)))
+    (export / "Observation.ndjson").write_text("".join(
+        json.dumps({"resourceType": "Observation", "id": f"o{i}", "note": "x" * 60}) + "\n"
+        for i in range(3000)))
+
+    def rows(rt):
+        return read_lines(spark.read, str(export)).filter(F.col("_rt") == rt).select(
+            F.get_json_object("raw_line", "$.id").alias("id"), "raw_line")
+
+    pol = MergePolicy(last_updated_field=None)
+    patient = ManagedTable(spark, str(tmp_path / "lake"), "patient")
+    obs = ManagedTable(spark, str(tmp_path / "lake"), "observation")
+    with _split_bytes(spark):
+        assert merge_mod._input_bytes(rows("Patient")) > 8 * (32 << 10)  # the whole export
+        patient.merge(rows("Patient"), pol)
+        obs.merge(rows("Observation"), pol)
+        assert _recorded_buckets(patient) == 1 and len(_bucket_inodes(patient)) == 1
+        assert 1 < _recorded_buckets(obs) < 8
+        patient.merge(rows("Patient").filter(F.col("id") == "p3"), pol)
+        assert _recorded_buckets(patient) == 1 and len(_bucket_inodes(patient)) == 1
+        # later merges stay bucket-pruned: the export's bytes never count again
+        one_obs = rows("Observation").filter(F.col("id") == "o3")
+        assert _rewritten_buckets(obs, lambda: obs.merge(one_obs, pol)) == 1
+    assert sorted(r["id"] for r in patient.read().collect()) == sorted(f"p{i}" for i in range(20))
+    assert obs.read().count() == 3000
+
+
+def test_recorded_64_bucket_root_merges_pruned(spark, tmp_path):
+    """A root whose pointer records 64 buckets (the fixed default of
+    earlier releases) merges and deletes bucket-pruned at 64 under the
+    derived sizing, which would pick 1 for it: the count never shrinks."""
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    base = spark.createDataFrame([(f"k{i}", "v0") for i in range(500)], "id string, val string")
+    tbl._write_raw(base, ("id",), 64, sort_cols=("id",), touched=None, prev=None)
+    assert _recorded_buckets(tbl) == 64
+    pol = MergePolicy(last_updated_field=None)
+    one = spark.createDataFrame([("k3", "v1")], "id string, val string")
+    assert _rewritten_buckets(tbl, lambda: tbl.merge(one, pol)) == 1
+    assert _rewritten_buckets(tbl, lambda: tbl.delete_ids(["k42"])) == 1
+    assert _recorded_buckets(tbl) == 64
+    got = {r["id"]: r["val"] for r in tbl.read().collect()}
+    assert len(got) == 499 and got["k3"] == "v1" and "k42" not in got
+
+
+def test_odd_recorded_count_is_never_a_fold_target(spark, tmp_path):
+    """Only a divisor of the written count folds exactly. A recorded count
+    that is not a power of two (earlier releases let a caller set any)
+    leaves a re-layout at the power of two it was written at, so every
+    row stays in the bucket a pruned delete looks in."""
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    base = spark.createDataFrame([(f"k{i}", f"g{i % 5}") for i in range(50)], "id string, val string")
+    tbl._write_raw(base, ("val",), 12, sort_cols=("id",), touched=None, prev=None)
+    pol = MergePolicy(last_updated_field=None)  # buckets on id now: a re-layout
+    with _split_bytes(spark):
+        # the batch scans ~470 KB (16 buckets' worth) to add one row
+        batch = _on_disk(tmp_path, _hex_rows(spark, 5000, start=50)).filter(F.col("id") == "k60")
+        tbl.merge(batch, pol)
+        assert _recorded_buckets(tbl) == 16
+        tbl.delete_ids([f"k{i}" for i in range(61)])
+    assert tbl.read().count() == 0
 
 
 def test_dedupe_last_wins_explicit_order(spark):
@@ -456,9 +583,7 @@ def test_zorder_clustered_write_roundtrip(spark, tmp_path):
     """A MergePolicy with zorder_cols writes Morton-clustered files on the
     parquet fallback; merge semantics and read-back are unchanged."""
     tbl = ManagedTable(spark, str(tmp_path), "events")
-    pol = MergePolicy(
-        keys=("id",), last_updated_field=None, zorder_cols=("x", "y"), num_buckets=2
-    )
+    pol = MergePolicy(keys=("id",), last_updated_field=None, zorder_cols=("x", "y"))
     df = spark.createDataFrame(
         [(str(i), i % 10, (i * 7) % 10) for i in range(100)],
         "id string, x int, y int",
@@ -478,8 +603,7 @@ def test_change_data_feed_classifies_and_accumulates(spark, tmp_path):
     from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
 
     t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), group_field="grp",
-                      last_updated_field=None, num_buckets=4, change_feed=True)
+    pol = MergePolicy(keys=("id",), group_field="grp", last_updated_field=None, change_feed=True)
 
     # v1: initial load -> all inserts
     t.merge(spark.createDataFrame(
@@ -519,8 +643,7 @@ def test_incremental_rollup_tracks_recompute(spark, tmp_path):
     from cumulus_etl_spark.sinks.incremental_view import IncrementalRollup
 
     src = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), group_field="grp",
-                      last_updated_field=None, num_buckets=4, change_feed=True)
+    pol = MergePolicy(keys=("id",), group_field="grp", last_updated_field=None, change_feed=True)
     roll = IncrementalRollup(
         spark, src, str(tmp_path / "views"), "by_grp", ["grp"], "val"
     )
@@ -568,8 +691,7 @@ def test_incremental_rollup_crash_between_state_and_merge_reapplies(spark, tmp_p
     from cumulus_etl_spark.sinks.incremental_view import IncrementalRollup
 
     src = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), group_field=None,
-                      last_updated_field=None, num_buckets=4, change_feed=True)
+    pol = MergePolicy(keys=("id",), group_field=None, last_updated_field=None, change_feed=True)
     src.merge(spark.createDataFrame(
         [("a", "g1", 1), ("b", "g2", 2)], "id string, grp string, val int"
     ), pol)
@@ -601,8 +723,7 @@ def test_delete_ids_inherits_change_feed_from_table(spark, tmp_path):
     from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
 
     t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=4, change_feed=True)
+    pol = MergePolicy(keys=("id",), last_updated_field=None, change_feed=True)
     t.merge(spark.createDataFrame(
         [("a", 1), ("b", 2), ("c", 3)], "id string, val int"
     ), pol)
@@ -718,8 +839,7 @@ def test_reference_delta_matrix_group_field(spark, tmp_path, backend):
     touched groups delete, zero-member groups delete wholesale, untouched
     groups survive, and a quote inside a group value is handled."""
     t = ManagedTable(spark, str(tmp_path), "patient")
-    pol = MergePolicy(keys=("id",), group_field="grp", last_updated_field=None,
-                      num_buckets=4)
+    pol = MergePolicy(keys=("id",), group_field="grp", last_updated_field=None)
     schema = "id string, grp string, val long"
     t.merge(spark.createDataFrame(
         [("aa", "A", 5), ("ab", "A", 10), ("b", "B", 1), ("c", "C", 2)], schema), pol)
@@ -741,7 +861,7 @@ def test_reference_delta_matrix_group_field(spark, tmp_path, backend):
 def test_reference_delta_matrix_custom_uniqueness(spark, tmp_path, backend):
     """ref test_deltalake.py:375 — composite uniqueness keys."""
     t = ManagedTable(spark, str(tmp_path), "patient")
-    pol = MergePolicy(keys=("F1", "F2"), last_updated_field=None, num_buckets=4)
+    pol = MergePolicy(keys=("F1", "F2"), last_updated_field=None)
     schema = "F1 long, F2 long, msg string"
     t.merge(spark.createDataFrame(
         [(1, 2, "original value"), (1, 9, "same F1"), (9, 2, "same F2")], schema), pol)
@@ -793,13 +913,12 @@ def test_merge_upsert_throughput_rig_accounting(spark):
     assert set(glob.glob("/tmp/merge_bench_*")) == before  # tmp cleaned
 
 
-# ---- change-feed retention, rollup rebuild, publish race -------------------
+# ---- change feed: staged publish, crash fuzz, retention, rollup guards -----
 
 
 def _mk(spark, tmp_path, feed=True):
     t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=4, change_feed=feed)
+    pol = MergePolicy(keys=("id",), last_updated_field=None, change_feed=feed)
     t.merge(spark.createDataFrame(
         [("a", 1), ("b", 2)], "id string, val int"
     ), pol)
@@ -893,3 +1012,275 @@ def test_publish_race_loser_treats_done_as_success(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(merge_mod.os, "replace", real_replace)
     assert t.change_versions() == [1, 2]
     assert {r["id"] for r in t.read_changes(2, 2).collect()} == {"c"}
+
+
+def test_changes_dir_holds_only_committed_versions(spark, tmp_path):
+    """Staged-publish protocol: changes/ never contains an uncommitted
+    version, and staging is drained after every merge."""
+    t, pol = _mk(spark, tmp_path)
+    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)
+
+    changes_root = os.path.join(t.path, "changes")
+    published = sorted(os.listdir(changes_root))
+    assert published == ["v1", "v2"]
+    staging = os.path.join(t.path, ".changes_staging")
+    assert not os.path.isdir(staging) or os.listdir(staging) == []
+
+
+def test_crashed_merge_stage_is_invisible_then_dropped(spark, tmp_path):
+    """A merge that died after staging but before the pointer flip leaves
+    nothing under changes/ (no phantom stream delivery). READ paths must
+    NOT touch the stage — the same v > cur state is what a concurrent
+    in-flight merge looks like (code-review r4 finding); only the next
+    WRITER drops/overwrites it before reusing the version number."""
+    t, pol = _mk(spark, tmp_path)
+    # Simulate the crash: stage version cur+1 and never flip the pointer.
+    orphan = spark.createDataFrame([("zzz", 99)], "id string, val int").withColumn(
+        "_change_type", F.lit("insert")
+    )
+    t._write_changes((t.current_version() or 0) + 1, orphan)
+
+    assert sorted(os.listdir(os.path.join(t.path, "changes"))) == ["v1"]
+    assert t.change_versions() == [1]  # feed shows committed versions only
+    assert os.path.isdir(t._staging_dir(2))  # reader left the stage alone
+
+    # The reused version number publishes the REAL commit's rows only.
+    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)
+    ch2 = t.read_changes(2, 2).collect()
+    assert {r["id"] for r in ch2} == {"c"}
+    assert not os.path.isdir(t._staging_dir(2))  # writer drained it
+
+
+def test_crash_between_flip_and_publish_is_completed_lazily(spark, tmp_path):
+    """Commit happened but the publish rename didn't: the next feed access
+    completes it, delivering the version exactly once."""
+    t, pol = _mk(spark, tmp_path)
+    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)
+    # Simulate: un-publish v2 back into the staging dir.
+    os.makedirs(os.path.dirname(t._staging_dir(2)), exist_ok=True)
+    os.replace(t._changes_dir(2), t._staging_dir(2))
+    assert sorted(os.listdir(os.path.join(t.path, "changes"))) == ["v1"]
+
+    assert t.change_versions() == [1, 2]  # recovery ran
+    assert os.path.isdir(t._changes_dir(2))
+    assert not os.path.isdir(t._staging_dir(2))
+    assert {r["id"] for r in t.read_changes(2, 2).collect()} == {"c"}
+
+
+def test_stream_changes_never_sees_staged_rows(spark, tmp_path):
+    """The streaming tail of changes/ only ever receives committed rows,
+    even with an orphan stage present."""
+    from cumulus_etl_spark.streaming import stream_changes
+
+    t, pol = _mk(spark, tmp_path)
+    orphan = spark.createDataFrame([("phantom", 0)], "id string, val int").withColumn(
+        "_change_type", F.lit("insert")
+    )
+    t._write_changes(99, orphan)
+
+    out_dir = str(tmp_path / "out")
+    (
+        stream_changes(spark, t)
+        .writeStream.format("parquet")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .option("path", out_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    got = spark.read.parquet(out_dir)
+    assert {r["id"] for r in got.collect()} == {"a", "b"}
+    assert {r["_commit_version"] for r in got.collect()} == {1}
+
+
+def test_incremental_rollup_raises_on_delta_source(spark, tmp_path, monkeypatch):
+    """ADVICE r3: the fallback state handshake doesn't exist on Delta —
+    refresh must fail loudly instead of silently applying nothing."""
+
+    monkeypatch.setattr(merge_mod, "DeltaTable", FakeDeltaTable)
+    monkeypatch.setattr(merge_mod, "HAVE_DELTA", True)
+    monkeypatch.setattr(merge_mod.ManagedTable, "_delta_write_initial", _fake_delta_initial)
+
+    src = ManagedTable(spark, str(tmp_path / "lake"), "obs")
+    src.merge(spark.createDataFrame([("a", "g1", 1)], "id string, grp string, val int"),
+              MergePolicy(keys=("id",), last_updated_field=None))
+    roll = IncrementalRollup(
+        spark, src, str(tmp_path / "views"), "by_grp", ["grp"], "val"
+    )
+    with pytest.raises(NotImplementedError, match="readChangeFeed"):
+        roll.refresh()
+
+
+@pytest.mark.parametrize("seed", [7, 11, 23])
+def test_cdf_crash_fuzz_feed_matches_model(spark, tmp_path, seed):
+    """Randomized crash-injection fuzz of the staged-publish protocol:
+    interleave committed merges with simulated crashes (stage-only, or
+    flip-without-publish via manual un-publish) and reader sweeps; the
+    published feed must always equal exactly the committed model — every
+    committed version present (possibly after lazy recovery), no phantom
+    versions, no duplicate deliveries. Three seeds × 16 steps so the
+    non-bootstrap crash_publish path and 'reader leaves an orphan alone'
+    interleavings are all actually hit (code-review r4b finding): the
+    coverage assertions at the bottom fail if a seed change ever stops
+    exercising them."""
+    import random
+
+    rng = random.Random(seed)
+    t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
+    pol = MergePolicy(keys=("id",), last_updated_field=None, change_feed=True)
+    committed: dict[int, set[str]] = {}  # version -> expected changed ids
+    next_id = 0
+    hit = {"crash_publish_incremental": False, "orphan_survives_read": False}
+
+    def batch(n):
+        nonlocal next_id
+        ids = [f"k{next_id + i}" for i in range(n)]
+        next_id += n
+        return ids, spark.createDataFrame([(i, 1) for i in ids], "id string, val int")
+
+    def published_versions():
+        pub_root = os.path.join(t.path, "changes")
+        if not os.path.isdir(pub_root):
+            return set()
+        return {int(e[1:]) for e in os.listdir(pub_root) if e.startswith("v")}
+
+    orphan_staged = False
+    for step in range(16):
+        action = rng.choice(["merge", "crash_stage", "crash_publish", "read"])
+        if action == "merge":
+            ids, df = batch(rng.randint(1, 3))
+            t.merge(df, pol)
+            committed[t.current_version()] = set(ids)
+            orphan_staged = False  # writer drained/overwrote any orphan
+        elif action == "crash_stage":
+            # died after staging, before the flip: stage an orphan
+            _, df = batch(1)
+            t._write_changes((t.current_version() or 0) + 1,
+                             df.withColumn("_change_type", F.lit("insert")))
+            orphan_staged = True
+        elif action == "crash_publish":
+            # died between flip and publish: commit, then un-publish
+            if t.current_version():
+                hit["crash_publish_incremental"] = True
+            ids, df = batch(rng.randint(1, 2))
+            t.merge(df, pol)
+            v = t.current_version()
+            committed[v] = set(ids)
+            if os.path.isdir(t._changes_dir(v)):
+                os.makedirs(os.path.dirname(t._staging_dir(v)), exist_ok=True)
+                os.replace(t._changes_dir(v), t._staging_dir(v))
+            orphan_staged = False
+        else:
+            t.change_versions()  # reader sweep (publish-only)
+            if orphan_staged:
+                # reader must have left the orphan stage alone
+                assert os.path.isdir(t._staging_dir((t.current_version() or 0) + 1))
+                hit["orphan_survives_read"] = True
+
+        # Invariants after EVERY step: published ⊆ committed, and every
+        # version already published carries exactly its committed ids —
+        # so a corrupt publish is caught at the step that made it.
+        published = published_versions()
+        assert published <= set(committed), (step, published, committed)
+        for v in published:
+            got = {r["id"] for r in t.read_changes(v, v).collect()}
+            assert got == committed[v], (step, v, got, committed[v])
+
+    # Final recovery: one reader access publishes everything committed.
+    assert t.change_versions() == sorted(committed)
+    for v, ids in committed.items():
+        got = {r["id"] for r in t.read_changes(v, v).collect()}
+        assert got == ids, (v, got, ids)
+    # Coverage pins: seed 11's sequence exercises BOTH the non-bootstrap
+    # flip-without-publish crash and the orphan-survives-reader path
+    # (verified by simulating the RNG); if the strategy list or step
+    # count ever changes and stops hitting them, this fails loudly.
+    if seed == 11:
+        assert hit["crash_publish_incremental"] and hit["orphan_survives_read"]
+
+
+def test_finalize_change_feed_retention(spark, tmp_path):
+    """finalize(keep_changes=N) truncates the feed to the last N
+    committed versions — the unbounded-feed-growth fix — and completes
+    any pending publish first so a committed version is never GC'd
+    while still staged."""
+    t, pol = _mk(spark, tmp_path)
+    for v in ("c", "d", "e"):
+        t.merge(spark.createDataFrame([(v, 1)], "id string, val int"), pol)
+    assert t.change_versions() == [1, 2, 3, 4]
+
+    # un-publish the newest version to simulate a pending publish
+    os.makedirs(os.path.dirname(t._staging_dir(4)), exist_ok=True)
+    os.replace(t._changes_dir(4), t._staging_dir(4))
+
+    t.finalize(keep_versions=1, keep_changes=2)
+    assert t.change_versions() == [3, 4]  # pending v4 published, old GC'd
+    assert {r["id"] for r in t.read_changes(4, 4).collect()} == {"e"}
+    # keep_changes=None (default) leaves the feed alone
+    t.merge(spark.createDataFrame([("f", 1)], "id string, val int"), pol)
+    t.finalize()
+    assert t.change_versions() == [3, 4, 5]
+
+
+def test_rollup_detects_truncated_feed(spark, tmp_path):
+    """A rollup behind the retention horizon must fail loudly, not
+    silently skip GC'd versions."""
+    t, pol = _mk(spark, tmp_path)
+    roll = IncrementalRollup(spark, t, str(tmp_path / "views"), "by_id", ["id"], "val")
+    assert roll.refresh() == 1
+
+    for v in ("c", "d", "e"):
+        t.merge(spark.createDataFrame([(v, 1)], "id string, val int"), pol)
+    t.finalize(keep_changes=1)  # GC v2..v3; rollup applied only v1
+    with pytest.raises(ValueError, match=r"hole in \(1, 4\]"):
+        roll.refresh()
+
+
+def test_rollup_detects_feedless_version(spark, tmp_path):
+    """delete_ids(change_feed=False) on a feed table commits a version
+    with no feed entry — refresh must flag the divergence."""
+    t, pol = _mk(spark, tmp_path)
+    roll = IncrementalRollup(spark, t, str(tmp_path / "views"), "by_id", ["id"], "val")
+    assert roll.refresh() == 1
+    t.delete_ids(["a"], change_feed=False)
+    with pytest.raises(ValueError, match=r"hole in \(1, 2\]"):
+        roll.refresh()
+
+
+def test_rollup_detects_middle_hole_and_rebuilds(spark, tmp_path):
+    """A feedless commit in the MIDDLE of the unapplied range must also
+    raise (code-review r4c finding), and rebuild() recovers: full-scan
+    recompute, stale groups zeroed, refresh usable again."""
+    t, pol = _mk(spark, tmp_path)
+    roll = IncrementalRollup(spark, t, str(tmp_path / "views"), "by_id", ["id"], "val")
+    assert roll.refresh() == 1
+    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)  # v2 feed
+    t.delete_ids(["a"], change_feed=False)                                 # v3 NO feed
+    t.merge(spark.createDataFrame([("d", 4)], "id string, val int"), pol)  # v4 feed
+    with pytest.raises(ValueError, match=r"hole in \(1, 4\]"):
+        roll.refresh()
+
+    assert roll.rebuild() == 4
+    got = {(r["id"], r["n_rows"], r["sum_value"]) for r in roll.read().collect()}
+    want = {(r["id"], 1, float(r["val"])) for r in t.read().collect()}
+    assert got == want
+    assert ("a", 1, 1.0) not in got  # deleted id zeroed out
+    assert roll.refresh() == 0  # caught up; future refreshes work
+
+    t.merge(spark.createDataFrame([("e", 5)], "id string, val int"), pol)
+    assert roll.refresh() == 1
+
+
+def test_feed_retention_counts_feed_entries_not_versions(spark, tmp_path):
+    """keep_changes counts committed FEED ENTRIES: feedless commits at
+    the top of the version range must not shrink (or wipe) the kept
+    window (code-review r4c finding)."""
+    t, pol = _mk(spark, tmp_path)
+    for v in ("c", "d"):
+        t.merge(spark.createDataFrame([(v, 1)], "id string, val int"), pol)
+    # two feedless commits on top
+    t.delete_ids(["c"], change_feed=False)
+    t.delete_ids(["d"], change_feed=False)
+    assert t.change_versions() == [1, 2, 3]
+    t.finalize(keep_changes=2)
+    assert t.change_versions() == [2, 3]  # last 2 FEED entries survive

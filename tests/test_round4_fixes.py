@@ -1,7 +1,6 @@
-"""Regression pins for the round-4 ADVICE fixes.
+"""Regression pins for the round-4 ADVICE fixes to the operators (the
+merge-sink pins of that round live in test_merge_sink.py).
 
-- staged change-feed publish (no phantom / duplicate stream delivery)
-- IncrementalRollup loud failure on a native Delta source
 - profile_columns with dotted column names
 - logreg_train_gd null handling
 - text_bigram_lm_score case-folding parity with its oracle
@@ -10,125 +9,12 @@
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
-from cumulus_etl_spark.sinks import merge as merge_mod
-
 SF = "/root/testdata/sf0.001"
-
-
-def _mk(spark, tmp_path, feed=True):
-    t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=4, change_feed=feed)
-    t.merge(spark.createDataFrame(
-        [("a", 1), ("b", 2)], "id string, val int"
-    ), pol)
-    return t, pol
-
-
-def test_changes_dir_holds_only_committed_versions(spark, tmp_path):
-    """Staged-publish protocol: changes/ never contains an uncommitted
-    version, and staging is drained after every merge."""
-    t, pol = _mk(spark, tmp_path)
-    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)
-
-    changes_root = os.path.join(t.path, "changes")
-    published = sorted(os.listdir(changes_root))
-    assert published == ["v1", "v2"]
-    staging = os.path.join(t.path, ".changes_staging")
-    assert not os.path.isdir(staging) or os.listdir(staging) == []
-
-
-def test_crashed_merge_stage_is_invisible_then_dropped(spark, tmp_path):
-    """A merge that died after staging but before the pointer flip leaves
-    nothing under changes/ (no phantom stream delivery). READ paths must
-    NOT touch the stage — the same v > cur state is what a concurrent
-    in-flight merge looks like (code-review r4 finding); only the next
-    WRITER drops/overwrites it before reusing the version number."""
-    t, pol = _mk(spark, tmp_path)
-    # Simulate the crash: stage version cur+1 and never flip the pointer.
-    orphan = spark.createDataFrame([("zzz", 99)], "id string, val int").withColumn(
-        "_change_type", F.lit("insert")
-    )
-    t._write_changes((t.current_version() or 0) + 1, orphan)
-
-    assert sorted(os.listdir(os.path.join(t.path, "changes"))) == ["v1"]
-    assert t.change_versions() == [1]  # feed shows committed versions only
-    assert os.path.isdir(t._staging_dir(2))  # reader left the stage alone
-
-    # The reused version number publishes the REAL commit's rows only.
-    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)
-    ch2 = t.read_changes(2, 2).collect()
-    assert {r["id"] for r in ch2} == {"c"}
-    assert not os.path.isdir(t._staging_dir(2))  # writer drained it
-
-
-def test_crash_between_flip_and_publish_is_completed_lazily(spark, tmp_path):
-    """Commit happened but the publish rename didn't: the next feed access
-    completes it, delivering the version exactly once."""
-    t, pol = _mk(spark, tmp_path)
-    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)
-    # Simulate: un-publish v2 back into the staging dir.
-    os.makedirs(os.path.dirname(t._staging_dir(2)), exist_ok=True)
-    os.replace(t._changes_dir(2), t._staging_dir(2))
-    assert sorted(os.listdir(os.path.join(t.path, "changes"))) == ["v1"]
-
-    assert t.change_versions() == [1, 2]  # recovery ran
-    assert os.path.isdir(t._changes_dir(2))
-    assert not os.path.isdir(t._staging_dir(2))
-    assert {r["id"] for r in t.read_changes(2, 2).collect()} == {"c"}
-
-
-def test_stream_changes_never_sees_staged_rows(spark, tmp_path):
-    """The streaming tail of changes/ only ever receives committed rows,
-    even with an orphan stage present."""
-    from cumulus_etl_spark.streaming import stream_changes
-
-    t, pol = _mk(spark, tmp_path)
-    orphan = spark.createDataFrame([("phantom", 0)], "id string, val int").withColumn(
-        "_change_type", F.lit("insert")
-    )
-    t._write_changes(99, orphan)
-
-    out_dir = str(tmp_path / "out")
-    (
-        stream_changes(spark, t)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .option("path", out_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    got = spark.read.parquet(out_dir)
-    assert {r["id"] for r in got.collect()} == {"a", "b"}
-    assert {r["_commit_version"] for r in got.collect()} == {1}
-
-
-def test_incremental_rollup_raises_on_delta_source(spark, tmp_path, monkeypatch):
-    """ADVICE r3: the fallback state handshake doesn't exist on Delta —
-    refresh must fail loudly instead of silently applying nothing."""
-    from tests.test_merge_sink import FakeDeltaTable, _fake_delta_initial
-    from cumulus_etl_spark.sinks.incremental_view import IncrementalRollup
-
-    monkeypatch.setattr(merge_mod, "DeltaTable", FakeDeltaTable)
-    monkeypatch.setattr(merge_mod, "HAVE_DELTA", True)
-    monkeypatch.setattr(merge_mod.ManagedTable, "_delta_write_initial", _fake_delta_initial)
-
-    src = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    src.merge(spark.createDataFrame([("a", "g1", 1)], "id string, grp string, val int"),
-              MergePolicy(keys=("id",), last_updated_field=None))
-    roll = IncrementalRollup(
-        spark, src, str(tmp_path / "views"), "by_grp", ["grp"], "val"
-    )
-    with pytest.raises(NotImplementedError, match="readChangeFeed"):
-        roll.refresh()
 
 
 def test_profile_handles_dotted_column_names(spark):
@@ -427,185 +313,3 @@ def test_cluster_quality_silhouette_bounds(spark):
 
     rows = CATALOG["vector_cluster_quality"].build(spark, SF).collect()
     assert rows and all(-1.0 <= r["avg_silhouette"] <= 1.0 for r in rows)
-
-
-@pytest.mark.parametrize("seed", [7, 11, 23])
-def test_cdf_crash_fuzz_feed_matches_model(spark, tmp_path, seed):
-    """Randomized crash-injection fuzz of the staged-publish protocol:
-    interleave committed merges with simulated crashes (stage-only, or
-    flip-without-publish via manual un-publish) and reader sweeps; the
-    published feed must always equal exactly the committed model — every
-    committed version present (possibly after lazy recovery), no phantom
-    versions, no duplicate deliveries. Three seeds × 16 steps so the
-    non-bootstrap crash_publish path and 'reader leaves an orphan alone'
-    interleavings are all actually hit (code-review r4b finding): the
-    coverage assertions at the bottom fail if a seed change ever stops
-    exercising them."""
-    import random
-
-    rng = random.Random(seed)
-    t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=2, change_feed=True)
-    committed: dict[int, set[str]] = {}  # version -> expected changed ids
-    next_id = 0
-    hit = {"crash_publish_incremental": False, "orphan_survives_read": False}
-
-    def batch(n):
-        nonlocal next_id
-        ids = [f"k{next_id + i}" for i in range(n)]
-        next_id += n
-        return ids, spark.createDataFrame([(i, 1) for i in ids], "id string, val int")
-
-    def published_versions():
-        pub_root = os.path.join(t.path, "changes")
-        if not os.path.isdir(pub_root):
-            return set()
-        return {int(e[1:]) for e in os.listdir(pub_root) if e.startswith("v")}
-
-    orphan_staged = False
-    for step in range(16):
-        action = rng.choice(["merge", "crash_stage", "crash_publish", "read"])
-        if action == "merge":
-            ids, df = batch(rng.randint(1, 3))
-            t.merge(df, pol)
-            committed[t.current_version()] = set(ids)
-            orphan_staged = False  # writer drained/overwrote any orphan
-        elif action == "crash_stage":
-            # died after staging, before the flip: stage an orphan
-            _, df = batch(1)
-            t._write_changes((t.current_version() or 0) + 1,
-                             df.withColumn("_change_type", F.lit("insert")))
-            orphan_staged = True
-        elif action == "crash_publish":
-            # died between flip and publish: commit, then un-publish
-            if t.current_version():
-                hit["crash_publish_incremental"] = True
-            ids, df = batch(rng.randint(1, 2))
-            t.merge(df, pol)
-            v = t.current_version()
-            committed[v] = set(ids)
-            if os.path.isdir(t._changes_dir(v)):
-                os.makedirs(os.path.dirname(t._staging_dir(v)), exist_ok=True)
-                os.replace(t._changes_dir(v), t._staging_dir(v))
-            orphan_staged = False
-        else:
-            t.change_versions()  # reader sweep (publish-only)
-            if orphan_staged:
-                # reader must have left the orphan stage alone
-                assert os.path.isdir(t._staging_dir((t.current_version() or 0) + 1))
-                hit["orphan_survives_read"] = True
-
-        # Invariants after EVERY step: published ⊆ committed, and every
-        # version already published carries exactly its committed ids —
-        # so a corrupt publish is caught at the step that made it.
-        published = published_versions()
-        assert published <= set(committed), (step, published, committed)
-        for v in published:
-            got = {r["id"] for r in t.read_changes(v, v).collect()}
-            assert got == committed[v], (step, v, got, committed[v])
-
-    # Final recovery: one reader access publishes everything committed.
-    assert t.change_versions() == sorted(committed)
-    for v, ids in committed.items():
-        got = {r["id"] for r in t.read_changes(v, v).collect()}
-        assert got == ids, (v, got, ids)
-    # Coverage pins: seed 11's sequence exercises BOTH the non-bootstrap
-    # flip-without-publish crash and the orphan-survives-reader path
-    # (verified by simulating the RNG); if the strategy list or step
-    # count ever changes and stops hitting them, this fails loudly.
-    if seed == 11:
-        assert hit["crash_publish_incremental"] and hit["orphan_survives_read"]
-
-
-def test_finalize_change_feed_retention(spark, tmp_path):
-    """finalize(keep_changes=N) truncates the feed to the last N
-    committed versions — the unbounded-feed-growth fix — and completes
-    any pending publish first so a committed version is never GC'd
-    while still staged."""
-    t, pol = _mk(spark, tmp_path)
-    for v in ("c", "d", "e"):
-        t.merge(spark.createDataFrame([(v, 1)], "id string, val int"), pol)
-    assert t.change_versions() == [1, 2, 3, 4]
-
-    # un-publish the newest version to simulate a pending publish
-    os.makedirs(os.path.dirname(t._staging_dir(4)), exist_ok=True)
-    os.replace(t._changes_dir(4), t._staging_dir(4))
-
-    t.finalize(keep_versions=1, keep_changes=2)
-    assert t.change_versions() == [3, 4]  # pending v4 published, old GC'd
-    assert {r["id"] for r in t.read_changes(4, 4).collect()} == {"e"}
-    # keep_changes=None (default) leaves the feed alone
-    t.merge(spark.createDataFrame([("f", 1)], "id string, val int"), pol)
-    t.finalize()
-    assert t.change_versions() == [3, 4, 5]
-
-
-def test_rollup_detects_truncated_feed(spark, tmp_path):
-    """A rollup behind the retention horizon must fail loudly, not
-    silently skip GC'd versions."""
-    from cumulus_etl_spark.sinks.incremental_view import IncrementalRollup
-
-    t, pol = _mk(spark, tmp_path)
-    roll = IncrementalRollup(spark, t, str(tmp_path / "views"), "by_id", ["id"], "val")
-    assert roll.refresh() == 1
-
-    for v in ("c", "d", "e"):
-        t.merge(spark.createDataFrame([(v, 1)], "id string, val int"), pol)
-    t.finalize(keep_changes=1)  # GC v2..v3; rollup applied only v1
-    with pytest.raises(ValueError, match=r"hole in \(1, 4\]"):
-        roll.refresh()
-
-
-def test_rollup_detects_feedless_version(spark, tmp_path):
-    """delete_ids(change_feed=False) on a feed table commits a version
-    with no feed entry — refresh must flag the divergence."""
-    from cumulus_etl_spark.sinks.incremental_view import IncrementalRollup
-
-    t, pol = _mk(spark, tmp_path)
-    roll = IncrementalRollup(spark, t, str(tmp_path / "views"), "by_id", ["id"], "val")
-    assert roll.refresh() == 1
-    t.delete_ids(["a"], change_feed=False)
-    with pytest.raises(ValueError, match=r"hole in \(1, 2\]"):
-        roll.refresh()
-
-
-def test_rollup_detects_middle_hole_and_rebuilds(spark, tmp_path):
-    """A feedless commit in the MIDDLE of the unapplied range must also
-    raise (code-review r4c finding), and rebuild() recovers: full-scan
-    recompute, stale groups zeroed, refresh usable again."""
-    from cumulus_etl_spark.sinks.incremental_view import IncrementalRollup
-
-    t, pol = _mk(spark, tmp_path)
-    roll = IncrementalRollup(spark, t, str(tmp_path / "views"), "by_id", ["id"], "val")
-    assert roll.refresh() == 1
-    t.merge(spark.createDataFrame([("c", 3)], "id string, val int"), pol)  # v2 feed
-    t.delete_ids(["a"], change_feed=False)                                 # v3 NO feed
-    t.merge(spark.createDataFrame([("d", 4)], "id string, val int"), pol)  # v4 feed
-    with pytest.raises(ValueError, match=r"hole in \(1, 4\]"):
-        roll.refresh()
-
-    assert roll.rebuild() == 4
-    got = {(r["id"], r["n_rows"], r["sum_value"]) for r in roll.read().collect()}
-    want = {(r["id"], 1, float(r["val"])) for r in t.read().collect()}
-    assert got == want
-    assert ("a", 1, 1.0) not in got  # deleted id zeroed out
-    assert roll.refresh() == 0  # caught up; future refreshes work
-
-    t.merge(spark.createDataFrame([("e", 5)], "id string, val int"), pol)
-    assert roll.refresh() == 1
-
-
-def test_feed_retention_counts_feed_entries_not_versions(spark, tmp_path):
-    """keep_changes counts committed FEED ENTRIES: feedless commits at
-    the top of the version range must not shrink (or wipe) the kept
-    window (code-review r4c finding)."""
-    t, pol = _mk(spark, tmp_path)
-    for v in ("c", "d"):
-        t.merge(spark.createDataFrame([(v, 1)], "id string, val int"), pol)
-    # two feedless commits on top
-    t.delete_ids(["c"], change_feed=False)
-    t.delete_ids(["d"], change_feed=False)
-    assert t.change_versions() == [1, 2, 3]
-    t.finalize(keep_changes=2)
-    assert t.change_versions() == [2, 3]  # last 2 FEED entries survive

@@ -614,8 +614,7 @@ def test_stream_changes_tails_the_change_feed(spark, tmp_path):
     from cumulus_etl_spark.streaming import stream_changes
 
     t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=2, change_feed=True)
+    pol = MergePolicy(keys=("id",), last_updated_field=None, change_feed=True)
     t.merge(spark.createDataFrame([("a", 1), ("b", 2)], "id string, val int"), pol)
 
     ckpt = str(tmp_path / "cdc-ckpt")
@@ -659,8 +658,7 @@ def test_cdf_stream_drives_rollup(spark, tmp_path):
     from cumulus_etl_spark.streaming import stream_changes
 
     src = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), group_field="grp",
-                      last_updated_field=None, num_buckets=4, change_feed=True)
+    pol = MergePolicy(keys=("id",), group_field="grp", last_updated_field=None, change_feed=True)
     roll = IncrementalRollup(
         spark, src, str(tmp_path / "views"), "by_grp", ["grp"], "val"
     )
@@ -719,8 +717,7 @@ def test_stream_changes_checkpoint_hole_detector(spark, tmp_path):
     from cumulus_etl_spark.streaming import stream_changes
 
     t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=2, change_feed=True)
+    pol = MergePolicy(keys=("id",), last_updated_field=None, change_feed=True)
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
 
@@ -761,8 +758,7 @@ def test_stream_changes_retention_up_to_checkpoint_resumes(spark, tmp_path):
     from cumulus_etl_spark.streaming import stream_changes
 
     t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=2, change_feed=True)
+    pol = MergePolicy(keys=("id",), last_updated_field=None, change_feed=True)
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
 

@@ -172,7 +172,7 @@ def test_cli_optimize_verb(spark, tmp_path, capsys):
 
     root = str(tmp_path / "lake")
     tbl = ManagedTable(spark, root, "patient")
-    pol = MergePolicy(last_updated_field=None, num_buckets=2)
+    pol = MergePolicy(last_updated_field=None)
     for i in range(3):  # three merges → three versions
         tbl.merge(
             spark.createDataFrame([(f"id{i}", i)], "id string, v int"), pol
@@ -196,7 +196,7 @@ def test_cli_stats_verb(spark, tmp_path, capsys):
     tbl = ManagedTable(spark, root, "patient")
     tbl.merge(
         spark.createDataFrame([("a", 1), ("b", 2)], "id string, v int"),
-        MergePolicy(last_updated_field=None, num_buckets=2),
+        MergePolicy(last_updated_field=None),
     )
     rc = cli_main(["stats", root])
     assert rc == 0
@@ -271,8 +271,7 @@ def test_rollup_cli_verb(spark, tmp_path, capsys):
     from cumulus_etl_spark.sinks.incremental_view import IncrementalRollup
 
     t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=4, change_feed=True)
+    pol = MergePolicy(keys=("id",), last_updated_field=None, change_feed=True)
     t.merge(spark.createDataFrame(
         [("a", "g1", 1), ("b", "g2", 2)], "id string, grp string, val int"), pol)
 
@@ -304,7 +303,7 @@ def test_cli_retention_then_rollup_e2e(spark, tmp_path, capsys):
     `optimize --keep-changes` truncating the feed past a rollup's applied
     position, the `rollup` verb then failing LOUDLY (feed hole), and
     `rollup --rebuild` recovering — mirroring the operator-level coverage
-    in test_round4_fixes at the user-facing surface."""
+    in test_merge_sink at the user-facing surface."""
     import json as _json
 
     import pytest
@@ -313,8 +312,7 @@ def test_cli_retention_then_rollup_e2e(spark, tmp_path, capsys):
     from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
 
     t = ManagedTable(spark, str(tmp_path / "lake"), "obs")
-    pol = MergePolicy(keys=("id",), last_updated_field=None,
-                      num_buckets=4, change_feed=True)
+    pol = MergePolicy(keys=("id",), last_updated_field=None, change_feed=True)
     t.merge(spark.createDataFrame(
         [("a", "g1", 1), ("b", "g2", 2)], "id string, grp string, val int"), pol)
 
