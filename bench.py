@@ -56,6 +56,8 @@ SCALE_COPIES = 10
 # loudly past that (operators/graph.py id-range guard).
 SCALE_OFFSET = 10_000_000
 SCALE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_scale_sf1")
+# probe_1e7_s of a quiet 4-cpu reference host (perfbench/run.py PROBE_REF_S)
+PROBE_REF_S = 0.3
 _SCALE_KEYED = {
     "customer": ["c_custkey"],
     "supplier": ["s_suppkey"],
@@ -214,12 +216,16 @@ def main() -> None:
     # no artifact). So: full detail first, then a compact summary line
     # LAST (<=1 KB) that alone carries both SF totals, the per-query
     # sf0.1 timings, and the superlinear flags.
+    cpus = len(os.sched_getaffinity(0))
     noise = {
         "timing": "min_of_2_runs_per_query",
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in load_end],
-        "cpus": os.cpu_count(),
+        "cpus": cpus,
         "probe_1e7_s": probe_s,
+        # perfbench/run.py's rule: more runnable work than cpus, or a
+        # single core 1.5x slower than the reference host
+        "noise_suspect": load_start[0] > cpus or probe_s > 1.5 * PROBE_REF_S,
     }
     detail = {
         "record": "bench_detail",
@@ -249,6 +255,7 @@ def main() -> None:
         "scale": scale_summary,
         "load": noise["loadavg_start"][0],
         "probe_1e7_s": probe_s,
+        "noise_suspect": noise["noise_suspect"],
     }
     line = json.dumps(summary, separators=(",", ":"))
     if len(line) > 1900:  # hard guard: never overflow the driver tail again

@@ -21,6 +21,21 @@ import sys
 from cumulus_etl_spark.session import get_spark
 
 
+def _add_note_selection(parser: argparse.ArgumentParser) -> None:
+    """The note-selection flags shared by ``sample``, ``nlp`` and
+    ``upload-notes`` (ref nlp.add_note_selection), applied by
+    ``nlp/selection.py:select_notes``."""
+    parser.add_argument("--select-by-word", action="append", dest="select_words")
+    parser.add_argument("--select-by-regex", dest="select_regex", default=None)
+    parser.add_argument("--select-by-csv", dest="select_by_csv", default=None,
+                        help="CSV with note_ref/docref_id/patient_id columns — "
+                        "a chart-review session's uploaded_notes.csv works as-is")
+    parser.add_argument("--select-by-anon-csv", dest="select_by_anon_csv", default=None,
+                        help="like --select-by-csv but with anon_note_ref/"
+                        "anon_docref_id/anon_patient_id columns (codebook "
+                        "pseudonyms, e.g. from Athena query results)")
+
+
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(prog="cumulus-etl-spark")
     sub = parser.add_subparsers(dest="verb", required=True)
@@ -78,10 +93,7 @@ def main(argv: list[str] | None = None) -> int:
                           help="also copy the sampled documents here as NDJSON")
     p_sample.add_argument("--phi-dir", dest="phi_dir", default=None,
                           help="PHI folder (required for --select-by-anon-csv)")
-    p_sample.add_argument("--select-by-word", action="append", dest="select_words")
-    p_sample.add_argument("--select-by-regex", dest="select_regex", default=None)
-    p_sample.add_argument("--select-by-csv", dest="select_by_csv", default=None)
-    p_sample.add_argument("--select-by-anon-csv", dest="select_by_anon_csv", default=None)
+    _add_note_selection(p_sample)
     p_sample.add_argument("--type", dest="resource_types",
                           default="DiagnosticReport,DocumentReference",
                           help="which FHIR note types to consider "
@@ -96,15 +108,7 @@ def main(argv: list[str] | None = None) -> int:
                        help="study task name(s) to run (default: all registered)")
     p_nlp.add_argument("--task-config", default=None,
                        help="tasks.toml defining dynamic study tasks")
-    p_nlp.add_argument("--select-by-word", action="append", dest="select_words")
-    p_nlp.add_argument("--select-by-regex", dest="select_regex", default=None)
-    p_nlp.add_argument("--select-by-csv", dest="select_by_csv", default=None,
-                       help="CSV with note_ref/docref_id/patient_id columns "
-                       "(e.g. a chart-review session's uploaded_notes.csv)")
-    p_nlp.add_argument("--select-by-anon-csv", dest="select_by_anon_csv",
-                       default=None,
-                       help="like --select-by-csv but with anon_* columns "
-                       "(codebook pseudonyms, e.g. Athena query results)")
+    _add_note_selection(p_nlp)
     p_nlp.add_argument("--ctakes-url", default=None,
                        help="use a cTAKES HTTP endpoint instead of the stub model")
     p_nlp.add_argument("--cnlp-url", default=None, help="cNLP negation endpoint")
@@ -142,15 +146,7 @@ def main(argv: list[str] | None = None) -> int:
     p_up.add_argument("--seed", type=int, default=42)
     p_up.add_argument("--highlight-by-word", action="append", dest="highlight_words")
     p_up.add_argument("--highlight-by-regex", action="append", dest="highlight_regexes")
-    p_up.add_argument("--select-by-word", action="append", dest="select_words")
-    p_up.add_argument("--select-by-regex", dest="select_regex", default=None)
-    p_up.add_argument("--select-by-csv", dest="select_by_csv", default=None,
-                      help="CSV with note_ref/docref_id/patient_id columns — "
-                      "a prior session's uploaded_notes.csv works as-is")
-    p_up.add_argument("--select-by-anon-csv", dest="select_by_anon_csv", default=None,
-                      help="like --select-by-csv but with anon_note_ref/"
-                      "anon_docref_id/anon_patient_id columns (codebook "
-                      "pseudonyms, e.g. from Athena query results)")
+    _add_note_selection(p_up)
     p_up.add_argument("--select-by-athena-table", dest="select_by_athena_table",
                       default=None,
                       help="catalog table with anon_* id columns (the Athena "
@@ -1882,7 +1878,7 @@ def _run_nlp_verb(spark, args) -> dict:
     from datetime import datetime, timezone
 
     from cumulus_etl_spark.nlp import extract_note_text
-    from cumulus_etl_spark.nlp.selection import filter_by_regex, filter_by_words
+    from cumulus_etl_spark.nlp.selection import select_notes
     from cumulus_etl_spark.nlp.studies import COVID_SYMPTOM_TASK, load_study_tasks
     from cumulus_etl_spark.sources import scan_resources
 
@@ -1991,31 +1987,13 @@ def _run_nlp_verb(spark, args) -> dict:
     docrefs = scan_resources(
         spark, args.input_dir, ["DiagnosticReport", "DocumentReference"]
     )
-    sel_csv = getattr(args, "select_by_csv", None)
-    sel_anon = getattr(args, "select_by_anon_csv", None)
-    if sel_csv and sel_anon:
-        raise ValueError(
-            "Multiple selection arguments provided. Please specify just one."
-        )
-    if sel_csv or sel_anon:
-        from cumulus_etl_spark.deid import Codebook
-        from cumulus_etl_spark.nlp.selection import filter_by_note_csv
-
-        if sel_csv:
-            docrefs = filter_by_note_csv(spark, docrefs, sel_csv)
-        else:
-            docrefs = filter_by_note_csv(
-                spark, docrefs, sel_anon, is_anon=True,
-                salt=Codebook(args.phi_dir).salt,
-            )
-    if args.select_words or args.select_regex:
-        notes = extract_note_text(docrefs)
-        if args.select_words:
-            words = [w.strip() for a in args.select_words for w in a.split(",") if w.strip()]
-            notes = filter_by_words(notes, words)
-        if args.select_regex:
-            notes = filter_by_regex(notes, args.select_regex)
-        docrefs = notes.drop("note_text")
+    notes = select_notes(
+        spark, extract_note_text(docrefs),
+        select_words=args.select_words, select_regex=args.select_regex,
+        select_by_csv=args.select_by_csv,
+        select_by_anon_csv=args.select_by_anon_csv, phi_dir=args.phi_dir,
+    )
+    docrefs = notes.drop("note_text", "note_missing_reason")
 
     generated_on = datetime.now(timezone.utc).isoformat()
     summary: dict = {}

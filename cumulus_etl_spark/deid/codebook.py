@@ -35,6 +35,16 @@ MAPPING_DIR = "codebook-cached-mappings"
 CACHED_TYPES = ("Patient", "Encounter")
 
 
+def read_salt(phi_dir: str) -> str:
+    """The salt of the codebook already in ``phi_dir``, writing nothing
+    (a freshly minted salt would match no existing pseudonym)."""
+    path = os.path.join(phi_dir, CODEBOOK_FILE)
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"no codebook at {path}: is this the right PHI dir?")
+    with open(path) as fh:
+        return json.load(fh)["salt"]
+
+
 class Codebook:
     def __init__(self, phi_dir: str):
         self.phi_dir = phi_dir

@@ -6,6 +6,10 @@ re-reads winners by byte offset (S10). Distributed, the same contract is
 a seeded top-N: every row gets a stable ``rand(seed)`` draw; TakeOrdered
 keeps a per-partition heap — no global sort, no re-read (rows stay in
 the DataFrame).
+
+The ``--select-by-*`` flags go through the note verbs' one selection
+surface, :func:`~cumulus_etl_spark.nlp.selection.select_notes`, after
+this verb's own de-dup and has-text filter and before the draw.
 """
 
 from __future__ import annotations
@@ -38,38 +42,19 @@ def sample_notes(
     has-text predicate applied before sampling, like the reference's
     seen-set + text filter (sample/cli.py:159-170). The note-selection
     surface the reference shares across its note CLIs
-    (nlp.add_note_selection) applies BEFORE the draw, so the sample is
-    uniform over the selected population."""
-    if select_by_csv and select_by_anon_csv:
-        raise ValueError(
-            "Multiple selection arguments provided. Please specify just one."
-        )
+    (nlp.add_note_selection; here ``select_notes``) applies BEFORE the
+    draw, so the sample is uniform over the selected population."""
+    from cumulus_etl_spark.nlp.selection import select_notes
+
     docs = scan_resources(spark, input_dir, list(resource_types))
     docs = docs.dropDuplicates(["resourceType", "id"])
     notes = extract_note_text(docs).filter(F.col("note_text").isNotNull())
-    if select_by_csv or select_by_anon_csv:
-        from cumulus_etl_spark.nlp.selection import filter_by_note_csv
-
-        if select_by_csv:
-            notes = filter_by_note_csv(spark, notes, select_by_csv)
-        else:
-            if not phi_dir:
-                raise ValueError("--select-by-anon-csv requires the PHI dir")
-            from cumulus_etl_spark.deid import Codebook
-
-            notes = filter_by_note_csv(
-                spark, notes, select_by_anon_csv,
-                is_anon=True, salt=Codebook(phi_dir).salt,
-            )
-    if select_words:
-        from cumulus_etl_spark.nlp.selection import filter_by_words
-
-        words = [w.strip() for a in select_words for w in a.split(",") if w.strip()]
-        notes = filter_by_words(notes, words)
-    if select_regex:
-        from cumulus_etl_spark.nlp.selection import filter_by_regex
-
-        notes = filter_by_regex(notes, select_regex)
+    notes = select_notes(
+        spark, notes,
+        select_words=select_words, select_regex=select_regex,
+        select_by_csv=select_by_csv, select_by_anon_csv=select_by_anon_csv,
+        phi_dir=phi_dir,
+    )
     return reservoir_sample(notes, n, seed=seed, tiebreak=["id"])
 
 

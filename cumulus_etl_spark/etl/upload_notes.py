@@ -273,18 +273,8 @@ def run_upload_notes(
     from cumulus_etl_spark.deid.philter import philter_udf, scrub_text
     from cumulus_etl_spark.etl.labelstudio import LabelStudioNote, find_highlights
     from cumulus_etl_spark.nlp import extract_note_text
-    from cumulus_etl_spark.nlp.selection import (
-        filter_by_note_csv,
-        filter_by_regex,
-        filter_by_words,
-    )
+    from cumulus_etl_spark.nlp.selection import select_notes
     from cumulus_etl_spark.sources import scan_resources
-
-    if sum(map(bool, (select_by_csv, select_by_anon_csv, select_by_athena_table))) > 1:
-        raise ValueError(
-            "Multiple selection arguments provided. Please specify just one."
-        )
-    salt = Codebook(phi_dir).salt
 
     # both note resource types, like the reference's selector
     # (upload_notes/selector.py:17-18 processes DiagnosticReport AND
@@ -293,24 +283,14 @@ def run_upload_notes(
         spark, input_dir, ["DiagnosticReport", "DocumentReference"]
     )
     notes = extract_note_text(docrefs).filter(F.col("note_text").isNotNull())
-    if select_by_csv:
-        notes = filter_by_note_csv(spark, notes, select_by_csv)
-    if select_by_anon_csv:
-        notes = filter_by_note_csv(
-            spark, notes, select_by_anon_csv, is_anon=True, salt=salt
-        )
-    if select_by_athena_table:
-        from cumulus_etl_spark.nlp.selection import filter_by_note_table
-
-        notes = filter_by_note_table(
-            spark, notes, select_by_athena_table, salt=salt
-        )
-    if select_words:
-        # ref: words may repeat the flag or come comma-separated
-        words = [w.strip() for arg in select_words for w in arg.split(",") if w.strip()]
-        notes = filter_by_words(notes, words)
-    if select_regex:
-        notes = filter_by_regex(notes, select_regex)
+    notes = select_notes(
+        spark, notes,
+        select_words=select_words, select_regex=select_regex,
+        select_by_csv=select_by_csv, select_by_anon_csv=select_by_anon_csv,
+        select_by_athena_table=select_by_athena_table, phi_dir=phi_dir,
+    )
+    # after select_notes, whose anon sources must not find a codebook minted here
+    salt = Codebook(phi_dir).salt
     if philter_mode == "redact":
         # length-preserving so doc spans/highlights stay aligned
         notes = notes.withColumn("note_text", philter_udf(F.col("note_text")))

@@ -2,6 +2,8 @@
 
 Word/regex filters become ``rlike`` predicates; cohort CSV / table
 filters become broadcast semi- or anti-joins. All Catalyst.
+:func:`select_notes` applies the ``--select-by-*`` flags of every note
+verb (ref nlp/selection.py:12-64,129-164).
 """
 
 from __future__ import annotations
@@ -10,6 +12,9 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from cumulus_etl_spark.deid.codebook import read_salt
+from cumulus_etl_spark.functions import anon_id
 
 
 def filter_by_words(
@@ -154,8 +159,6 @@ def filter_by_cohort_frame(
     else:
         pat_id = F.lit(None).cast("string")
     if is_anon:
-        from cumulus_etl_spark.functions import anon_id
-
         own_id = anon_id(own_id, salt)
         pat_id = F.when(pat_id.isNotNull(), anon_id(pat_id, salt))
     # mixed multi-type note frames ref by their own resourceType
@@ -199,3 +202,45 @@ def filter_by_cohort(
     ids = F.broadcast(cohort.select(F.col(cohort_col).alias("__cohort_id")).distinct())
     how = "left_anti" if reject else "left_semi"
     return notes.join(ids, notes[note_col] == F.col("__cohort_id"), how)
+
+
+def select_notes(
+    spark,
+    notes: DataFrame,
+    *,
+    select_words: list[str] | None = None,
+    select_regex: str | None = None,
+    select_by_csv: str | None = None,
+    select_by_anon_csv: str | None = None,
+    select_by_athena_table: str | None = None,
+    phi_dir: str | None = None,
+) -> DataFrame:
+    """Apply the ``--select-by-*`` flags to a frame with ``note_text``:
+    at most one cohort source (CSV, anon CSV, catalog table); the anon
+    ones read the salt of the codebook already in ``phi_dir`` (a wrong
+    PHI dir is an error, not an empty selection); words may repeat or be
+    comma-separated (ref cli_utils.py:187-201)."""
+    if sum(map(bool, (select_by_csv, select_by_anon_csv, select_by_athena_table))) > 1:
+        raise ValueError(
+            "Multiple selection arguments provided. Please specify just one."
+        )
+    if select_by_csv:
+        notes = filter_by_note_csv(spark, notes, select_by_csv)
+    elif select_by_anon_csv or select_by_athena_table:
+        if not phi_dir:
+            raise ValueError("anon note selection requires the PHI dir")
+        salt = read_salt(phi_dir)
+        if select_by_anon_csv:
+            notes = filter_by_note_csv(
+                spark, notes, select_by_anon_csv, is_anon=True, salt=salt
+            )
+        else:
+            notes = filter_by_note_table(
+                spark, notes, select_by_athena_table, salt=salt
+            )
+    words = [w.strip() for arg in select_words or () for w in arg.split(",") if w.strip()]
+    if words:
+        notes = filter_by_words(notes, words)
+    if select_regex:
+        notes = filter_by_regex(notes, select_regex)
+    return notes

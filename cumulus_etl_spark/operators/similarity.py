@@ -461,7 +461,7 @@ def assign_clusters(
       exchange for an O(1)-size plan at any k.
     Tie-break is identical on both paths: lexicographic (sq_dist,
     cluster) minimum, i.e. lowest cluster id wins ties (pytest-pinned
-    equivalence in tests/test_round4_fixes.py)."""
+    equivalence in tests/test_similarity_extra.py)."""
     k, dim = len(cents), len(cents[0])
     if k * dim <= literal_limit:
         best = nearest_centroid_l2(F.col("v"), cents)

@@ -249,7 +249,7 @@ def text_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same drop rule — LSH is only a candidate filter ahead of the exact
     verify, so the survivor sets agree whenever band recall is 1, which
     holds on this corpus at both gate scales (asserted by
-    tests/test_round4_fixes.py::test_minhash_survivors_equal_exact and
+    tests/test_corpus.py::test_minhash_survivors_equal_exact and
     re-proven by this hash check every round: a recall regression turns
     the driver row red)."""
     d = table(spark, sf_dir, "documents")
@@ -768,7 +768,7 @@ def text_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --drop-surprisal-permille` cleaning stage actually uses, a bench slot,
 # and a hash-exact oracle free of the per-term DECIMAL rounding dance the
 # probability form needed. Its case-folding regression pin moved to
-# text_lm_surprisal (tests/test_round4_fixes.py). Retirement freed the
+# text_lm_surprisal (tests/test_corpus.py). Retirement freed the
 # oracle slot that multimodal_frame_sample's new full oracle occupies —
 # net-zero gate-window demand for the round.
 

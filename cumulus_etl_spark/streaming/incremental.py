@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.deid import Codebook, Scrubber
-from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
+from cumulus_etl_spark.etl.tasks import select_tasks
+from cumulus_etl_spark.sinks import ManagedTable
 from cumulus_etl_spark.sources.ndjson import parse_lines, read_lines
 from cumulus_etl_spark.streaming.ckpt import fold_stream
 
@@ -48,8 +49,10 @@ def incremental_etl(
     last run (file-source checkpoint), then stops. Each micro-batch is
     parsed like a batch ``etl`` scan (:func:`~cumulus_etl_spark.sources.
     ndjson.parse_lines`): malformed lines are appended to
-    ``<phi_dir>/errors/<table>`` — raw lines are PHI, so never under
+    ``<phi_dir>/errors/<task>`` — raw lines are PHI, so never under
     ``output_dir`` — instead of loading with silently-nulled fields.
+    The table name, errors dir name and merge policy are those of the
+    resource type's ``etl`` task (``etl/tasks.py``).
 
     ``athena``: optional :class:`~cumulus_etl_spark.sinks.catalog_ddl.
     AthenaRegistrar` — fired after each committed micro-batch; registers
@@ -58,9 +61,9 @@ def incremental_etl(
     """
     codebook = Codebook(phi_dir)
     scrubber = Scrubber(salt=codebook.salt, philter_enabled=philter)
-    table = ManagedTable(spark, output_dir, resource_type.lower())
-    policy = MergePolicy()
-    errors_dir = os.path.join(phi_dir, "errors", table.name)
+    (task,) = select_tasks([resource_type])
+    table = ManagedTable(spark, output_dir, task.table_name)
+    errors_dir = os.path.join(phi_dir, "errors", task.name)
 
     reader = spark.readStream
     if max_files_per_trigger is not None:
@@ -70,7 +73,7 @@ def incremental_etl(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         good, bad = parse_lines(batch_df, [resource_type])
         codebook.save_mappings(good, resource_type)
-        table.merge(scrubber.scrub(good, resource_type), policy)
+        table.merge(scrubber.scrub(good, resource_type), task.policy)
         if not bad.isEmpty():
             bad.write.mode("append").json(errors_dir)
         if athena is not None:

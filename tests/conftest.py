@@ -38,8 +38,8 @@ _SLOW = [
     ("test_verbs_misc.py", "test_ann_cli_verb_all_methods"),
     ("test_deid_fuzz.py", "test_canaries_never_survive_scrub"),
     ("test_golden.py", "test_golden_lake"),
-    ("test_round4_fixes.py", "test_simhash_cap_does_not_change_candidates_on_real_corpus"),
-    ("test_round4_fixes.py", "test_simhash_bucket_cap_bounds_pair_explosion"),
+    ("test_corpus.py", "test_simhash_cap_does_not_change_candidates_on_real_corpus"),
+    ("test_corpus.py", "test_simhash_bucket_cap_bounds_pair_explosion"),
     ("test_merge_sink.py", "test_cdf_crash_fuzz_feed_matches_model*"),
     ("test_graph.py", "test_pagerank_mass_and_hub_dominance"),
     ("test_deid.py", "test_masked_fields_get_data_absent_extension"),

@@ -1,10 +1,12 @@
-"""Single-pass data-contract expectations (operators/expectations.py)."""
+"""Single-pass data-quality operators: data-contract expectations
+(operators/expectations.py) and column profiling (operators/profile.py)."""
 
 from __future__ import annotations
 
 import json
 
 import pytest
+from pyspark.sql import Row
 
 from cumulus_etl_spark.operators.expectations import check_expectations
 
@@ -174,3 +176,17 @@ def test_unique_approx_flag_screens_without_expand(spark):
     )
     assert "Expand" not in approx_plan
     assert approx_plan.count("Scan ExistingRDD") == 1
+
+
+def test_profile_handles_dotted_column_names(spark):
+    """ADVICE r3: derived aggregate references must be backtick-quoted or a
+    legal-in-parquet dotted column name parses as a struct path."""
+    from cumulus_etl_spark.operators.profile import profile_columns
+
+    df = spark.createDataFrame(
+        [Row(**{"a": 1, "b": None}), Row(**{"a": 2, "b": 5})]
+    ).withColumnRenamed("a", "a.x").withColumnRenamed("b", "b.y")
+    got = {r["column_name"]: r for r in profile_columns(df).collect()}
+    assert got["a.x"]["n_nulls"] == 0 and got["a.x"]["n_distinct"] == 2
+    assert got["b.y"]["n_nulls"] == 1
+    assert got["a.x"]["min_num"] == 1.0 and got["a.x"]["max_num"] == 2.0

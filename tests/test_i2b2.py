@@ -127,32 +127,106 @@ def test_i2b2_output_scrubs(spark, tmp_path):
     assert len(out["id"]) == 64  # sha-256 hex
 
 
+def _seven_csv_dump(root):
+    """One CSV of each of the seven kinds ``etl-i2b2`` reads."""
+    fact = "INSTANCE_NUM,PATIENT_NUM,ENCOUNTER_NUM,CONCEPT_CD,START_DATE"
+    write_csv(root, "patient_dimension.csv",
+              "PATIENT_NUM,SEX_CD,BIRTH_DATE,DEATH_DATE,ZIP_CD",
+              [(1, "F", "1980-06-15", None, "02115"), (2, "M", "1990-01-01", None, None)])
+    write_csv(root, "visit_dimension.csv",
+              "ENCOUNTER_NUM,PATIENT_NUM,START_DATE,END_DATE,INOUT_CD,LENGTH_OF_STAY",
+              [(10, 1, "2021-01-01", "2021-01-02", "Emergency", 1),
+               (11, 2, "2021-02-01 08:00:00", None, "Inpatient", None)])
+    write_csv(root, "observation_fact_diagnosis.csv", fact,
+              [(1, 1, 10, "ICD10:E11.9", "2021-01-01"), (2, 2, 11, "LOCAL|x", "2021-02-01")])
+    write_csv(root, "observation_fact_lab_views.csv",
+              fact + ",VALTYPE_CD,TVAL_CHAR,NVAL_NUM,UNITS_CD",
+              [(3, 1, 10, "LOINC:1234-5", "2021-01-01", "N", "GE", 7.5, "mg/dL"),
+               (4, 2, 11, "LOINC:9999-9", "2021-02-01", "T", "positive", None, None)])
+    write_csv(root, "observation_fact_vitals.csv",
+              fact + ",VALTYPE_CD,TVAL_CHAR,NVAL_NUM,UNITS_CD",
+              [(5, 1, 10, "LOINC:8867-4", "2021-01-01 09:30:00", "N", "E", 72, "bpm")])
+    write_csv(root, "observation_fact_notes.csv",
+              fact + ",TVAL_CHAR,OBSERVATION_BLOB",
+              [(6, 1, 10, "NOTE:x", "2021-01-01 11:00:00", "Progress note", "hello world")])
+    write_csv(root, "observation_fact_medications.csv", fact,
+              [(7, 2, 11, "RXNORM:197361", "2021-02-01")])
+
+
+def _row_set(df):
+    """Rows as canonical JSON (null fields dropped, keys sorted): frames
+    with the same rows compare equal whatever their schema's width."""
+    import json
+
+    return sorted(json.dumps(json.loads(j), sort_keys=True) for j in df.toJSON().collect())
+
+
 def test_run_etl_i2b2_end_to_end(spark, tmp_path):
+    """etl-i2b2 stages the dump as FHIR NDJSON under the PHI dir and
+    loads it through run_etl: each table equals the scrubbed converter
+    output, and the run writes what every etl run writes."""
+    import glob
+    import shutil
+    from pathlib import Path
+
     from pyspark.sql import functions as F
 
-    from cumulus_etl_spark.etl.i2b2_pipeline import run_etl_i2b2
+    from cumulus_etl_spark.deid.codebook import read_salt
+    from cumulus_etl_spark.etl.i2b2_pipeline import STAGING_DIR, run_etl_i2b2
     from cumulus_etl_spark.sinks import ManagedTable
 
     indir = str(tmp_path / "dump")
-    write_csv(tmp_path / "dump", "patient_dimension.csv",
-              "PATIENT_NUM,SEX_CD,BIRTH_DATE,DEATH_DATE,ZIP_CD",
-              [(1, "F", "1980-06-15", None, "02115"), (2, "M", "1990-01-01", None, None)])
-    write_csv(tmp_path / "dump", "visit_dimension.csv",
-              "ENCOUNTER_NUM,PATIENT_NUM,START_DATE,END_DATE,INOUT_CD,LENGTH_OF_STAY",
-              [(10, 1, "2021-01-01", "2021-01-02", "Emergency", 1)])
-    write_csv(tmp_path / "dump", "observation_fact_diagnosis.csv",
-              "INSTANCE_NUM,PATIENT_NUM,ENCOUNTER_NUM,CONCEPT_CD,START_DATE",
-              [(1, 1, 10, "ICD10:E11.9", "2021-01-01")])
+    out, phi = str(tmp_path / "out"), str(tmp_path / "phi")
+    _seven_csv_dump(tmp_path / "dump")
 
-    summary = run_etl_i2b2(spark, indir, str(tmp_path / "out"), str(tmp_path / "phi"))
+    summary = run_etl_i2b2(spark, indir, out, phi)
     assert summary["success"]
+    assert summary["errors"] == 0
     assert summary["tables"]["patient"]["rows"] == 2
-    assert summary["tables"]["condition"]["rows"] == 1
+    assert summary["tables"]["observation"]["rows"] == 3  # lab_views + vitals
+    assert summary["tables"]["condition"]["rows"] == 2
 
-    pat = ManagedTable(spark, str(tmp_path / "out"), "patient").read()
-    con = ManagedTable(spark, str(tmp_path / "out"), "condition").read()
+    scrubber = Scrubber(salt=read_salt(phi))
+    sources = {
+        "Patient": [("patient_dimension.csv", i2b2.patients)],
+        "Encounter": [("visit_dimension.csv", i2b2.encounters)],
+        "Condition": [("observation_fact_diagnosis.csv", i2b2.conditions)],
+        "Observation": [("observation_fact_lab_views.csv", i2b2.observations),
+                        ("observation_fact_vitals.csv", i2b2.observations)],
+        "DocumentReference": [("observation_fact_notes.csv", i2b2.documentreferences)],
+        "MedicationRequest": [("observation_fact_medications.csv",
+                               i2b2.medicationrequests)],
+    }
+    for rt, files in sources.items():
+        frames = [fn(spark, os.path.join(indir, name)) for name, fn in files]
+        fhir = frames[0]
+        for f in frames[1:]:
+            fhir = fhir.unionByName(f)
+        got = ManagedTable(spark, out, rt.lower()).read()
+        assert _row_set(got) == _row_set(scrubber.scrub(fhir, rt)), rt
+
+    pat = ManagedTable(spark, out, "patient").read()
+    con = ManagedTable(spark, out, "condition").read()
     assert "birthDate" in pat.columns
     assert {r["birthDate"] for r in pat.collect()} == {"1980", "1990"}  # year-chopped
     # refs align across tables under the same codebook
     joined = con.join(pat, con["subject.reference"] == F.concat(F.lit("Patient/"), pat["id"]))
-    assert joined.count() == 1
+    assert joined.count() == 2
+
+    # the run shell of every etl run: completion tables and the job record
+    for name in ("etl__completion", "etl__completion_encounters"):
+        assert ManagedTable(spark, out, name).read().count() > 0, name
+    assert glob.glob(os.path.join(out, "JobConfig", "*", "job_summary.json"))
+    # staged raw rows stay on the PHI side
+    staged = glob.glob(os.path.join(phi, STAGING_DIR, "**", "*.ndjson"), recursive=True)
+    assert staged
+    assert not glob.glob(os.path.join(out, "**", "*.ndjson"), recursive=True)
+
+    # the staging tree is replaced: a dump without visits stages no Encounter
+    smaller = str(tmp_path / "smaller")
+    os.makedirs(smaller)
+    shutil.copy(os.path.join(indir, "patient_dimension.csv"), smaller)
+    assert run_etl_i2b2(spark, smaller, out, phi)["success"]
+    staged = glob.glob(os.path.join(phi, STAGING_DIR, "**", "*.ndjson"), recursive=True)
+    lines = [line for path in staged for line in Path(path).read_text().splitlines()]
+    assert lines and not any('"resourceType":"Encounter"' in line for line in lines)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.operators import textstats as T
@@ -343,3 +344,22 @@ def test_nb_replay_on_random_corpora(spark):
                     if c:
                         s += math.log(c + 1.0)
                 assert got[(i, lab)] == pytest.approx(s, abs=1e-10), (case, i, lab)
+
+
+def test_logreg_ignores_null_rows_consistently(spark):
+    """ADVICE r3: rows with NULL features/label must not dilute n — the
+    fit over data-with-nulls equals the fit over pre-dropped data."""
+    from cumulus_etl_spark.operators.mlstats import logreg_train_gd
+
+    rows = [(float(i % 7) / 3.0, float((i * 5) % 11) / 5.0, i % 2) for i in range(60)]
+    clean = spark.createDataFrame(rows, "x1 double, x2 double, y int")
+    dirty = clean.unionByName(spark.createDataFrame(
+        [(None, 1.0, 1), (2.0, None, 0), (1.0, 1.0, None)],
+        "x1 double, x2 double, y int",
+    ))
+    w_clean, loss_clean, _ = logreg_train_gd(
+        clean, ["x1", "x2"], F.col("y"), iters=5)
+    w_dirty, loss_dirty, _ = logreg_train_gd(
+        dirty, ["x1", "x2"], F.col("y"), iters=5)
+    assert w_clean == pytest.approx(w_dirty, abs=1e-12)
+    assert loss_clean == pytest.approx(loss_dirty, abs=1e-12)

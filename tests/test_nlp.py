@@ -348,3 +348,77 @@ def test_rewrite_textual_spans_reference_semantics():
     # idempotent on replays: index pairs survive a second rewrite
     again = rewrite_textual_spans(parsed, note)
     assert again is True and parsed["spans"] == [[6, 19], [30, 43]]
+
+
+def test_note_verbs_share_select_notes(spark, tmp_path, monkeypatch):
+    """sample, upload-notes and the nlp verb hand their --select-by-*
+    flags to the one selection surface, nlp/selection.py:select_notes,
+    and each refuses two cohort sources at once."""
+    import pytest
+
+    from cumulus_etl_spark.cli import main as cli_main
+    from cumulus_etl_spark.etl.sample import sample_notes
+    from cumulus_etl_spark.etl.upload_notes import run_upload_notes
+    from cumulus_etl_spark.nlp import selection
+    from tests.test_upload_notes import _FakeLsClient
+
+    in_dir, phi = str(tmp_path / "in"), str(tmp_path / "phi")
+    write_ndjson(in_dir, "d.ndjson", [docref("n1", text="fever"), docref("n2", text="cough")])
+    sel = str(tmp_path / "sel.csv")
+    with open(sel, "w") as fh:
+        fh.write("docref_id\nn1\n")
+
+    class Selected(Exception):
+        pass
+
+    calls = []
+
+    def spy(spark, notes, **flags):
+        assert "note_text" in notes.columns
+        calls.append({k: v for k, v in flags.items() if v})
+        raise Selected
+
+    def nlp_verb(select_words=(), select_regex=None, **cohorts):
+        argv = ["nlp", in_dir, str(tmp_path / "out"), phi]
+        for w in select_words:
+            argv += ["--select-by-word", w]
+        if select_regex:
+            argv += ["--select-by-regex", select_regex]
+        for dest, path in cohorts.items():  # select_by_csv -> --select-by-csv
+            argv += ["--" + dest.replace("_", "-"), path]
+        return cli_main(argv)
+
+    verbs = {
+        "sample": lambda **kw: sample_notes(spark, in_dir, 5, phi_dir=phi, **kw),
+        "upload-notes": lambda **kw: run_upload_notes(
+            spark, in_dir, phi, _FakeLsClient(), philter_mode="disable", **kw
+        ),
+        "nlp": nlp_verb,
+    }
+    flags = {"select_words": ["fever,cough"], "select_regex": "fe.er", "select_by_csv": sel}
+    for name, run in verbs.items():
+        with monkeypatch.context() as m:
+            m.setattr(selection, "select_notes", spy)
+            with pytest.raises(Selected):
+                run(**flags)
+        assert calls.pop() == dict(flags, phi_dir=phi), name
+        with pytest.raises(ValueError, match="Multiple selection arguments"):
+            run(select_by_csv=sel, select_by_anon_csv=sel)
+
+
+def test_anon_selection_needs_an_existing_codebook(spark, tmp_path):
+    """Anon selection matches the codebook's pseudonyms: against a PHI dir
+    without a codebook it is an error naming the missing file, and it
+    writes no fresh codebook (whose new salt would match nothing)."""
+    import pytest
+
+    from cumulus_etl_spark.etl.sample import sample_notes
+
+    in_dir, phi = str(tmp_path / "in"), str(tmp_path / "wrong-phi")
+    write_ndjson(in_dir, "d.ndjson", [docref("n1", text="fever")])
+    sel = str(tmp_path / "anon.csv")
+    with open(sel, "w") as fh:
+        fh.write("anon_docref_id\nabc\n")
+    with pytest.raises(FileNotFoundError, match="codebook.json"):
+        sample_notes(spark, in_dir, 5, select_by_anon_csv=sel, phi_dir=phi)
+    assert not os.path.exists(os.path.join(phi, "codebook.json"))

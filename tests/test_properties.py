@@ -5,7 +5,9 @@
 - a seeded random-operations model test for the merge sink: every merge
   semantics decision is replayed against a dict-based reference model
   (the structure of the reference's Delta behavior suite, SURVEY §5.5,
-  generalized from hand-picked to generated cases).
+  generalized from hand-picked to generated cases);
+- hash sampling (operators/sampling.py): stable as the corpus grows,
+  monotone in the fraction.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ import re
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from cumulus_etl_spark.deid.philter import scrub_text
 from cumulus_etl_spark.nlp.span import anchor_span
@@ -260,3 +263,30 @@ def test_convert_bsv_text_is_total_and_4_column(text):
     out = convert_bsv_text(text)
     for line in out.splitlines():
         assert len(line.split("|")) == 4
+
+
+def test_hash_sample_is_stable_under_growth(spark):
+    """Hash sampling keeps the same rows when the corpus grows — the
+    split-stability property rand(seed) can't give."""
+    from cumulus_etl_spark.operators.sampling import hash_sample
+
+    small = spark.range(500).select(F.col("id").alias("k"))
+    big = spark.range(1000).select(F.col("id").alias("k"))
+    s_small = {r["k"] for r in hash_sample(small, "k", 0.3).collect()}
+    s_big = {r["k"] for r in hash_sample(big, "k", 0.3).collect()}
+    assert s_small == {k for k in s_big if k < 500}
+    assert 0.2 < len(s_big) / 1000 < 0.4
+
+
+def test_hash_sample_fraction_monotone(spark):
+    """Growing the fraction only ADDS rows (threshold grows, the per-key
+    hash is fixed) — lets a pipeline upsample without resampling."""
+    from cumulus_etl_spark.operators.sampling import hash_sample
+
+    df = spark.range(2000).select(F.col("id").alias("k"))
+    prev: set = set()
+    for f in (0.1, 0.3, 0.6, 1.0):
+        cur = {r["k"] for r in hash_sample(df, "k", f).collect()}
+        assert prev <= cur, f
+        prev = cur
+    assert prev == set(range(2000))  # fraction 1.0 keeps everything

@@ -1,4 +1,6 @@
-"""IVF ANN tests: determinism + recall vs the brute-force oracle."""
+"""Vector similarity tests: IVF ANN determinism + recall vs the
+brute-force oracle, and the centroid-assignment paths of k-means and
+SemDeDup (operators/similarity.py)."""
 
 from __future__ import annotations
 
@@ -6,6 +8,7 @@ from pyspark.sql import functions as F
 
 from cumulus_etl_spark.operators.similarity import ann_ivf, knn_bruteforce, train_ivf_centroids
 from cumulus_etl_spark.sources import table
+from tests.conftest import SF_SMOKE as SF
 
 
 def test_ivf_recall_vs_bruteforce(spark, sf_smoke):
@@ -324,3 +327,61 @@ def test_mine_hard_negatives_excludes_duplicate_band(spark):
         dup_corpus, dup_corpus.filter(F.col("vec_id") == 0), k=5
     )
     assert lonely.count() == 0
+
+
+def test_assign_clusters_join_path_matches_literal(spark):
+    """VERDICT r3 item 4: the broadcast-centroid-frame join (large-k path)
+    must produce identical assignments and distances to the literal-
+    expression path, ties included."""
+    from cumulus_etl_spark.operators import similarity as S
+    from cumulus_etl_spark.sources import table
+
+    emb = table(spark, SF, "embeddings")
+    cents = S.first_k_centroids(emb, 32)
+    base = emb.select(F.col("vec_id").alias("id"), S.as_double_array("embedding").alias("v"))
+    lit = {(r["id"], r["cluster"], r["sq_dist"])
+           for r in S.assign_clusters(base, cents).collect()}
+    joined = {(r["id"], r["cluster"], r["sq_dist"])
+              for r in S.assign_clusters(base, cents, literal_limit=0).collect()}
+    assert lit == joined
+
+
+def test_kmeans_lloyd_large_k_join_path(spark):
+    """kmeans_lloyd(k=256) through the join path: runs green and matches
+    the literal path exactly (same centroids, assignments, inertias)."""
+    from cumulus_etl_spark.operators import similarity as S
+
+    vecs = spark.range(1200).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(15)),
+            lambda d: ((F.col("id") * 37 + d * 11) % 101).cast("double") / 101.0,
+        ).alias("embedding"),
+    )
+    c_lit, a_lit, i_lit = S.kmeans_lloyd(vecs, k=256, iters=2)
+    c_join, a_join, i_join = S.kmeans_lloyd(vecs, k=256, iters=2, literal_limit=0)
+    assert c_lit == c_join
+    assert i_lit == i_join
+    assert ({(r["id"], r["cluster"]) for r in a_lit.collect()}
+            == {(r["id"], r["cluster"]) for r in a_join.collect()})
+
+
+def test_semdedup_join_path_matches_literal(spark):
+    """SemDeDup keep-set is identical through either assignment path."""
+    from cumulus_etl_spark.operators import similarity as S
+    from cumulus_etl_spark.sources import table
+
+    emb = table(spark, SF, "embeddings")
+    lit = {(r["id"], r["cluster"], r["keep"]) for r in S.semdedup(emb, k=8).collect()}
+    joined = {(r["id"], r["cluster"], r["keep"])
+              for r in S.semdedup(emb, k=8, literal_limit=0).collect()}
+    assert lit == joined
+
+
+def test_cluster_quality_silhouette_bounds(spark):
+    """Simplified silhouette lies in [-1, 1]; centroid seed vectors score
+    positively (they sit at distance 0 from their own centroid)."""
+    from cumulus_etl_spark.plans import CATALOG
+
+    rows = CATALOG["vector_cluster_quality"].build(spark, SF).collect()
+    assert rows and all(-1.0 <= r["avg_silhouette"] <= 1.0 for r in rows)
