@@ -86,6 +86,7 @@ def run_etl(
         table_summary = _run_task(
             spark,
             task,
+            available[task.resource_type],
             input_dir,
             output_dir,
             codebook,
@@ -116,6 +117,7 @@ def run_etl(
 def _run_task(
     spark: SparkSession,
     task: TaskDef,
+    present: set[str],
     input_dir: str,
     output_dir: str,
     codebook: Codebook,
@@ -126,7 +128,13 @@ def _run_task(
     batch_size: int = 100_000,
     errors_root: str | None = None,
 ) -> dict:
-    good, bad = scan_with_quarantine(spark, input_dir, [task.resource_type])
+    # Parse, scrub and store only the top-level fields the export holds
+    # (``present``, from the detect_resources census) and the ones the
+    # merge reads; the table's pointer keeps the full contract.
+    fields = set(present) | task.policy.read_columns
+    good, bad = scan_with_quarantine(
+        spark, input_dir, [task.resource_type], {task.resource_type: fields}
+    )
 
     # Codebook audit mappings committed before data (crash-safe either way:
     # pseudonyms are pure functions of the salt; see deid/codebook.py).
@@ -160,7 +168,12 @@ def _run_task(
         encounters_for_completion = scrubbed if task.resource_type == "Encounter" else None
     else:
         table = ManagedTable(spark, output_dir, task.table_name)
-        table.merge(scrubbed, task.policy)
+        # A new table's contract is the full-schema scrub, unless the
+        # export holds every field: then the scrubbed frame already is it.
+        contract = None
+        if not table.exists() and not fields >= set(schema_for(task.resource_type).fieldNames()):
+            contract = _scrubbed_schema(spark, task)
+        table.merge(scrubbed, task.policy, contract=contract)
         if have_dead:
             table.delete_ids(dead_anon)
         encounters_for_completion = (

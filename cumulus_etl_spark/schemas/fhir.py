@@ -16,6 +16,8 @@ queries cast when comparing.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -896,6 +898,14 @@ def schema_for(resource_type: str) -> StructType:
             f"no contractual schema for resource type {resource_type!r}; "
             f"known: {', '.join(FHIR_RESOURCE_TYPES)}"
         ) from None
+
+
+def cut_schema(schema: StructType, keep: Iterable[str] | None) -> StructType:
+    """``schema``'s top-level fields named in ``keep`` (all when None)."""
+    if keep is None:
+        return schema
+    keep = set(keep)
+    return StructType([f for f in schema.fields if f.name in keep])
 
 
 def wide_schema(resource_types: list[str] | tuple[str, ...]) -> StructType:

@@ -12,8 +12,12 @@ and reads, so it is safe to run against a lake another process is
 writing (worst case it reports an in-flight merge's staging dir, which
 is exactly what an operator wants to see).
 
+The report also counts the stored top-level columns (the pointer's
+``stored`` list; every schema column when a pointer predates it).
+
 Severity model: ``critical`` = the table will fail or lose data on
-read/merge (unreadable pointer, pointed version dir missing);
+read/merge (unreadable pointer, pointed version dir missing, stored
+columns outside the pointer schema);
 ``warn`` = crash leftovers or feed truncation that the sink itself
 tolerates but an operator should reclaim (stray version dirs, orphan
 staging, feed holes — holes also mean a checkpointed ``stream_changes``
@@ -122,6 +126,16 @@ def diagnose_table(path: str, sample_files: int | None = None) -> dict:
             issues.append(f"critical: _CURRENT pointer unreadable ({exc})")
     versions = _vnums(path)
     report["versions_on_disk"] = versions
+    if ptr is not None and "schema" in ptr:
+        names = [f["name"] for f in json.loads(ptr["schema"])["fields"]]
+        stored = ptr.get("stored", names)
+        report["stored_columns"] = len(stored)
+        outside = sorted(set(stored) - set(names))
+        if outside:
+            issues.append(
+                f"critical: stored column(s) {outside} are not in the pointer "
+                "schema (no read sees them, and the next merge drops them)"
+            )
     if ptr is not None:
         cur = ptr.get("version")
         report["current_version"] = cur

@@ -39,10 +39,27 @@ the fallback is a *bucket-pruned versioned-parquet* table:
   NOT table size; this is the fallback's answer to Delta file pruning.
   On an object store without cheap links you'd run the Delta branch;
   the merge COMPUTE is bucket-pruned either way.
-- The ``_CURRENT`` pointer (version, schema, bucket layout) flips
-  atomically at the end, so readers never see a half-written table and
-  a crashed merge is invisible. ``finalize()`` drops superseded version
-  dirs (vacuum analog; hardlinked files survive via the live version).
+- The ``_CURRENT`` pointer (version, schema, stored columns, bucket
+  layout) flips atomically at the end, so readers never see a
+  half-written table and a crashed merge is invisible. ``finalize()``
+  drops superseded version dirs (vacuum analog; hardlinked files survive
+  via the live version).
+- Contract vs stored columns. The pointer ``schema`` is the table's
+  full contract: a new table takes the ``contract`` its first merge
+  passes (the ETL passes the wide FHIR schema after scrubbing), and every
+  merge widens it by the frame it writes, whose types win (schema
+  evolution, nested fields included). The files hold only the stored
+  top-level columns, which the pointer lists by name under ``stored``:
+  the union of the previous stored columns and the columns written, so
+  they never shrink. An ETL frame carries only the fields its export
+  holds: the perfbench Patient table stores 8 of its 21 top-level
+  columns (232 of 2,071 leaves). ``read()`` reads under the contract and
+  the parquet reader null-fills the rest; ``merge`` and ``delete_ids``
+  read the existing side under the stored columns only. A pointer with
+  no ``stored`` record stores every column of its schema. The Delta
+  branch has no stored record: its ``UPDATE SET *`` would keep a target
+  column the batch lacks, so ``merge`` null-fills every batch to the
+  target schema (a new table's: the ``contract``).
 
 Invariant for group-bucketed tables: a key never migrates between
 groups (true for every reference table — NLP row ids embed note_ref,
@@ -60,7 +77,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+from cumulus_etl_spark.schemas import cut_schema
 
 try:  # pragma: no cover - exercised only where delta-spark is installed
     from delta.tables import DeltaTable
@@ -136,6 +155,31 @@ def _fold_buckets(vdir: str, n: int, m: int) -> int:
     return min(n, m)
 
 
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the type a
+    file source reads a column back as (Spark's ``asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _widen(base: StructType, over: StructType) -> StructType:
+    """``base`` with ``over``'s fields laid on it: a field in both keeps
+    its place and takes ``over``'s type; ``over``'s other fields follow."""
+    mine = {f.name: f for f in over.fields}
+    names = set(base.fieldNames())
+    return StructType(
+        [mine.get(f.name, f) for f in base.fields]
+        + [f for f in over.fields if f.name not in names]
+    )
+
+
 def _has_field(df: DataFrame, dotted: str) -> bool:
     """Does a dotted field path resolve in this schema? The lastUpdated
     guard silently disables when the frame doesn't carry the field (e.g.
@@ -169,6 +213,17 @@ class MergePolicy:
     # Delta change data feed (delta.enableChangeDataFeed); read it back
     # with ManagedTable.read_changes()
     change_feed: bool = False
+
+    @property
+    def read_columns(self) -> set[str]:
+        """The top-level columns a merge reads from the batch: the keys,
+        the group field and the root of the freshness guard's field."""
+        cols = set(self.keys)
+        if self.group_field:
+            cols.add(self.group_field)
+        if self.last_updated_field:
+            cols.add(self.last_updated_field.split(".")[0])
+        return cols
 
     @property
     def bucket_cols(self) -> tuple[str, ...]:
@@ -214,9 +269,9 @@ class ManagedTable:
 
     def _read_version(
         self, ptr: dict, buckets: list[int] | None = None,
-        keep_bucket_col: bool = False,
+        keep_bucket_col: bool = False, stored: bool = False,
     ) -> DataFrame:
-        """Scan the current version; ``buckets`` prunes to those hive
+        """Scan the pointer's version; ``buckets`` prunes to those hive
         partitions (shows up as PartitionFilters in the plan).
 
         The read uses the pointer schema EXPLICITLY instead of
@@ -227,9 +282,13 @@ class ManagedTable:
         data file on every merge/read (guide §6: file metadata cost is
         driver-side, per-file). ``keep_bucket_col``: retain the hive
         partition column so a caller that writes the same layout back
-        can skip the routing shuffle."""
+        can skip the routing shuffle. Columns no file stores null-fill
+        the same way; ``stored`` reads only the stored ones (the merge
+        side)."""
         vdir = self._vdir(int(ptr["version"]))
         schema = StructType.fromJson(json.loads(ptr["schema"]))
+        if stored:
+            schema = cut_schema(schema, ptr.get("stored"))
         if not self._bucket_dirs(vdir):
             if keep_bucket_col:
                 return self.spark.createDataFrame([], schema).withColumn(
@@ -256,8 +315,9 @@ class ManagedTable:
     def read(self, version: int | None = None) -> DataFrame | None:
         """Current table state, or — time travel — a past ``version``
         that finalize() has not GC'd yet (Delta branch: ``versionAsOf``).
-        Past versions read with their own file schemas, which may
-        predate later schema evolution."""
+        Past versions read under the current contract (the pointer
+        ``schema``): columns added by later schema evolution, and columns
+        that version's files never stored, read as nulls."""
         if self._is_delta():
             if version is not None:
                 return (
@@ -275,13 +335,7 @@ class ManagedTable:
                     f"version {version} not on disk (have {self.versions()}); "
                     "finalize() garbage-collects old versions"
                 )
-            vdir = self._vdir(version)
-            return (
-                self.spark.read.option("mergeSchema", "true")
-                .option("basePath", vdir)
-                .parquet(vdir)
-                .drop(BUCKET_COL)
-            )
+            return self._read_version({**ptr, "version": version})
         return self._read_version(ptr)
 
     def versions(self) -> list[int]:
@@ -301,8 +355,16 @@ class ManagedTable:
 
     # ---- write side ----
 
-    def merge(self, updates: DataFrame, policy: MergePolicy) -> None:
+    def merge(
+        self, updates: DataFrame, policy: MergePolicy,
+        contract: StructType | None = None,
+    ) -> None:
         """Upsert ``updates`` under ``policy`` (see module docstring).
+
+        ``contract``: the full schema a NEW table promises its readers
+        when ``updates`` carries only some of its columns (recorded as the
+        pointer ``schema``; the Delta branch null-fills the batch to it).
+        An existing table keeps its own.
 
         Within-batch dedup (freshest-timestamp winner, content-hash
         tiebreak — the `_dedupe_updates` contract) is FUSED into the
@@ -313,6 +375,19 @@ class ManagedTable:
         the same partition keys with the same ordering, evaluated on the
         same exchange the merge window / bucket routing already needs."""
         if HAVE_DELTA:
+            # UPDATE SET * keeps a target column the batch lacks as it
+            # was, so every batch carries the whole target schema (a new
+            # table's: the contract), the columns it lacks as nulls.
+            target = (
+                DeltaTable.forPath(self.spark, self.path).toDF().schema
+                if self._is_delta() else contract
+            )
+            if target is not None:
+                have = set(updates.columns)
+                updates = updates.select(*[
+                    F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in _widen(target, updates.schema).fields
+                ])
             self._merge_delta(_dedupe_updates(updates, policy), policy)
             return
         self._publish_pending_changes(drop_orphans=True)
@@ -346,7 +421,8 @@ class ManagedTable:
                         ),
                     )
                 self._write_version(
-                    deduped, policy, n, touched=None, prev=None, pre_bucketed=True
+                    deduped, policy, n, touched=None, prev=None, pre_bucketed=True,
+                    contract=contract,
                 )
             else:
                 deduped = _dedupe_updates(updates, policy)
@@ -354,7 +430,9 @@ class ManagedTable:
                     self._write_changes(
                         1, deduped.withColumn("_change_type", F.lit("insert"))
                     )
-                self._write_version(deduped, policy, n, touched=None, prev=None)
+                self._write_version(
+                    deduped, policy, n, touched=None, prev=None, contract=contract
+                )
             self._publish_changes(1)
             return
         n = int(ptr.get("num_buckets") or 0)
@@ -367,8 +445,9 @@ class ManagedTable:
         else:
             # Bucket pruning: only the batch's buckets are read, shuffled,
             # and rewritten; the rest of the table is re-linked untouched.
-            touched = _touched_buckets(updates, policy.bucket_cols, n)
-        existing = self._read_version(ptr, buckets=touched)
+            # One bucket is touched by any batch: no job needed to say so.
+            touched = [0] if n == 1 else _touched_buckets(updates, policy.bucket_cols, n)
+        existing = self._read_version(ptr, buckets=touched, stored=True)
 
         keys = list(policy.keys)
         ex = existing.withColumn("__src", F.lit(0))
@@ -527,7 +606,9 @@ class ManagedTable:
         bucket_cols = tuple(ptr.get("bucket_cols") or (id_col,))
         num_buckets = int(ptr.get("num_buckets") or 1)
         by_id = bucket_cols == (id_col,)
-        touched = _touched_buckets(ids, ("__del_id",), num_buckets) if by_id else None
+        touched = None
+        if by_id:
+            touched = [0] if num_buckets == 1 else _touched_buckets(ids, ("__del_id",), num_buckets)
         if change_feed is None:
             # Inherit from the table: a feed-maintained table must never
             # commit a silent hole that CDF consumers would skip forever.
@@ -540,7 +621,7 @@ class ManagedTable:
         # from scan packing; the writer's per-partition-value file split
         # handles that, and the leading BUCKET_COL sort keeps one file
         # per bucket per task.)
-        existing = self._read_version(ptr, buckets=touched, keep_bucket_col=True)
+        existing = self._read_version(ptr, buckets=touched, keep_bucket_col=True, stored=True)
         remaining = existing.join(
             F.broadcast(ids), existing[id_col] == F.col("__del_id"), "left_anti"
         )
@@ -665,6 +746,7 @@ class ManagedTable:
     def _write_version(
         self, df: DataFrame, policy: MergePolicy, num_buckets: int,
         touched: list[int] | None, prev: dict | None, pre_bucketed: bool = False,
+        contract: StructType | None = None,
     ) -> int:
         # range-cluster data files by key so parquet min/max footers prune key
         # lookups — the fallback's analog of Delta liquid clustering
@@ -673,7 +755,7 @@ class ManagedTable:
             df, policy.bucket_cols, num_buckets,
             sort_cols=policy.keys, touched=touched, prev=prev,
             zorder_cols=policy.zorder_cols, change_feed=policy.change_feed,
-            pre_bucketed=pre_bucketed, fold=touched is None,
+            pre_bucketed=pre_bucketed, fold=touched is None, contract=contract,
         )
 
     def _write_raw(
@@ -688,6 +770,7 @@ class ManagedTable:
         change_feed: bool = False,
         pre_bucketed: bool = False,
         fold: bool = False,
+        contract: StructType | None = None,
     ) -> int:
         """Write the next version: hive-partition by bucket; one shuffle
         routes rows to their bucket, rows sorted by ``sort_cols`` within
@@ -698,7 +781,8 @@ class ManagedTable:
         ``pre_bucketed``: the caller already attached BUCKET_COL and
         hash-partitioned the frame on it (merge fuses that exchange with
         its window — r13 opt), so the routing shuffle is skipped here.
-        ``fold``: fold a whole-table write (module docstring)."""
+        ``fold``: fold a whole-table write (module docstring).
+        ``contract``: a new table's full schema (see ``merge``)."""
         v = (self.current_version() or 0) + 1
         out = self._vdir(v)
         if pre_bucketed:
@@ -733,13 +817,24 @@ class ManagedTable:
             for entry in self._bucket_dirs(prev_dir):
                 if entry not in keep:
                     _link_tree(os.path.join(prev_dir, entry), os.path.join(out, entry))
+        if prev is not None:
+            # The existing side was read back through the file source, so
+            # its columns are nullable at every depth, stored or not.
+            before = StructType.fromJson(json.loads(prev["schema"]))
+            full = _widen(_nullable(before), schema)
+            was = prev.get("stored", before.fieldNames())
+        else:
+            full = schema if contract is None else _widen(contract, schema)
+            was = []
+        stored = set(was) | set(schema.fieldNames())
         ptr = os.path.join(self.path, CURRENT_POINTER)
         tmp = ptr + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(
                 {
                     "version": v,
-                    "schema": schema.json(),
+                    "schema": full.json(),
+                    "stored": [n for n in full.fieldNames() if n in stored],
                     "bucket_cols": list(bucket_cols),
                     "num_buckets": num_buckets,
                     "change_feed": change_feed,

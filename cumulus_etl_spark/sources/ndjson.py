@@ -9,6 +9,13 @@ stores natively, no staging copy), and :func:`parse_lines` dispatches
 each line on its ``resourceType`` and parses it under that type's exact
 schema with ``from_json``.
 
+A run parses only the top-level fields its export holds:
+:func:`detect_resources` takes a census of the top-level keys present per
+type, and :func:`parse_lines` cuts each type's schema down to them. A
+field no line carries parses to null under the full schema, so the cut
+drops only all-null columns; readers get the full contract back from the
+table's pointer (sinks/merge.py). Nested structs are never cut.
+
 Malformed lines are quarantined, not dropped silently: a line that is
 not JSON, has no resourceType, or breaks its type's schema lands on the
 bad side with its raw text and source file (parity: common.py:159-168
@@ -18,12 +25,13 @@ warns and skips; etl/tasks/base.py:356-364 spills them).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from cumulus_etl_spark.schemas import schema_for, wide_schema
+from cumulus_etl_spark.schemas import cut_schema, schema_for, wide_schema
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -75,11 +83,21 @@ def read_lines(reader, root: str) -> DataFrame:
 
 
 def parse_lines(
-    lines: DataFrame, resource_types: list[str] | tuple[str, ...]
+    lines: DataFrame,
+    resource_types: list[str] | tuple[str, ...],
+    fields: Mapping[str, Iterable[str]] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """S1 + K7: split a :func:`read_lines` frame into (good rows under the
     wide schema of ``resource_types``, quarantined ``(raw_line,
     source_file)``).
+
+    ``fields`` maps a type to the top-level fields to parse (the keys a
+    :func:`detect_resources` census found, plus any the caller needs);
+    its schema is cut down to them, and the good side's columns are the
+    wide schema cut down to the union. A type it does not name parses
+    every field. As long as the census covered every line, a line breaks
+    the cut schema exactly when it breaks the full one: it can only
+    break a field it carries, and every field it carries is kept.
 
     Lines are dispatched on resourceType BEFORE any schema parse (ref
     common.py:144-156 filters before validating): a foreign-type line is
@@ -88,12 +106,15 @@ def parse_lines(
     JSON or lack a resourceType.
     """
     types = list(resource_types)
-    wide = wide_schema(types)
+    fields = fields or {}
+    own_of = {rt: cut_schema(schema_for(rt), fields.get(rt)) for rt in types}
+    kept = {f.name for own in own_of.values() for f in own.fields}
+    wide = cut_schema(wide_schema(types), kept)
     goods = []
     # Unparseable JSON / missing resourceType: malformed for every type.
     bad = lines.filter(F.col("_rt").isNull()).select("raw_line", "source_file")
     for rt in types:
-        own = schema_for(rt)
+        own = own_of[rt]
         mine = lines.filter(F.col("_rt") == rt).withColumn(
             "parsed",
             # PERMISSIVE + corrupt column: field-level type mismatches
@@ -121,16 +142,18 @@ def scan_with_quarantine(
     spark: SparkSession,
     root: str,
     resource_types: list[str] | tuple[str, ...],
+    fields: Mapping[str, Iterable[str]] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """S1 + K7: (good rows, quarantined raw lines) of every ``*.ndjson``
-    under ``root``: :func:`read_lines` then :func:`parse_lines`.
+    under ``root``: :func:`read_lines` then :func:`parse_lines` (which
+    documents ``fields``).
 
     Both sides are lazy plans over the same files; each action on either
     one scans them again. The quarantine side carries the raw line plus
     its source file so a run can spill them to ``errors/`` (parity:
     etl/tasks/base.py:356-364).
     """
-    return parse_lines(read_lines(spark.read, root), resource_types)
+    return parse_lines(read_lines(spark.read, root), resource_types, fields)
 
 
 def scan_resources(
@@ -144,13 +167,29 @@ def scan_resources(
     return scan_with_quarantine(spark, root, resource_types)[0]
 
 
-def detect_resources(spark: SparkSession, root: str) -> set[str]:
-    """S2: which resource types are present under ``root``? Drives task
-    selection like ndjson_loader.py:36-38."""
+def detect_resources(spark: SparkSession, root: str) -> dict[str, set[str]]:
+    """S2 + census: the resource types present under ``root``, each with
+    the top-level keys its lines hold. Drives task selection like
+    ndjson_loader.py:36-38, and :func:`parse_lines` parses only those keys.
+
+    Every line of a type counts, the ones that will be quarantined too,
+    so a key that only a schema-breaking line carries is still parsed
+    and still quarantines it. A type counts as present whenever a line
+    names it, as before the census (``explode_outer``)."""
     if not _has_ndjson(root):
-        return set()
-    rts = read_lines(spark.read, root).select("_rt").distinct()
-    return {r["_rt"] for r in rts.collect() if r["_rt"]}
+        return {}
+    pairs = (
+        read_lines(spark.read, root)
+        .filter(F.col("_rt").isNotNull())
+        .select("_rt", F.explode_outer(F.json_object_keys("raw_line")).alias("key"))
+        .distinct()
+    )
+    found: dict[str, set[str]] = {}
+    for r in pairs.collect():
+        keys = found.setdefault(r["_rt"], set())
+        if r["key"] is not None:
+            keys.add(r["key"])
+    return found
 
 
 def read_deleted_ids(spark: SparkSession, root: str) -> DataFrame:

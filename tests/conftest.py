@@ -60,6 +60,8 @@ _SLOW = [
 _SLOW_EXEMPT = {
     ("test_etl_pipeline.py", "test_quarantine_spill"),
     ("test_etl_pipeline.py", "test_job_context_recorded"),
+    ("test_etl_pipeline.py", "test_etl_stores_the_fields_the_export_holds"),
+    ("test_etl_pipeline.py", "test_dense_export_takes_its_contract_from_the_scrubbed_frame"),
     ("test_deid_golden.py", "test_golden_deid_pair[Patient.2.json]"),
     ("test_deid_golden.py", "test_golden_deid_pair[Observation.1.json]"),
     ("test_streaming.py", "test_incremental_dedup_index"),

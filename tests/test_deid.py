@@ -4,12 +4,14 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.deid import Codebook, Scrubber
 from cumulus_etl_spark.deid.philter import scrub_text
-from cumulus_etl_spark.sources import scan_resources
-from tests.fhir_fixtures import write_ndjson, write_standard_input
+from cumulus_etl_spark.etl.tasks import BASIC_TASKS
+from cumulus_etl_spark.sources import detect_resources, scan_resources, scan_with_quarantine
+from tests.fhir_fixtures import write_ndjson, write_standard_input, write_wide_input
 
 SALT = "0123456789abcdef"
 
@@ -277,3 +279,28 @@ def test_scrub_is_pure_catalyst(spark, tmp_path):
     for scrubber in (Scrubber(salt=SALT), Scrubber(salt=SALT, philter_enabled=True)):
         plan = scrubber.scrub(df, "Patient")._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+@pytest.mark.parametrize("philter", [False, True], ids=["plain", "philter"])
+def test_absent_fields_scrub_to_null(spark, tmp_path, philter):
+    """Scrubbing a frame parsed under the census-cut schema gives the
+    full-schema scrub's values on its columns, and every other column of
+    the full-schema scrub is null: a field absent from the input never
+    scrubs to a value, so the ETL may leave it unstored."""
+    root = write_wide_input(str(tmp_path))
+    census = detect_resources(spark, root)
+    scrubber = Scrubber(salt=SALT, philter_enabled=philter)
+    for task in BASIC_TASKS:
+        rt = task.resource_type
+        keep = {rt: census[rt] | task.policy.read_columns}
+        got = scrubber.scrub(scan_with_quarantine(spark, root, [rt], keep)[0], rt)
+        want = scrubber.scrub(scan_resources(spark, root, [rt]), rt)
+        others = [c for c in want.columns if c not in got.columns]
+        assert got.columns == [c for c in want.columns if c in got.columns], rt
+        assert others, rt
+        mine = sorted(r[0] for r in got.select(F.to_json(F.struct(*got.columns))).collect())
+        full = want.select(
+            F.to_json(F.struct(*got.columns)), F.to_json(F.struct(*others))
+        ).collect()
+        assert sorted(r[0] for r in full) == mine, rt
+        assert {r[1] for r in full} == {"{}"}, rt

@@ -170,3 +170,32 @@ def test_sample_files_bounds_footer_sweep_and_still_catches_drift(
     rc = main(["doctor", str(tmp_path), "--sample-files", "4"])
     assert rc == 0
     assert len(reads) <= 8
+
+
+def test_stored_columns_are_counted_and_must_lie_in_the_schema(spark, tmp_path):
+    """The report counts the pointer's stored columns (all schema columns
+    for a pointer without a ``stored`` record); a stored column outside
+    the schema is critical."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    contract = StructType([StructField(c, t) for c, t in
+                           (("id", StringType()), ("value", LongType()), ("note", StringType()))])
+    tbl.merge(spark.createDataFrame([("k", 1)], "id string, value long"),
+              MergePolicy(keys=("id",), last_updated_field=None), contract=contract)
+    rep = diagnose_table(tbl.path)
+    assert rep["status"] == "ok" and rep["stored_columns"] == 2
+
+    ptr_path = os.path.join(tbl.path, "_CURRENT")
+    with open(ptr_path) as fh:
+        ptr = json.load(fh)
+    legacy = {k: v for k, v in ptr.items() if k != "stored"}
+    with open(ptr_path, "w") as fh:
+        json.dump(legacy, fh)
+    assert diagnose_table(tbl.path)["stored_columns"] == 3
+
+    with open(ptr_path, "w") as fh:
+        json.dump({**ptr, "stored": ["id", "value", "gone"]}, fh)
+    rep = diagnose_table(tbl.path)
+    assert rep["status"] == "critical"
+    assert any("['gone']" in i and "not in the pointer schema" in i for i in rep["issues"])

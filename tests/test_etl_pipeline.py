@@ -228,6 +228,89 @@ def test_convert_roundtrip(spark, dirs, tmp_path):
     assert {r["id"] for r in pat2.collect()} == {r["id"] for r in pat.collect()}
 
 
+def test_etl_stores_the_fields_the_export_holds(spark, tmp_path):
+    """A fresh ETL table reads under the full scrubbed contract while its
+    files store only the fields the export holds; a later export that
+    adds an allow-listed field widens the stored columns, and the first
+    run's rows read back null in it; a key that only a schema-breaking
+    line carries still quarantines that line."""
+    from cumulus_etl_spark.etl.pipeline import _scrubbed_schema
+    from cumulus_etl_spark.etl.tasks import select_tasks
+
+    inp, out, phi = (str(tmp_path / d) for d in ("in", "out", "phi"))
+    write_ndjson(inp, "p.ndjson", [
+        {"resourceType": "Patient", "id": "p1", "gender": "female",
+         "meta": {"lastUpdated": "2021-01-01T00:00:00Z"}},
+        {"resourceType": "Patient", "id": "p2", "birthDate": "1980-06-15"},
+        # an array field as one object: quarantined, and its key is parsed
+        {"resourceType": "Patient", "id": "p3", "generalPractitioner": {"reference": "x"}},
+    ])
+    summary = run_etl(spark, inp, out, phi, tasks=["patient"])
+    assert summary["tables"]["patient"] == {"rows": 2, "quarantined": 1}
+    spilled = [json.loads(line)["raw_line"]
+               for f in glob.glob(os.path.join(phi, "errors", "patient", "*.json"))
+               for line in open(f)]
+    assert len(spilled) == 1 and '"id": "p3"' in spilled[0]
+
+    table = ManagedTable(spark, out, "patient")
+    (task,) = select_tasks(["patient"])
+    contract = _scrubbed_schema(spark, task)
+    assert table._pointer()["schema"] == contract.json()
+    read_schema = table.read().schema  # the file source reads it all nullable
+    assert read_schema.simpleString() == contract.simpleString()
+    stored = table._pointer()["stored"]
+    assert {"id", "meta", "gender", "birthDate", "generalPractitioner"} <= set(stored)
+    assert "maritalStatus" not in stored and "address" not in stored
+
+    write_ndjson(inp, "p.ndjson", [
+        {"resourceType": "Patient", "id": "p1", "gender": "female",
+         "meta": {"lastUpdated": "2022-01-01T00:00:00Z"},
+         "maritalStatus": {"text": "Married"}},
+    ])
+    run_etl(spark, inp, out, phi, tasks=["patient"])
+    stored2 = table._pointer()["stored"]
+    assert set(stored) < set(stored2) and "maritalStatus" in stored2
+    assert table.read().schema == read_schema
+    salt = _salt(phi)
+    marital = {r["id"]: r["maritalStatus"] for r in table.read().collect()}
+    assert set(marital) == {expected_anon_id(salt, "p1"), expected_anon_id(salt, "p2")}
+    assert marital[expected_anon_id(salt, "p1")]["text"] == "Married"
+    assert marital[expected_anon_id(salt, "p2")] is None
+
+
+def test_dense_export_takes_its_contract_from_the_scrubbed_frame(spark, tmp_path, monkeypatch):
+    """An export that holds every top-level field parses the full schema,
+    so a new table's contract is its scrubbed frame's own schema: no
+    separate contract scrub is built, and every column is stored."""
+    import cumulus_etl_spark.etl.pipeline as pipeline_mod
+    from cumulus_etl_spark.etl.tasks import select_tasks
+    from cumulus_etl_spark.schemas import schema_for
+
+    (task,) = select_tasks(["patient"])
+    contract = pipeline_mod._scrubbed_schema(spark, task)
+
+    def no_build(*_a, **_k):
+        raise AssertionError("contract scrub built for an export holding every field")
+
+    monkeypatch.setattr(pipeline_mod, "_scrubbed_schema", no_build)
+    inp, out, phi = (str(tmp_path / d) for d in ("in", "out", "phi"))
+    line = dict.fromkeys(schema_for("Patient").fieldNames())
+    line.update(resourceType="Patient", id="p1", gender="female")
+    write_ndjson(inp, "p.ndjson", [line])
+    summary = run_etl(spark, inp, out, phi, tasks=["patient"])
+    assert summary["tables"]["patient"] == {"rows": 1, "quarantined": 0}
+
+    table = ManagedTable(spark, out, "patient")
+    assert table._pointer()["stored"] == table.schema().fieldNames()
+    assert table.read().schema.simpleString() == contract.simpleString()
+    assert [r["gender"] for r in table.read().collect()] == ["female"]
+
+
+def _salt(phi: str) -> str:
+    with open(os.path.join(phi, "codebook.json")) as fh:
+        return json.load(fh)["salt"]
+
+
 def test_job_context_recorded(spark, dirs):
     from cumulus_etl_spark.etl.context import JobContext
 

@@ -66,7 +66,10 @@ class _FakeMergeBuilder:
         parts = []
         if self.update_cond is not _UNSET:
             c = F.expr(self.update_cond) if self.update_cond else F.lit(True)
-            parts.append(joined.filter(c).select("u.*"))
+            # UPDATE SET * with schema.autoMerge: a target column the
+            # source lacks keeps its target value (INSERT * nulls it)
+            kept = [F.col(f"t.{n}") for n in t.columns if n not in set(u.columns)]
+            parts.append(joined.filter(c).select("u.*", *kept))
             parts.append(joined.filter(~F.coalesce(c, F.lit(False))).select("t.*"))
         elif self.matched_delete:
             pass  # matched target rows drop
@@ -508,6 +511,126 @@ def test_odd_recorded_count_is_never_a_fold_target(spark, tmp_path):
     assert tbl.read().count() == 0
 
 
+def _parquet_columns(tbl):
+    """Top-level columns of every data file of the current version."""
+    import pyarrow.parquet as pq
+
+    vdir = os.path.join(tbl.path, f"v{tbl.current_version()}")
+    return {tuple(pq.read_schema(p).names)
+            for p in glob.glob(os.path.join(vdir, "*", "*.parquet"))}
+
+
+_CONTRACT = (
+    "id string, val string, meta struct<lastUpdated: string>, note string, "
+    "obj struct<x: string, y: string>"
+)
+
+
+def test_narrow_frames_store_their_columns_and_read_the_contract(spark, tmp_path):
+    """A new table records the contract it is given as its schema and
+    stores only the columns written; stored columns widen with a batch
+    that adds one and never shrink; reads null-fill the rest."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    contract = _parse_datatype_string(_CONTRACT)
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    pol = MergePolicy()
+    tbl.merge(make_df(spark, [("a", "1", "2021-01-01T00:00:00Z")]), pol, contract=contract)
+    ptr = tbl._pointer()
+    assert ptr["schema"] == contract.json() and ptr["stored"] == ["id", "val", "meta"]
+    assert _parquet_columns(tbl) == {("id", "val", "meta")}
+    assert tbl.read().schema == contract
+
+    wider = spark.createDataFrame(
+        [("b", "1", Row(lastUpdated=None), "n")],
+        "id string, val string, meta struct<lastUpdated: string>, note string",
+    )
+    tbl.merge(wider, pol)
+    assert tbl._pointer()["stored"] == ["id", "val", "meta", "note"]
+    tbl.merge(make_df(spark, [("a", "2", "2021-02-01T00:00:00Z")]), pol, contract=contract)
+    tbl.delete_ids(["zz"])
+    assert tbl._pointer()["stored"] == ["id", "val", "meta", "note"]
+    assert tbl._pointer()["schema"] == contract.json()
+    got = {r["id"]: (r["val"], r["note"], r["obj"]) for r in tbl.read().collect()}
+    assert got == {"a": ("2", None, None), "b": ("1", "n", None)}
+    assert tbl.read().schema == contract
+
+
+def test_new_table_reads_its_contract_on_both_backends(spark, tmp_path, backend):
+    """A first merge of a narrow frame with a contract reads back with
+    every contract column, the absent ones null."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    contract = _parse_datatype_string(_CONTRACT)
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    tbl.merge(make_df(spark, [("a", "1", None)]), MergePolicy(), contract=contract)
+    df = tbl.read()
+    assert df.columns == contract.fieldNames()
+    assert [tuple(r) for r in df.select("id", "note", "obj").collect()] == [("a", None, None)]
+
+
+def test_update_nulls_the_columns_a_batch_lacks(spark, tmp_path, backend):
+    """An update replaces the whole row: a column the batch does not
+    carry reads null afterwards, on the table's first merge and on any
+    later one (the Delta branch widens every batch to the target)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    pol = MergePolicy()
+    full = spark.createDataFrame(
+        [("a", "1", Row(lastUpdated=None), "n", Row(x="x", y=None)),
+         ("b", "1", Row(lastUpdated=None), "m", None)],
+        _CONTRACT,
+    )
+    tbl.merge(full, pol, contract=_parse_datatype_string(_CONTRACT))
+    tbl.merge(make_df(spark, [("a", "2", None)]), pol)
+    got = {r["id"]: (r["val"], r["note"], r["obj"]) for r in tbl.read().collect()}
+    assert got == {"a": ("2", None, None), "b": ("1", "m", None)}
+
+
+def test_root_without_stored_record_merges_deletes_and_reads(spark, tmp_path):
+    """A pointer written before the stored-column record (every column
+    stored) merges a narrow batch, deletes and reads as before; its
+    first write records every column as stored."""
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    pol = MergePolicy()
+    full = spark.createDataFrame(
+        [("a", "1", Row(lastUpdated="2021-01-01T00:00:00Z"), "n", Row(x="x", y=None)),
+         ("b", "1", None, None, None)],
+        _CONTRACT,
+    )
+    tbl.merge(full, pol)
+    ptr_path = os.path.join(tbl.path, "_CURRENT")
+    ptr = tbl._pointer()
+    with open(ptr_path, "w") as fh:
+        json.dump({k: v for k, v in ptr.items() if k != "stored"}, fh)
+
+    tbl.merge(make_df(spark, [("a", "2", "2021-02-01T00:00:00Z"), ("c", "1", None)]), pol)
+    after = tbl._pointer()
+    assert after["schema"] == ptr["schema"]
+    assert after["stored"] == ["id", "val", "meta", "note", "obj"]
+    tbl.delete_ids(["b"])
+    got = {r["id"]: (r["val"], r["note"], r["obj"]) for r in tbl.read().collect()}
+    assert got == {"a": ("2", None, None), "c": ("1", None, None)}
+
+
+def test_one_bucket_merge_and_delete_skip_the_touched_bucket_job(spark, tmp_path, monkeypatch):
+    """With one recorded bucket, merge and delete_ids know the touched
+    bucket without a job, and the table reads the same."""
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    pol = MergePolicy()
+    tbl.merge(make_df(spark, [("a", "1", None), ("b", "1", None)]), pol)
+    assert _recorded_buckets(tbl) == 1
+
+    def no_job(*_a, **_k):
+        raise AssertionError("touched-bucket job on a one-bucket table")
+
+    monkeypatch.setattr(merge_mod, "_touched_buckets", no_job)
+    tbl.merge(make_df(spark, [("a", "2", None), ("c", "1", None)]), pol)
+    tbl.delete_ids(["b", "zz"])
+    assert rows_of(tbl) == {"a": ("2", None), "c": ("1", None)}
+
+
 def test_dedupe_last_wins_explicit_order(spark):
     df = spark.createDataFrame(
         [("a", "first", 1), ("a", "last", 2), ("b", "only", 1)],
@@ -558,16 +681,21 @@ def test_write_ndjson_batches_group_atomic_across_files(spark, tmp_path):
 
 
 def test_time_travel_read(spark, tmp_path):
-    """read(version=N) returns the pre-merge state until finalize GCs it."""
+    """read(version=N) returns the pre-merge state until finalize GCs it,
+    under the current contract: a column added later reads as null."""
     t = ManagedTable(spark, str(tmp_path), "tt")
     policy = MergePolicy(keys=("id",))
     t.merge(spark.createDataFrame([Row(id="a", val=1)]), policy)
-    t.merge(spark.createDataFrame([Row(id="a", val=2), Row(id="b", val=3)]), policy)
+    t.merge(spark.createDataFrame([Row(id="a", val=2, extra="x"), Row(id="b", val=3, extra="y")]),
+            policy)
 
     assert t.versions() == [1, 2]
-    v1 = {r["id"]: r["val"] for r in t.read(version=1).collect()}
+    past = t.read(version=1)
+    assert past.schema == t.read().schema
+    assert past.columns == ["id", "val", "extra"]
+    v1 = {r["id"]: (r["val"], r["extra"]) for r in past.collect()}
     now = {r["id"]: r["val"] for r in t.read().collect()}
-    assert v1 == {"a": 1}
+    assert v1 == {"a": (1, None)}
     assert now == {"a": 2, "b": 3}
 
     with pytest.raises(ValueError, match="not on disk"):

@@ -13,7 +13,14 @@ from cumulus_etl_spark.sources import (
     scan_resources,
     scan_with_quarantine,
 )
-from tests.fhir_fixtures import write_ndjson, write_standard_input
+from tests.fhir_fixtures import (
+    CONDITIONS,
+    DOCREFS,
+    ENCOUNTERS,
+    PATIENTS,
+    write_ndjson,
+    write_standard_input,
+)
 
 
 def test_scan_filters_resource_type(spark, tmp_path):
@@ -57,10 +64,43 @@ def test_corrupt_rows_quarantined(spark, tmp_path):
 
 
 def test_detect_resources(spark, tmp_path):
-    root = write_standard_input(str(tmp_path))
+    """The census maps each type present to the top-level keys its lines
+    hold, counting lines that will be quarantined."""
+    root = write_standard_input(str(tmp_path / "in"))
+    with open(os.path.join(root, "odd.ndjson"), "w") as fh:
+        # schema-breaking (an array field as one object): its key still counts
+        fh.write(json.dumps({"resourceType": "Patient", "id": "p-bad",
+                             "generalPractitioner": {"reference": "Practitioner/1"}}) + "\n")
+        fh.write("{not json\n")
     found = detect_resources(spark, root)
-    assert found == {"Patient", "Encounter", "Condition", "DocumentReference"}
-    assert detect_resources(spark, str(tmp_path / "empty")) == set()
+    want: dict[str, set[str]] = {}
+    for r in PATIENTS + ENCOUNTERS + CONDITIONS + DOCREFS:
+        want.setdefault(r["resourceType"], set()).update(r)
+    want["Patient"] |= {"generalPractitioner"}
+    assert set(found) == {"Patient", "Encounter", "Condition", "DocumentReference"}
+    assert found == want
+    assert detect_resources(spark, str(tmp_path / "empty")) == {}
+
+
+def test_census_cut_parse_quarantines_like_the_full_parse(spark, tmp_path):
+    """Parsing under the census-cut schema keeps the present fields only,
+    and a key that appears only in a schema-breaking line still
+    quarantines that line."""
+    root = write_standard_input(str(tmp_path))
+    bad_line = {"resourceType": "Patient", "id": "p-bad",
+                "generalPractitioner": {"reference": "Practitioner/1"}}
+    write_ndjson(root, "odd.ndjson", [bad_line])
+    found = detect_resources(spark, root)
+    good, bad = scan_with_quarantine(spark, root, ["Patient"], found)
+    full_good, full_bad = scan_with_quarantine(spark, root, ["Patient"])
+    assert good.columns == [c for c in full_good.columns if c in found["Patient"]]
+    assert "generalPractitioner" in good.columns
+    def rows(df):
+        return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in df.collect())
+
+    assert rows(good) == rows(full_good.select(*good.columns))
+    assert [json.loads(r["raw_line"])["id"] for r in bad.collect()] == ["p-bad"]
+    assert bad.count() == full_bad.count() == 1
 
 
 def test_read_deleted_ids(spark, tmp_path):
