@@ -1,14 +1,9 @@
 """Command-line interface (parity with cumulus_etl/cli.py:16-110).
 
-Verbs:
-  etl INPUT OUTPUT PHI   de-identifying ETL run (the default)
-  init OUTPUT            create empty tables with full schemas
-  convert ORIGINAL TARGET  re-load batched NDJSON output into a lake
-  sample INPUT N         uniform random sample of clinical notes
-  etl-i2b2 INPUT OUTPUT PHI  i2b2 CSV dump → de-identified lake
-  nlp INPUT OUTPUT PHI   run NLP study tasks over clinical notes
-  upload-notes INPUT LS_URL PHI  push charts to Label Studio for review
-  corpus INPUT OUTPUT    clean a document corpus and pack token-budget shards
+The CLI only parses, calls and prints: each verb's work, and each
+report it prints, lives in the library. ``python -m
+cumulus_etl_spark.cli --help`` lists every verb and ``<verb> --help``
+its flags; README.md "Running" shows them in use.
 """
 
 from __future__ import annotations
@@ -18,7 +13,67 @@ import json
 import os
 import sys
 
+from pyspark.sql import functions as F
+
 from cumulus_etl_spark.session import get_spark
+
+
+def _csv(flag: str) -> list[str]:
+    """The stripped, non-empty items of a comma-separated flag value."""
+    return [c.strip() for c in flag.split(",") if c.strip()]
+
+
+def _require_columns(verb: str, df, cols: list[str]) -> None:
+    """Exit with the verb's message when ``df`` lacks any of ``cols``."""
+    unknown = [c for c in cols if c not in df.columns]
+    if unknown:
+        raise SystemExit(f"{verb}: unknown columns {unknown}; table has {df.columns}")
+
+
+def _lake_tables(lake_dir: str, names: list[str] | None) -> list[str]:
+    """``names``, else every table under ``lake_dir`` (each directory
+    holding a ``_CURRENT`` pointer), sorted."""
+    from cumulus_etl_spark.sinks.merge import CURRENT_POINTER
+
+    return names or sorted(
+        d for d in os.listdir(lake_dir)
+        if os.path.isfile(os.path.join(lake_dir, d, CURRENT_POINTER))
+    )
+
+
+def _add_stream_state(parser: argparse.ArgumentParser, root: str, root_help: str,
+                      landing: str, schema: str, schema_required: bool = True) -> None:
+    """The flags shared by the stream verbs: the landing dir, the state
+    root ``root``, ``--checkpoint`` (resolved by ``_checkpoint``) and
+    ``--schema`` (``schema`` is its example, or its default when not
+    required)."""
+    parser.add_argument("input_dir", help=f"landing directory of {landing}")
+    parser.add_argument(root, help=root_help)
+    parser.add_argument("--checkpoint", default=None,
+                        help=f"stream checkpoint dir (default: <{root}>/_checkpoint)")
+    if schema_required:
+        parser.add_argument("--schema", required=True,
+                            help=f"input schema, e.g. '{schema}'")
+    else:
+        parser.add_argument("--schema", default=schema)
+
+
+def _checkpoint(args: argparse.Namespace, root: str) -> str:
+    """A stream verb's checkpoint dir: ``--checkpoint``, else under its state root."""
+    return args.checkpoint or os.path.join(root, "_checkpoint")
+
+
+def _swap_clean_text(survivors, cleaned, id_col: str, text_col: str):
+    """Swap in a cleaning pass's ``clean_text``, recompute the token
+    count the shard packer budgets on, and drop docs cleaned to empty."""
+    from cumulus_etl_spark.operators.textstats import quality_features
+
+    return (
+        survivors.drop(text_col, "n_tokens")
+        .join(cleaned.select(id_col, F.col("clean_text").alias(text_col)), id_col)
+        .withColumn("n_tokens", quality_features(F.col(text_col))["n_tokens"])
+        .filter(F.col("n_tokens") > 0)
+    )
 
 
 def _add_note_selection(parser: argparse.ArgumentParser) -> None:
@@ -226,11 +281,9 @@ def main(argv: list[str] | None = None) -> int:
         "dedup-index",
         help="incrementally LSH-index an NDJSON landing dir; flag near-dups at ingest",
     )
-    p_dedup.add_argument("input_dir", help="landing directory of *.ndjson doc files")
-    p_dedup.add_argument("index_dir", help="where the LSH index tables live")
-    p_dedup.add_argument("--checkpoint", default=None,
-                         help="stream checkpoint dir (default: <index_dir>/_checkpoint)")
-    p_dedup.add_argument("--schema", default="doc_id long, text string")
+    _add_stream_state(p_dedup, "index_dir", "where the LSH index tables live",
+                      "*.ndjson doc files", "doc_id long, text string",
+                      schema_required=False)
     p_dedup.add_argument("--jaccard-threshold", type=float, default=0.7)
 
     p_hh = sub.add_parser(
@@ -238,13 +291,9 @@ def main(argv: list[str] | None = None) -> int:
         help="fold an NDJSON landing dir into a persistent Count-Min sketch; "
         "report the running top keys",
     )
-    p_hh.add_argument("input_dir", help="landing directory of *.ndjson files")
-    p_hh.add_argument("sketch_dir", help="where the sketch tables live")
+    _add_stream_state(p_hh, "sketch_dir", "where the sketch tables live",
+                      "*.ndjson files", "user_id long, event string")
     p_hh.add_argument("key_col", help="column to count")
-    p_hh.add_argument("--checkpoint", default=None,
-                      help="stream checkpoint dir (default: <sketch_dir>/_checkpoint)")
-    p_hh.add_argument("--schema", required=True,
-                      help="input schema, e.g. 'user_id long, event string'")
     p_hh.add_argument("--depth", type=int, default=4)
     p_hh.add_argument("--width", type=int, default=512)
     p_hh.add_argument("--top-k", type=int, default=50)
@@ -258,13 +307,9 @@ def main(argv: list[str] | None = None) -> int:
         help="fold an NDJSON landing dir into a persistent HDR-style "
         "log-bucket histogram; report running quantiles",
     )
-    p_qtl.add_argument("input_dir", help="landing directory of *.ndjson files")
-    p_qtl.add_argument("sketch_dir", help="where the histogram table lives")
+    _add_stream_state(p_qtl, "sketch_dir", "where the histogram table lives",
+                      "*.ndjson files", "latency_us long, route string")
     p_qtl.add_argument("value_col", help="non-negative integer column to track")
-    p_qtl.add_argument("--checkpoint", default=None,
-                       help="stream checkpoint dir (default: <sketch_dir>/_checkpoint)")
-    p_qtl.add_argument("--schema", required=True,
-                       help="input schema, e.g. 'latency_us long, route string'")
     p_qtl.add_argument("--sub-bits", type=int, default=5,
                        help="sub-buckets per octave as a power of two; "
                             "relative error <= 2^-sub_bits (default 5 -> ~3%%)")
@@ -279,25 +324,21 @@ def main(argv: list[str] | None = None) -> int:
         help="fold an NDJSON landing dir into a persistent fixed-size "
         "weighted sample (Efraimidis-Spirakis, deterministic scores)",
     )
-    p_res.add_argument("input_dir", help="landing directory of *.ndjson files")
-    p_res.add_argument("sketch_dir", help="where the reservoir table lives")
+    _add_stream_state(p_res, "sketch_dir", "where the reservoir table lives",
+                      "*.ndjson files", "doc_id string, w double")
     p_res.add_argument("id_col", help="row id column (drives the md5 score)")
     p_res.add_argument("--k", type=int, default=100, help="sample size")
     p_res.add_argument("--weight-col", default=None,
                        help="weight column: inclusion probability scales "
                             "with weight (A-ES u^(1/w))")
-    p_res.add_argument("--checkpoint", default=None,
-                       help="stream checkpoint dir (default: <sketch_dir>/_checkpoint)")
-    p_res.add_argument("--schema", required=True,
-                       help="input schema, e.g. 'doc_id string, w double'")
 
     p_dm = sub.add_parser(
         "drift-monitor",
         help="fold a parquet landing dir into a persistent PSI drift "
         "monitor against a frozen reference snapshot",
     )
-    p_dm.add_argument("input_dir", help="landing directory of parquet files")
-    p_dm.add_argument("monitor_dir", help="where the monitor state lives")
+    _add_stream_state(p_dm, "monitor_dir", "where the monitor state lives",
+                      "parquet files", "x double, ts timestamp")
     p_dm.add_argument("--reference", default=None,
                       help="reference snapshot (parquet path); required on "
                       "first open, then frozen — an established monitor "
@@ -322,11 +363,6 @@ def main(argv: list[str] | None = None) -> int:
                       "reports PSI + chi-square, no --bucket-width")
     p_dm.add_argument("--top-k", type=int, default=50,
                       help="categorical mode: universe size (default 50)")
-    p_dm.add_argument("--checkpoint", default=None,
-                      help="stream checkpoint dir (default: "
-                      "<monitor_dir>/_checkpoint)")
-    p_dm.add_argument("--schema", required=True,
-                      help="input schema, e.g. 'x double, ts timestamp'")
 
     p_opt = sub.add_parser(
         "optimize",
@@ -666,9 +702,7 @@ def main(argv: list[str] | None = None) -> int:
             select_by_csv=args.select_by_csv,
             select_by_anon_csv=args.select_by_anon_csv,
             phi_dir=args.phi_dir,
-            resource_types=tuple(
-                t.strip() for t in args.resource_types.split(",") if t.strip()
-            ),
+            resource_types=tuple(_csv(args.resource_types)),
         )
         if args.columns or args.export_to:
             # bounded by --count: the sample is chart-review sized
@@ -679,7 +713,7 @@ def main(argv: list[str] | None = None) -> int:
             # Strict parse: strip whitespace, reject unknown names —
             # '--columns note, subject' must mean {note, subject}, and a
             # typo must error instead of silently shrinking the CSV.
-            requested = [t.strip() for t in args.columns.split(",") if t.strip()]
+            requested = _csv(args.columns)
             allowed = {"note", "subject", "encounter"}
             unknown = [t for t in requested if t not in allowed]
             if unknown:
@@ -757,10 +791,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         report = {}
         if args.dedup_substrings:
-            from pyspark.sql import functions as _F
-
             from cumulus_etl_spark.operators.corpus import remove_repeated_spans
-            from cumulus_etl_spark.operators import textstats as _T
 
             cleaned = remove_repeated_spans(
                 survivors, args.id_col, args.text_col, k=args.dedup_substrings
@@ -768,8 +799,8 @@ def main(argv: list[str] | None = None) -> int:
             # survivors rejoin below — without the pin the whole two-shuffle
             # gram-window lineage runs twice
             stats = cleaned.agg(
-                _F.sum("n_removed_spans").cast("bigint").alias("spans"),
-                _F.sum(_F.col("orig_len") - _F.col("clean_len"))
+                F.sum("n_removed_spans").cast("bigint").alias("spans"),
+                F.sum(F.col("orig_len") - F.col("clean_len"))
                 .cast("bigint")
                 .alias("chars"),
             ).collect()[0]
@@ -778,26 +809,9 @@ def main(argv: list[str] | None = None) -> int:
                 "removed_spans": int(stats["spans"] or 0),
                 "removed_chars": int(stats["chars"] or 0),
             }
-            # swap in the stitched text and recompute the token count the
-            # shard packer budgets on; empty-out docs drop entirely
-            survivors = (
-                survivors.drop(args.text_col, "n_tokens")
-                .join(
-                    cleaned.select(
-                        args.id_col, _F.col("clean_text").alias(args.text_col)
-                    ),
-                    args.id_col,
-                )
-                .withColumn(
-                    "n_tokens", _T.quality_features(_F.col(args.text_col))["n_tokens"]
-                )
-                .filter(_F.col("n_tokens") > 0)
-            )
+            survivors = _swap_clean_text(survivors, cleaned, args.id_col, args.text_col)
         if args.dedup_lines:
-            from pyspark.sql import functions as _F
-
             from cumulus_etl_spark.operators.corpus import remove_boilerplate_lines
-            from cumulus_etl_spark.operators import textstats as _T
 
             if args.source_col not in survivors.columns:
                 raise SystemExit(
@@ -812,7 +826,7 @@ def main(argv: list[str] | None = None) -> int:
                 min_docs=args.dedup_lines,
             ).localCheckpoint(eager=True)  # feeds the stats agg AND the rejoin
             lstats = cleaned_l.agg(
-                _F.sum(_F.col("n_lines") - _F.col("n_kept"))
+                F.sum(F.col("n_lines") - F.col("n_kept"))
                 .cast("bigint")
                 .alias("lines")
             ).collect()[0]
@@ -820,22 +834,8 @@ def main(argv: list[str] | None = None) -> int:
                 "min_docs": args.dedup_lines,
                 "removed_lines": int(lstats["lines"] or 0),
             }
-            survivors = (
-                survivors.drop(args.text_col, "n_tokens")
-                .join(
-                    cleaned_l.select(
-                        args.id_col, _F.col("clean_text").alias(args.text_col)
-                    ),
-                    args.id_col,
-                )
-                .withColumn(
-                    "n_tokens", _T.quality_features(_F.col(args.text_col))["n_tokens"]
-                )
-                .filter(_F.col("n_tokens") > 0)
-            )
+            survivors = _swap_clean_text(survivors, cleaned_l, args.id_col, args.text_col)
         if args.decontaminate:
-            from pyspark.sql import functions as _F
-
             from cumulus_etl_spark.operators.corpus import decontaminate
 
             bench = spark.read.parquet(args.decontaminate)
@@ -848,7 +848,7 @@ def main(argv: list[str] | None = None) -> int:
             # re-exploding corpus grams and, with method=bloom,
             # rebuilding the bloom filter a second time.
             drop_ids = (
-                flags.filter(_F.col("contaminated"))
+                flags.filter(F.col("contaminated"))
                 .select(args.id_col)
                 .localCheckpoint(eager=True)
             )
@@ -861,8 +861,6 @@ def main(argv: list[str] | None = None) -> int:
                 "dropped": int(n_dropped),
             }
         if args.drop_surprisal_permille:
-            from pyspark.sql import functions as _F
-
             from cumulus_etl_spark.operators.textstats import lm_surprisal_scores
 
             scores = lm_surprisal_scores(
@@ -872,27 +870,22 @@ def main(argv: list[str] | None = None) -> int:
             # same way); P per mille of the SCORED docs drop
             frac = 1.0 - args.drop_surprisal_permille / 1000.0
             cut = scores.agg(
-                _F.percentile_approx("score_milli", frac).alias("t")
+                F.percentile_approx("score_milli", frac).alias("t")
             ).collect()[0]["t"]
-            if cut is None:  # nothing scoreable (no doc has >= 2 tokens)
-                report["surprisal_filter"] = {
-                    "permille": args.drop_surprisal_permille,
-                    "score_milli_cutoff": None,
-                    "dropped": 0,
-                }
-            else:
+            n_dropped = 0  # cut is None: nothing scoreable (no doc has >= 2 tokens)
+            if cut is not None:
                 # anti-join on the DROP set: docs too short to score (no
                 # bigrams) are not penalized
                 drop_ids = scores.filter(
-                    _F.col("score_milli") > _F.lit(cut)
+                    F.col("score_milli") > F.lit(cut)
                 ).select(args.id_col)
                 n_dropped = drop_ids.count()
                 survivors = survivors.join(drop_ids, args.id_col, "anti")
-                report["surprisal_filter"] = {
-                    "permille": args.drop_surprisal_permille,
-                    "score_milli_cutoff": int(cut),
-                    "dropped": int(n_dropped),
-                }
+            report["surprisal_filter"] = {
+                "permille": args.drop_surprisal_permille,
+                "score_milli_cutoff": None if cut is None else int(cut),
+                "dropped": int(n_dropped),
+            }
         part_cols = ["shard_id"]
         if args.split:
             from cumulus_etl_spark.operators.corpus import hash_split
@@ -908,8 +901,6 @@ def main(argv: list[str] | None = None) -> int:
         # one directory per shard; shard files hold full cleaned rows
         sharded.write.mode("overwrite").partitionBy(*part_cols).parquet(args.output_dir)
         if args.split:
-            from pyspark.sql import functions as _F
-
             # read BACK the parquet just written: the report and leakage
             # jobs scan the materialized output instead of re-executing
             # the clean+LSH-dedup+pack lineage for each extra action
@@ -918,8 +909,8 @@ def main(argv: list[str] | None = None) -> int:
                 r["split"]: {"n_docs": r["n_docs"], "total_tokens": r["total_tokens"]}
                 for r in written.groupBy("split")
                 .agg(
-                    _F.count(_F.lit(1)).alias("n_docs"),
-                    _F.sum("n_tokens").cast("bigint").alias("total_tokens"),
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.sum("n_tokens").cast("bigint").alias("total_tokens"),
                 )
                 .collect()
             }
@@ -929,7 +920,7 @@ def main(argv: list[str] | None = None) -> int:
                 leaked = (
                     gram_leakage_hits(written, args.id_col, args.text_col, "split")
                     .groupBy("split")
-                    .agg(_F.countDistinct(args.id_col).alias("n_leaked"))
+                    .agg(F.countDistinct(args.id_col).alias("n_leaked"))
                 )
                 held_splits = [
                     k for k in report["splits"] if k != "train"
@@ -937,8 +928,6 @@ def main(argv: list[str] | None = None) -> int:
                 found = {r["split"]: r["n_leaked"] for r in leaked.collect()}
                 report["leakage"] = {k: found.get(k, 0) for k in held_splits}
         if args.seq_len:
-            import os as _os
-
             from cumulus_etl_spark.operators.corpus import (
                 pack_sequences,
                 pack_sequences_atomic,
@@ -954,7 +943,7 @@ def main(argv: list[str] | None = None) -> int:
                     sharded, seq_len=args.seq_len,
                     id_col=args.id_col, text_col=args.text_col,
                 )
-            seq_dir = _os.path.join(args.output_dir, "sequences")
+            seq_dir = os.path.join(args.output_dir, "sequences")
             seqs.write.mode("overwrite").parquet(seq_dir)
             written = spark.read.parquet(seq_dir)
             report["sequences"] = {
@@ -964,10 +953,8 @@ def main(argv: list[str] | None = None) -> int:
                 "output": seq_dir,
             }
             if args.pack_mode == "atomic":
-                from pyspark.sql import functions as _F
-
                 pad = written.agg(
-                    _F.sum("pad_tokens").alias("p"), _F.sum("n_tokens").alias("t")
+                    F.sum("pad_tokens").alias("p"), F.sum("n_tokens").alias("t")
                 ).collect()[0]
                 report["sequences"]["pad_tokens"] = int(pad["p"] or 0)
                 report["sequences"]["packed_tokens"] = int(pad["t"] or 0)
@@ -987,8 +974,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(report))
         return 0
     if args.verb == "train-filter":
-        from pyspark.sql import functions as _F
-
         from cumulus_etl_spark.operators import textstats as _T
         from cumulus_etl_spark.operators.mlstats import (
             auc_roc,
@@ -1000,12 +985,12 @@ def main(argv: list[str] | None = None) -> int:
         if args.model == "nb":
             from cumulus_etl_spark.operators.mlstats import nb_score, nb_train
 
-            label = _F.expr(args.label_expr)
+            label = F.expr(args.label_expr)
             wc, stats = nb_train(docs, args.text_col, label)
             scored = nb_score(docs, wc, stats, args.id_col, args.text_col)
-            pred = scored.filter(_F.col("rank") == 1).select(
-                _F.col("id").alias(args.id_col),
-                _F.col("label").alias("predicted"),
+            pred = scored.filter(F.col("rank") == 1).select(
+                F.col("id").alias(args.id_col),
+                F.col("label").alias("predicted"),
                 "log_prob",
             )
             pred.write.mode("overwrite").parquet(args.output_path)
@@ -1014,7 +999,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             joined = spark.read.parquet(args.output_path).join(truth, args.id_col)
             n = joined.count()
-            correct = joined.filter(_F.col("predicted") == _F.col("truth")).count()
+            correct = joined.filter(F.col("predicted") == F.col("truth")).count()
             classes = {
                 r["label"]: {"n_docs": r["n_docs"], "n_tokens": r["n_tokens"]}
                 for r in stats.collect()
@@ -1028,21 +1013,21 @@ def main(argv: list[str] | None = None) -> int:
             }))
             return 0
         feat_names = ["n_tokens", "n_punct", "n_stopwords", "mean_word_len"]
-        words = _T.words_array(_F.col(args.text_col))
+        words = _T.words_array(F.col(args.text_col))
         featurized = docs.select(
             args.id_col,
-            _F.expr(args.label_expr).cast("double").alias("__label"),
+            F.expr(args.label_expr).cast("double").alias("__label"),
             _T.token_count(args.text_col).cast("double").alias("n_tokens"),
             _T.punct_count(args.text_col).cast("double").alias("n_punct"),
             _T.stopword_count(args.text_col).cast("double").alias("n_stopwords"),
             _T.repetition_features(words)["mean_word_len"].alias("mean_word_len"),
         ).localCheckpoint(eager=True)  # featurize once, not once per GD pass
         w, losses, std_stats = logreg_train_gd(
-            featurized, feat_names, _F.col("__label"), lr=args.lr, iters=args.iters
+            featurized, feat_names, F.col("__label"), lr=args.lr, iters=args.iters
         )
         score = score_logreg(feat_names, w, std_stats)
         scored = featurized.select(
-            args.id_col, _F.col("__label").alias("label"), score.alias("score")
+            args.id_col, F.col("__label").alias("label"), score.alias("score")
         )
         scored.write.mode("overwrite").parquet(args.output_path)
         auc = auc_roc(spark.read.parquet(args.output_path))
@@ -1055,15 +1040,13 @@ def main(argv: list[str] | None = None) -> int:
         }))
         return 0
     if args.verb == "dedup-index":
-        import os as _os
-
         from cumulus_etl_spark.streaming.dedup_index import incremental_dedup_ingest
 
         idx = incremental_dedup_ingest(
             spark,
             args.input_dir,
             args.index_dir,
-            args.checkpoint or _os.path.join(args.index_dir, "_checkpoint"),
+            _checkpoint(args, args.index_dir),
             schema=args.schema,
             threshold=args.jaccard_threshold,
         )
@@ -1079,15 +1062,13 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"near_dups": found, "index": args.index_dir}))
         return 0
     if args.verb == "heavy-hitters":
-        import os as _os
-
         from cumulus_etl_spark.streaming.heavy_hitters import streaming_heavy_hitters
 
         cms = streaming_heavy_hitters(
             spark,
             args.input_dir,
             args.sketch_dir,
-            args.checkpoint or _os.path.join(args.sketch_dir, "_checkpoint"),
+            _checkpoint(args, args.sketch_dir),
             args.key_col,
             args.schema,
             window_batches=args.window_batches,
@@ -1104,21 +1085,19 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"heavy_hitters": top, "sketch": args.sketch_dir}))
         return 0
     if args.verb == "quantiles":
-        import os as _os
-
         from cumulus_etl_spark.streaming.quantiles import streaming_quantiles
 
         hdr = streaming_quantiles(
             spark,
             args.input_dir,
             args.sketch_dir,
-            args.checkpoint or _os.path.join(args.sketch_dir, "_checkpoint"),
+            _checkpoint(args, args.sketch_dir),
             args.value_col,
             args.schema,
             sub_bits=args.sub_bits,
             key_col=args.key_col,
         )
-        qs = [float(x) for x in args.q.split(",") if x.strip()]
+        qs = [float(x) for x in _csv(args.q)]
         out = hdr.quantiles(qs)
         rep = (
             []
@@ -1128,15 +1107,13 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"quantiles": rep, "sketch": args.sketch_dir}))
         return 0
     if args.verb == "reservoir":
-        import os as _os
-
         from cumulus_etl_spark.streaming.reservoir import streaming_reservoir
 
         res = streaming_reservoir(
             spark,
             args.input_dir,
             args.sketch_dir,
-            args.checkpoint or _os.path.join(args.sketch_dir, "_checkpoint"),
+            _checkpoint(args, args.sketch_dir),
             args.id_col,
             args.schema,
             k=args.k,
@@ -1147,17 +1124,20 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"sample": rep, "k": args.k, "sketch": args.sketch_dir}))
         return 0
     if args.verb == "drift-monitor":
-        import os as _os
+        from cumulus_etl_spark.streaming import drift as SD
 
         if args.column and args.columns:
             raise SystemExit(
                 "drift-monitor: pass at most one of --column / --columns"
             )
+        stream = (spark, args.input_dir, args.monitor_dir,
+                  _checkpoint(args, args.monitor_dir), args.schema)
+        # lazy loader: only resolved (and the path only required to
+        # exist) when the monitor has no frozen baseline yet
+        reference = (
+            (lambda: spark.read.parquet(args.reference)) if args.reference else None
+        )
         if args.categorical:
-            from cumulus_etl_spark.streaming.drift import (
-                streaming_categorical_drift,
-            )
-
             if args.columns or args.bucket_width is not None:
                 raise SystemExit(
                     "drift-monitor: --categorical takes only --column "
@@ -1165,105 +1145,36 @@ def main(argv: list[str] | None = None) -> int:
                 )
             # --column may be omitted on reopen (sidecar); a first open
             # without it fails loudly inside the monitor
-            mon = streaming_categorical_drift(
-                spark,
-                args.input_dir,
-                args.monitor_dir,
-                args.checkpoint or _os.path.join(args.monitor_dir, "_checkpoint"),
-                args.schema,
-                args.column,
-                (lambda: spark.read.parquet(args.reference))
-                if args.reference else None,
-                top_k=args.top_k,
+            mon = SD.streaming_categorical_drift(
+                *stream, args.column, reference, top_k=args.top_k
             )
-            report = mon.report_dict()
-            report["monitor"] = args.monitor_dir
-            print(json.dumps(report))
-            return 0
-        if args.columns:
-            # multi-column monitor: per-column PSI/KS/JS from ONE
-            # collected grid, like the batch `drift --columns` verb
-            from cumulus_etl_spark.streaming.drift import streaming_drift_multi
-
+        elif args.columns:
             if args.bucket_width is not None:
                 raise SystemExit(
                     "drift-monitor: --bucket-width is single-column "
                     "only (the multi-column grid is reference-derived)"
                 )
-            cols = [c.strip() for c in args.columns.split(",") if c.strip()]
-            mon = streaming_drift_multi(
-                spark,
-                args.input_dir,
-                args.monitor_dir,
-                args.checkpoint or _os.path.join(args.monitor_dir, "_checkpoint"),
-                args.schema,
-                cols,
-                (lambda: spark.read.parquet(args.reference))
-                if args.reference else None,
-                n_buckets=args.buckets,
+            mon = SD.streaming_drift_multi(
+                *stream, _csv(args.columns), reference, n_buckets=args.buckets
             )
-            report = mon.report_dict()
-            report["monitor"] = args.monitor_dir
-            print(json.dumps(report))
-            return 0
-        if not args.column:
+        elif not args.column:
             raise SystemExit(
                 "drift-monitor: pass one of --column / --columns "
                 "(reopening an established single-column monitor may "
                 "still omit --bucket-width; it loads from the sidecar)"
             )
-        from cumulus_etl_spark.streaming.drift import streaming_psi
-
-        mon = streaming_psi(
-            spark,
-            args.input_dir,
-            args.monitor_dir,
-            args.checkpoint or _os.path.join(args.monitor_dir, "_checkpoint"),
-            args.schema,
-            args.column,
-            # lazy loader: only resolved (and the path only required to
-            # exist) when the monitor has no frozen baseline yet
-            (lambda: spark.read.parquet(args.reference))
-            if args.reference else None,
-            bucket_width=args.bucket_width,
-            n_buckets=args.buckets,
-        )
-        from cumulus_etl_spark.operators.drift import ks_js_from_rows
-
-        rows = mon.report().collect()
-        psi = round(sum(r["psi_contrib"] for r in rows), 6)
-        # KS/JS ride the same collected histogram — no extra scans (and
-        # psi comes from the same rows instead of a second report job)
-        ks, js = ks_js_from_rows(rows)
-        print(json.dumps({
-            "column": args.column,
-            "psi": psi,
-            "verdict": ("stable" if psi < 0.1
-                        else "moderate" if psi <= 0.25 else "action"),
-            "ks_stat": ks,
-            "js_divergence": js,
-            "n_actual_total": sum(r["n_actual"] for r in rows),
-            "buckets": [
-                {"bucket": r["bucket"], "n_expected": r["n_expected"],
-                 "n_actual": r["n_actual"], "psi_contrib": r["psi_contrib"]}
-                for r in rows
-            ],
-            "monitor": args.monitor_dir,
-        }))
+        else:
+            mon = SD.streaming_psi(
+                *stream, args.column, reference,
+                bucket_width=args.bucket_width, n_buckets=args.buckets,
+            )
+        print(json.dumps({**mon.report_dict(), "monitor": args.monitor_dir}))
         return 0
     if args.verb == "optimize":
-        import os as _os
-
         from cumulus_etl_spark.sinks import ManagedTable
-        from cumulus_etl_spark.sinks.merge import CURRENT_POINTER
 
-        names = args.tables or sorted(
-            d
-            for d in _os.listdir(args.output_dir)
-            if _os.path.isfile(_os.path.join(args.output_dir, d, CURRENT_POINTER))
-        )
         report = {}
-        for name in names:
+        for name in _lake_tables(args.output_dir, args.tables):
             tbl = ManagedTable(spark, args.output_dir, name)
             before = tbl.versions()
             feed_before = (
@@ -1296,8 +1207,6 @@ def main(argv: list[str] | None = None) -> int:
         }))
         return 0
     if args.verb == "audit-k":
-        from pyspark.sql import functions as F
-
         from cumulus_etl_spark.operators.privacy import (
             k_anonymity_histogram,
             l_diversity,
@@ -1305,13 +1214,8 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         df = spark.read.parquet(args.input_path)
-        qi = [c.strip() for c in args.quasi.split(",") if c.strip()]
-        unknown = [c for c in qi if c not in df.columns]
-        if args.sensitive and args.sensitive not in df.columns:
-            unknown.append(args.sensitive)
-        if unknown:
-            raise SystemExit(f"audit-k: unknown columns {unknown}; "
-                             f"table has {df.columns}")
+        qi = _csv(args.quasi)
+        _require_columns("audit-k", df, qi + ([args.sensitive] if args.sensitive else []))
         if args.dp_epsilon is not None and not args.dp_seed:
             raise SystemExit(
                 "audit-k: --dp-epsilon requires --dp-seed (a secret PRF "
@@ -1367,9 +1271,7 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(report))
         return 0 if report["passed"] else 3
     if args.verb == "drift":
-        from pyspark.sql import functions as F
-
-        from cumulus_etl_spark.operators.drift import psi_drift, psi_drift_multi
+        from cumulus_etl_spark.operators import drift as D
 
         if bool(args.column) == bool(args.columns):
             raise SystemExit("drift: pass exactly one of --column / --columns")
@@ -1385,10 +1287,7 @@ def main(argv: list[str] | None = None) -> int:
             raise SystemExit("drift: --timeline is single-column mode only")
         expected = spark.read.parquet(args.expected_path)
         actual = spark.read.parquet(args.actual_path)
-        want_cols = (
-            [args.column] if args.column
-            else [c.strip() for c in args.columns.split(",") if c.strip()]
-        )
+        want_cols = [args.column] if args.column else _csv(args.columns)
         for side, df in (("expected", expected), ("actual", actual)):
             missing = [c for c in want_cols if c not in df.columns]
             if missing:
@@ -1396,158 +1295,60 @@ def main(argv: list[str] | None = None) -> int:
                     f"drift: column(s) {missing} not in the {side} "
                     f"snapshot; it has {df.columns}"
                 )
+        # every report quotes its one collected histogram or grid: no
+        # extra scans for the verdict, KS/JS or chi-square
         if args.categorical:
-            from cumulus_etl_spark.operators.drift import (
-                categorical_drift,
-                chi2_from_rows,
-            )
-
-            rows = categorical_drift(
+            rows = D.categorical_drift(
                 expected, actual, args.column, top_k=args.top_k
             ).collect()
-            psi = round(sum(r["psi_contrib"] for r in rows), 6)
-            # chi-square + Cramér's V ride the same collected rows —
-            # no extra scans (the ks_js_from_rows pattern; KS needs an
-            # ordering and does not apply to categories)
-            chi2, v = chi2_from_rows(rows)
             print(json.dumps({
                 "column": args.column,
                 "mode": "categorical",
-                "psi": psi,
-                "verdict": ("stable" if psi < 0.1
-                            else "moderate" if psi <= 0.25 else "action"),
-                "chi2": chi2,
-                "cramers_v": v,
-                "n_expected": sum(r["n_expected"] for r in rows),
-                "n_actual": sum(r["n_actual"] for r in rows),
-                "categories": [
-                    {"category": r["category"],
-                     "n_expected": r["n_expected"],
-                     "n_actual": r["n_actual"],
-                     "pct_expected": r["pct_expected"],
-                     "pct_actual": r["pct_actual"],
-                     "psi_contrib": r["psi_contrib"]}
-                    for r in rows
-                ],
+                **D.categorical_summary(rows),
+                "categories": [r.asDict() for r in rows],
             }))
             return 0
         if args.columns:
-            from cumulus_etl_spark.operators.drift import ks_js_from_rows
-
-            per = psi_drift_multi(
+            per = D.psi_drift_multi(
                 expected, actual, want_cols, n_buckets=args.buckets
             ).collect()
-            report = {"columns": {}}
-            for c in want_cols:
-                rows_c = [r for r in per if r["column"] == c]
-                psi = round(sum(r["psi_contrib"] for r in rows_c), 6)
-                # KS/JS ride the same collected grid — no extra scans
-                ks, js = ks_js_from_rows(rows_c)
-                report["columns"][c] = {
-                    "psi": psi,
-                    "verdict": ("stable" if psi < 0.1
-                                else "moderate" if psi <= 0.25 else "action"),
-                    "ks_stat": ks,
-                    "js_divergence": js,
-                    "n_expected": sum(r["n_expected"] for r in rows_c),
-                    "n_actual": sum(r["n_actual"] for r in rows_c),
-                }
-            worst = max(
-                (v["psi"] for v in report["columns"].values()), default=0.0
-            )
-            report["worst_psi"] = worst
-            report["verdict"] = ("stable" if worst < 0.1
-                                 else "moderate" if worst <= 0.25 else "action")
-            print(json.dumps(report))
+            print(json.dumps(D.multi_summary(per, want_cols)))
             return 0
         if args.timeline:
-            from cumulus_etl_spark.operators.drift import (
-                ks_js_from_rows,
-                psi_drift_timeline,
-            )
-
             if args.timeline not in actual.columns:
                 raise SystemExit(
                     f"drift: timeline column {args.timeline!r} not in the "
                     f"actual snapshot; it has {actual.columns}"
                 )
-            grid = psi_drift_timeline(
+            grid = D.psi_drift_timeline(
                 expected, actual, args.column, args.timeline,
                 period=args.period, bucket_width=args.bucket_width,
                 n_buckets=args.buckets,
             ).collect()
-            periods = sorted({r["period"] for r in grid})
-            out = {"column": args.column, "period": args.period,
-                   "periods": []}
-            for p in periods:
-                rows_p = [r for r in grid if r["period"] == p]
-                psi = round(sum(r["psi_contrib"] for r in rows_p), 6)
-                # KS/JS ride the same collected grid — no extra scans
-                ks, js = ks_js_from_rows(rows_p)
-                out["periods"].append({
-                    "period": str(p),
-                    "psi": psi,
-                    "verdict": ("stable" if psi < 0.1
-                                else "moderate" if psi <= 0.25 else "action"),
-                    "ks_stat": ks,
-                    "js_divergence": js,
-                    "n_actual": sum(r["n_actual"] for r in rows_p),
-                })
-            worst = max((p["psi"] for p in out["periods"]), default=0.0)
-            out["worst_psi"] = worst
-            out["verdict"] = ("stable" if worst < 0.1
-                              else "moderate" if worst <= 0.25 else "action")
-            first_bad = next(
-                (p["period"] for p in out["periods"] if p["psi"] > 0.25), None
-            )
-            out["first_action_period"] = first_bad
-            print(json.dumps(out))
+            print(json.dumps({
+                "column": args.column,
+                "period": args.period,
+                **D.timeline_summary(grid),
+            }))
             return 0
-        from cumulus_etl_spark.operators.drift import ks_js_from_rows
-
-        rows = psi_drift(
+        rows = D.psi_drift(
             expected, actual, args.column,
             bucket_width=args.bucket_width, n_buckets=args.buckets,
         ).collect()
-        psi = round(sum(r["psi_contrib"] for r in rows), 6)
-        # KS + JS ride the same collected histogram — no extra scans
-        ks, js = ks_js_from_rows(rows)
-        # the standard PSI reading: <0.1 stable, 0.1-0.25 moderate, >0.25 act
-        verdict = (
-            "stable" if psi < 0.1
-            else "moderate" if psi <= 0.25
-            else "action"
-        )
         print(json.dumps({
             "column": args.column,
-            "psi": psi,
-            "verdict": verdict,
-            "ks_stat": ks,
-            "js_divergence": js,
-            "n_expected": sum(r["n_expected"] for r in rows),
-            "n_actual": sum(r["n_actual"] for r in rows),
-            "buckets": [
-                {"bucket": r["bucket"], "n_expected": r["n_expected"],
-                 "n_actual": r["n_actual"], "pct_expected": r["pct_expected"],
-                 "pct_actual": r["pct_actual"], "psi_contrib": r["psi_contrib"]}
-                for r in rows
-            ],
+            **D.grid_summary(rows),
+            **D.totals(rows),
+            "buckets": [r.asDict() for r in rows],
         }))
         return 0
     if args.verb == "changepoints":
-        from pyspark.sql import functions as F
-
         from cumulus_etl_spark.operators.timeseries import cusum_changepoints
 
         df = spark.read.parquet(args.input_path)
-        need = [args.value_col, args.order_col] + (
+        _require_columns("changepoints", df, [args.value_col, args.order_col] + (
             [args.key_col] if args.key_col else []
-        )
-        unknown = [c for c in need if c not in df.columns]
-        if unknown:
-            raise SystemExit(
-                f"changepoints: unknown columns {unknown}; table has {df.columns}"
-            )
+        ))
         if args.scan_partitions and args.key_col:
             raise SystemExit(
                 "changepoints: --scan-partitions is the keyless scan; "
@@ -1590,10 +1391,8 @@ def main(argv: list[str] | None = None) -> int:
         from cumulus_etl_spark.operators.zorder import zorder_rewrite
 
         df = spark.read.parquet(args.input_path)
-        cols = [c.strip() for c in args.by.split(",") if c.strip()]
-        unknown = [c for c in cols if c not in df.columns]
-        if unknown:
-            raise SystemExit(f"zorder: unknown columns {unknown}; table has {df.columns}")
+        cols = _csv(args.by)
+        _require_columns("zorder", df, cols)
         zorder_rewrite(df, cols, num_files=args.files).write.mode(
             "overwrite"
         ).parquet(args.output_path)
@@ -1640,7 +1439,7 @@ def main(argv: list[str] | None = None) -> int:
         src = ManagedTable(spark, args.lake_dir, args.table)
         roll = IncrementalRollup(
             spark, src, args.views_dir, args.name,
-            [c.strip() for c in args.group_by.split(",") if c.strip()],
+            _csv(args.group_by),
             args.value_col,
         )
         if args.rebuild:
@@ -1681,7 +1480,7 @@ def main(argv: list[str] | None = None) -> int:
                 raise SystemExit("search --more-like-this needs --embeddings")
             from cumulus_etl_spark.operators.retrieval import hybrid_more_like_this
 
-            qids = [int(x) for x in args.more_like_this.split(",") if x.strip()]
+            qids = [int(x) for x in _csv(args.more_like_this)]
             embs = spark.read.parquet(args.embeddings)
             dense = None
             if args.ann_index:
@@ -1713,8 +1512,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"hits": hits, "queries": args.query}))
         return 0
     if args.verb == "ann-index":
-        from pyspark.sql import functions as F
-
         from cumulus_etl_spark.streaming.ann_index import IvfIndex
 
         idx = IvfIndex(spark, args.index_dir, id_col=args.id_col, vec_col=args.vec_col)
@@ -1747,7 +1544,7 @@ def main(argv: list[str] | None = None) -> int:
                 "stats": new.stats(),
             }))
         else:  # search
-            qids = [int(x) for x in args.query_ids.split(",") if x.strip()]
+            qids = [int(x) for x in _csv(args.query_ids)]
             is_pq = idx.codebooks() is not None
             if is_pq and not args.vectors:
                 raise SystemExit(
@@ -1782,8 +1579,6 @@ def main(argv: list[str] | None = None) -> int:
             }))
         return 0
     if args.verb == "ann":
-        from pyspark.sql import functions as F
-
         from cumulus_etl_spark.operators import similarity as S
 
         emb = spark.read.parquet(args.input_path)
@@ -1791,7 +1586,7 @@ def main(argv: list[str] | None = None) -> int:
         if first is None:
             raise SystemExit(f"ann: no rows in {args.input_path}")
         dim = len(first[0])
-        qids = [int(x) for x in args.query_ids.split(",") if x.strip()]
+        qids = [int(x) for x in _csv(args.query_ids)]
         queries = emb.filter(F.col(args.id_col).isin(qids))
         kw = {"id_col": args.id_col, "vec_col": args.vec_col, "k": args.k}
         if args.method == "brute":
@@ -1839,24 +1634,16 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"method": args.method, "k": args.k, "neighbors": by_q}))
         return 0
     if args.verb == "stats":
-        import os as _os
-
         from cumulus_etl_spark.sinks import ManagedTable
-        from cumulus_etl_spark.sinks.merge import CURRENT_POINTER
 
-        names = args.tables or sorted(
-            d
-            for d in _os.listdir(args.output_dir)
-            if _os.path.isfile(_os.path.join(args.output_dir, d, CURRENT_POINTER))
-        )
         report = {}
-        for name in names:
+        for name in _lake_tables(args.output_dir, args.tables):
             tbl = ManagedTable(spark, args.output_dir, name)
             df = tbl.read()
-            tdir = _os.path.join(args.output_dir, name)
+            tdir = os.path.join(args.output_dir, name)
             nbytes = sum(
-                _os.path.getsize(_os.path.join(r, f))
-                for r, _, fs in _os.walk(tdir)
+                os.path.getsize(os.path.join(r, f))
+                for r, _, fs in os.walk(tdir)
                 for f in fs
             )
             report[name] = {

@@ -22,7 +22,7 @@ from cumulus_etl_spark.etl.completion import (
 from cumulus_etl_spark.etl.config import JobConfig, check_output_phi_pairing
 from cumulus_etl_spark.etl.context import JobContext
 from cumulus_etl_spark.etl.tasks import TaskDef, select_tasks
-from cumulus_etl_spark.schemas import schema_for
+from cumulus_etl_spark.schemas import cut_schema, schema_for
 from cumulus_etl_spark.sinks import ManagedTable
 from cumulus_etl_spark.sources import (
     detect_resources,
@@ -197,15 +197,18 @@ def _run_task(
 def run_init(spark: SparkSession, output_dir: str, tasks: list[str] | None = None) -> list[str]:
     """Create every output table empty but with its full de-identified
     schema, so downstream SQL works before data arrives
-    (ref etl/init/cli.py:32-46)."""
+    (ref etl/init/cli.py:32-46). The full schema is the pointer's
+    contract; the table stores only the columns a merge reads, so a
+    later load stores what its export holds, as on a fresh table."""
     created = []
     scrubber = Scrubber(salt="00")
     for task in select_tasks(tasks):
         table = ManagedTable(spark, output_dir, task.table_name)
         if table.exists():
             continue
-        empty = spark.createDataFrame([], schema_for(task.resource_type))
-        table.merge(scrubber.scrub(empty, task.resource_type), task.policy)
+        rt = task.resource_type
+        empty = spark.createDataFrame([], cut_schema(schema_for(rt), task.policy.read_columns))
+        table.merge(scrubber.scrub(empty, rt), task.policy, contract=_scrubbed_schema(spark, task))
         created.append(task.table_name)
     return created
 

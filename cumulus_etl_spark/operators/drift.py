@@ -51,6 +51,24 @@ def bucketize(value_col: str, bucket_width: float, n_buckets: int):
     )
 
 
+def bucket_hist(
+    df: DataFrame, value_col: str, bucket_width: float, n_buckets: int, n_alias: str
+) -> DataFrame:
+    """``(bucket, n_alias)`` counts of ``df``'s non-null ``value_col``
+    under ``bucketize``: the one fixed-width histogram of the batch
+    operators and the streaming monitor (NULLs filtered first, the
+    module null policy)."""
+    if bucket_width <= 0:
+        raise ValueError(f"bucket_width must be > 0, got {bucket_width}")
+    if n_buckets < 2:
+        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
+    return (
+        df.filter(F.col(value_col).isNotNull())
+        .groupBy(bucketize(value_col, bucket_width, n_buckets).alias("bucket"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias(n_alias))
+    )
+
+
 def psi_from_counts(
     hist_expected: DataFrame,
     hist_actual: DataFrame,
@@ -112,21 +130,10 @@ def psi_drift(
     discipline as the reservoir scores: adjacent contributions differ
     by far more than one ulp of libm ln).
     """
-    if bucket_width <= 0:
-        raise ValueError(f"bucket_width must be > 0, got {bucket_width}")
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-
-    def hist(df: DataFrame, n_alias: str) -> DataFrame:
-        bucket = bucketize(value_col, bucket_width, n_buckets)
-        return (
-            df.filter(F.col(value_col).isNotNull())  # module null policy
-            .groupBy(bucket.alias("bucket"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias(n_alias))
-        )
-
     return psi_from_counts(
-        hist(expected, "n_expected"), hist(actual, "n_actual"), min_pct
+        bucket_hist(expected, value_col, bucket_width, n_buckets, "n_expected"),
+        bucket_hist(actual, value_col, bucket_width, n_buckets, "n_actual"),
+        min_pct,
     )
 
 
@@ -358,22 +365,10 @@ def ks_js_drift(
     these edges."""
     from pyspark.sql.window import Window
 
-    if bucket_width <= 0:
-        raise ValueError(f"bucket_width must be > 0, got {bucket_width}")
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-
-    def hist(df: DataFrame, n_alias: str) -> DataFrame:
-        bucket = bucketize(value_col, bucket_width, n_buckets)
-        return (
-            df.filter(F.col(value_col).isNotNull())  # module null policy
-            .groupBy(bucket.alias("bucket"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias(n_alias))
-        )
-
     joined = (
-        hist(expected, "n_expected")
-        .join(hist(actual, "n_actual"), "bucket", "full_outer")
+        bucket_hist(expected, value_col, bucket_width, n_buckets, "n_expected")
+        .join(bucket_hist(actual, value_col, bucket_width, n_buckets, "n_actual"),
+              "bucket", "full_outer")
         .select(
             "bucket",
             F.coalesce("n_expected", F.lit(0)).cast("bigint").alias("n_expected"),
@@ -449,6 +444,77 @@ def ks_js_from_rows(rows) -> tuple[float, float]:
     return round(ks, 6), round(max(js, 0.0), 6)
 
 
+def verdict(psi: float) -> str:
+    """The standard PSI reading: < 0.1 stable, 0.1-0.25 moderate,
+    > 0.25 action."""
+    return "stable" if psi < 0.1 else "moderate" if psi <= 0.25 else "action"
+
+
+def _psi(rows) -> float:
+    """The PSI of collected rows: the sum of their contributions."""
+    return round(sum(r["psi_contrib"] for r in rows), 6)
+
+
+def grid_summary(rows) -> dict:
+    """PSI, its verdict, KS and JS of one collected histogram (a
+    ``psi_drift`` report, one column's or one period's slice of a
+    grid): the quote every numeric drift report opens with, from the
+    rows already held — no extra scans."""
+    psi = _psi(rows)
+    ks, js = ks_js_from_rows(rows)
+    return {"psi": psi, "verdict": verdict(psi), "ks_stat": ks, "js_divergence": js}
+
+
+def totals(rows) -> dict:
+    """The side totals of collected report rows."""
+    return {
+        "n_expected": sum(r["n_expected"] for r in rows),
+        "n_actual": sum(r["n_actual"] for r in rows),
+    }
+
+
+def worst(psis) -> dict:
+    """The worst PSI of a multi-part report and its verdict."""
+    top = max(psis, default=0.0)
+    return {"worst_psi": top, "verdict": verdict(top)}
+
+
+def multi_summary(rows, value_cols: list[str]) -> dict:
+    """The per-column summary of a collected ``psi_drift_multi`` grid
+    (the ``drift --columns`` verb and the multi-column monitor)."""
+    columns = {}
+    for c in value_cols:
+        rows_c = [r for r in rows if r["column"] == c]
+        columns[c] = {**grid_summary(rows_c), **totals(rows_c)}
+    return {"columns": columns, **worst(v["psi"] for v in columns.values())}
+
+
+def timeline_summary(grid) -> dict:
+    """Per-period summaries of a collected ``psi_drift_timeline`` grid,
+    the worst period, and the first period whose verdict is action."""
+    periods = []
+    for p in sorted({r["period"] for r in grid}):
+        rows_p = [r for r in grid if r["period"] == p]
+        periods.append({"period": str(p), **grid_summary(rows_p),
+                        "n_actual": sum(r["n_actual"] for r in rows_p)})
+    return {
+        "periods": periods,
+        **worst(p["psi"] for p in periods),
+        "first_action_period": next(
+            (p["period"] for p in periods if p["verdict"] == "action"), None
+        ),
+    }
+
+
+def categorical_summary(rows) -> dict:
+    """PSI, its verdict, chi-square, Cramér's V and the side totals of
+    a collected ``categorical_drift`` report."""
+    psi = _psi(rows)
+    chi2, v = chi2_from_rows(rows)
+    return {"psi": psi, "verdict": verdict(psi), "chi2": chi2, "cramers_v": v,
+            **totals(rows)}
+
+
 def psi_drift_timeline(
     expected: DataFrame,
     actual: DataFrame,
@@ -480,9 +546,9 @@ def psi_drift_timeline(
 
     Output, one row per (period, occupied-or-reference bucket), ordered:
     ``period`` (truncated timestamp), then the ``psi_drift`` schema.
-    Per-period ``sum(psi_contrib)`` is that period's PSI; the CLI quotes
-    per-period PSI/KS/JS from this one collected grid via
-    ``ks_js_from_rows`` (same twin as the other drift verbs).
+    Per-period ``sum(psi_contrib)`` is that period's PSI;
+    ``timeline_summary`` quotes per-period PSI/KS/JS from this one
+    collected grid (the ``grid_summary`` of each period).
 
     Scale shape: one scan per side (the reference collapses to
     |buckets| rows, the snapshot to |periods|×|buckets| rows, both via
@@ -492,17 +558,8 @@ def psi_drift_timeline(
     |periods|×|buckets|-sized."""
     from pyspark.sql.window import Window
 
-    if bucket_width <= 0:
-        raise ValueError(f"bucket_width must be > 0, got {bucket_width}")
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-
     bucket = bucketize(value_col, bucket_width, n_buckets)
-    ref_hist = (
-        expected.filter(F.col(value_col).isNotNull())  # module null policy
-        .groupBy(bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_expected"))
-    )
+    ref_hist = bucket_hist(expected, value_col, bucket_width, n_buckets, "n_expected")
     act_hist = (
         actual.filter(
             F.col(value_col).isNotNull() & F.col(time_col).isNotNull()
@@ -574,8 +631,8 @@ def categorical_drift(
     Output, one row per reference-universe category (ordered):
     ``category`` plus the ``psi_drift`` count/share/contribution
     schema.  ``sum(psi_contrib)`` is the PSI, same reading as numeric;
-    the CLI quotes the chi-square homogeneity statistic and Cramér's V
-    from the same collected rows via ``chi2_from_rows`` (no extra
+    ``categorical_summary`` quotes the chi-square homogeneity statistic
+    and Cramér's V from the same collected rows (``chi2_from_rows``, no extra
     scans — the KS twin pattern; KS itself needs an ordering and does
     not apply to categories).
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cumulus_etl_spark.operators.similarity import as_double_array
+from cumulus_etl_spark.operators.similarity import as_double_array, double_array_sql
 
 
 def explode_dims(emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
@@ -265,22 +265,13 @@ def pq_encode(
     )
 
 
-def _book_lit(book: list[list[float]]) -> Column:
-    """K×sub codebook as one literal nested-array expression (a single
-    JVM parse instead of K×sub py4j Column constructions)."""
-    inner = ",".join(
-        "array(" + ",".join(repr(float(x)) + "D" for x in cw) + ")" for cw in book
-    )
-    return F.expr(f"array({inner})")
-
-
 def _pq_subspace_dists(v: Column, m: int, sub: int, book: list[list[float]]) -> Column:
     """array<double> of squared-L2 distances from vector subspace m to
     every codeword — sequential fold per codeword, same doubles as the
     unrolled form and as the oracle's list_sum."""
     subvec = F.slice(v, m * sub + 1, sub)
     return F.transform(
-        _book_lit(book),
+        F.expr(double_array_sql(book, 2)),
         lambda cw: F.aggregate(
             F.zip_with(subvec, cw, lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),

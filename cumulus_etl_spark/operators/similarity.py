@@ -42,7 +42,7 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-# -- SQL-string forms of the vector math (r14 opt, the _matrix_sql
+# -- SQL-string forms of the vector math (r14 opt, the double_array_sql
 # discipline): every Python-API lambda (zip_with/aggregate/transform)
 # costs a _create_lambda round-trip storm on py4j at PLAN BUILD time —
 # cProfile put ~0.7 s of vector_ann_lsh's 1.3 s bench entry in py4j
@@ -148,33 +148,19 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     return out
 
 
-def _nested_array_sql(all_planes: list[list[list[float]]]) -> str:
-    """SQL literal for the full tables×planes×dim coefficient tensor.
+def double_array_sql(xs, depth: int) -> str:
+    """SQL literal for a ``depth``-level nested list of doubles, e.g. the
+    tables×planes×dim LSH tensor (3) or a k×dim centroid matrix (2).
 
-    One ``F.expr`` call instead of tables×planes×dim ``F.lit`` Column
-    constructions: the unrolled per-plane form costs thousands of py4j
-    round-trips at PLAN BUILD time (~5 s measured for 6×8×64) before a
-    single row moves. The JVM parses this string once."""
-
-    def arr(xs: list[str]) -> str:
-        return "array(" + ",".join(xs) + ")"
-
-    return arr(
-        [arr([arr([repr(float(x)) + "D" for x in plane]) for plane in tbl]) for tbl in all_planes]
-    )
-
-
-def _matrix_sql(mat: list[list[float]]) -> str:
-    """SQL literal for a k×dim double matrix — the 2-level analog of
-    ``_nested_array_sql`` (r13 opt): ``repr`` round-trips every double
-    exactly, and the JVM parses ONE string instead of paying k×dim py4j
-    literal constructions at plan-build time (~1.8 s measured for 16×32
-    in the ANN search path — pure driver latency before any row moved)."""
-
-    def arr(xs: list[str]) -> str:
-        return "array(" + ",".join(xs) + ")"
-
-    return arr([arr([repr(float(x)) + "D" for x in row]) for row in mat])
+    One ``F.expr`` call instead of one ``F.lit`` Column construction
+    per value: the unrolled form costs thousands of py4j round-trips at
+    PLAN BUILD time (~5 s measured for 6×8×64 planes, ~1.8 s for a
+    16×32 ANN centroid matrix) before a single row moves. The JVM
+    parses this string once, and ``repr`` round-trips every double
+    exactly."""
+    if depth == 0:
+        return repr(float(xs)) + "D"
+    return "array(" + ",".join(double_array_sql(x, depth - 1) for x in xs) + ")"
 
 
 def lsh_signatures_all(
@@ -188,7 +174,7 @@ def lsh_signatures_all(
     tables×planes instead of O(t×p×dim).
 
     Pass ``vec`` as a COLUMN NAME to get the whole expression as one
-    parsed SQL literal (r14 opt, the _matrix_sql discipline): the
+    parsed SQL literal (r14 opt, the double_array_sql discipline): the
     Python-API form pays ~6 lambda constructions × hundreds of py4j
     round trips of pure driver time at every plan build (~0.45 s of
     vector_ann_lsh's 1.3 s bench entry, measured by cProfile — all of
@@ -198,7 +184,7 @@ def lsh_signatures_all(
     if isinstance(vec, str):
         v = f"`{vec}`"
         sig_sql = (
-            f"transform({_nested_array_sql(all_planes)}, tbl -> aggregate("
+            f"transform({double_array_sql(all_planes, 3)}, tbl -> aggregate("
             f"transform(tbl, (plane, j) -> IF("
             f"aggregate(zip_with({v}, plane, (x, y) -> x * y), 0D,"
             f" (acc, x) -> acc + x) >= 0D, shiftleft(1L, j), 0L)),"
@@ -208,7 +194,7 @@ def lsh_signatures_all(
     n_planes = len(all_planes[0])
     powers = F.expr("array(" + ",".join(str(1 << j) + "L" for j in range(n_planes)) + ")")
     return F.transform(
-        F.expr(_nested_array_sql(all_planes)),
+        F.expr(double_array_sql(all_planes, 3)),
         lambda tbl: F.aggregate(
             F.transform(
                 tbl,
@@ -337,7 +323,7 @@ def _nearest_centroids(vec: Column, centroids: list[list[float]], n: int) -> Col
     16×32) and a plan tree that grew with k. Same scores, same
     (s, c)-struct sort, same tie-break — the struct comparison and the
     cosine arithmetic are unchanged."""
-    cmat = F.expr(_matrix_sql(centroids))
+    cmat = F.expr(double_array_sql(centroids, 2))
     scored = F.transform(
         cmat, lambda c, i: F.struct(cosine(vec, c).alias("s"), i.alias("c"))
     )
@@ -430,7 +416,7 @@ def nearest_centroid_l2(vec: Column, centroids: list[list[float]]) -> Column:
     # One parsed SQL literal + higher-order transform (r13 opt) — see
     # _nearest_centroids: identical (d, c) structs and sort, without the
     # k×dim py4j literal constructions at plan-build time.
-    cmat = F.expr(_matrix_sql(centroids))
+    cmat = F.expr(double_array_sql(centroids, 2))
     scored = F.transform(
         cmat, lambda c, i: F.struct(sq_l2(vec, c).alias("d"), i.alias("c"))
     )

@@ -890,10 +890,10 @@ def vector_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     cents = S.first_k_centroids(emb, 8)
     v = S.as_double_array("embedding")
-    # One parsed SQL literal + transform (r13 opt, see S._matrix_sql):
+    # One parsed SQL literal + transform (r13 opt, see S.double_array_sql):
     # identical (d, c) structs/sort without per-element py4j literals.
     scored = F.transform(
-        F.expr(S._matrix_sql(cents)),
+        F.expr(S.double_array_sql(cents, 2)),
         lambda c, i: F.struct(F.sqrt(S.sq_l2(v, c)).alias("d"), i.alias("c")),
     )
     srt = F.array_sort(scored)

@@ -45,7 +45,9 @@ the fallback is a *bucket-pruned versioned-parquet* table:
   drops superseded version dirs (vacuum analog; hardlinked files survive
   via the live version).
 - Contract vs stored columns. The pointer ``schema`` is the table's
-  full contract: a new table takes the ``contract`` its first merge
+  full contract, recorded nullable at every depth (the form the file
+  source reads it back in, so ``schema()`` equals ``read().schema``
+  from the first version on): a new table takes the ``contract`` its first merge
   passes (the ETL passes the wide FHIR schema after scrubbing), and every
   merge widens it by the frame it writes, whose types win (schema
   evolution, nested fields included). The files hold only the stored
@@ -817,15 +819,14 @@ class ManagedTable:
             for entry in self._bucket_dirs(prev_dir):
                 if entry not in keep:
                     _link_tree(os.path.join(prev_dir, entry), os.path.join(out, entry))
+        # The pointer records the schema in the form the file source reads
+        # it back (nullable at every depth), whatever the table's history.
+        base = contract or StructType([])
+        was: list[str] = []
         if prev is not None:
-            # The existing side was read back through the file source, so
-            # its columns are nullable at every depth, stored or not.
-            before = StructType.fromJson(json.loads(prev["schema"]))
-            full = _widen(_nullable(before), schema)
-            was = prev.get("stored", before.fieldNames())
-        else:
-            full = schema if contract is None else _widen(contract, schema)
-            was = []
+            base = StructType.fromJson(json.loads(prev["schema"]))
+            was = prev.get("stored", base.fieldNames())
+        full = _nullable(_widen(base, schema))
         stored = set(was) | set(schema.fieldNames())
         ptr = os.path.join(self.path, CURRENT_POINTER)
         tmp = ptr + ".tmp"

@@ -44,7 +44,12 @@ its frozen state, and its report arithmetic:
 Every report goes through the batch operator's own tail
 (``psi_from_counts`` / ``psi_from_counts_multi``), and the invariant
 pinned in tests: after ANY batch split, a monitor's report EQUALS its
-batch operator over (reference, concat(batches)).
+batch operator over (reference, concat(batches)).  Each monitor's
+``report_dict`` (what the ``drift-monitor`` verb prints) quotes its
+collected report through the batch ``drift`` verb's own summaries in
+operators/drift.py: ``grid_summary`` (PSI, ``verdict``, KS, JS),
+``multi_summary`` (per column, plus the worst) and
+``categorical_summary`` (PSI, chi-square, Cramér's V).
 
 Scale shape: per batch, one map-side-combined hash aggregate (the
 shuffle carries ≤ |cells| rows per input partition) plus a merge of a
@@ -61,10 +66,11 @@ from pyspark.sql import functions as F
 
 from cumulus_etl_spark.operators.drift import (
     OTHER_CATEGORY,
-    bucketize,
-    chi2_from_rows,
-    ks_js_from_rows,
+    bucket_hist,
+    categorical_summary,
+    grid_summary,
     multi_hist,
+    multi_summary,
     psi_from_counts,
     psi_from_counts_multi,
     reference_grid,
@@ -85,10 +91,6 @@ from cumulus_etl_spark.streaming.ckpt import (
 # under the earlier unclamped convention mismatches and is rejected
 # loudly instead of silently mixing bins.
 BINNING_VERSION = "clamp-low-v2"
-
-
-def _verdict(psi: float) -> str:
-    return "stable" if psi < 0.1 else "moderate" if psi <= 0.25 else "action"
 
 
 class _ReferenceMonitor:
@@ -319,12 +321,7 @@ class StreamingPsiMonitor(_ReferenceMonitor):
         }
 
     def _hist(self, rows: DataFrame) -> DataFrame:
-        bucket = bucketize(self.value_col, self.bucket_width, self.n_buckets)
-        return (
-            rows.filter(F.col(self.value_col).isNotNull())  # drift null policy
-            .groupBy(bucket.alias("bucket"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        )
+        return bucket_hist(rows, self.value_col, self.bucket_width, self.n_buckets, "n")
 
     def report(self, min_pct: float = 1e-6) -> DataFrame:
         """Per-bucket PSI contributions of everything ingested so far vs
@@ -335,6 +332,22 @@ class StreamingPsiMonitor(_ReferenceMonitor):
         """The scalar PSI (sum of contributions)."""
         got = self.report(min_pct).agg(F.sum("psi_contrib")).collect()[0][0]
         return round(float(got or 0.0), 6)
+
+    def report_dict(self, min_pct: float = 1e-6) -> dict:
+        """The ``drift-monitor --column`` quote from ONE collected
+        ≤ n_buckets-row report: ``grid_summary``, the actual-side total
+        and the per-bucket contributions."""
+        rows = self.report(min_pct).collect()
+        return {
+            "column": self.value_col,
+            **grid_summary(rows),
+            "n_actual_total": sum(r["n_actual"] for r in rows),
+            "buckets": [
+                {"bucket": r["bucket"], "n_expected": r["n_expected"],
+                 "n_actual": r["n_actual"], "psi_contrib": r["psi_contrib"]}
+                for r in rows
+            ],
+        }
 
 
 def streaming_psi(
@@ -450,26 +463,9 @@ class StreamingDriftMonitor(_ReferenceMonitor):
     def report_dict(self, min_pct: float = 1e-6) -> dict:
         """The ``drift --columns`` verb's per-column summary — PSI, KS,
         JS, totals — quoted from ONE collected grid (|columns| ×
-        |buckets| rows, the bounded-collect discipline), through the
-        same driver-side twin the batch verb uses."""
-        per = self.report(min_pct).collect()
-        out: dict = {"columns": {}}
-        for c in self.value_cols:
-            rows_c = [r for r in per if r["column"] == c]
-            psi = round(sum(r["psi_contrib"] for r in rows_c), 6)
-            ks, js = ks_js_from_rows(rows_c)
-            out["columns"][c] = {
-                "psi": psi,
-                "verdict": _verdict(psi),
-                "ks_stat": ks,
-                "js_divergence": js,
-                "n_expected": sum(r["n_expected"] for r in rows_c),
-                "n_actual": sum(r["n_actual"] for r in rows_c),
-            }
-        worst = max((v["psi"] for v in out["columns"].values()), default=0.0)
-        out["worst_psi"] = worst
-        out["verdict"] = _verdict(worst)
-        return out
+        |buckets| rows, the bounded-collect discipline) by the batch
+        verb's own ``multi_summary``."""
+        return multi_summary(self.report(min_pct).collect(), self.value_cols)
 
 
 def streaming_drift_multi(
@@ -591,19 +587,14 @@ class StreamingCategoricalMonitor(_ReferenceMonitor):
 
     def report_dict(self, min_pct: float = 1e-6) -> dict:
         """PSI + chi-square + Cramér's V from ONE collected
-        ≤ (top_k + 1)-row report — the batch verb's quote, incremental."""
+        ≤ (top_k + 1)-row report — the batch verb's
+        ``categorical_summary``, incremental.  The per-category list
+        has no shares (the batch verb prints ``pct_*``)."""
         rows = self.report(min_pct).collect()
-        psi = round(sum(r["psi_contrib"] for r in rows), 6)
-        chi2, v = chi2_from_rows(rows)
         return {
             "column": self.category_col,
             "mode": "categorical",
-            "psi": psi,
-            "verdict": _verdict(psi),
-            "chi2": chi2,
-            "cramers_v": v,
-            "n_expected": sum(r["n_expected"] for r in rows),
-            "n_actual": sum(r["n_actual"] for r in rows),
+            **categorical_summary(rows),
             "categories": [
                 {"category": r["category"], "n_expected": r["n_expected"],
                  "n_actual": r["n_actual"], "psi_contrib": r["psi_contrib"]}

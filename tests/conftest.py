@@ -72,6 +72,9 @@ _SLOW_EXEMPT = {
     ("test_streaming_drift.py", "test_crash_before_reference_merge_recovers[multi]"),
     ("test_streaming_drift.py", "test_crash_before_reference_merge_recovers[categorical]"),
     ("test_streaming_drift.py", "test_crash_before_reference_merge_recovers[psi]"),
+    ("test_streaming_drift.py", "test_drift_monitor_cli_report_key_order[column]"),
+    ("test_streaming_drift.py", "test_drift_monitor_cli_report_key_order[columns]"),
+    ("test_streaming_drift.py", "test_drift_monitor_cli_report_key_order[categorical]"),
 }
 
 

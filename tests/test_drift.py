@@ -855,3 +855,75 @@ def test_staged_categorical_oracle_parity(spark, sf_correct):
         staged_profile_categorical_drift, _STAGED_CATEGORICAL_ORACLE,
     )
     assert result["ok"], result
+
+
+# ---- report shapes: the printed key order at every level -------------------
+
+_STATS = ["psi", "verdict", "ks_stat", "js_divergence"]
+_PCT_ROW = ["n_expected", "n_actual", "pct_expected", "pct_actual", "psi_contrib"]
+
+
+def key_paths(v, path="$") -> dict:
+    """Every dict's keys in print order, by JSON path (list items share
+    one path ``[]`` and must agree on it)."""
+    out: dict = {}
+    if isinstance(v, dict):
+        out[path] = list(v)
+        for k, x in v.items():
+            out.update(key_paths(x, f"{path}.{k}"))
+    elif isinstance(v, list):
+        for x in v:
+            for p, keys in key_paths(x, path + "[]").items():
+                assert out.setdefault(p, keys) == keys, p
+    return out
+
+
+def shape_snapshots(spark, tmp_path) -> tuple[str, str]:
+    """A reference and a drifted snapshot with two numeric columns, a
+    category and a timestamp: one fixture for every drift mode."""
+    rows_e = [(float(i % 4), float(i % 3), "web" if i % 3 else "pdf",
+               "2024-03-01 08:00:00") for i in range(60)]
+    rows_a = [(float(i % 2), float(i % 3), "crawl" if i % 2 else "web",
+               f"2024-03-0{1 + i % 2} 08:00:00") for i in range(60)]
+    paths = []
+    for name, rows in (("ref", rows_e), ("new", rows_a)):
+        path = str(tmp_path / name)
+        spark.createDataFrame(rows, "x double, y double, src string, ts string").select(
+            "x", "y", "src", F.col("ts").cast("timestamp").alias("ts")
+        ).write.parquet(path)
+        paths.append(path)
+    return paths[0], paths[1]
+
+
+@pytest.mark.parametrize("mode,flags,want", [
+    ("column", ["--column", "x", "--bucket-width", "1.0", "--buckets", "4"], {
+        "$": ["column", *_STATS, "n_expected", "n_actual", "buckets"],
+        "$.buckets[]": ["bucket", *_PCT_ROW],
+    }),
+    ("columns", ["--columns", "x,y", "--buckets", "4"], {
+        "$": ["columns", "worst_psi", "verdict"],
+        "$.columns": ["x", "y"],
+        "$.columns.x": [*_STATS, "n_expected", "n_actual"],
+        "$.columns.y": [*_STATS, "n_expected", "n_actual"],
+    }),
+    ("timeline", ["--column", "x", "--bucket-width", "1.0", "--buckets", "4",
+                  "--timeline", "ts"], {
+        "$": ["column", "period", "periods", "worst_psi", "verdict",
+              "first_action_period"],
+        "$.periods[]": ["period", *_STATS, "n_actual"],
+    }),
+    ("categorical", ["--column", "src", "--categorical"], {
+        "$": ["column", "mode", "psi", "verdict", "chi2", "cramers_v",
+              "n_expected", "n_actual", "categories"],
+        "$.categories[]": ["category", *_PCT_ROW],
+    }),
+], ids=["column", "columns", "timeline", "categorical"])
+def test_drift_cli_report_key_order(spark, tmp_path, capsys, mode, flags, want):
+    import json
+
+    from cumulus_etl_spark.cli import main
+
+    e_path, a_path = shape_snapshots(spark, tmp_path)
+    assert main(["drift", e_path, a_path, *flags]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert key_paths(rep) == want, mode

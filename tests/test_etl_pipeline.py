@@ -236,6 +236,7 @@ def test_etl_stores_the_fields_the_export_holds(spark, tmp_path):
     line carries still quarantines that line."""
     from cumulus_etl_spark.etl.pipeline import _scrubbed_schema
     from cumulus_etl_spark.etl.tasks import select_tasks
+    from cumulus_etl_spark.sinks.merge import _nullable
 
     inp, out, phi = (str(tmp_path / d) for d in ("in", "out", "phi"))
     write_ndjson(inp, "p.ndjson", [
@@ -255,7 +256,7 @@ def test_etl_stores_the_fields_the_export_holds(spark, tmp_path):
     table = ManagedTable(spark, out, "patient")
     (task,) = select_tasks(["patient"])
     contract = _scrubbed_schema(spark, task)
-    assert table._pointer()["schema"] == contract.json()
+    assert table._pointer()["schema"] == _nullable(contract).json()
     read_schema = table.read().schema  # the file source reads it all nullable
     assert read_schema.simpleString() == contract.simpleString()
     stored = table._pointer()["stored"]
@@ -276,6 +277,41 @@ def test_etl_stores_the_fields_the_export_holds(spark, tmp_path):
     assert set(marital) == {expected_anon_id(salt, "p1"), expected_anon_id(salt, "p2")}
     assert marital[expected_anon_id(salt, "p1")]["text"] == "Married"
     assert marital[expected_anon_id(salt, "p2")] is None
+
+
+def test_init_then_etl_stores_what_a_plain_etl_stores(spark, tmp_path):
+    """``init`` writes each table narrow, under the scrubbed contract: a
+    sparse load onto it stores the same top-level columns as the same
+    load into an empty lake, and the table reads under the contract
+    before and after. The pointer records the schema as it reads back,
+    and a ``delete_ids`` leaves it as it was."""
+    from cumulus_etl_spark.etl.pipeline import _scrubbed_schema
+    from cumulus_etl_spark.etl.tasks import select_tasks
+    from cumulus_etl_spark.sinks.merge import _nullable
+
+    (task,) = select_tasks(["patient"])
+    contract = _nullable(_scrubbed_schema(spark, task))
+    inp = str(tmp_path / "in")
+    write_ndjson(inp, "p.ndjson", [
+        {"resourceType": "Patient", "id": "p1", "gender": "female",
+         "meta": {"lastUpdated": "2021-01-01T00:00:00Z"}},
+        {"resourceType": "Patient", "id": "p2", "birthDate": "1980-06-15"},
+    ])
+    plain = str(tmp_path / "plain")
+    run_etl(spark, inp, plain, str(tmp_path / "phi_plain"), tasks=["patient"])
+    want = ManagedTable(spark, plain, "patient")._pointer()["stored"]
+    assert len(want) < len(contract.fields)
+
+    lake = str(tmp_path / "lake")
+    assert run_init(spark, lake, tasks=["patient"]) == ["patient"]
+    table = ManagedTable(spark, lake, "patient")
+    assert table.read().schema == contract == table.schema()
+    run_etl(spark, inp, lake, str(tmp_path / "phi"), tasks=["patient"])
+    assert table._pointer()["stored"] == want
+    assert table.read().schema == contract == table.schema()
+
+    table.delete_ids([table.read().collect()[0]["id"]])
+    assert table.schema() == contract and table.read().count() == 1
 
 
 def test_dense_export_takes_its_contract_from_the_scrubbed_frame(spark, tmp_path, monkeypatch):

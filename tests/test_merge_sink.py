@@ -556,6 +556,29 @@ def test_narrow_frames_store_their_columns_and_read_the_contract(spark, tmp_path
     assert tbl.read().schema == contract
 
 
+def test_pointer_schema_is_the_read_schema_from_the_first_version(spark, tmp_path):
+    """The pointer records the schema in the form the file source reads
+    it back, so ``schema()`` equals ``read().schema`` from a table's
+    first version, non-null contract fields included; a delete leaves
+    it as it was."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    contract = StructType([
+        StructField("id", StringType(), False),
+        StructField("tags", ArrayType(StringType(), containsNull=False), False),
+        StructField("note", StringType()),
+    ])
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    batch = spark.createDataFrame([("a", ["x"]), ("b", [])], StructType(contract.fields[:2]))
+    tbl.merge(batch, MergePolicy(last_updated_field=None), contract=contract)
+    assert tbl.schema() == tbl.read().schema
+    assert tbl.schema()["tags"].dataType.containsNull
+    before = tbl._pointer()["schema"]
+    tbl.delete_ids(["a"])
+    assert tbl._pointer()["schema"] == before
+    assert [r["id"] for r in tbl.read().collect()] == ["b"]
+
+
 def test_new_table_reads_its_contract_on_both_backends(spark, tmp_path, backend):
     """A first merge of a narrow frame with a contract reads back with
     every contract column, the absent ones null."""

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from cumulus_etl_spark.operators.drift import psi_drift
 from cumulus_etl_spark.streaming.drift import StreamingPsiMonitor, streaming_psi
+from tests.test_drift import _STATS, key_paths, shape_snapshots
 
 
 def _snap(spark, values):
@@ -661,3 +662,34 @@ def test_crash_before_reference_merge_recovers(spark, tmp_path, monkeypatch, kin
         run(root, ckpt)
     mon = run(root, ckpt)  # same reference, same checkpoint
     assert _rows(mon.report()) == _rows(want)
+
+
+@pytest.mark.parametrize("mode,flags,want", [
+    ("column", ["--column", "x", "--bucket-width", "1.0", "--buckets", "4"], {
+        "$": ["column", *_STATS, "n_actual_total", "buckets", "monitor"],
+        "$.buckets[]": ["bucket", "n_expected", "n_actual", "psi_contrib"],
+    }),
+    ("columns", ["--columns", "x,y", "--buckets", "4"], {
+        "$": ["columns", "worst_psi", "verdict", "monitor"],
+        "$.columns": ["x", "y"],
+        "$.columns.x": [*_STATS, "n_expected", "n_actual"],
+        "$.columns.y": [*_STATS, "n_expected", "n_actual"],
+    }),
+    ("categorical", ["--column", "src", "--categorical"], {
+        "$": ["column", "mode", "psi", "verdict", "chi2", "cramers_v",
+              "n_expected", "n_actual", "categories", "monitor"],
+        "$.categories[]": ["category", "n_expected", "n_actual", "psi_contrib"],
+    }),
+], ids=["column", "columns", "categorical"])
+def test_drift_monitor_cli_report_key_order(spark, tmp_path, capsys, mode, flags, want):
+    """The printed key order at every level, on the batch verb's fixture."""
+    import json
+
+    from cumulus_etl_spark.cli import main
+
+    ref_path, landing = shape_snapshots(spark, tmp_path)
+    assert main(["drift-monitor", landing, str(tmp_path / "mon"),
+                 "--reference", ref_path, *flags,
+                 "--schema", "x double, y double, src string, ts timestamp"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert key_paths(rep) == want, mode
