@@ -20,10 +20,17 @@ part of the beyond-parity LLM-data-pipeline library (SURVEY.md §2.11
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cumulus_etl_spark.operators.similarity import as_double_array, double_array_sql
+from cumulus_etl_spark.operators.similarity import (
+    as_double,
+    double_array_sql,
+    first_k_centroids,
+    nearest_centroids,
+    sq_l2,
+    train_ivf_centroids,
+)
 
 
 def explode_dims(emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
@@ -31,7 +38,7 @@ def explode_dims(emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_
     (exact, so downstream math is engine-reproducible)."""
     return emb.select(
         F.col(id_col),
-        F.posexplode(as_double_array(vec_col)).alias("dim", "x"),
+        F.posexplode(F.expr(as_double(f"`{vec_col}`"))).alias("dim", "x"),
     )
 
 
@@ -40,15 +47,16 @@ def dim_scales(exploded: DataFrame) -> DataFrame:
     return exploded.groupBy("dim").agg(F.max(F.abs(F.col("x"))).alias("amax"))
 
 
-def int8_code(x: Column, amax: Column) -> Column:
-    """Symmetric int8 code in [-127, 127]. round() is half-away-from-zero
-    on both Spark (HALF_UP) and DuckDB (C round), so codes are
-    engine-identical given identical doubles."""
+def int8_code(x: str, amax: str) -> str:
+    """SQL text of the symmetric int8 code in [-127, 127]. round() is
+    half-away-from-zero on both Spark (HALF_UP) and DuckDB (C round), so
+    codes are engine-identical given identical doubles."""
     # An all-zero dimension (amax=0) yields NULL codes — never NaN/127
     # artifacts or an ANSI divide-by-zero — and the caller decides.
-    code = F.round(x / amax * F.lit(127.0), 0).cast("int")
-    bounded = F.greatest(F.lit(-127), F.least(F.lit(127), code))
-    return F.when(amax != 0.0, bounded)
+    return (
+        f"CASE WHEN {amax} != 0D THEN greatest(-127, least(127,"
+        f" cast(round({x} / {amax} * 127.0D, 0) as int))) END"
+    )
 
 
 def quantize_int8(
@@ -58,7 +66,41 @@ def quantize_int8(
     ex = explode_dims(emb, vec_col, id_col)
     scales = dim_scales(ex)
     q = ex.join(F.broadcast(scales), "dim")
-    return q.withColumn("code", int8_code(F.col("x"), F.col("amax")))
+    return q.withColumn("code", F.expr(int8_code("`x`", "`amax`")))
+
+
+def _int8_scale_row(emb: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """One row of dim-ordered arrays: ``amax_arr`` (the per-dimension
+    scales) and ``s2`` (amax² / 127², the code-product weights).
+
+    The scale table is the ONLY aggregation over the corpus (D groups,
+    map-side combined); codes are then a row-local zip_with against this
+    broadcast row — the corpus is never re-shuffled or re-grouped to build
+    code arrays."""
+    return (
+        dim_scales(explode_dims(emb, vec_col, id_col))
+        .select(F.struct("dim", "amax").alias("da"))
+        .agg(F.array_sort(F.collect_list("da")).alias("da"))
+        .select(
+            F.expr("transform(`da`, s -> s.amax)").alias("amax_arr"),
+            F.expr("transform(`da`, s -> s.amax * s.amax / 16129.0D)").alias("s2"),
+        )
+    )
+
+
+def _int8_codes(v: str) -> str:
+    """int8 code array of the vector ``v`` against ``amax_arr``."""
+    return f"zip_with({v}, `amax_arr`, (x, a) -> {int8_code('x', 'a')})"
+
+
+def int8_dot(qcodes: str, codes: str, s2: str) -> str:
+    """Scaled integer dot product ``sum(qcodes[d] * codes[d] * s2[d])`` —
+    integer code products, then a sequential double fold identical to
+    DuckDB's list_sum."""
+    return (
+        f"aggregate(zip_with(zip_with({qcodes}, {codes}, (a, b) -> a * b), {s2},"
+        f" (p, s) -> cast(p as double) * s), 0D, (acc, x) -> acc + x)"
+    )
 
 
 def int8_topk(
@@ -81,25 +123,8 @@ def int8_topk(
     neighbor_id — total-ordered and engine-reproducible (integer code
     products, sequential double fold identical to DuckDB's list_sum).
     """
-    # The scale table is the ONLY aggregation over the corpus (D groups,
-    # map-side combined); it collapses to a single broadcast row of
-    # dim-ordered arrays. Codes are then a row-local zip_with — the
-    # corpus is never re-shuffled or re-grouped to build code arrays.
-    ex = explode_dims(emb, vec_col, id_col)
-    scale_row = (
-        dim_scales(ex)
-        .select(F.struct("dim", "amax").alias("da"))
-        .agg(F.array_sort(F.collect_list("da")).alias("da"))
-        .select(
-            F.transform("da", lambda s: s["amax"]).alias("amax_arr"),
-            F.transform("da", lambda s: s["amax"] * s["amax"] / F.lit(16129.0)).alias("s2"),
-        )
-    )
-    codes_expr = F.zip_with(
-        as_double_array(vec_col), F.col("amax_arr"), lambda x, a: int8_code(x, a)
-    )
-    codes = emb.crossJoin(F.broadcast(scale_row)).select(
-        F.col(id_col), codes_expr.alias("codes"), "s2"
+    codes = emb.crossJoin(F.broadcast(_int8_scale_row(emb, vec_col, id_col))).select(
+        F.col(id_col), F.expr(_int8_codes(as_double(f"`{vec_col}`"))).alias("codes"), "s2"
     )
     qcodes = codes.join(
         F.broadcast(queries.select(F.col(id_col).alias("query_id"))),
@@ -110,14 +135,7 @@ def int8_topk(
         .join(F.broadcast(qcodes))
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    prod = F.zip_with(F.col("qcodes"), F.col("codes"), lambda a, b: a * b)
-    score = F.aggregate(
-        F.zip_with(prod, F.col("s2"), lambda p, s: p.cast("double") * s),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    from pyspark.sql import Window
-
+    score = F.expr(int8_dot("`qcodes`", "`codes`", "`s2`"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         pairs.select("query_id", "neighbor_id", score.alias("score"))
@@ -150,50 +168,28 @@ def ann_ivf_int8(
     quantized full scan (== int8_topk) — the property the tests pin.
     Output: (query_id, rank, neighbor_id, score).
     """
-    from pyspark.sql import Window
-
-    from cumulus_etl_spark.operators.similarity import (
-        _nearest_centroids,
-        as_double_array,
-        train_ivf_centroids,
-    )
-
     if centroids is None:
         centroids = train_ivf_centroids(
             corpus, n_centroids=n_centroids, vec_col=vec_col, seed=seed
         )
-    ex = explode_dims(corpus, vec_col, id_col)
-    scale_row = (
-        dim_scales(ex)
-        .select(F.struct("dim", "amax").alias("da"))
-        .agg(F.array_sort(F.collect_list("da")).alias("da"))
-        .select(
-            F.transform("da", lambda s: s["amax"]).alias("amax_arr"),
-            F.transform("da", lambda s: s["amax"] * s["amax"] / F.lit(16129.0)).alias("s2"),
-        )
-    )
-    v = as_double_array(vec_col)
-    codes_expr = F.zip_with(v, F.col("amax_arr"), lambda x, a: int8_code(x, a))
+    scale_row = _int8_scale_row(corpus, vec_col, id_col)
+    v = as_double(f"`{vec_col}`")
+    codes = F.expr(_int8_codes(v))
     lists = corpus.crossJoin(F.broadcast(scale_row)).select(
         F.col(id_col).alias("neighbor_id"),
-        codes_expr.alias("codes"),
+        codes.alias("codes"),
         "s2",
-        F.element_at(_nearest_centroids(v, centroids, 1), 1).alias("centroid"),
+        F.expr(f"element_at({nearest_centroids(v, centroids, 1)}, 1)").alias("centroid"),
     )
     probes = queries.crossJoin(F.broadcast(scale_row)).select(
         F.col(id_col).alias("query_id"),
-        codes_expr.alias("qcodes"),
-        F.explode(_nearest_centroids(v, centroids, n_probe)).alias("centroid"),
+        codes.alias("qcodes"),
+        F.explode(F.expr(nearest_centroids(v, centroids, n_probe))).alias("centroid"),
     )
     cands = lists.join(F.broadcast(probes), "centroid")
     if exclude_self:
         cands = cands.filter(F.col("query_id") != F.col("neighbor_id"))
-    prod = F.zip_with(F.col("qcodes"), F.col("codes"), lambda a, b: a * b)
-    score = F.aggregate(
-        F.zip_with(prod, F.col("s2"), lambda p, s: p.cast("double") * s),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    score = F.expr(int8_dot("`qcodes`", "`codes`", "`s2`"))
     scored = cands.select("query_id", "neighbor_id", score.alias("score")).dropDuplicates(
         ["query_id", "neighbor_id"]
     )
@@ -223,8 +219,6 @@ def pq_codebooks_seeded(
     instead of k-means-trained codewords so the whole index is
     SQL-rebuildable and the catalog entry hash-checks; see
     plans/vectorops.py _PQ_ADC_ORACLE). Driver cost: k rows."""
-    from cumulus_etl_spark.operators.similarity import first_k_centroids
-
     seeds = first_k_centroids(corpus, k, id_col=id_col, vec_col=vec_col)
     dim = len(seeds[0])
     if n_sub <= 0 or dim % n_sub:
@@ -257,45 +251,33 @@ def pq_encode(
     literal-tensor fix as lsh_signatures_all). Tie-break: array_position
     of the min = FIRST (lowest) codeword, identical to the struct-sort
     form."""
-    from cumulus_etl_spark.operators.similarity import as_double_array
-
-    v = as_double_array(vec_col)
+    v = as_double(f"`{vec_col}`")
     return corpus.select(
-        F.col(id_col).alias("id"), _pq_codes_expr(v, codebooks).alias("codes")
+        F.col(id_col).alias("id"), F.expr(_pq_codes_expr(v, codebooks)).alias("codes")
     )
 
 
-def _pq_subspace_dists(v: Column, m: int, sub: int, book: list[list[float]]) -> Column:
-    """array<double> of squared-L2 distances from vector subspace m to
-    every codeword — sequential fold per codeword, same doubles as the
-    unrolled form and as the oracle's list_sum."""
-    subvec = F.slice(v, m * sub + 1, sub)
-    return F.transform(
-        F.expr(double_array_sql(book, 2)),
-        lambda cw: F.aggregate(
-            F.zip_with(subvec, cw, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
+def _pq_subspace_dists(v: str, m: int, sub: int, book: list[list[float]]) -> str:
+    """array<double> of squared-L2 distances from subspace m of the vector
+    ``v`` to every codeword — sequential fold per codeword, same doubles
+    as the unrolled form and as the oracle's list_sum."""
+    subvec = f"slice({v}, {m * sub + 1}, {sub})"
+    return f"transform({double_array_sql(book, 2)}, __cw -> {sq_l2(subvec, '__cw')})"
 
 
-def _pq_codes_expr(v: Column, codebooks: list[list[list[float]]]) -> Column:
+def _pq_codes_expr(v: str, codebooks: list[list[list[float]]]) -> str:
+    """array<int> of the nearest codeword per subspace.
+
+    One-pass argmin: zip (d, j) and take the struct min — evaluates the
+    distance array once (array_position(min) walked it twice) and keeps
+    the lowest-j tie-break via lexicographic struct order."""
     sub = len(codebooks[0][0])
     k = len(codebooks[0])
-    code_cols = []
-    for m, book in enumerate(codebooks):
-        dists = _pq_subspace_dists(v, m, sub, book)
-        # one-pass argmin: zip (d, j) and take the struct min — evaluates
-        # the distance array once (array_position(min) walked it twice)
-        # and keeps the lowest-j tie-break via lexicographic struct order
-        zipped = F.zip_with(
-            dists,
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda d, j: F.struct(d.alias("d"), j.alias("j")),
-        )
-        code_cols.append(F.array_min(zipped)["j"].cast("int"))
-    return F.array(*code_cols)
+    return "array(" + ", ".join(
+        f"cast(array_min(zip_with({_pq_subspace_dists(v, m, sub, book)},"
+        f" sequence(0, {k - 1}), (d, j) -> struct(d AS d, j AS j))).j as int)"
+        for m, book in enumerate(codebooks)
+    ) + ")"
 
 
 def pq_adc_topk(
@@ -315,19 +297,16 @@ def pq_adc_topk(
     memory-bound scale path. Output: (query_id, rank, neighbor_id,
     approx_sq_dist), ascending distance, ties to the lower neighbor_id.
     """
-    from pyspark.sql import Window
-
-    from cumulus_etl_spark.operators.similarity import as_double_array
-
     n_sub = len(codebooks)
     sub = len(codebooks[0][0])
     enc = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
-    qv = as_double_array(vec_col)
-    dt_cols = [
-        _pq_subspace_dists(qv, m, sub, book) for m, book in enumerate(codebooks)
-    ]
+    qv = as_double(f"`{vec_col}`")
     q = queries.select(
-        F.col(id_col).alias("query_id"), *[c.alias(f"dt{m}") for m, c in enumerate(dt_cols)]
+        F.col(id_col).alias("query_id"),
+        *[
+            F.expr(_pq_subspace_dists(qv, m, sub, book)).alias(f"dt{m}")
+            for m, book in enumerate(codebooks)
+        ],
     )
     pairs = enc.crossJoin(F.broadcast(q))
     if exclude_self:
@@ -369,7 +348,7 @@ def pq_codebooks_trained(
     import numpy as np
 
     sample = (
-        corpus.select(as_double_array(vec_col).alias("v"))
+        corpus.select(F.expr(as_double(f"`{vec_col}`")).alias("v"))
         .orderBy(F.rand(seed))
         .limit(sample_rows)
         .collect()

@@ -11,8 +11,23 @@ Two paths, per the scale plan:
   bucket key instead of a full cross product; recall tunable via
   planes/probes.
 
-All vector math is done with zip_with/aggregate on array<double> — stays
-JVM-side; no Python per-row cost.
+Every vector primitive below is a SQL-text builder: it takes SQL text for
+its operands (a column is its backquoted name, `` `embedding` ``) and
+returns SQL text, and the call site wraps the result in one ``F.expr``.
+The math runs as zip_with/aggregate/transform on array<double>, JVM-side,
+with no Python per-row cost.
+
+There is one form, not a Column form beside it, because a Python lambda
+handed to a Spark higher-order function costs py4j round trips at plan
+build, paid again at every build, while the JVM parses a whole string in
+one call. The parsed tree is the one the Column API builds: the same
+sequential folds in the same order, so the doubles stay bit-equal to the
+DuckDB oracles' list_sum folds.
+
+Builders compose by nesting text. Where a builder puts an operand inside
+a lambda body (the centroid and plane loops), its own variables carry a
+``__`` prefix, so an operand naming a column cannot be captured by them;
+the folds' ``x``, ``y`` and ``acc`` never enclose operand text.
 """
 
 from __future__ import annotations
@@ -20,55 +35,33 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def as_double_array(c: Column | str) -> Column:
-    col = F.col(c) if isinstance(c, str) else c
-    return F.transform(col, lambda x: x.cast("double"))
+def as_double(v: str) -> str:
+    return f"transform({v}, x -> cast(x as double))"
 
 
-def dot(a: Column, b: Column) -> Column:
+def dot(a: str, b: str) -> str:
     """Sequential-fold dot product (deterministic order)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-# -- SQL-string forms of the vector math (r14 opt, the double_array_sql
-# discipline): every Python-API lambda (zip_with/aggregate/transform)
-# costs a _create_lambda round-trip storm on py4j at PLAN BUILD time —
-# cProfile put ~0.7 s of vector_ann_lsh's 1.3 s bench entry in py4j
-# socket reads. The strings below parse in the JVM in one call and
-# produce the IDENTICAL expression tree (same sequential fold, same op
-# order), so values are bit-equal — pinned by the signature A/B and the
-# recall oracles. Use these on hot build paths where the operands are
-# plain column names; keep the Column forms for composability. --
-
-
-def _as_double_sql(col: str) -> str:
-    return f"transform(`{col}`, x -> cast(x as double))"
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of ``dot`` over two array expressions (already-quoted)."""
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
-def _cosine_sql(a: str, b: str) -> str:
-    """SQL text of ``cosine`` over two column NAMES — same op order as
-    the Column form: dot / (sqrt(dot(a,a)) * sqrt(dot(b,b)))."""
-    qa, qb = f"`{a}`", f"`{b}`"
+def l2_norm(a: str) -> str:
+    return f"sqrt({dot(a, a)})"
+
+
+def cosine(a: str, b: str) -> str:
+    return f"({dot(a, b)} / ({l2_norm(a)} * {l2_norm(b)}))"
+
+
+def sq_l2(a: str, b: str) -> str:
+    """Sequential-fold squared Euclidean distance (deterministic order —
+    matches DuckDB's list_sum over list_zip fold bit-for-bit)."""
     return (
-        f"({_dot_sql(qa, qb)} / "
-        f"(sqrt({_dot_sql(qa, qa)}) * sqrt({_dot_sql(qb, qb)})))"
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0D,"
+        f" (acc, x) -> acc + x)"
     )
 
 
@@ -85,17 +78,14 @@ def knn_bruteforce(
     Output: (query_id, neighbor_id, rank, score). Ties broken by
     neighbor_id so results are total-ordered and reproducible.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.expr(_as_double_sql(vec_col)).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.expr(_as_double_sql(vec_col)).alias("cv")
-    )
+    v = F.expr(as_double(f"`{vec_col}`"))
+    q = queries.select(F.col(id_col).alias("query_id"), v.alias("qv"))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), v.alias("cv"))
     scored = c.join(F.broadcast(q))
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     scored = scored.select(
-        "query_id", "neighbor_id", F.expr(_cosine_sql("qv", "cv")).alias("score")
+        "query_id", "neighbor_id", F.expr(cosine("`qv`", "`cv`")).alias("score")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
@@ -136,18 +126,6 @@ def rademacher_planes_md5(dim: int, planes: int, tables: int) -> list[list[list[
     ]
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit j = sign(vec · plane_j), packed to a long."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(x) for x in plane])) >= 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-        for j, plane in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def double_array_sql(xs, depth: int) -> str:
     """SQL literal for a ``depth``-level nested list of doubles, e.g. the
     tables×planes×dim LSH tensor (3) or a k×dim centroid matrix (2).
@@ -163,48 +141,19 @@ def double_array_sql(xs, depth: int) -> str:
     return "array(" + ",".join(double_array_sql(x, depth - 1) for x in xs) + ")"
 
 
-def lsh_signatures_all(
-    vec: Column | str, all_planes: list[list[list[float]]]
-) -> Column:
-    """Array of per-table sign-bit bucket ids, as ONE expression.
+def lsh_signatures_all(v: str, all_planes: list[list[list[float]]]) -> str:
+    """Array of per-table sign-bit bucket ids over the vector ``v``: bit
+    j of table t is set iff ``dot(v, plane_tj) >= 0``, packed to a long
+    with bitwise or.
 
-    Equivalent to ``array(lsh_signature(vec, t) for t in all_planes)``
-    but the coefficient tensor is a single literal and the loops are
+    The coefficient tensor is a single literal and the loops are
     higher-order functions, so the expression tree stays O(1) in
-    tables×planes instead of O(t×p×dim).
-
-    Pass ``vec`` as a COLUMN NAME to get the whole expression as one
-    parsed SQL literal (r14 opt, the double_array_sql discipline): the
-    Python-API form pays ~6 lambda constructions × hundreds of py4j
-    round trips of pure driver time at every plan build (~0.45 s of
-    vector_ann_lsh's 1.3 s bench entry, measured by cProfile — all of
-    it socket recv on py4j). Same arithmetic either way: sequential
-    zip_with/aggregate fold per plane, sign test, 1<<j bit packed with
-    bitwise or — the A/B signature check pins value equality."""
-    if isinstance(vec, str):
-        v = f"`{vec}`"
-        sig_sql = (
-            f"transform({double_array_sql(all_planes, 3)}, tbl -> aggregate("
-            f"transform(tbl, (plane, j) -> IF("
-            f"aggregate(zip_with({v}, plane, (x, y) -> x * y), 0D,"
-            f" (acc, x) -> acc + x) >= 0D, shiftleft(1L, j), 0L)),"
-            f" 0L, (acc, x) -> acc | x))"
-        )
-        return F.expr(sig_sql)
-    n_planes = len(all_planes[0])
-    powers = F.expr("array(" + ",".join(str(1 << j) + "L" for j in range(n_planes)) + ")")
-    return F.transform(
-        F.expr(double_array_sql(all_planes, 3)),
-        lambda tbl: F.aggregate(
-            F.transform(
-                tbl,
-                lambda plane, j: F.when(dot(vec, plane) >= 0, F.element_at(powers, j + 1)).otherwise(
-                    F.lit(0).cast("long")
-                ),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc.bitwiseOR(x),
-        ),
+    tables×planes instead of O(t×p×dim)."""
+    return (
+        f"transform({double_array_sql(all_planes, 3)}, __tbl -> aggregate("
+        f"transform(__tbl, (__plane, __j) -> IF("
+        f"{dot(v, '__plane')} >= 0D, shiftleft(1L, __j), 0L)),"
+        f" 0L, (acc, x) -> acc | x))"
     )
 
 
@@ -241,12 +190,12 @@ def ann_lsh(
     def with_buckets(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
         base = df.select(
             F.col(id_col).alias(id_alias),
-            F.expr(_as_double_sql(vec_col)).alias(vec_alias),
+            F.expr(as_double(f"`{vec_col}`")).alias(vec_alias),
         )
         return base.select(
             id_alias,
             vec_alias,
-            F.posexplode(lsh_signatures_all(vec_alias, all_planes)).alias(
+            F.posexplode(F.expr(lsh_signatures_all(f"`{vec_alias}`", all_planes))).alias(
                 "table_idx", "bucket"
             ),
         )
@@ -260,7 +209,7 @@ def ann_lsh(
         cands = cands.filter(F.col("query_id") != F.col("neighbor_id"))
     cands = cands.dropDuplicates(["query_id", "neighbor_id"])
     scored = cands.select(
-        "query_id", "neighbor_id", F.expr(_cosine_sql("qv", "cv")).alias("score")
+        "query_id", "neighbor_id", F.expr(cosine("`qv`", "`cv`")).alias("score")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
@@ -293,7 +242,7 @@ def train_ivf_centroids(
     import numpy as np
 
     sample = (
-        corpus.select(as_double_array(vec_col).alias("v"))
+        corpus.select(F.expr(as_double(f"`{vec_col}`")).alias("v"))
         .orderBy(F.rand(seed))
         .limit(sample_rows)
         .collect()
@@ -313,22 +262,20 @@ def train_ivf_centroids(
     return cents.tolist()
 
 
-def _nearest_centroids(vec: Column, centroids: list[list[float]], n: int) -> Column:
-    """Array of the ``n`` nearest centroid ids by cosine (literal
-    centroids — broadcast as constants, KBs).
+def nearest_centroids(v: str, centroids: list[list[float]], n: int) -> str:
+    """Array of the ``n`` nearest centroid ids to the vector ``v`` by
+    cosine, ties to the higher id (literal centroids — broadcast as
+    constants, KBs).
 
     The centroid matrix is ONE parsed SQL literal + a higher-order
-    transform (r13 opt): the previous per-centroid unrolled form cost
-    k×dim py4j literal constructions per call (~1.8 s of driver time for
-    16×32) and a plan tree that grew with k. Same scores, same
-    (s, c)-struct sort, same tie-break — the struct comparison and the
-    cosine arithmetic are unchanged."""
-    cmat = F.expr(double_array_sql(centroids, 2))
-    scored = F.transform(
-        cmat, lambda c, i: F.struct(cosine(vec, c).alias("s"), i.alias("c"))
+    transform: a per-centroid unrolled form cost k×dim py4j literal
+    constructions per call (~1.8 s of driver time for 16×32) and a plan
+    tree that grew with k."""
+    scored = (
+        f"transform({double_array_sql(centroids, 2)},"
+        f" (__c, __i) -> struct({cosine(v, '__c')} AS s, __i AS c))"
     )
-    top = F.slice(F.reverse(F.array_sort(scored)), 1, n)
-    return F.transform(top, lambda t: t["c"])
+    return f"transform(slice(reverse(array_sort({scored})), 1, {n}), __t -> __t.c)"
 
 
 def ann_ivf(
@@ -354,22 +301,22 @@ def ann_ivf(
         centroids = train_ivf_centroids(
             corpus, n_centroids=n_centroids, vec_col=vec_col, seed=seed
         )
-    cv = as_double_array(vec_col)
+    v = as_double(f"`{vec_col}`")
     lists = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        cv.alias("cvec"),
-        F.element_at(_nearest_centroids(cv, centroids, 1), 1).alias("centroid"),
+        F.expr(v).alias("cvec"),
+        F.expr(f"element_at({nearest_centroids(v, centroids, 1)}, 1)").alias("centroid"),
     )
     probes = queries.select(
         F.col(id_col).alias("query_id"),
-        cv.alias("qvec"),
-        F.explode(_nearest_centroids(cv, centroids, n_probe)).alias("centroid"),
+        F.expr(v).alias("qvec"),
+        F.explode(F.expr(nearest_centroids(v, centroids, n_probe))).alias("centroid"),
     )
     cands = lists.join(F.broadcast(probes), "centroid")
     if exclude_self:
         cands = cands.filter(F.col("query_id") != F.col("neighbor_id"))
     scored = cands.select(
-        "query_id", "neighbor_id", cosine(F.col("qvec"), F.col("cvec")).alias("score")
+        "query_id", "neighbor_id", F.expr(cosine("`qvec`", "`cvec`")).alias("score")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
@@ -384,16 +331,6 @@ def ann_ivf(
 # ---------------------------------------------------------------------------
 
 
-def sq_l2(a: Column, b: Column) -> Column:
-    """Sequential-fold squared Euclidean distance (deterministic order —
-    matches DuckDB's list_sum over list_zip fold bit-for-bit)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def first_k_centroids(
     corpus: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> list[list[float]]:
@@ -402,26 +339,23 @@ def first_k_centroids(
     rows = (
         corpus.orderBy(id_col)
         .limit(k)
-        .select(as_double_array(vec_col).alias("v"))
+        .select(F.expr(as_double(f"`{vec_col}`")).alias("v"))
         .collect()
     )
     return [r["v"] for r in rows]
 
 
-def nearest_centroid_l2(vec: Column, centroids: list[list[float]]) -> Column:
-    """struct(cluster, sq_dist) of the nearest centroid by squared L2
-    (ties break to the lowest cluster id). Centroids are plan literals —
-    shipped once with the task closure, KBs even at k=1024; assignment is
-    a pure whole-stage-codegen expression scan, no join, no shuffle."""
-    # One parsed SQL literal + higher-order transform (r13 opt) — see
-    # _nearest_centroids: identical (d, c) structs and sort, without the
-    # k×dim py4j literal constructions at plan-build time.
-    cmat = F.expr(double_array_sql(centroids, 2))
-    scored = F.transform(
-        cmat, lambda c, i: F.struct(sq_l2(vec, c).alias("d"), i.alias("c"))
+def nearest_centroid_l2(v: str, centroids: list[list[float]]) -> str:
+    """struct(cluster, sq_dist) of the nearest centroid to the vector
+    ``v`` by squared L2 (ties break to the lowest cluster id). Centroids
+    are one parsed plan literal — shipped once with the task closure, KBs
+    even at k=1024; assignment is a pure whole-stage-codegen expression
+    scan, no join, no shuffle."""
+    best = (
+        f"element_at(array_sort(transform({double_array_sql(centroids, 2)},"
+        f" (__c, __i) -> struct({sq_l2(v, '__c')} AS d, __i AS c))), 1)"
     )
-    best = F.element_at(F.array_sort(scored), 1)
-    return F.struct(best["c"].alias("cluster"), best["d"].alias("sq_dist"))
+    return f"struct({best}.c AS cluster, {best}.d AS sq_dist)"
 
 
 # Above this many literal doubles (k·dim), the unrolled argmin expression
@@ -450,9 +384,10 @@ def assign_clusters(
     equivalence in tests/test_similarity_extra.py)."""
     k, dim = len(cents), len(cents[0])
     if k * dim <= literal_limit:
-        best = nearest_centroid_l2(F.col("v"), cents)
+        best = nearest_centroid_l2("`v`", cents)
         return base.select(
-            "id", "v", best["cluster"].alias("cluster"), best["sq_dist"].alias("sq_dist")
+            "id", "v", F.expr(f"{best}.cluster").alias("cluster"),
+            F.expr(f"{best}.sq_dist").alias("sq_dist"),
         )
     spark = base.sparkSession
     cents_df = spark.createDataFrame(
@@ -461,9 +396,7 @@ def assign_clusters(
     )
     scored = base.crossJoin(F.broadcast(cents_df)).select(
         "id",
-        F.struct(
-            sq_l2(F.col("v"), F.col("cv")).alias("d"), F.col("c").alias("c")
-        ).alias("dc"),
+        F.struct(F.expr(sq_l2("`v`", "`cv`")).alias("d"), F.col("c").alias("c")).alias("dc"),
     )
     best = (
         scored.groupBy("id")
@@ -514,9 +447,7 @@ def assign_clusters_two_level(
     # fine argmin: each vector meets only ITS cell's ≤k2 sub-centroids
     scored = coarse.join(F.broadcast(cents2), "sup").select(
         "id",
-        F.struct(
-            sq_l2(F.col("v"), F.col("cv")).alias("d"), F.col("r").alias("r")
-        ).alias("dc"),
+        F.struct(F.expr(sq_l2("`v`", "`cv`")).alias("d"), F.col("r").alias("r")).alias("dc"),
     )
     best = scored.groupBy("id").agg(F.min("dc").alias("b"))
     return coarse.join(best, "id").select(
@@ -547,7 +478,7 @@ def kmeans_lloyd(
     """
     cents = first_k_centroids(corpus, k, id_col=id_col, vec_col=vec_col)
     dim = len(cents[0])
-    base = corpus.select(F.col(id_col).alias("id"), as_double_array(vec_col).alias("v"))
+    base = corpus.select(F.col(id_col).alias("id"), F.expr(as_double(f"`{vec_col}`")).alias("v"))
     inertias: list[float] = []
     for _ in range(iters):
         assigned = assign_clusters(base, cents, literal_limit=literal_limit)
@@ -601,12 +532,11 @@ def semdedup(
 
     Output: one row per vector — (id, cluster, keep).
     """
-    v = as_double_array(vec_col)
     # Normalize ONCE before the pairwise stage: cosine of pre-normalized
     # vectors is a plain dot product, so the O(cluster²) stage does half
     # the arithmetic (no per-pair norms/sqrt). The assignment still runs
     # on the raw vector — centroid distances are L2 in the original space.
-    base = corpus.select(F.col(id_col).alias("id"), v.alias("v"))
+    base = corpus.select(F.col(id_col).alias("id"), F.expr(as_double(f"`{vec_col}`")).alias("v"))
     if two_level:
         if centroids is not None:
             raise ValueError("two_level picks its own centroids; pass k only")
@@ -620,12 +550,8 @@ def semdedup(
         flat_assigned = assign_clusters(base, centroids, literal_limit=literal_limit)
     assigned = (
         flat_assigned.select("id", "v", "cluster")
-        .withColumn("n", l2_norm(F.col("v")))
-        .select(
-            "id",
-            "cluster",
-            F.transform(F.col("v"), lambda x: x / F.col("n")).alias("vn"),
-        )
+        .withColumn("n", F.expr(l2_norm("`v`")))
+        .select("id", "cluster", F.expr("transform(`v`, x -> x / `n`)").alias("vn"))
         # Pin the assignment: it feeds BOTH pair sides and the final keep
         # join, and the k-fold argmin is the expensive expression — without
         # this it re-executes once per consumer (measured 3× the wall).
@@ -637,7 +563,7 @@ def semdedup(
     )
     dropped = (
         a.join(b, (F.col("cluster") == F.col("cluster_b")) & (F.col("id_a") < F.col("id_b")))
-        .filter(dot(F.col("va"), F.col("vb")) >= threshold)
+        .filter(F.expr(dot("`va`", "`vb`")) >= threshold)
         .select(F.col("id_b").alias("id"))
         .distinct()
         .withColumn("is_dup", F.lit(True))
@@ -864,19 +790,18 @@ def mine_hard_negatives(
     the LSH/IVF candidate streams through the same filter instead of
     the exact scorer.
     """
+    v = F.expr(as_double(f"`{vec_col}`"))
     q = (queries if queries is not None else corpus).select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
+        F.col(id_col).alias("query_id"), v.alias("qv")
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("cv")
-    )
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), v.alias("cv"))
     scored = (
         c.join(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            cosine(F.col("qv"), F.col("cv")).alias("score"),
+            F.expr(cosine("`qv`", "`cv`")).alias("score"),
         )
         .filter(F.col("score") < dup_threshold)  # drop near-dup false negatives
     )

@@ -21,6 +21,7 @@ from cumulus_etl_spark.sources import table
 
 _N_QUERIES = 5
 _K = 5
+_EMB = S.as_double("`embedding`")
 
 _KNN_ORACLE = f"""
 WITH vecs AS (
@@ -182,7 +183,7 @@ def vector_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF structure mirrored in SQL: coarse centroids are the {n} lowest-id
 # corpus vectors themselves (first_k_centroids — SQL-rebuildable, unlike
 # a numpy-k-means fit), cosine assignment/probes tie-break (score DESC,
-# centroid DESC) exactly like _nearest_centroids' array_sort+reverse.
+# centroid DESC) exactly like nearest_centroids' array_sort+reverse.
 def _ivf_ctes(n_centroids: int, n_probe: int) -> str:
     return f"""
 vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -277,11 +278,11 @@ def vector_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     would be an LSH bucket (see ann_lsh) — the plan shape is identical:
     self-join on block key + triangular id filter + threshold."""
     emb = table(spark, sf_dir, "embeddings")
-    a = emb.select(F.col("vec_id").alias("id_a"), "label", S.as_double_array("embedding").alias("va"))
+    a = emb.select(F.col("vec_id").alias("id_a"), "label", F.expr(_EMB).alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("label").alias("label_b"),
-                   S.as_double_array("embedding").alias("vb"))
+                   F.expr(_EMB).alias("vb"))
     pairs = a.join(b, (F.col("label") == F.col("label_b")) & (F.col("id_a") < F.col("id_b")))
-    score = S.cosine(F.col("va"), F.col("vb"))
+    score = F.expr(S.cosine("`va`", "`vb`"))
     return (
         pairs.select("id_a", "id_b", score.alias("raw_score"))
         .filter(F.col("raw_score") >= 0.93)
@@ -307,11 +308,10 @@ def vector_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label vector stats; norms summed via DECIMAL for order-
     independent equality."""
     emb = table(spark, sf_dir, "embeddings")
-    v = S.as_double_array("embedding")
     return (
         emb.select(
             "label",
-            S.l2_norm(v).cast("decimal(18,6)").alias("norm"),
+            F.expr(S.l2_norm(_EMB)).cast("decimal(18,6)").alias("norm"),
             F.size("embedding").alias("dim"),
         )
         .groupBy("label")
@@ -580,11 +580,9 @@ def vector_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     inertia); the oracle hash-checks the assignment+summary step, which is
     the per-iteration distributed workload."""
     emb = table(spark, sf_dir, "embeddings")
-    cents = S.first_k_centroids(emb, 8)
-    v = S.as_double_array("embedding")
-    best = S.nearest_centroid_l2(v, cents)
+    best = S.nearest_centroid_l2(_EMB, S.first_k_centroids(emb, 8))
     assigned = emb.select(
-        best["cluster"].alias("cluster"), best["sq_dist"].alias("d")
+        F.expr(f"{best}.cluster").alias("cluster"), F.expr(f"{best}.sq_dist").alias("d")
     )
     return assigned.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_vecs"),
@@ -819,19 +817,18 @@ def vector_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from cumulus_etl_spark.operators.quantize import pq_adc_topk, pq_codebooks_seeded
-    from cumulus_etl_spark.operators.similarity import as_double_array, sq_l2
 
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     books = pq_codebooks_seeded(emb, n_sub=16, k=32)
     pq = pq_adc_topk(emb, queries, books, k=_K).select("query_id", "neighbor_id")
-    a = queries.select(F.col("vec_id").alias("query_id"), as_double_array("embedding").alias("qv"))
-    b = emb.select(F.col("vec_id").alias("neighbor_id"), as_double_array("embedding").alias("cv"))
+    a = queries.select(F.col("vec_id").alias("query_id"), F.expr(_EMB).alias("qv"))
+    b = emb.select(F.col("vec_id").alias("neighbor_id"), F.expr(_EMB).alias("cv"))
     w = Window.partitionBy("query_id").orderBy(F.asc("d"), F.asc("neighbor_id"))
     exact = (
         b.crossJoin(F.broadcast(a))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sq_l2(F.col("qv"), F.col("cv")).alias("d"))
+        .select("query_id", "neighbor_id", F.expr(S.sq_l2("`qv`", "`cv`")).alias("d"))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= _K)
         .select("query_id", "neighbor_id")
@@ -888,15 +885,11 @@ def vector_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB it's a single scan. Per-point scores rounded then
     decimal-summed (order-independent equality, plans/catalog.py rules)."""
     emb = table(spark, sf_dir, "embeddings")
-    cents = S.first_k_centroids(emb, 8)
-    v = S.as_double_array("embedding")
-    # One parsed SQL literal + transform (r13 opt, see S.double_array_sql):
-    # identical (d, c) structs/sort without per-element py4j literals.
-    scored = F.transform(
-        F.expr(S.double_array_sql(cents, 2)),
-        lambda c, i: F.struct(F.sqrt(S.sq_l2(v, c)).alias("d"), i.alias("c")),
+    cents = S.double_array_sql(S.first_k_centroids(emb, 8), 2)
+    srt = F.expr(
+        f"array_sort(transform({cents},"
+        f" (__c, __i) -> struct(sqrt({S.sq_l2(_EMB, '__c')}) AS d, __i AS c)))"
     )
-    srt = F.array_sort(scored)
     a = F.element_at(srt, 1)["d"]
     own = F.element_at(srt, 1)["c"]
     b = F.element_at(srt, 2)["d"]
@@ -1007,12 +1000,9 @@ def vector_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     nv = (
-        emb.select(F.col("vec_id"), S.as_double_array("embedding").alias("v"))
-        .withColumn("n", S.l2_norm(F.col("v")))
-        .select(
-            "vec_id",
-            F.transform(F.col("v"), lambda x: x / F.col("n")).alias("vn"),
-        )
+        emb.select(F.col("vec_id"), F.expr(_EMB).alias("v"))
+        .withColumn("n", F.expr(S.l2_norm("`v`")))
+        .select("vec_id", F.expr("transform(`v`, x -> x / `n`)").alias("vn"))
     )
     q = nv.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vn").alias("qv")
@@ -1024,7 +1014,7 @@ def vector_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.round(S.dot(F.col("qv"), F.col("cv")) * 1e6, 0)
+            F.round(F.expr(S.dot("`qv`", "`cv`")) * 1e6, 0)
             .cast("long")
             .alias("rel_micro"),
             "cv",
@@ -1046,7 +1036,7 @@ def vector_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("query_id") == F.col("qb")) & (F.col("ia") != F.col("ib")))
         .select(
             "query_id", "ia", "ib",
-            F.round(S.dot(F.col("va"), F.col("vb")) * 1e6, 0)
+            F.round(F.expr(S.dot("`va`", "`vb`")) * 1e6, 0)
             .cast("long")
             .alias("sim_micro"),
         )

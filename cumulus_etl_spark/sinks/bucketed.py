@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -45,7 +45,3 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(*bucket_keys)
     writer.saveAsTable(table_name)
-
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)

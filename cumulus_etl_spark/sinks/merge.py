@@ -205,11 +205,6 @@ class MergePolicy:
     # dotted path of the ISO-string timestamp used as the freshness guard;
     # None disables the guard (always update on match)
     last_updated_field: str | None = "meta.lastUpdated"
-    # multi-column file clustering: interleave the bits of these numeric
-    # columns (Z-order / Morton, the strategy behind Delta OPTIMIZE
-    # ZORDER) so min/max footers prune on ALL of them, not just the
-    # leading sort key. None keeps plain lexicographic key clustering.
-    zorder_cols: tuple[str, ...] | None = None
     # emit a change feed (insert / update pre+post images / delete rows)
     # per merge version under <table>/changes/vN — the fallback analog of
     # Delta change data feed (delta.enableChangeDataFeed); read it back
@@ -756,7 +751,7 @@ class ManagedTable:
         return self._write_raw(
             df, policy.bucket_cols, num_buckets,
             sort_cols=policy.keys, touched=touched, prev=prev,
-            zorder_cols=policy.zorder_cols, change_feed=policy.change_feed,
+            change_feed=policy.change_feed,
             pre_bucketed=pre_bucketed, fold=touched is None, contract=contract,
         )
 
@@ -768,7 +763,6 @@ class ManagedTable:
         sort_cols: tuple[str, ...],
         touched: list[int] | None,
         prev: dict | None,
-        zorder_cols: tuple[str, ...] | None = None,
         change_feed: bool = False,
         pre_bucketed: bool = False,
         fold: bool = False,
@@ -797,15 +791,9 @@ class ManagedTable:
             bucketed = df.withColumn(
                 BUCKET_COL, _bucket_expr(bucket_cols, num_buckets)
             ).repartition(F.col(BUCKET_COL))
-        if zorder_cols:
-            from cumulus_etl_spark.operators.zorder import zorder_key
-
-            order: list = [BUCKET_COL, zorder_key(df, list(zorder_cols))]
-        else:
-            order = [BUCKET_COL, *sort_cols]
         (
             bucketed
-            .sortWithinPartitions(*order)
+            .sortWithinPartitions(BUCKET_COL, *sort_cols)
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(out)

@@ -205,7 +205,7 @@ def documentreferences(spark: SparkSession, csv_path: str) -> DataFrame:
         F.struct(F.array(_ref("Encounter", F.col("encounter_num"))).alias("encounter")).alias(
             "context"
         ),
-        F.col("start_date").alias("date"),
+        _chop_date(F.col("start_date")).alias("date"),
         F.array(
             F.struct(
                 F.struct(

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import base64
+import json
 import os
 
 from cumulus_etl_spark.deid import Scrubber
@@ -106,6 +107,7 @@ def test_docrefs_and_meds(spark, tmp_path):
         [(1, 1, 10, "NOTE:x", "2021-01-01 11:00:00", "Progress note", "hello world")],
     )
     doc = i2b2.documentreferences(spark, path).collect()[0]
+    assert doc["date"] == "2021-01-01"  # chopped like every other i2b2 date
     assert base64.b64decode(doc["content"][0]["attachment"]["data"]).decode() == "hello world"
     assert doc["context"]["encounter"][0]["reference"] == "Encounter/10"
     med = i2b2.medicationrequests(spark, path).collect()[0]
@@ -220,6 +222,9 @@ def test_run_etl_i2b2_end_to_end(spark, tmp_path):
     # staged raw rows stay on the PHI side
     staged = glob.glob(os.path.join(phi, STAGING_DIR, "**", "*.ndjson"), recursive=True)
     assert staged
+    docs = [json.loads(line) for path in staged for line in Path(path).read_text().splitlines()
+            if '"resourceType":"DocumentReference"' in line]
+    assert [d["date"] for d in docs] == ["2021-01-01"]
     assert not glob.glob(os.path.join(out, "**", "*.ndjson"), recursive=True)
 
     # the staging tree is replaced: a dump without visits stages no Encounter

@@ -730,24 +730,6 @@ def test_time_travel_read(spark, tmp_path):
         t.read(version=1)
 
 
-def test_zorder_clustered_write_roundtrip(spark, tmp_path):
-    """A MergePolicy with zorder_cols writes Morton-clustered files on the
-    parquet fallback; merge semantics and read-back are unchanged."""
-    tbl = ManagedTable(spark, str(tmp_path), "events")
-    pol = MergePolicy(keys=("id",), last_updated_field=None, zorder_cols=("x", "y"))
-    df = spark.createDataFrame(
-        [(str(i), i % 10, (i * 7) % 10) for i in range(100)],
-        "id string, x int, y int",
-    )
-    tbl.merge(df, pol)
-    assert tbl.read().count() == 100
-
-    upd = spark.createDataFrame([("5", 99, 99)], "id string, x int, y int")
-    tbl.merge(upd, pol)
-    got = {r["id"]: (r["x"], r["y"]) for r in tbl.read().collect()}
-    assert len(got) == 100 and got["5"] == (99, 99)
-
-
 def test_change_data_feed_classifies_and_accumulates(spark, tmp_path):
     """Fallback CDF: inserts, update pre/post images, group deletes and
     id deletes all land in the per-version change feed."""

@@ -61,7 +61,7 @@ def test_int8_topk_approximates_float_dot(spark):
     import random
 
     from cumulus_etl_spark.operators.quantize import int8_topk
-    from cumulus_etl_spark.operators.similarity import as_double_array, dot
+    from cumulus_etl_spark.operators.similarity import as_double, dot
 
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-2, 2) for _ in range(16)]) for i in range(30)]
@@ -69,12 +69,12 @@ def test_int8_topk_approximates_float_dot(spark):
     queries = emb.filter(F.col("vec_id") < 3)
 
     approx = int8_topk(emb, queries, k=29)
-    a = emb.select(F.col("vec_id").alias("query_id"), as_double_array("embedding").alias("qv"))
-    b = emb.select(F.col("vec_id").alias("neighbor_id"), as_double_array("embedding").alias("cv"))
+    a = emb.select(F.col("vec_id").alias("query_id"), F.expr(as_double("`embedding`")).alias("qv"))
+    b = emb.select(F.col("vec_id").alias("neighbor_id"), F.expr(as_double("`embedding`")).alias("cv"))
     exact = (
         a.filter(F.col("query_id") < 3)
         .join(b, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", dot(F.col("qv"), F.col("cv")).alias("true_dot"))
+        .select("query_id", "neighbor_id", F.expr(dot("`qv`", "`cv`")).alias("true_dot"))
     )
     joined = approx.join(exact, ["query_id", "neighbor_id"]).collect()
     assert len(joined) == 3 * 29
@@ -147,7 +147,7 @@ def test_pq_adc_recall_vs_exact_l2(spark, sf_correct):
     from pyspark.sql import Window
 
     from cumulus_etl_spark.operators.quantize import pq_adc_topk, pq_codebooks_seeded
-    from cumulus_etl_spark.operators.similarity import as_double_array, sq_l2
+    from cumulus_etl_spark.operators.similarity import as_double, sq_l2
     from cumulus_etl_spark.sources import table
 
     emb = table(spark, sf_correct, "embeddings")
@@ -155,12 +155,12 @@ def test_pq_adc_recall_vs_exact_l2(spark, sf_correct):
     books = pq_codebooks_seeded(emb, n_sub=16, k=32)
     pq = {(r["query_id"], r["neighbor_id"])
           for r in pq_adc_topk(emb, q, books, k=5).collect()}
-    a = q.select(F.col("vec_id").alias("query_id"), as_double_array("embedding").alias("qv"))
-    b = emb.select(F.col("vec_id").alias("neighbor_id"), as_double_array("embedding").alias("cv"))
+    a = q.select(F.col("vec_id").alias("query_id"), F.expr(as_double("`embedding`")).alias("qv"))
+    b = emb.select(F.col("vec_id").alias("neighbor_id"), F.expr(as_double("`embedding`")).alias("cv"))
     pairs = b.crossJoin(F.broadcast(a)).filter(F.col("query_id") != F.col("neighbor_id"))
     w = Window.partitionBy("query_id").orderBy(F.asc("d"), F.asc("neighbor_id"))
     exact = {(r["query_id"], r["neighbor_id"]) for r in
-             pairs.select("query_id", "neighbor_id", sq_l2(F.col("qv"), F.col("cv")).alias("d"))
+             pairs.select("query_id", "neighbor_id", F.expr(sq_l2("`qv`", "`cv`")).alias("d"))
              .withColumn("r", F.row_number().over(w)).filter("r <= 5").collect()}
     recall = len(pq & exact) / len(exact)
     assert recall >= 0.4, recall  # chance level is 5/499 ≈ 0.01

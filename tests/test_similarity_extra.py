@@ -1,9 +1,11 @@
 """Vector similarity tests: IVF ANN determinism + recall vs the
-brute-force oracle, and the centroid-assignment paths of k-means and
-SemDeDup (operators/similarity.py)."""
+brute-force oracle, the centroid-assignment paths of k-means and
+SemDeDup, and the SQL-text vector builders (operators/similarity.py)."""
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.operators.similarity import ann_ivf, knn_bruteforce, train_ivf_centroids
@@ -53,8 +55,7 @@ def test_kmeans_lloyd_inertia_monotone_and_deterministic(spark, sf_smoke):
 
 def test_semdedup_keeps_lowest_id_per_duplicate_group(spark, sf_smoke):
     from cumulus_etl_spark.operators.similarity import (
-        as_double_array,
-        cosine,
+        as_double,
         first_k_centroids,
         semdedup,
     )
@@ -71,7 +72,7 @@ def test_semdedup_keeps_lowest_id_per_duplicate_group(spark, sf_smoke):
     # SAME cluster sits at cosine >= threshold.
     vecs = {
         r["vec_id"]: r["v"]
-        for r in emb.select("vec_id", as_double_array("embedding").alias("v")).collect()
+        for r in emb.select("vec_id", F.expr(as_double("`embedding`")).alias("v")).collect()
     }
     import math
 
@@ -95,7 +96,7 @@ def test_mmr_rerank_diversifies_and_keeps_relevance_order_first(spark, sf_smoke)
     import math
 
     from cumulus_etl_spark.operators.similarity import (
-        as_double_array,
+        as_double,
         knn_bruteforce,
         mmr_rerank,
     )
@@ -107,7 +108,7 @@ def test_mmr_rerank_diversifies_and_keeps_relevance_order_first(spark, sf_smoke)
     knn = knn_bruteforce(emb, queries, k=20)
     cands = knn.join(
         emb.select(F.col("vec_id").alias("neighbor_id"),
-                   as_double_array("embedding").alias("cvec")),
+                   F.expr(as_double("`embedding`")).alias("cvec")),
         "neighbor_id",
     )
     out = mmr_rerank(cands, lam=0.5, k=5).collect()
@@ -115,7 +116,7 @@ def test_mmr_rerank_diversifies_and_keeps_relevance_order_first(spark, sf_smoke)
     for r in out:
         by_q.setdefault(r["query_id"], []).append(r)
     vecs = {r["vec_id"]: r["v"] for r in
-            emb.select("vec_id", as_double_array("embedding").alias("v")).collect()}
+            emb.select("vec_id", F.expr(as_double("`embedding`")).alias("v")).collect()}
 
     def cos(a, b):
         d = sum(x * y for x, y in zip(a, b))
@@ -198,7 +199,7 @@ def test_assign_clusters_two_level_matches_python_reference(spark, sf_smoke):
     Python (coarse argmin over k1 lowest-id vectors, fine argmin over
     the k2 lowest-id members of the coarse cell, (d, idx) tie-break)."""
     from cumulus_etl_spark.operators.similarity import (
-        as_double_array,
+        as_double,
         assign_clusters_two_level,
     )
     from cumulus_etl_spark.sources import table
@@ -207,7 +208,7 @@ def test_assign_clusters_two_level_matches_python_reference(spark, sf_smoke):
     k1, k2 = 3, 3
     emb = table(spark, sf_smoke, "embeddings")
     base = emb.select(
-        F.col("vec_id").alias("id"), as_double_array("embedding").alias("v")
+        F.col("vec_id").alias("id"), F.expr(as_double("`embedding`")).alias("v")
     )
     got = {
         r["id"]: r["cluster"]
@@ -241,7 +242,7 @@ def test_semdedup_two_level_same_keep_policy(spark, sf_smoke):
     import math as _math
 
     import pytest
-    from cumulus_etl_spark.operators.similarity import as_double_array, semdedup
+    from cumulus_etl_spark.operators.similarity import as_double, semdedup
     from cumulus_etl_spark.sources import table
 
     emb = table(spark, sf_smoke, "embeddings")
@@ -251,7 +252,7 @@ def test_semdedup_two_level_same_keep_policy(spark, sf_smoke):
     vecs = {
         r["vec_id"]: r["v"]
         for r in emb.select(
-            "vec_id", as_double_array("embedding").alias("v")
+            "vec_id", F.expr(as_double("`embedding`")).alias("v")
         ).collect()
     }
 
@@ -288,7 +289,7 @@ def test_mine_hard_negatives_excludes_duplicate_band(spark):
     from pyspark.sql import functions as F
 
     from cumulus_etl_spark.operators.similarity import (
-        as_double_array,
+        as_double,
         knn_bruteforce,
         mine_hard_negatives,
     )
@@ -338,7 +339,7 @@ def test_assign_clusters_join_path_matches_literal(spark):
 
     emb = table(spark, SF, "embeddings")
     cents = S.first_k_centroids(emb, 32)
-    base = emb.select(F.col("vec_id").alias("id"), S.as_double_array("embedding").alias("v"))
+    base = emb.select(F.col("vec_id").alias("id"), F.expr(S.as_double("`embedding`")).alias("v"))
     lit = {(r["id"], r["cluster"], r["sq_dist"])
            for r in S.assign_clusters(base, cents).collect()}
     joined = {(r["id"], r["cluster"], r["sq_dist"])
@@ -385,3 +386,85 @@ def test_cluster_quality_silhouette_bounds(spark):
 
     rows = CATALOG["vector_cluster_quality"].build(spark, SF).collect()
     assert rows and all(-1.0 <= r["avg_silhouette"] <= 1.0 for r in rows)
+
+
+def test_vector_plans_build_without_python_lambdas(spark, tmp_path, monkeypatch):
+    """Every vector catalog entry, the vector bench rigs (the IVF index
+    lifecycle among them) and an IVF-PQ index's ingest and refined search
+    build their plans without one Python lambda: the vector math is SQL
+    text the JVM parses in one call, not a lambda whose every node costs
+    py4j round trips at plan build."""
+    import pyspark.sql.functions.builtin as B
+
+    from cumulus_etl_spark.plans import CATALOG
+    from cumulus_etl_spark.plans.catalog import BENCH_RIGS
+    from cumulus_etl_spark.streaming.ann_index import IvfIndex
+
+    made: list = []
+    create = B._create_lambda
+
+    def counted(f):
+        made.append(f)
+        return create(f)
+
+    monkeypatch.setattr(B, "_create_lambda", counted)
+    queries = {n: q for n, q in CATALOG.items() if n.startswith("vector_")}
+    queries.update({n: q for n, q in BENCH_RIGS.items() if "vector" in q.tags})
+    assert len(queries) >= 17
+    per_query = {}
+    for name, q in sorted(queries.items()):
+        before = len(made)
+        q.build(spark, SF)
+        per_query[name] = len(made) - before
+
+    emb = table(spark, SF, "embeddings")
+    landing = str(tmp_path / "landing")
+    emb.write.parquet(landing)
+    before = len(made)
+    idx = IvfIndex(spark, str(tmp_path / "ivfpq"))
+    idx.build(emb, n_centroids=4, pq_sub=8, pq_k=4)
+    idx.ingest(landing)
+    hits = idx.search(emb.filter(F.col("vec_id") < 3), k=3, n_probe=2, refine_with=emb)
+    per_query["IvfIndex pq ingest+search"] = len(made) - before
+    assert hits.count() == 9
+    assert per_query == dict.fromkeys(per_query, 0)
+
+
+def test_composed_vector_builders_match_numpy(spark):
+    """Composing builders nests one builder's lambda inside another's
+    (``as_double``'s ``x ->`` inside the centroid loop, ``sq_l2``'s fold
+    inside the centroid ``transform``). On hand-made vectors each
+    composed form equals a numpy reference. The vector columns are named
+    ``x`` and ``c`` — names the folds and the centroid struct use — so a
+    captured variable would show as a wrong value."""
+    from cumulus_etl_spark.operators.similarity import (
+        as_double,
+        cosine,
+        nearest_centroid_l2,
+        nearest_centroids,
+    )
+
+    xs = [[1.0, 0.0, 2.0], [0.5, -1.0, 0.25], [-2.0, 1.5, 0.0], [3.0, 3.0, -1.0]]
+    cents = [[1.0, 1.0, 0.0], [0.0, -1.0, 1.0], [-1.0, 0.5, 0.5]]
+    df = spark.createDataFrame(
+        [(i, x, cents[i % 3]) for i, x in enumerate(xs)],
+        "id int, x array<float>, c array<float>",
+    )
+    x, c = as_double("`x`"), as_double("`c`")
+    rows = df.select(
+        "id",
+        F.expr(nearest_centroids(x, cents, 2)).alias("near"),
+        F.expr(cosine(x, c)).alias("cos"),
+        F.expr(nearest_centroid_l2(x, cents)).alias("best"),
+    ).orderBy("id").collect()
+    assert len(rows) == len(xs)
+    cm = np.array(cents)
+    for r in rows:
+        v, w = np.array(xs[r["id"]]), cm[r["id"] % 3]
+        cos_c = cm @ v / (np.linalg.norm(cm, axis=1) * np.linalg.norm(v))
+        # top n by cosine, ties to the higher centroid id
+        assert r["near"] == sorted(range(3), key=lambda i: (-cos_c[i], -i))[:2]
+        assert r["cos"] == pytest.approx(v @ w / (np.linalg.norm(v) * np.linalg.norm(w)), rel=1e-12)
+        d = ((cm - v) ** 2).sum(axis=1)
+        assert r["best"]["cluster"] == int(np.argmin(d))
+        assert r["best"]["sq_dist"] == pytest.approx(d.min(), rel=1e-12)
