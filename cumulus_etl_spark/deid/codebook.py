@@ -25,7 +25,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cumulus_etl_spark.functions import anon_id
+from cumulus_etl_spark.functions import anon_id, sql_ident
 
 CODEBOOK_FILE = "codebook.json"
 MAPPING_DIR = "codebook-cached-mappings"
@@ -63,7 +63,7 @@ class Codebook:
 
     def anonymize(self, id_col: str = "id"):
         """Column expression for this codebook's pseudonym of ``id_col``."""
-        return anon_id(F.col(id_col), self.salt)
+        return F.expr(anon_id(sql_ident(id_col), self.salt))
 
     def mapping_frame(self, df: DataFrame, resource_type: str, id_col: str = "id") -> DataFrame:
         """The (real → fake) audit mapping rows for one batch."""
@@ -73,7 +73,7 @@ class Codebook:
             .select(
                 F.lit(resource_type).alias("resource_type"),
                 "real_id",
-                anon_id(F.col("real_id"), self.salt).alias("anon_id"),
+                F.expr(anon_id("`real_id`", self.salt)).alias("anon_id"),
             )
         )
 

@@ -22,11 +22,12 @@ narrower, recall gap vs philter-lite).
 
 Two implementations, same patterns:
 
-- :func:`philter_mask` — pure Catalyst ``regexp_replace`` chain replacing
-  each match with ``***``. Usable anywhere, including inside higher-order
-  ``transform`` lambdas over nested arrays-of-structs (Spark forbids
-  Python UDFs there), and stays in whole-stage codegen. NOT
-  length-preserving (divergence from the reference, documented).
+- :func:`philter_mask` — SQL text for a ``regexp_replace`` chain replacing
+  each match with ``***`` (wrap it in ``F.expr``). Usable anywhere,
+  including inside higher-order ``transform`` lambdas over nested
+  arrays-of-structs (Spark forbids Python UDFs there), and stays in
+  whole-stage codegen. NOT length-preserving (divergence from the
+  reference, documented).
 - :func:`scrub_text` / :func:`philter_udf` — length-preserving asterisk
   replacement as an Arrow-batched pandas_udf, for top-level note text
   where downstream span arithmetic must keep offsets (upload-notes path).
@@ -37,9 +38,10 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
+
+from cumulus_etl_spark.functions import sql_str
 
 from .names import FIRST_NAMES, SURNAMES
 
@@ -174,19 +176,23 @@ _PHI_PATTERNS: list[re.Pattern] = [
 
 REDACTION = "***"
 
+# the JVM-side patterns as SQL literals, in application order
+_SQL_PATTERNS = tuple(
+    sql_str(("" if cls in _CASE_SENSITIVE else "(?i)") + pat) for cls, pat in _PATTERNS
+)
+_SQL_BARE_NAME = sql_str(BARE_NAME_PATTERN)
 
-def philter_mask(col: Column, bare_names: bool = False) -> Column:
-    """JVM-side PHI masking: each detected span becomes ``***``.
+
+def philter_mask(text: str, bare_names: bool = False) -> str:
+    """JVM-side PHI masking of the SQL text ``text``: each detected span
+    becomes ``***``.
 
     ``bare_names``: opt-in Title-case-bigram heuristic (see
     ``BARE_NAME_PATTERN``) — runs AFTER the list/context name rules so
     those tighter spans are already collapsed."""
-    for cls, pat in _PATTERNS:
-        prefix = "" if cls in _CASE_SENSITIVE else "(?i)"
-        col = F.regexp_replace(col, prefix + pat, REDACTION)
-    if bare_names:
-        col = F.regexp_replace(col, BARE_NAME_PATTERN, REDACTION)
-    return col
+    for pat in _SQL_PATTERNS + ((_SQL_BARE_NAME,) if bare_names else ()):
+        text = f"regexp_replace({text}, {pat}, {sql_str(REDACTION)})"
+    return text
 
 
 def scrub_text(text: str | None, bare_names: bool = False) -> str | None:

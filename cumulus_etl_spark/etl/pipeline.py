@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cumulus_etl_spark.deid import Codebook, Scrubber
 from cumulus_etl_spark.etl.completion import (
@@ -168,11 +169,7 @@ def _run_task(
         encounters_for_completion = scrubbed if task.resource_type == "Encounter" else None
     else:
         table = ManagedTable(spark, output_dir, task.table_name)
-        # A new table's contract is the full-schema scrub, unless the
-        # export holds every field: then the scrubbed frame already is it.
-        contract = None
-        if not table.exists() and not fields >= set(schema_for(task.resource_type).fieldNames()):
-            contract = _scrubbed_schema(spark, task)
+        contract = None if table.exists() else _scrubbed_schema(task)
         table.merge(scrubbed, task.policy, contract=contract)
         if have_dead:
             table.delete_ids(dead_anon)
@@ -201,14 +198,13 @@ def run_init(spark: SparkSession, output_dir: str, tasks: list[str] | None = Non
     contract; the table stores only the columns a merge reads, so a
     later load stores what its export holds, as on a fresh table."""
     created = []
-    scrubber = Scrubber(salt="00")
     for task in select_tasks(tasks):
         table = ManagedTable(spark, output_dir, task.table_name)
         if table.exists():
             continue
-        rt = task.resource_type
-        empty = spark.createDataFrame([], cut_schema(schema_for(rt), task.policy.read_columns))
-        table.merge(scrubber.scrub(empty, rt), task.policy, contract=_scrubbed_schema(spark, task))
+        contract = _scrubbed_schema(task)
+        empty = spark.createDataFrame([], cut_schema(contract, task.policy.read_columns))
+        table.merge(empty, task.policy, contract=contract)
         created.append(task.table_name)
     return created
 
@@ -225,8 +221,7 @@ def run_convert(spark: SparkSession, ndjson_dir: str, output_dir: str) -> list[s
         src = os.path.join(ndjson_dir, task.table_name)
         if not os.path.isdir(src):
             continue
-        schema = _scrubbed_schema(spark, task)
-        df = spark.read.schema(schema).json(src)
+        df = spark.read.schema(_scrubbed_schema(task)).json(src)
         table = ManagedTable(spark, output_dir, task.table_name)
         table.merge(df, task.policy)
         meta = read_meta(src)
@@ -236,8 +231,9 @@ def run_convert(spark: SparkSession, ndjson_dir: str, output_dir: str) -> list[s
     return converted
 
 
-def _scrubbed_schema(spark: SparkSession, task: TaskDef):
-    """The post-scrub schema for a task's table (drive reads of engine
-    NDJSON output with the same contract the scrubber produces)."""
-    empty = spark.createDataFrame([], schema_for(task.resource_type))
-    return Scrubber(salt="00").scrub(empty, task.resource_type).schema
+def _scrubbed_schema(task: TaskDef) -> StructType:
+    """The post-scrub schema of a task's table: a new table's contract,
+    and the schema engine NDJSON output reads back under. The scrubber's
+    rule walk yields it from the full FHIR schema without Spark."""
+    rt = task.resource_type
+    return Scrubber(salt="00").compile(rt, schema_for(rt)).schema

@@ -1,14 +1,22 @@
 """Scalar expression helpers for the de-id engine.
 
-All are pure Catalyst Column expressions — no UDFs — so they stay inside
-whole-stage codegen and can be pushed into any projection. Each mirrors a
-behavior of the reference (file:line cited per function).
+Each helper is a SQL-text builder: it takes SQL text for its operand (a
+column is its quoted name, ``sql_ident("id")``) and returns SQL text,
+and the call site wraps the result in one ``F.expr`` (or nests it in a
+larger text, as the scrubber does). No UDFs, so everything stays inside
+whole-stage codegen; and one form, not a Column form beside it, because
+the JVM parses a whole string in one py4j call where a Column tree costs
+a round trip per node. Each mirrors a behavior of the reference
+(file:line cited per function).
+
+String literals go through :func:`sql_str` and names through
+:func:`sql_ident`, so regexes with backslashes and quotes, URLs and
+field names that are SQL keywords all arrive verbatim. Both assume the
+default ``spark.sql.parser.escapedStringLiterals=false``, and
+:func:`check_literal_parsing` refuses a session that has it on.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Low-population 3-digit ZIP prefixes that must be fully zeroed (HIPAA safe
 # harbor). Ref: cumulus_etl/deid/scrubber.py:391-410 (frozen set of 14).
@@ -59,7 +67,29 @@ def anon_id_py(salt: str, real_id: str) -> str:
     return hmac_mod.new(_hmac_key(salt), real_id.encode(), hashlib.sha256).hexdigest()
 
 
-def anon_id(real_id: Column | str, salt: str) -> Column:
+def sql_str(s: str) -> str:
+    """A SQL string literal whose value is ``s``: backslashes and single
+    quotes are backslash-escaped, everything else is kept as is."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def check_literal_parsing(spark) -> None:
+    """Raise unless ``spark`` parses :func:`sql_str` literals as written.
+
+    With ``spark.sql.parser.escapedStringLiterals`` on, the parser keeps
+    the escaping backslashes, so a regex such as ``\\b`` would match a
+    backslash and a ``b``, and PHI it should mask would pass through."""
+    conf = "spark.sql.parser.escapedStringLiterals"
+    if spark.conf.get(conf, "false").strip().lower() == "true":
+        raise ValueError(f"{conf}=true changes how SQL string literals parse; set it to false")
+
+
+def sql_ident(name: str) -> str:
+    """A quoted SQL identifier (column or struct field) named ``name``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def anon_id(real_id: str, salt: str) -> str:
     """Deterministic pseudonym: HMAC-SHA256(salt, id) — byte-for-byte the
     reference's algorithm (cumulus_etl/deid/codebook.py:204-217 via
     cumulus-fhir-support ``anon_id``, the Microsoft FHIR-anonymizer
@@ -69,18 +99,17 @@ def anon_id(real_id: Column | str, salt: str) -> Column:
     ``salt`` is the codebook's hex string (ref stores ``token_hex`` and
     unhexlifies to key bytes). HMAC compiles to TWO JVM-side sha2 calls —
     ``sha2(opad ‖ unhex(sha2(ipad ‖ id)))`` — with the key pads
-    precomputed driver-side, so the whole de-id projection remains
-    stateless, codegen-resident, and embarrassingly parallel: no UDF, no
-    codebook lookups on the hot path (mappings are an audit side-output,
-    see deid/codebook.py here).
+    precomputed driver-side and inlined as ``X'…'`` binary literals, so
+    the whole de-id projection remains stateless, codegen-resident, and
+    embarrassingly parallel: no UDF, no codebook lookups on the hot path
+    (mappings are an audit side-output, see deid/codebook.py here).
     """
-    rid = F.col(real_id) if isinstance(real_id, str) else real_id
     ipad, opad = hmac_pads(salt)
-    inner = F.sha2(F.concat(F.lit(ipad), rid.cast("string").cast("binary")), 256)
-    return F.sha2(F.concat(F.lit(opad), F.unhex(inner)), 256)
+    inner = f"sha2(concat(X'{ipad.hex()}', CAST(CAST({real_id} AS STRING) AS BINARY)), 256)"
+    return f"sha2(concat(X'{opad.hex()}', unhex({inner})), 256)"
 
 
-def anon_ref(ref: Column | str, salt: str) -> Column:
+def anon_ref(ref: str, salt: str) -> str:
     """Rewrite a FHIR reference to ``Type/anon_id`` — the reference's
     exact algorithm (deid/scrubber.py:377-389 + fhir/fhir_utils.py:38-72,
     golden-verified):
@@ -95,27 +124,26 @@ def anon_ref(ref: Column | str, salt: str) -> Column:
       the row and null the ref — the safer de-id outcome and a
       documented divergence.
     """
-    r = F.col(ref) if isinstance(ref, str) else ref
-    is_relative = r.rlike(r"^[A-Za-z]+[/?].+")
-    rtype = F.regexp_extract(r, r"^([A-Za-z]+)[/?]", 1)
-    rest = F.regexp_replace(r, r"^[A-Za-z]+[/?]", "")
+    rest = f"regexp_replace({ref}, {sql_str('^[A-Za-z]+[/?]')}, '')"
     return (
-        F.when(r.startswith("#"), F.concat(F.lit("#"), anon_id(F.substring(r, 2, 1_000_000), salt)))
-        .when(is_relative, F.concat(rtype, F.lit("/"), anon_id(rest, salt)))
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN startswith({ref}, '#')"
+        f" THEN concat('#', {anon_id(f'substring({ref}, 2, 1000000)', salt)})"
+        f" WHEN {ref} RLIKE {sql_str('^[A-Za-z]+[/?].+')}"
+        f" THEN concat(regexp_extract({ref}, {sql_str('^([A-Za-z]+)[/?]')}, 1), '/',"
+        f" {anon_id(rest, salt)})"
+        " ELSE CAST(NULL AS STRING) END"
     )
 
 
-def year_only(date_str: Column | str) -> Column:
+def year_only(date_str: str) -> str:
     """Generalize a date(/time) string to its year: first 4 chars.
 
     Ref: cumulus_etl/deid/scrubber.py:258-259 (birthDate → year).
     """
-    c = F.col(date_str) if isinstance(date_str, str) else date_str
-    return F.substring(c, 1, 4)
+    return f"substring({date_str}, 1, 4)"
 
 
-def zip_generalize(zip_code: Column | str) -> Column:
+def zip_generalize(zip_code: str) -> str:
     """HIPAA zip generalization: keep 3-digit prefix, zero remaining digits
     (non-digit chars kept — non-US zips pass through); fully zero the 14
     restricted low-population prefixes.
@@ -123,19 +151,17 @@ def zip_generalize(zip_code: Column | str) -> Column:
     Ref: cumulus_etl/deid/scrubber.py:391-420 (same semantics, as one
     codegen-friendly expression instead of a per-row method).
     """
-    z = F.col(zip_code) if isinstance(zip_code, str) else zip_code
-    prefix = F.substring(z, 1, 3)
-    suffix = F.translate(F.substring(z, 4, 1_000_000), "123456789", "000000000")
-    return F.concat(
-        F.when(prefix.isin(*RESTRICTED_ZIP_PREFIXES), F.lit("000")).otherwise(prefix),
-        suffix,
+    prefix = f"substring({zip_code}, 1, 3)"
+    restricted = ", ".join(sql_str(p) for p in RESTRICTED_ZIP_PREFIXES)
+    return (
+        f"concat(CASE WHEN {prefix} IN ({restricted}) THEN '000' ELSE {prefix} END,"
+        f" translate(substring({zip_code}, 4, 1000000), '123456789', '000000000'))"
     )
 
 
-def nullif_empty(c: Column | str) -> Column:
+def nullif_empty(c: str) -> str:
     """Trim whitespace and convert empty strings to null.
 
     Ref: cumulus_etl/deid/scrubber.py:237-243 (strip + drop empties).
     """
-    col = F.col(c) if isinstance(c, str) else c
-    return F.nullif(F.trim(col), F.lit(""))
+    return f"nullif(trim({c}), '')"

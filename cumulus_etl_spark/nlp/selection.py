@@ -10,11 +10,11 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.deid.codebook import read_salt
-from cumulus_etl_spark.functions import anon_id
+from cumulus_etl_spark.functions import anon_id, sql_ident
 
 
 def filter_by_words(
@@ -153,23 +153,23 @@ def filter_by_cohort_frame(
             f"{prefix}patient_id column (found {list(cohort.columns)})"
         )
 
-    own_id: Column = F.col(id_col)
+    own_id = sql_ident(id_col)
     if "subject" in notes.columns:
-        pat_id = F.element_at(F.split(F.col("subject")["reference"], "/"), -1)
+        pat_id = "element_at(split(`subject`.`reference`, '/'), -1)"
     else:
-        pat_id = F.lit(None).cast("string")
+        pat_id = "CAST(NULL AS STRING)"
     if is_anon:
         own_id = anon_id(own_id, salt)
-        pat_id = F.when(pat_id.isNotNull(), anon_id(pat_id, salt))
+        pat_id = f"CASE WHEN {pat_id} IS NOT NULL THEN {anon_id(pat_id, salt)} END"
     # mixed multi-type note frames ref by their own resourceType
     rtype = (
         F.coalesce(F.col("resourceType"), F.lit(resource_type))
         if "resourceType" in notes.columns
         else F.lit(resource_type)
     )
-    own_ref = F.concat(rtype, F.lit("/"), own_id)
+    own_ref = F.concat(rtype, F.lit("/"), F.expr(own_id))
     n = notes.withColumn("__own_ref", own_ref)
-    n = n.withColumn("__own_pat", pat_id)
+    n = n.withColumn("__own_pat", F.expr(pat_id))
 
     keep = F.lit(False)
     if ref_exprs:

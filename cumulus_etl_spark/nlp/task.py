@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.deid import Codebook
-from cumulus_etl_spark.functions.scalars import anon_id, anon_ref
+from cumulus_etl_spark.functions import anon_id, anon_ref
 from cumulus_etl_spark.nlp.cache import NlpCache
 from cumulus_etl_spark.nlp.notes import extract_note_text, note_checksum
 from cumulus_etl_spark.nlp.provider import MATCH_SCHEMA, run_model
@@ -150,9 +150,9 @@ def run_nlp_task(
     envelope = scored.select(
         # resourceType-prefixed so DiagnosticReport notes keep their type
         # in the ref (DocumentReference rows unchanged — goldens stable)
-        F.concat(F.col("note_rtype"), F.lit("/"), anon_id(F.col("id"), salt)).alias("note_ref"),
-        anon_ref(F.col("encounter_ref_src"), salt).alias("encounter_ref"),
-        anon_ref(F.col("subject_ref_src"), salt).alias("subject_ref"),
+        F.expr(f"concat(`note_rtype`, '/', {anon_id('`id`', salt)})").alias("note_ref"),
+        F.expr(anon_ref("`encounter_ref_src`", salt)).alias("encounter_ref"),
+        F.expr(anon_ref("`subject_ref_src`", salt)).alias("subject_ref"),
         F.lit(generated_on).alias("generated_on"),
         F.lit(task_version).alias("task_version"),
         F.col("result"),

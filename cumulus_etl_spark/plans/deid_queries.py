@@ -62,12 +62,12 @@ def deid_anonymize_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = table(spark, sf_dir, "customer")
     # Synthetic 5-digit zip derived from the key (the harness tables have no
     # zip column); exercises the real zip_generalize expression.
-    zip_col = F.lpad(((F.col("c_custkey") * 37) % 100000).cast("string"), 5, "0")
+    zip_col = "lpad(CAST(((`c_custkey` * 37) % 100000) AS STRING), 5, '0')"
     return cust.select(
         "c_custkey",
         _sha_anon(F.col("c_custkey")).alias("anon_id"),
         _sha_anon_ref(F.concat(F.lit("Customer/"), F.col("c_custkey").cast("string"))).alias("anon_ref"),
-        zip_generalize(zip_col).alias("zip_generalized"),
+        F.expr(zip_generalize(zip_col)).alias("zip_generalized"),
         F.nullif(F.trim("c_name"), F.lit("")).alias("name_trimmed"),
     )
 
@@ -86,8 +86,8 @@ def deid_year_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date→year generalization on string dates (ref: scrubber.py:258-259;
     dates-at-rest are ISO strings in the data model, SURVEY §1.2)."""
     o = table(spark, sf_dir, "orders")
-    date_str = F.date_format("o_orderdate", "yyyy-MM-dd")
-    return o.groupBy(year_only(date_str).alias("order_year_only")).agg(
+    date_str = "date_format(`o_orderdate`, 'yyyy-MM-dd')"
+    return o.groupBy(F.expr(year_only(date_str)).alias("order_year_only")).agg(
         F.count(F.lit(1)).alias("n_orders")
     )
 

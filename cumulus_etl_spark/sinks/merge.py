@@ -81,6 +81,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
+from cumulus_etl_spark.functions import check_literal_parsing, sql_str
 from cumulus_etl_spark.schemas import cut_schema
 
 try:  # pragma: no cover - exercised only where delta-spark is installed
@@ -713,7 +714,8 @@ class ManagedTable:
                 r["__g"]
                 for r in updates.select(F.col(policy.group_field).alias("__g")).distinct().collect()
             ]
-            quoted = ", ".join("'" + str(g).replace("'", "''") + "'" for g in groups if g is not None)
+            check_literal_parsing(self.spark)
+            quoted = ", ".join(sql_str(str(g)) for g in groups if g is not None)
             if quoted:
                 m = m.whenNotMatchedBySourceDelete(f"t.{policy.group_field} IN ({quoted})")
         m.execute()

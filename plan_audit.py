@@ -3,6 +3,11 @@ write PLANS.md — a per-query table of shuffle exchanges, join
 strategies, codegen coverage, and scan pushdown, plus red-flag checks
 (cartesian products, row-at-a-time Python eval in the hot path).
 
+It also prints, but keeps out of PLANS.md, the driver's cost of each
+build call: seconds and py4j round trips, counted by the benchmark
+tracer's ``send_command`` counter. Both vary from run to run (JVM
+warm-up, GC), so PLANS.md stays a deterministic record of plan shapes.
+
 This is the "would this plan survive 100×?" review, automated: run it
 after adding an operator and diff PLANS.md. Red flags fail loudly so CI
 can gate on them.
@@ -16,9 +21,11 @@ import contextlib
 import io
 import re
 import sys
+import time
 
 from cumulus_etl_spark.plans import CATALOG
 from cumulus_etl_spark.session import get_spark
+from perfbench.tracing import Tracer
 
 # Sanctioned Python-eval operators: Arrow-batched by design (stub-codec
 # multimodal stages). Everything else must stay JVM-side.
@@ -70,13 +77,22 @@ def main() -> None:
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    rows, red_flags = [], []
-    for name, q in sorted(CATALOG.items()):
-        try:
-            rows.append(audit_one(name, q.build(spark, sf_dir)))
-        except Exception as ex:  # pragma: no cover - audit tool resilience
-            red_flags.append(f"{name}: failed to build plan: {ex}")
-            continue
+    rows, red_flags, builds = [], [], []
+    tracer = Tracer(spark, "plan-audit")
+    tracer.install()
+    try:
+        for name, q in sorted(CATALOG.items()):
+            try:
+                calls, start = tracer.py4j_calls, time.perf_counter()
+                with tracer.span(name):
+                    df = q.build(spark, sf_dir)
+                builds.append((name, time.perf_counter() - start, tracer.py4j_calls - calls))
+                rows.append(audit_one(name, df))
+            except Exception as ex:  # pragma: no cover - audit tool resilience
+                red_flags.append(f"{name}: failed to build plan: {ex}")
+                continue
+    finally:
+        tracer.uninstall()
     for r in rows:
         if r["cartesian"]:
             red_flags.append(f"{r['name']}: CartesianProduct in plan")
@@ -119,6 +135,12 @@ def main() -> None:
 
     with open("PLANS.md", "w") as f:
         f.write("\n".join(lines))
+    print("driver plan build (s, py4j calls; one run, so the first entries pay JVM warm-up):")
+    for name, secs, calls in builds:
+        print(f"  {name:<48} {secs:7.2f} {calls:7d}")
+    print(
+        f"  {'total':<48} {sum(b[1] for b in builds):7.1f} {sum(b[2] for b in builds):7d}"
+    )
     print(f"PLANS.md written: {len(rows)} queries, {len(red_flags)} red flags")
     if red_flags:
         for f_ in red_flags:

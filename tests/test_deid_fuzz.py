@@ -157,7 +157,7 @@ def test_philter_recall_by_class(spark):
             for i, s in enumerate(snips)]
     df = spark.createDataFrame(rows, "k string, text string")
     masked = {r["k"]: r["m"] for r in
-              df.select("k", philter_mask(F.col("text")).alias("m")).collect()}
+              df.select("k", F.expr(philter_mask("`text`")).alias("m")).collect()}
     for cls, snips in PHI_SAMPLES.items():
         for i, s in enumerate(snips):
             jvm = masked[f"{cls}:{i}"]
@@ -167,7 +167,7 @@ def test_philter_recall_by_class(spark):
             assert len(py) == len(s), f"[py/{cls}] not length-preserving: {s!r}"
 
     safe_df = spark.createDataFrame([(s,) for s in SAFE_SAMPLES], "text string")
-    kept = [r["m"] for r in safe_df.select(philter_mask(F.col("text")).alias("m")).collect()]
+    kept = [r["m"] for r in safe_df.select(F.expr(philter_mask("`text`")).alias("m")).collect()]
     assert kept == SAFE_SAMPLES
     assert [scrub_text(s) for s in SAFE_SAMPLES] == SAFE_SAMPLES
 
@@ -246,9 +246,9 @@ def test_philter_bare_name_flag(spark):
     ]
     df = spark.createDataFrame(rows, "k string, text string")
     on = {r["k"]: r["m"] for r in df.select(
-        "k", philter_mask(F.col("text"), bare_names=True).alias("m")).collect()}
+        "k", F.expr(philter_mask("`text`", bare_names=True)).alias("m")).collect()}
     off = {r["k"]: r["m"] for r in df.select(
-        "k", philter_mask(F.col("text"), bare_names=False).alias("m")).collect()}
+        "k", F.expr(philter_mask("`text`", bare_names=False)).alias("m")).collect()}
 
     for i, s in enumerate(BARE_NAME_SAMPLES):
         assert "***" in on[f"phi:{i}"], f"flag-on leaked: {s!r}"
@@ -263,5 +263,5 @@ def test_philter_bare_name_flag(spark):
     # the original safe clinical snippets also survive the flag
     safe_df = spark.createDataFrame([(s,) for s in SAFE_SAMPLES], "text string")
     kept = [r["m"] for r in safe_df.select(
-        philter_mask(F.col("text"), bare_names=True).alias("m")).collect()]
+        F.expr(philter_mask("`text`", bare_names=True)).alias("m")).collect()]
     assert kept == SAFE_SAMPLES

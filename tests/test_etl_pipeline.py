@@ -255,7 +255,7 @@ def test_etl_stores_the_fields_the_export_holds(spark, tmp_path):
 
     table = ManagedTable(spark, out, "patient")
     (task,) = select_tasks(["patient"])
-    contract = _scrubbed_schema(spark, task)
+    contract = _scrubbed_schema(task)
     assert table._pointer()["schema"] == _nullable(contract).json()
     read_schema = table.read().schema  # the file source reads it all nullable
     assert read_schema.simpleString() == contract.simpleString()
@@ -290,7 +290,7 @@ def test_init_then_etl_stores_what_a_plain_etl_stores(spark, tmp_path):
     from cumulus_etl_spark.sinks.merge import _nullable
 
     (task,) = select_tasks(["patient"])
-    contract = _nullable(_scrubbed_schema(spark, task))
+    contract = _nullable(_scrubbed_schema(task))
     inp = str(tmp_path / "in")
     write_ndjson(inp, "p.ndjson", [
         {"resourceType": "Patient", "id": "p1", "gender": "female",
@@ -314,32 +314,30 @@ def test_init_then_etl_stores_what_a_plain_etl_stores(spark, tmp_path):
     assert table.schema() == contract and table.read().count() == 1
 
 
-def test_dense_export_takes_its_contract_from_the_scrubbed_frame(spark, tmp_path, monkeypatch):
-    """An export that holds every top-level field parses the full schema,
-    so a new table's contract is its scrubbed frame's own schema: no
-    separate contract scrub is built, and every column is stored."""
-    import cumulus_etl_spark.etl.pipeline as pipeline_mod
+def test_dense_export_takes_its_contract_from_the_scrubbed_frame(spark, tmp_path):
+    """An export that holds every top-level field parses the full schema:
+    the new table stores every column, reads back under the scrubbed
+    contract, and holds the scrubbed row."""
+    from cumulus_etl_spark.etl.pipeline import _scrubbed_schema
     from cumulus_etl_spark.etl.tasks import select_tasks
     from cumulus_etl_spark.schemas import schema_for
 
     (task,) = select_tasks(["patient"])
-    contract = pipeline_mod._scrubbed_schema(spark, task)
-
-    def no_build(*_a, **_k):
-        raise AssertionError("contract scrub built for an export holding every field")
-
-    monkeypatch.setattr(pipeline_mod, "_scrubbed_schema", no_build)
+    contract = _scrubbed_schema(task)
     inp, out, phi = (str(tmp_path / d) for d in ("in", "out", "phi"))
     line = dict.fromkeys(schema_for("Patient").fieldNames())
-    line.update(resourceType="Patient", id="p1", gender="female")
+    line.update(resourceType="Patient", id="p1", gender="female", birthDate="1980-06-15")
     write_ndjson(inp, "p.ndjson", [line])
     summary = run_etl(spark, inp, out, phi, tasks=["patient"])
     assert summary["tables"]["patient"] == {"rows": 1, "quarantined": 0}
 
     table = ManagedTable(spark, out, "patient")
-    assert table._pointer()["stored"] == table.schema().fieldNames()
+    assert table._pointer()["stored"] == contract.fieldNames() == table.schema().fieldNames()
     assert table.read().schema.simpleString() == contract.simpleString()
-    assert [r["gender"] for r in table.read().collect()] == ["female"]
+    (row,) = table.read().collect()
+    assert row["id"] == expected_anon_id(_salt(phi), "p1")
+    assert (row["resourceType"], row["gender"], row["birthDate"]) == ("Patient", "female", "1980")
+    assert row["address"] is None and row["maritalStatus"] is None
 
 
 def _salt(phi: str) -> str:
