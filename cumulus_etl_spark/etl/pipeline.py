@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -84,19 +84,13 @@ def run_etl(
     errors_root = errors_to or os.path.join(phi_dir, "errors")
     summary: dict = {"tables": {}, "errors": 0}
     for task in selected:
+        good, bad = scan_with_quarantine(
+            spark, input_dir, [task.resource_type], task.fields(available)
+        )
         table_summary = _run_task(
-            spark,
-            task,
-            available[task.resource_type],
-            input_dir,
-            output_dir,
-            codebook,
-            scrubber,
-            deleted,
-            group_name,
-            output_format=output_format,
-            batch_size=batch_size,
-            errors_root=errors_root,
+            spark, task, good, bad, deleted, output_dir, codebook, scrubber, group_name,
+            errors_dir=os.path.join(errors_root, task.name), errors_mode="overwrite",
+            output_format=output_format, batch_size=batch_size,
         )
         summary["tables"][task.table_name] = table_summary
         summary["errors"] += table_summary["quarantined"]
@@ -118,25 +112,23 @@ def run_etl(
 def _run_task(
     spark: SparkSession,
     task: TaskDef,
-    present: set[str],
-    input_dir: str,
+    good: DataFrame,
+    bad: DataFrame,
+    deleted: DataFrame,
     output_dir: str,
     codebook: Codebook,
     scrubber: Scrubber,
-    deleted,
     group_name: str | None,
+    *,
+    errors_dir: str,
+    errors_mode: str,
     output_format: str = "merged",
     batch_size: int = 100_000,
-    errors_root: str | None = None,
 ) -> dict:
-    # Parse, scrub and store only the top-level fields the export holds
-    # (``present``, from the detect_resources census) and the ones the
-    # merge reads; the table's pointer keeps the full contract.
-    fields = set(present) | task.policy.read_columns
-    good, bad = scan_with_quarantine(
-        spark, input_dir, [task.resource_type], {task.resource_type: fields}
-    )
-
+    """The one task body of ``etl`` and of each ``incremental_etl``
+    micro-batch: mappings, scrub and merge of the parsed ``good`` lines,
+    then ``deleted``'s tombstones of the task's type, the ``bad`` lines'
+    spill and Encounter completion rows. Returns ``{rows, quarantined}``."""
     # Codebook audit mappings committed before data (crash-safe either way:
     # pseudonyms are pure functions of the salt; see deid/codebook.py).
     codebook.save_mappings(good, task.resource_type)
@@ -177,13 +169,13 @@ def _run_task(
             table.read() if task.resource_type == "Encounter" else None
         )
 
-    # Quarantined raw lines spill to <errors_root>/<task>/ (K7). They are
-    # raw source records — PHI — so the default root lives under phi_dir,
+    # Quarantined raw lines spill to errors_dir (K7). They are raw source
+    # records — PHI — so the callers keep it under phi_dir by default,
     # never the de-identified output tree (ref only writes errors to an
     # explicit --errors-to dir, base.py:356-364).
     bad_rows = bad.count()
     if bad_rows:
-        bad.write.mode("overwrite").json(os.path.join(errors_root, task.name))
+        bad.write.mode(errors_mode).json(errors_dir)
 
     if encounters_for_completion is not None:
         write_completion_encounters(spark, output_dir, encounters_for_completion, group_name)

@@ -13,6 +13,7 @@ base.py:398-404).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from cumulus_etl_spark.sinks import MergePolicy
@@ -24,6 +25,14 @@ class TaskDef:
     resource_type: str
     table_name: str
     policy: MergePolicy = field(default_factory=MergePolicy)
+
+    def fields(self, census: Mapping[str, set[str]]) -> dict[str, set[str]]:
+        """The top-level fields the task parses, scrubs and stores, in
+        ``parse_lines``' form: the keys a census found for its type and
+        the ones its merge reads. The table's pointer keeps the full
+        contract."""
+        present = census.get(self.resource_type, set())
+        return {self.resource_type: present | self.policy.read_columns}
 
 
 def _basic(resource_type: str) -> TaskDef:

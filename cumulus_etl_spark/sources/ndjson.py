@@ -5,16 +5,21 @@ The reference streams dict-per-line with a Python iterator
 first (loaders/fhir/ndjson_loader.py:40-69). Here every resource read,
 batch or streaming, goes through one path: :func:`read_lines` reads the
 raw text lines of every ``*.ndjson`` under a root (recursively, object
-stores natively, no staging copy), and :func:`parse_lines` dispatches
-each line on its ``resourceType`` and parses it under that type's exact
-schema with ``from_json``.
+stores natively, no staging copy) as a frame of lines, and three readers
+share that frame, whether it is a whole export or one micro-batch:
+
+- :func:`census` — the resource types present and the top-level keys
+  each type's lines hold;
+- :func:`parse_lines` — dispatches each line on its ``resourceType``
+  and parses it under that type's schema with ``from_json``;
+- :func:`tombstones` — the ``(resource_type, id)`` rows that the
+  ``deleted/`` Bundle lines delete.
 
 A run parses only the top-level fields its export holds:
-:func:`detect_resources` takes a census of the top-level keys present per
-type, and :func:`parse_lines` cuts each type's schema down to them. A
-field no line carries parses to null under the full schema, so the cut
-drops only all-null columns; readers get the full contract back from the
-table's pointer (sinks/merge.py). Nested structs are never cut.
+:func:`parse_lines` cuts each type's schema down to the keys the census
+found. A field no line carries parses to null under the full schema, so
+the cut drops only all-null columns; readers get the full contract back
+from the table's pointer (sinks/merge.py). Nested structs are never cut.
 
 Malformed lines are quarantined, not dropped silently: a line that is
 not JSON, has no resourceType, or breaks its type's schema lands on the
@@ -29,11 +34,12 @@ from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from cumulus_etl_spark.schemas import cut_schema, schema_for, wide_schema
 
 CORRUPT_COL = "_corrupt_record"
+_BUNDLE_SCHEMA = "entry array<struct<request: struct<method: string, url: string>>>"
 
 
 def _with_corrupt(schema: StructType) -> StructType:
@@ -92,12 +98,13 @@ def parse_lines(
     source_file)``).
 
     ``fields`` maps a type to the top-level fields to parse (the keys a
-    :func:`detect_resources` census found, plus any the caller needs);
-    its schema is cut down to them, and the good side's columns are the
-    wide schema cut down to the union. A type it does not name parses
-    every field. As long as the census covered every line, a line breaks
-    the cut schema exactly when it breaks the full one: it can only
-    break a field it carries, and every field it carries is kept.
+    :func:`census` found, plus any the caller needs; an ETL task's rule
+    is ``TaskDef.fields``); its schema is cut down to them, and the
+    good side's columns are the wide schema cut down to the union. A
+    type it does not name parses every field. As long as the census
+    covered every line, a line breaks the cut schema exactly when it
+    breaks the full one: it can only break a field it carries, and
+    every field it carries is kept.
 
     Lines are dispatched on resourceType BEFORE any schema parse (ref
     common.py:144-156 filters before validating): a foreign-type line is
@@ -168,19 +175,24 @@ def scan_resources(
 
 
 def detect_resources(spark: SparkSession, root: str) -> dict[str, set[str]]:
-    """S2 + census: the resource types present under ``root``, each with
-    the top-level keys its lines hold. Drives task selection like
-    ndjson_loader.py:36-38, and :func:`parse_lines` parses only those keys.
+    """S2: the :func:`census` of every line under ``root``. Drives task
+    selection like ndjson_loader.py:36-38, and :func:`parse_lines`
+    parses only the keys it found."""
+    if not _has_ndjson(root):
+        return {}
+    return census(read_lines(spark.read, root))
+
+
+def census(lines: DataFrame) -> dict[str, set[str]]:
+    """The resource types a :func:`read_lines` frame names, each with the
+    top-level keys its lines hold.
 
     Every line of a type counts, the ones that will be quarantined too,
     so a key that only a schema-breaking line carries is still parsed
     and still quarantines it. A type counts as present whenever a line
-    names it, as before the census (``explode_outer``)."""
-    if not _has_ndjson(root):
-        return {}
+    names it, even with no other key (``explode_outer``)."""
     pairs = (
-        read_lines(spark.read, root)
-        .filter(F.col("_rt").isNotNull())
+        lines.filter(F.col("_rt").isNotNull())
         .select("_rt", F.explode_outer(F.json_object_keys("raw_line")).alias("key"))
         .distinct()
     )
@@ -193,60 +205,31 @@ def detect_resources(spark: SparkSession, root: str) -> dict[str, set[str]]:
 
 
 def read_deleted_ids(spark: SparkSession, root: str) -> DataFrame:
-    """S4: parse ``deleted/`` Bundle NDJSON into (resource_type, id) rows.
-
-    Bulk-export deleted bundles hold entries whose ``request.method`` is
-    DELETE and ``request.url`` is ``Type/id``
-    (loaders/fhir/ndjson_loader.py:92-116). Expressed as explode+filter+
-    split — fully Catalyst, no driver loop.
-    """
+    """S4: the :func:`tombstones` of the NDJSON under ``<root>/deleted``."""
     deleted_dir = os.path.join(root, "deleted")
-    schema = StructType(
-        [
-            StructField("resourceType", StringType(), True),
-            StructField(
-                "entry",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField(
-                                "request",
-                                StructType(
-                                    [
-                                        StructField("method", StringType(), True),
-                                        StructField("url", StringType(), True),
-                                    ]
-                                ),
-                                True,
-                            )
-                        ]
-                    )
-                ),
-                True,
-            ),
-        ]
-    )
     if not _has_ndjson(deleted_dir):
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("resource_type", StringType(), False),
-                    StructField("id", StringType(), False),
-                ]
-            ),
-        )
-    df = (
-        spark.read.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.ndjson")
-        .json(deleted_dir)
+        return spark.createDataFrame([], "resource_type string, id string")
+    return tombstones(read_lines(spark.read, deleted_dir))
+
+
+def tombstones(lines: DataFrame) -> DataFrame:
+    """S4: the ``(resource_type, id)`` rows that the ``deleted/`` Bundle
+    lines of a :func:`read_lines` frame delete.
+
+    Bulk-export deleted bundles live under a ``deleted/`` dir and hold
+    entries whose ``request.method`` is DELETE and ``request.url`` is
+    ``Type/id`` (loaders/fhir/ndjson_loader.py:92-116). A Bundle
+    elsewhere deletes nothing, and a line that is not JSON or breaks
+    the entry schema yields no entry. Expressed as explode+filter+split
+    — fully Catalyst, no driver loop.
+    """
+    bundles = lines.filter(
+        (F.col("_rt") == "Bundle") & F.col("source_file").contains("/deleted/")
     )
-    entries = df.filter(F.col("resourceType") == "Bundle").select(
-        F.explode("entry").alias("e")
+    entries = bundles.select(
+        F.explode(F.from_json("raw_line", _BUNDLE_SCHEMA).getField("entry")).alias("e")
     )
-    url = F.col("e.request.url")
-    parts = F.split(url, "/")
+    parts = F.split(F.col("e.request.url"), "/")
     return (
         entries.filter(F.upper(F.col("e.request.method")) == "DELETE")
         .filter(F.size(parts) == 2)

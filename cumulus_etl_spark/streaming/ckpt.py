@@ -26,10 +26,12 @@ Folds that are idempotent need neither the watermark nor the pin: a
 replayed batch — or every file re-read under a fresh checkpoint —
 re-folds to the same state. That covers the reservoir (top-k after a
 dedup by row id), the dedup index (keyed inserts) and
-``incremental_etl`` (a keyed MERGE of the same resources; only its
-append-only quarantine log can repeat a replayed batch's malformed
-lines). The ANN index keeps its checkpoint INSIDE its own root, so the
-pair can never diverge — the other safe design.
+``incremental_etl``: its MERGE of the same resources, its tombstone
+delete (by id) and its Encounter completion merge are all keyed, so a
+replay rewrites the same rows. Only its append-only logs repeat a
+replayed batch: the quarantined lines, and the codebook mappings,
+which readers dedupe. The ANN index keeps its checkpoint INSIDE its
+own root, so the pair can never diverge — the other safe design.
 """
 
 from __future__ import annotations

@@ -7,8 +7,8 @@ Streaming gives the same semantics natively:
 - ``Trigger.AvailableNow`` + file-source checkpointing = resumable
   batch runs (an interrupted run re-starts where it left off; files
   already processed are never re-read)
-- ``foreachBatch(merge)`` = the reference's batch-upsert unit, with the
-  engine's MERGE policy applied per micro-batch
+- each micro-batch is the reference's batch-upsert unit and runs the
+  ``etl`` task body on its lines, so both load the same lake
 - watermark + windowed aggregation covers late/changed event data —
   beyond the reference's parity needs but free on this architecture
 
@@ -21,14 +21,16 @@ size the way ``--batch-size`` bounded the reference's memory
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from cumulus_etl_spark.deid import Codebook, Scrubber
+from cumulus_etl_spark.etl.pipeline import _run_task
 from cumulus_etl_spark.etl.tasks import select_tasks
-from cumulus_etl_spark.sinks import ManagedTable
-from cumulus_etl_spark.sources.ndjson import parse_lines, read_lines
+from cumulus_etl_spark.sources.ndjson import census, parse_lines, read_lines, tombstones
 from cumulus_etl_spark.streaming.ckpt import fold_stream
 
 
@@ -42,17 +44,17 @@ def incremental_etl(
     philter: bool = False,
     max_files_per_trigger: int | None = None,
     athena=None,
-) -> None:
-    """Checkpointed scan→scrub→merge over an NDJSON landing directory.
+) -> dict:
+    """Checkpointed ``etl`` of one resource type over an NDJSON landing
+    directory; returns ``{rows, quarantined}`` summed over the batches.
 
     Each invocation processes exactly the files that arrived since the
-    last run (file-source checkpoint), then stops. Each micro-batch is
-    parsed like a batch ``etl`` scan (:func:`~cumulus_etl_spark.sources.
-    ndjson.parse_lines`): malformed lines are appended to
-    ``<phi_dir>/errors/<task>`` — raw lines are PHI, so never under
-    ``output_dir`` — instead of loading with silently-nulled fields.
-    The table name, errors dir name and merge policy are those of the
-    resource type's ``etl`` task (``etl/tasks.py``).
+    last run (file-source checkpoint), then stops. Each micro-batch runs
+    ``etl``'s task body (``etl/pipeline.py:_run_task``) on its own lines,
+    parsed under that batch's census, and appends its malformed lines to
+    ``<phi_dir>/errors/<task>``. The batch's ``deleted/`` tombstones apply
+    after its merge, as an ``etl`` run's apply after its merge: they
+    delete what this and earlier batches loaded, not a later arrival.
 
     ``athena``: optional :class:`~cumulus_etl_spark.sinks.catalog_ddl.
     AthenaRegistrar` — fired after each committed micro-batch; registers
@@ -62,24 +64,27 @@ def incremental_etl(
     codebook = Codebook(phi_dir)
     scrubber = Scrubber(salt=codebook.salt, philter_enabled=philter)
     (task,) = select_tasks([resource_type])
-    table = ManagedTable(spark, output_dir, task.table_name)
     errors_dir = os.path.join(phi_dir, "errors", task.name)
+    total = {"rows": 0, "quarantined": 0}
 
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = read_lines(reader, input_dir)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        good, bad = parse_lines(batch_df, [resource_type])
-        codebook.save_mappings(good, resource_type)
-        table.merge(scrubber.scrub(good, resource_type), task.policy)
-        if not bad.isEmpty():
-            bad.write.mode("append").json(errors_dir)
+    def fold(lines: DataFrame, batch_id: int) -> None:
+        good, bad = parse_lines(lines, [resource_type], task.fields(census(lines)))
+        # The batch's session, a clone: the rows Observation completes only there.
+        summary = _run_task(
+            lines.sparkSession, task, good, bad, tombstones(lines), output_dir, codebook,
+            scrubber, None, errors_dir=errors_dir, errors_mode="append",
+        )
+        for key in total:
+            total[key] += summary[key]
         if athena is not None:
             athena.on_batch(batch_id)
 
-    fold_stream(stream, checkpoint_dir, process_batch)
+    fold_stream(read_lines(reader, input_dir), checkpoint_dir, fold)
+    return total
 
 
 def windowed_event_counts(
@@ -128,9 +133,6 @@ def _checkpoint_seen_version(checkpoint_dir: str) -> int | None:
     Returns None for a FRESH stream (no source log yet: late subscribers
     legitimately start at the retention horizon); 0 for a checkpoint
     that subscribed before any commit (it expects v1 next)."""
-    import os
-    import re
-
     src_log = os.path.join(checkpoint_dir, "sources", "0")
     if not os.path.isdir(src_log):
         return None
@@ -188,10 +190,6 @@ def stream_changes(
     Delta deployments stream the native feed instead:
     ``spark.readStream.format("delta").option("readChangeFeed", "true")``.
     """
-    import os as _os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
     base_schema = table.schema()
     if base_schema is None:
         raise ValueError(f"table {table.name!r} has no schema yet (never written)")
@@ -214,8 +212,8 @@ def stream_changes(
                     f"feed; restart from a fresh checkpoint (full-history "
                     f"reload) instead of silently losing those commits"
                 )
-    changes_root = _os.path.join(table.path, "changes")
-    _os.makedirs(changes_root, exist_ok=True)
+    changes_root = os.path.join(table.path, "changes")
+    os.makedirs(changes_root, exist_ok=True)
     stream = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")

@@ -66,6 +66,7 @@ _SLOW_EXEMPT = {
     ("test_deid_golden.py", "test_golden_deid_pair[Observation.1.json]"),
     ("test_streaming.py", "test_incremental_dedup_index"),
     ("test_streaming.py", "test_incremental_etl_quarantines_malformed_lines"),
+    ("test_streaming.py", "test_incremental_etl_loads_what_etl_loads"),
     ("test_streaming.py", "test_streaming_countmin_equals_batch_sketch"),
     ("test_streaming_drift.py", "test_streaming_psi_availablenow_checkpointed"),
     ("test_streaming_drift.py", "test_drift_monitor_cli_verb"),

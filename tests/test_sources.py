@@ -13,6 +13,7 @@ from cumulus_etl_spark.sources import (
     scan_resources,
     scan_with_quarantine,
 )
+from cumulus_etl_spark.sources.ndjson import read_lines, tombstones
 from tests.fhir_fixtures import (
     CONDITIONS,
     DOCREFS,
@@ -104,7 +105,12 @@ def test_census_cut_parse_quarantines_like_the_full_parse(spark, tmp_path):
 
 
 def test_read_deleted_ids(spark, tmp_path):
-    write_ndjson(str(tmp_path / "deleted"), "del.ndjson", [
+    """Only DELETE entries of Bundle lines under ``deleted/`` count: a
+    Bundle elsewhere deletes nothing, and a malformed line under
+    ``deleted/`` is skipped. The rows equal those of a ``spark.read.json``
+    reader of the same dir, and :func:`tombstones` of the whole tree."""
+    deleted_dir = str(tmp_path / "deleted")
+    write_ndjson(deleted_dir, "del.ndjson", [
         {
             "resourceType": "Bundle",
             "entry": [
@@ -112,11 +118,37 @@ def test_read_deleted_ids(spark, tmp_path):
                 {"request": {"method": "DELETE", "url": "Observation/obs-3"}},
                 {"request": {"method": "GET", "url": "Patient/pat-2"}},
             ],
-        }
+        },
+        {"resourceType": "Bundle", "entry": {"request": {"method": "DELETE", "url": "Patient/x"}}},
+        {"resourceType": "Patient", "id": "pat-4"},
     ])
+    with open(os.path.join(deleted_dir, "del.ndjson"), "a") as fh:
+        fh.write('{"resourceType": "Bundle", "entry": [\n')
+        fh.write("not json\n")
+    write_ndjson(str(tmp_path / "other"), "b.ndjson", [
+        {"resourceType": "Bundle",
+         "entry": [{"request": {"method": "DELETE", "url": "Patient/pat-9"}}]},
+    ])
+    want = {("Patient", "pat-1"), ("Observation", "obs-3")}
+
     df = read_deleted_ids(spark, str(tmp_path))
-    got = {(r["resource_type"], r["id"]) for r in df.collect()}
-    assert got == {("Patient", "pat-1"), ("Observation", "obs-3")}
+    assert {(r["resource_type"], r["id"]) for r in df.collect()} == want
+    whole = tombstones(read_lines(spark.read, str(tmp_path)))
+    assert {(r["resource_type"], r["id"]) for r in whole.collect()} == want
+
+    entry = "array<struct<request: struct<method: string, url: string>>>"
+    parts = F.split("e.request.url", "/")
+    by_read_json = (
+        spark.read.schema(f"resourceType string, entry {entry}")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.ndjson")
+        .json(deleted_dir)
+        .filter(F.col("resourceType") == "Bundle")
+        .select(F.explode("entry").alias("e"))
+        .filter((F.upper("e.request.method") == "DELETE") & (F.size(parts) == 2))
+        .select(parts[0], parts[1])
+    )
+    assert {tuple(r) for r in by_read_json.collect()} == want
 
 
 def test_read_deleted_ids_empty(spark, tmp_path):
