@@ -974,6 +974,7 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(report))
         return 0
     if args.verb == "train-filter":
+        from cumulus_etl_spark.functions import check_literal_parsing, sql_ident
         from cumulus_etl_spark.operators import textstats as _T
         from cumulus_etl_spark.operators.mlstats import (
             auc_roc,
@@ -1013,14 +1014,15 @@ def main(argv: list[str] | None = None) -> int:
             }))
             return 0
         feat_names = ["n_tokens", "n_punct", "n_stopwords", "mean_word_len"]
-        words = _T.words_array(F.col(args.text_col))
+        check_literal_parsing(spark)
+        words = _T.words_array(sql_ident(args.text_col))
         featurized = docs.select(
             args.id_col,
             F.expr(args.label_expr).cast("double").alias("__label"),
             _T.token_count(args.text_col).cast("double").alias("n_tokens"),
             _T.punct_count(args.text_col).cast("double").alias("n_punct"),
             _T.stopword_count(args.text_col).cast("double").alias("n_stopwords"),
-            _T.repetition_features(words)["mean_word_len"].alias("mean_word_len"),
+            F.expr(_T.repetition_features(words)["mean_word_len"]).alias("mean_word_len"),
         ).localCheckpoint(eager=True)  # featurize once, not once per GD pass
         w, losses, std_stats = logreg_train_gd(
             featurized, feat_names, F.col("__label"), lr=args.lr, iters=args.iters

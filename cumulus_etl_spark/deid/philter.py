@@ -210,8 +210,3 @@ def scrub_text(text: str | None, bare_names: bool = False) -> str | None:
 def philter_udf(texts: pd.Series) -> pd.Series:
     return texts.map(scrub_text)
 
-
-@F.pandas_udf(StringType())
-def philter_udf_bare_names(texts: pd.Series) -> pd.Series:
-    """philter_udf + the opt-in bare-name bigram heuristic."""
-    return texts.map(lambda t: scrub_text(t, bare_names=True))

@@ -88,7 +88,7 @@ def run_etl(
             spark, input_dir, [task.resource_type], task.fields(available)
         )
         table_summary = _run_task(
-            spark, task, good, bad, deleted, output_dir, codebook, scrubber, group_name,
+            task, good, bad, deleted, output_dir, codebook, scrubber, group_name,
             errors_dir=os.path.join(errors_root, task.name), errors_mode="overwrite",
             output_format=output_format, batch_size=batch_size,
         )
@@ -110,7 +110,6 @@ def run_etl(
 
 
 def _run_task(
-    spark: SparkSession,
     task: TaskDef,
     good: DataFrame,
     bad: DataFrame,
@@ -128,7 +127,12 @@ def _run_task(
     """The one task body of ``etl`` and of each ``incremental_etl``
     micro-batch: mappings, scrub and merge of the parsed ``good`` lines,
     then ``deleted``'s tombstones of the task's type, the ``bad`` lines'
-    spill and Encounter completion rows. Returns ``{rows, quarantined}``."""
+    spill and Encounter completion rows. Returns ``{rows, quarantined}``.
+
+    Every write runs in ``good``'s session: the rows ``Observation``
+    completes only for an action in the session of the frame it
+    observes."""
+    spark = good.sparkSession
     # Codebook audit mappings committed before data (crash-safe either way:
     # pseudonyms are pure functions of the salt; see deid/codebook.py).
     codebook.save_mappings(good, task.resource_type)

@@ -16,35 +16,33 @@ come from a prefix-sum window — no driver-side assembly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from cumulus_etl_spark.functions import sql_str
 
 # O5: HumanName.use priority — official > usual > anything > nickname-ish
 _USE_PRIORITY = {"official": 0, "usual": 1}
 
 
-def pick_human_name(names: Column) -> Column:
-    """Pick the best HumanName from an array by use priority and render
-    ``given... family`` (ref fhir_utils.py:184-203)."""
-    prio = lambda n: (  # noqa: E731
-        F.when(n["use"] == "official", F.lit(0))
-        .when(n["use"] == "usual", F.lit(1))
-        .otherwise(F.lit(2))
+def pick_human_name(names: str) -> str:
+    """Pick the best HumanName from the array ``names`` (SQL text) by use
+    priority and render ``given... family`` (ref fhir_utils.py:184-203)."""
+    prio = (
+        "CASE "
+        + " ".join(f"WHEN __n.`use` = {sql_str(u)} THEN {p}" for u, p in _USE_PRIORITY.items())
+        + f" ELSE {len(_USE_PRIORITY)} END"
     )
-    best = F.element_at(
-        F.array_sort(
-            F.transform(names, lambda n: F.struct(prio(n).alias("p"), n.alias("n"))),
-            # comparator on priority only; stable for ties
-            lambda a, b: F.when(a["p"] < b["p"], -1).when(a["p"] > b["p"], 1).otherwise(0),
-        ),
-        1,
-    )["n"]
+    # comparator on priority only; stable for ties
+    best = (
+        f"element_at(array_sort(transform({names}, __n -> struct({prio} AS p, __n AS n)),"
+        " (__a, __b) -> CASE WHEN __a.p < __b.p THEN -1 WHEN __a.p > __b.p THEN 1 ELSE 0 END),"
+        " 1).n"
+    )
     # nullif: concat_ws of a null given array yields "" which would
     # otherwise leave a leading space in the outer join
-    rendered = F.concat_ws(
-        " ", F.nullif(F.concat_ws(" ", best["given"]), F.lit("")), best["family"]
-    )
-    return F.when(names.isNotNull() & (F.size(names) > 0), F.nullif(rendered, F.lit("")))
+    rendered = f"concat_ws(' ', nullif(concat_ws(' ', {best}.given), ''), {best}.family)"
+    return f"CASE WHEN {names} IS NOT NULL AND size({names}) > 0 THEN nullif({rendered}, '') END"
 
 
 def enrich_with_practitioners(
@@ -62,11 +60,11 @@ def enrich_with_practitioners(
     roles = practitioner_roles.select(
         F.concat(F.lit("PractitionerRole/"), F.col("id")).alias("__role_ref"),
         F.col("practitioner")["reference"].alias("__role_prac_ref"),
-        F.transform(F.col("specialty"), lambda s: s["text"]).alias("author_specialties"),
+        F.expr("transform(specialty, __s -> __s.text)").alias("author_specialties"),
     )
     pracs = practitioners.select(
         F.concat(F.lit("Practitioner/"), F.col("id")).alias("__prac_ref"),
-        pick_human_name(F.col("name")).alias("author_display"),
+        F.expr(pick_human_name("name")).alias("author_display"),
     )
     out = (
         n.join(F.broadcast(roles), n["__author_ref"] == roles["__role_ref"], "left")
@@ -138,7 +136,9 @@ def group_notes_by_encounter(
             ).alias("notes"),
             F.min(F.col(date_col)).alias("chart_date"),
         )
-        .withColumn("chart_text", F.concat_ws(sep, F.transform("notes", lambda n: n["note_text"])))
+        .withColumn(
+            "chart_text", F.expr(f"concat_ws({sql_str(sep)}, transform(notes, __n -> __n.note_text))")
+        )
     )
 
 

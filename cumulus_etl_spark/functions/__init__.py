@@ -5,6 +5,7 @@ from cumulus_etl_spark.functions.scalars import (
     year_only,
     zip_generalize,
     nullif_empty,
+    sql_double,
     sql_ident,
     sql_str,
     RESTRICTED_ZIP_PREFIXES,
@@ -17,6 +18,7 @@ __all__ = [
     "year_only",
     "zip_generalize",
     "nullif_empty",
+    "sql_double",
     "sql_ident",
     "sql_str",
     "RESTRICTED_ZIP_PREFIXES",

@@ -73,6 +73,12 @@ def sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sql_double(x: float) -> str:
+    """A SQL DOUBLE literal whose value is ``x`` (``0.7D``): a bare ``0.7``
+    parses as DECIMAL, and ``repr`` round-trips every double exactly."""
+    return repr(float(x)) + "D"
+
+
 def check_literal_parsing(spark) -> None:
     """Raise unless ``spark`` parses :func:`sql_str` literals as written.
 

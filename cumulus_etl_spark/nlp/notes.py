@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import sql_ident, sql_str
+
 TEXT_CONTENT_TYPES = ("text/plain", "text/html", "application/xhtml+xml")
 
 
@@ -29,15 +31,13 @@ def extract_note_text(df: DataFrame, content_col: str = "content") -> DataFrame:
     carries both.
     """
     from_content = (
-        F.transform(F.col(content_col), lambda c: c["attachment"])
+        f"transform({sql_ident(content_col)}, __c -> __c.attachment)"
         if content_col in df.columns
         else None
     )
-    from_pf = F.col("presentedForm") if "presentedForm" in df.columns else None
+    from_pf = "presentedForm" if "presentedForm" in df.columns else None
     if from_content is not None and from_pf is not None:
-        atts = F.when(
-            F.col("resourceType") == "DiagnosticReport", from_pf
-        ).otherwise(from_content)
+        atts = f"CASE WHEN resourceType = 'DiagnosticReport' THEN {from_pf} ELSE {from_content} END"
     elif from_pf is not None:
         atts = from_pf
     elif from_content is not None:
@@ -47,10 +47,10 @@ def extract_note_text(df: DataFrame, content_col: str = "content") -> DataFrame:
             f"no {content_col!r} or 'presentedForm' column in the notes frame"
         )
 
-    att = F.filter(
-        atts,
-        lambda a: a["data"].isNotNull()
-        & F.substring_index(a["contentType"], ";", 1).isin(*TEXT_CONTENT_TYPES),
+    text_types = ", ".join(sql_str(t) for t in TEXT_CONTENT_TYPES)
+    att = F.expr(
+        f"filter({atts}, __a -> __a.data IS NOT NULL"
+        f" AND substring_index(__a.contentType, ';', 1) IN ({text_types}))"
     )
     first = F.element_at(att, 1)
     decoded = F.unbase64(first["data"]).cast("string")
@@ -58,9 +58,7 @@ def extract_note_text(df: DataFrame, content_col: str = "content") -> DataFrame:
         "text/html", "application/xhtml+xml"
     )
     text = F.when(is_html, F.regexp_replace(decoded, r"<[^>]+>", " ")).otherwise(decoded)
-    any_remote = F.exists(
-        atts, lambda a: a["url"].isNotNull() & a["data"].isNull()
-    )
+    any_remote = F.expr(f"exists({atts}, __a -> __a.url IS NOT NULL AND __a.data IS NULL)")
     reason = F.when(F.size(att) > 0, F.lit(None).cast("string")).otherwise(
         F.when(any_remote, F.lit("remote-only attachment")).otherwise(F.lit("no text attachment"))
     )

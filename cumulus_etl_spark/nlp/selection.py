@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.deid.codebook import read_salt
-from cumulus_etl_spark.functions import anon_id, sql_ident
+from cumulus_etl_spark.functions import anon_id, check_literal_parsing, sql_ident, sql_str
 
 
 def filter_by_words(
@@ -43,31 +43,25 @@ def filter_by_coding(
     (etl/studies/covid_symptom/covid_tasks.py:18-79). Pure higher-order
     array expressions: exists over flattened codings, no explode shuffle.
     """
+    check_literal_parsing(notes.sparkSession)
+    coding_hit = " OR ".join(
+        f"coalesce(__c.system = {sql_str(system)}"
+        f" AND __c.code IN ({', '.join(sql_str(c) for c in sorted(codes))}), false)"
+        for system, codes in allowed.items()
+        if codes
+    ) or "false"
     conds = []
     for field in fields:
         if field not in notes.columns:
             continue
         dtype = notes.schema[field].dataType.simpleString()
-        codings = (
-            F.flatten(F.col(field + ".coding"))
-            if dtype.startswith("array")
-            else F.col(field + ".coding")
-        )
-        def coding_hit(c):
-            expr = F.lit(False)
-            for sys, codes in allowed.items():
-                expr = expr | F.coalesce(
-                    (c["system"] == sys) & c["code"].isin(*codes), F.lit(False)
-                )
-            return expr
-
-        conds.append(F.coalesce(F.exists(codings, coding_hit), F.lit(False)))
+        codings = f"{sql_ident(field)}.coding"
+        if dtype.startswith("array"):
+            codings = f"flatten({codings})"
+        conds.append(f"coalesce(exists({codings}, __c -> {coding_hit}), false)")
     if not conds:
         raise ValueError(f"none of {fields} present in the notes frame")
-    keep = conds[0]
-    for c in conds[1:]:
-        keep = keep | c
-    return notes.filter(keep)
+    return notes.filter(F.expr(" OR ".join(conds)))
 
 
 def filter_by_note_csv(

@@ -25,9 +25,10 @@ boundaries land.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import check_literal_parsing, sql_ident, sql_str
 from cumulus_etl_spark.operators import dedup as D
 from cumulus_etl_spark.operators import textstats as T
 
@@ -57,7 +58,8 @@ def prepare_corpus(
         (F.col("n_tokens") >= min_tokens) & (F.col("punct_ratio") <= 0.2)
     )
     if lang is not None:
-        good = good.filter(T.lang_id(F.col(text_col)) == lang)
+        check_literal_parsing(docs.sparkSession)
+        good = good.filter(F.expr(T.lang_id(sql_ident(text_col))) == lang)
 
     # exact dedup: one shuffle on the normalized fingerprint
     w_fp = Window.partitionBy(T.fingerprint(F.col(text_col))).orderBy(id_col)
@@ -168,22 +170,24 @@ def pack_by_token_budget(
     ).drop("__cum")
 
 
-def _word_ngrams(tok: Column, n: int) -> Column:
-    """Word n-grams of a token array as space-joined strings; empty array
-    when the document has fewer than ``n`` tokens.
+def _word_ngrams(tok: str, n: int) -> str:
+    """Word n-grams of the token array ``tok`` (SQL text) as space-joined
+    strings; empty array when the document has fewer than ``n`` tokens.
 
     ``sequence`` must be guarded: Spark's ``sequence(1, 0)`` counts DOWN
     (yields ``[1, 0]``), so short docs would fabricate grams.
     """
-    starts = F.when(
-        F.size(tok) >= n, F.sequence(F.lit(1), F.size(tok) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(starts, lambda i: F.array_join(F.slice(tok, i, n), " "))
+    starts = (
+        f"CASE WHEN size({tok}) >= {n} THEN sequence(1, size({tok}) - {n - 1})"
+        " ELSE CAST(array() AS ARRAY<INT>) END"
+    )
+    return f"transform({starts}, __i -> array_join(slice({tok}, __i, {n}), ' '))"
 
 
-def _tokens(text: Column | str) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    return F.split(F.lower(F.trim(t)), r"\s+")
+def _text_ngrams(df: DataFrame, text_col: str, n: int) -> str:
+    """Word n-grams of ``df``'s lowercased whitespace tokens (SQL text)."""
+    check_literal_parsing(df.sparkSession)
+    return _word_ngrams(D.tokens(sql_ident(text_col)), n)
 
 
 def decontaminate(
@@ -220,13 +224,13 @@ def decontaminate(
     """
     bench_grams = (
         benchmark.select(
-            F.explode(_word_ngrams(_tokens(text_col), ngram)).alias("gram")
+            F.explode(F.expr(_text_ngrams(benchmark, text_col, ngram))).alias("gram")
         )
         .distinct()
     )
     corpus_grams = corpus.select(
         F.col(id_col),
-        F.explode(F.array_distinct(_word_ngrams(_tokens(text_col), ngram))).alias(
+        F.explode(F.array_distinct(F.expr(_text_ngrams(corpus, text_col, ngram)))).alias(
             "gram"
         ),
     )
@@ -273,23 +277,22 @@ def passage_dedup(
     the passage for the window key; strings are kept here so the
     recursive-free SQL oracle matches byte-for-byte.
     """
-    tok = _tokens(text_col)
-    starts = F.sequence(F.lit(1), F.greatest(F.size(tok), F.lit(1)), F.lit(chunk_words))
+    check_literal_parsing(docs.sparkSession)
+    tok = D.tokens(sql_ident(text_col))
+    passages = (
+        f"transform(sequence(1, greatest(size({tok}), 1), {chunk_words}),"
+        f" __i -> array_join(slice({tok}, __i, {chunk_words}), ' '))"
+    )
     chunks = docs.select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(starts, lambda i: F.array_join(F.slice(tok, i, chunk_words), " "))
-        ).alias("chunk_idx", "passage"),
+        F.posexplode(F.expr(passages)).alias("chunk_idx", "passage"),
     )
     w = Window.partitionBy("passage").orderBy(id_col, "chunk_idx")
     kept = chunks.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
     rebuilt = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("chunk_idx", "passage"))),
-                lambda s: s["passage"],
-            ),
-            " ",
+        F.expr(
+            "array_join(transform(sort_array(collect_list(struct(chunk_idx, passage))),"
+            " __s -> __s.passage), ' ')"
         ).alias("clean_text"),
         F.count(F.lit(1)).alias("n_kept"),
     )
@@ -336,6 +339,7 @@ def remove_boilerplate_lines(
     """
     import re as _re
 
+    check_literal_parsing(docs.sparkSession)
     lines = docs.select(
         F.col(id_col),
         F.col(source_col),
@@ -372,12 +376,9 @@ def remove_boilerplate_lines(
     )
     rebuilt = kept.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("idx", "line"))),
-                lambda s: s["line"],
-            ),
-            sep,
+        F.expr(
+            "array_join(transform(sort_array(collect_list(struct(idx, line))), __s -> __s.line),"
+            f" {sql_str(sep)})"
         ).alias("clean_text"),
     )
     totals = lines.groupBy(id_col).agg(
@@ -453,39 +454,15 @@ def remove_repeated_spans(
     # transform + concat_ws. Accumulating the string itself would copy
     # O(doc_len) bytes per removal start (quadratic for a long doc dense
     # with removed spans); the pair accumulator copies 8 bytes per step.
-    stitched = F.aggregate(
-        F.coalesce("ps", F.array().cast("array<int>")),
-        F.struct(
-            F.array().cast("array<struct<s:int,l:int>>").alias("pieces"),
-            F.lit(1).alias("cur"),
-        ),
-        lambda acc, p: F.struct(
-            F.concat(
-                acc["pieces"],
-                F.array(
-                    F.struct(
-                        acc["cur"].alias("s"),
-                        F.greatest(p - acc["cur"], F.lit(0)).alias("l"),
-                    )
-                ),
-            ).alias("pieces"),
-            (p + F.lit(k)).alias("cur"),
-        ),
-        lambda acc: F.concat_ws(
-            "",
-            F.transform(
-                F.concat(
-                    acc["pieces"],
-                    F.array(
-                        F.struct(
-                            acc["cur"].alias("s"),
-                            F.length("__text").alias("l"),
-                        )
-                    ),
-                ),
-                lambda q: F.col("__text").substr(q["s"], q["l"]),
-            ),
-        ),
+    stitched = F.expr(
+        "aggregate(coalesce(ps, CAST(array() AS ARRAY<INT>)),"
+        " struct(CAST(array() AS ARRAY<STRUCT<s: INT, l: INT>>) AS pieces, 1 AS cur),"
+        " (__acc, __p) -> struct(concat(__acc.pieces,"
+        " array(struct(__acc.cur AS s, greatest(__p - __acc.cur, 0) AS l))) AS pieces,"
+        f" __p + {k} AS cur),"
+        " __acc -> concat_ws('', transform(concat(__acc.pieces,"
+        " array(struct(__acc.cur AS s, length(__text) AS l))),"
+        " __q -> substr(__text, __q.s, __q.l))))"
     )
     return joined.select(
         id_col,
@@ -554,14 +531,11 @@ def pack_sequences(
         .agg(ordered.alias("parts"))
         .select(
             F.col("seq_id").cast("bigint").alias("seq_id"),
-            F.aggregate(
-                F.transform("parts", lambda p: F.size(p["frag"]).cast("bigint")),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
+            F.expr(
+                "aggregate(transform(parts, __p -> CAST(size(__p.frag) AS BIGINT)),"
+                " CAST(0 AS BIGINT), (__acc, __n) -> __acc + __n)"
             ).alias("n_tokens"),
-            F.array_join(
-                F.flatten(F.transform("parts", lambda p: p["frag"])), " "
-            ).alias("text"),
+            F.expr("array_join(flatten(transform(parts, __p -> __p.frag)), ' ')").alias("text"),
         )
     )
 
@@ -775,8 +749,9 @@ def dsir_logratio_scores(
     variant (``corpus_importance_rank`` in the catalog) ranks identically
     for oracle hashing; this is the paper-faithful log-linear form.
     """
+    check_literal_parsing(corpus.sparkSession)
     toks = corpus.select(
-        F.col(id_col), F.col(source_col), F.explode(_tokens(text_col)).alias("word")
+        F.col(id_col), F.col(source_col), F.explode(F.expr(D.tokens(sql_ident(text_col)))).alias("word")
     )
     dc = toks.groupBy(id_col, source_col, "word").agg(F.count(F.lit(1)).alias("c"))
     stats = toks.groupBy("word").agg(
@@ -817,7 +792,7 @@ def gram_leakage_hits(
     """
     grams = df.select(
         F.col(id_col), F.col(split_col),
-        F.explode(_word_ngrams(_tokens(text_col), ngram)).alias("gram"),
+        F.explode(F.expr(_text_ngrams(df, text_col, ngram))).alias("gram"),
     )
     train_grams = grams.filter(F.col(split_col) == "train").select("gram").distinct()
     held = (

@@ -1,5 +1,6 @@
-"""Deduplication operators: exact, last-wins, MinHash-LSH, SimHash, n-gram
-Jaccard — the corpus-dedup toolbox for training-data pipelines at 100TB.
+"""Deduplication operators: MinHash-LSH, SimHash, exact n-gram Jaccard
+and edit-distance string joins — the corpus-dedup toolbox for
+training-data pipelines at 100TB.
 
 Design for scale:
 - Everything up to candidate generation is pure Catalyst expressions
@@ -10,6 +11,27 @@ Design for scale:
   on candidate pairs inside buckets.
 - Skew guard: giant buckets (boilerplate docs) are capped via a per-bucket
   row limit before the self-join.
+
+Every higher-order expression (transform, filter, aggregate, zip_with)
+is SQL text the call site wraps in one ``F.expr``, never a Python
+lambda: the JVM parses a whole string in one py4j call, where a lambda
+costs round trips per node at every plan build. The text builders take
+SQL text for their operands (a column is ``sql_ident(name)``) and
+return SQL text, under four rules:
+
+- a builder's own lambda variables carry a ``__`` prefix, so an operand
+  naming a column cannot be captured by them;
+- string literals go through ``sql_str`` and names through
+  ``sql_ident``, and a frame's session passes ``check_literal_parsing``
+  before any such text is parsed;
+- double literals are written ``0.7D`` (``sql_double``): a bare ``0.7``
+  parses as DECIMAL;
+- casts are written out (``CAST(0 AS BIGINT)``) wherever the Column
+  form this text replaced had one, so each analyzed plan is the one
+  that form built.
+
+The other text modules (textstats, corpus, mlstats, the text plans and
+the note operators) follow the same rules.
 """
 
 from __future__ import annotations
@@ -17,11 +39,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import check_literal_parsing, sql_double, sql_ident, sql_str
 from cumulus_etl_spark.sources.hadoop_io import file_lengths
 
 # Mersenne prime 2^31-1: keeps a*h+b inside int64 (ANSI overflow-safe)
 # while giving a big enough universal-hash family for MinHash.
 _MINHASH_PRIME = (1 << 31) - 1
+_WHITESPACE = sql_str(r"\s+")
 
 
 def _fanout_partitions(df: DataFrame, n_items: int, items_per_task: int) -> int:
@@ -107,64 +131,56 @@ def _parallel_floor(df: DataFrame) -> DataFrame:
     return df
 
 
-def exact_dedup(df: DataFrame, keys: list[str], order_by: list[Column] | None = None) -> DataFrame:
-    """Exact dedup on key columns. With ``order_by`` → deterministic
-    last-wins (SURVEY F6, ref etl/tasks/base.py:303-335); without →
-    dropDuplicates (arbitrary survivor, cheapest plan)."""
-    if order_by is None:
-        return df.dropDuplicates(keys)
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+def tokens(text: str) -> str:
+    """Lowercased whitespace tokens of the SQL text ``text``."""
+    return f"split(lower(trim({text})), {_WHITESPACE})"
 
 
-def tokens(text: Column | str) -> Column:
-    """Lowercased whitespace tokens."""
-    t = F.col(text) if isinstance(text, str) else text
-    return F.split(F.lower(F.trim(t)), r"\s+")
-
-
-def shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles. Expression-only: sequence + transform +
-    slice, no UDF."""
+def shingles(text: str, k: int = 3) -> str:
+    """Distinct word k-shingles of the SQL text ``text``: sequence +
+    transform + slice, no UDF."""
     toks = tokens(text)
-    n = F.size(toks)
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), n - k),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-            )
-        )
+    return (
+        f"CASE WHEN size({toks}) < {k} THEN array(concat_ws(' ', {toks}))"
+        f" ELSE array_distinct(transform(sequence(0, size({toks}) - {k}),"
+        f" __i -> concat_ws(' ', slice({toks}, __i + 1, {k})))) END"
     )
 
 
-def raw_shingles(text: Column | str, k: int = 1) -> Column:
+def _chained(arr: str, k: int, combine: str) -> str:
+    """Windows of ``k`` consecutive elements of ``arr`` folded with
+    ``combine`` (a two-variable lambda over ``__a``, ``__b``), chained
+    through ``zip_with``: both array arguments evaluate once per row, so
+    the fold is O(len·k), not the O(len²) of an outer expression
+    re-evaluated inside a lambda. ``zip_with`` null-pads the short side;
+    the first len-k+1 entries are the complete windows."""
+    combined = arr
+    for j in range(1, k):
+        combined = f"zip_with({combined}, slice({arr}, {j + 1}, 1000000), (__a, __b) -> {combine})"
+    return combined
+
+
+def raw_shingles(text: str, k: int = 1) -> str:
     """Distinct RAW word k-shingles (strings), O(tokens·k) — the
     collision-free set representation the exact verifier joins on.
 
     k=1 is ``array_distinct(split(lower(trim(text)), '\\s+'))`` — the
     exact expression the all-pairs ground truth and the DuckDB oracles
     use, so sizes and intersections agree bit-for-bit. k>1 builds the
-    shingle strings with the same zip_with chaining trick as
-    ``shingle_hashes`` (both array arguments evaluate once per row), not
-    the O(tokens²) outer-lambda form in ``shingles()``."""
+    shingle strings with the same zip_with chaining as ``shingle_hashes``,
+    not the O(tokens²) outer-lambda form in ``shingles()``."""
     toks = tokens(text)
     if k == 1:
-        return F.array_distinct(toks)
-    n = F.size(toks)
-    combined = toks
-    for j in range(1, k):
-        combined = F.zip_with(
-            combined,
-            F.slice(toks, j + 1, 1_000_000),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.array_distinct(F.slice(combined, 1, F.greatest(n - k + 1, F.lit(1))))
+        return f"array_distinct({toks})"
+    n = f"size({toks})"
+    combined = _chained(toks, k, "concat(__a, ' ', __b)")
+    return (
+        f"CASE WHEN {n} < {k} THEN array(concat_ws(' ', {toks}))"
+        f" ELSE array_distinct(slice({combined}, 1, greatest({n} - {k} + 1, 1))) END"
     )
 
 
-def shingle_hashes(text: Column | str, k: int = 3) -> Column:
+def shingle_hashes(text: str, k: int = 3) -> str:
     """Hashed word k-shingles as array<long> in [0, p) — never building
     shingle strings.
 
@@ -177,73 +193,16 @@ def shingle_hashes(text: Column | str, k: int = 3) -> Column:
     polynomial combine under the Mersenne prime.
     """
     toks = tokens(text)
-    th = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(_MINHASH_PRIME)))
-    n = F.size(th)
-    combined = th
-    for j in range(1, k):
-        # combined < p (2^31), * 65599 (<2^17) + b < 2^49 — ANSI-safe.
-        combined = F.zip_with(
-            combined,
-            F.slice(th, j + 1, 1_000_000),
-            lambda a, b: F.pmod(a * F.lit(65599) + b, F.lit(_MINHASH_PRIME)),
-        )
-    # zip_with null-pads the short side; the first n-k+1 entries are the
-    # complete shingles. Short docs (< k tokens) hash the whole token list.
-    whole = F.pmod(F.xxhash64(F.concat_ws(" ", toks)), F.lit(_MINHASH_PRIME))
-    return F.when(n < k, F.array(whole)).otherwise(
-        F.array_distinct(F.slice(combined, 1, F.greatest(n - k + 1, F.lit(1))))
-    )
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 32, seed: int = 42) -> Column:
-    """MinHash signature: for hash function j, min over shingles of
-    (a_j * xxhash64(s) + b_j) mod p. Deterministic universal-hash family
-    derived from ``seed`` — stable across runs/partitions."""
-    import random
-
-    rng = random.Random(seed)
-    coefs = [(rng.randrange(1, _MINHASH_PRIME), rng.randrange(0, _MINHASH_PRIME)) for _ in range(num_hashes)]
-    # pmod keeps the base hash in [0, p) without abs() (abs(Long.MIN) would
-    # itself overflow under ANSI); h < 2^31 and a < 2^31 so a*h+b < 2^63.
-    base = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MINHASH_PRIME)))
-    sigs = [
-        F.array_min(F.transform(base, lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_PRIME)))
-        for a, b in coefs
-    ]
-    return F.array(*sigs)
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """Near-dup candidate pairs via banded MinHash-LSH.
-
-    sig → split into ``bands`` bands of ``num_hashes/bands`` rows → hash
-    each band → explode → shuffle once on (band_idx, band_hash) → pair up
-    within buckets. Returns (id_a, id_b) with id_a < id_b, distinct.
-
-    ``max_bucket`` caps degenerate buckets (exact-duplicate floods) so the
-    within-bucket self-join can't go quadratic on skew; exact dups are
-    caught by fingerprint dedup first anyway.
-    """
-    # banded_signatures requires a pinned frame; .cache() satisfies the
-    # contract (it stops the 32-transform re-inlining just as well — the
-    # ngram_jaccard_dedup callers already rely on that) while keeping the
-    # API lazy (no job at call time) and the lineage intact: an eager
-    # localCheckpoint here pinned roughly the corpus token stream to
-    # non-reliable executor-local blocks, where one executor loss fails
-    # the job unrecoverably (r13 ADVICE).
-    sh = _parallel_floor(df).select(
-        F.col(id_col).alias("id"), shingle_hashes(text_col, shingle_k).alias("sh")
-    ).cache()
-    return _lsh_candidates_from_shingles(
-        sh, num_hashes=num_hashes, bands=bands, max_bucket=max_bucket
+    p = _MINHASH_PRIME
+    th = f"transform({toks}, __t -> pmod(xxhash64(__t), {p}))"
+    n = f"size({th})"
+    # combined < p (2^31), * 65599 (<2^17) + b < 2^49 — ANSI-safe.
+    combined = _chained(th, k, f"pmod(__a * 65599 + __b, {p})")
+    # Short docs (< k tokens) hash the whole token list.
+    whole = f"pmod(xxhash64(concat_ws(' ', {toks})), {p})"
+    return (
+        f"CASE WHEN {n} < {k} THEN array({whole})"
+        f" ELSE array_distinct(slice({combined}, 1, greatest({n} - {k} + 1, 1))) END"
     )
 
 
@@ -269,10 +228,10 @@ def banded_signatures(
 
     CONTRACT: ``sh`` must be pinned (cache / localCheckpoint) — every
     caller is (ngram_jaccard_dedup[_keep_best] cache, DedupIndex
-    localCheckpoint, minhash_lsh_candidates pins internally). On an
-    UN-pinned frame the 32 transforms would re-inline the upstream
-    shingle pipeline per hash (the historical 88 s / 500 docs codegen
-    blowup this function's explode shape originally avoided).
+    localCheckpoint). On an UN-pinned frame the 32 transforms would
+    re-inline the upstream shingle pipeline per hash (the historical
+    88 s / 500 docs codegen blowup this function's explode shape
+    originally avoided).
 
     Identical output to the explode shape by construction: min over the
     same multiset of universal-hash values, same (a, b) coefficients
@@ -286,12 +245,10 @@ def banded_signatures(
         (rng.randrange(1, _MINHASH_PRIME), rng.randrange(0, _MINHASH_PRIME))
         for _ in range(num_hashes)
     ]
-
-    def _perm(a: int, b: int):
-        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_PRIME)
-
     sig_cols = [
-        F.array_min(F.transform("sh", _perm(a, b))).alias(f"s{j}")
+        F.expr(f"array_min(transform(sh, __h -> (__h * {a} + {b}) % {_MINHASH_PRIME}))").alias(
+            f"s{j}"
+        )
         for j, (a, b) in enumerate(coefs)
     ]
     # explode-shape parity: a doc with an empty (or null) shingle set
@@ -316,15 +273,22 @@ def banded_signatures(
     return sigs.select("id", F.posexplode(band_hashes).alias("band_idx", "band_hash"))
 
 
-def _lsh_candidates_from_shingles(
-    sh: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    max_bucket: int = 200,
-) -> DataFrame:
+def _bucket_pair_structs(arr: str, cap: int, fields: str) -> str:
+    """Every i < j pair of the array ``arr`` (a column name), each a
+    struct of ``fields`` (SQL text over ``__x`` and ``__y``, the two
+    members), partners capped at ``cap`` — the collect-sorted-slice
+    pair expansion of a bucket."""
+    return (
+        f"flatten(transform({arr}, (__x, __i) -> transform(slice({arr}, __i + 2, {cap}),"
+        f" __y -> struct({fields}))))"
+    )
+
+
+def _lsh_candidates_from_shingles(sh: DataFrame) -> DataFrame:
     """Candidate pairs from an (id, sh: array<long>) hashed-shingle frame
     (see banded_signatures for the signature-build shape)."""
-    banded = banded_signatures(sh, num_hashes=num_hashes, bands=bands)
+    max_bucket = 200
+    banded = banded_signatures(sh)
     # Pair generation: ONE shuffle on the bucket key — collect each
     # bucket's ids (sorted, capped at max_bucket) and emit the pairs as
     # an array expression. This replaces the window-cap + bucket
@@ -333,44 +297,31 @@ def _lsh_candidates_from_shingles(
     buckets = banded.groupBy("band_idx", "band_hash").agg(
         F.slice(F.sort_array(F.collect_list("id")), 1, max_bucket).alias("ids")
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, max_bucket),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
+    pairs = _bucket_pair_structs("ids", max_bucket, "__x AS id_a, __y AS id_b")
     return (
         buckets.filter(F.size("ids") > 1)
-        .select(F.explode(pairs).alias("p"))
+        .select(F.explode(F.expr(pairs)).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
     )
 
 
-def jaccard_verify(
-    candidates: DataFrame,
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Exact shingle-Jaccard on candidate pairs; keeps pairs ≥ threshold.
-    Output: (id_a, id_b, jaccard)."""
-    sh = df.select(F.col(id_col).alias("id"), shingles(text_col, shingle_k).alias("sh"))
-    j = (
-        candidates.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+def _shingle_hash_frame(df: DataFrame, id_col: str, text_col: str, shingle_k: int) -> DataFrame:
+    """(id, sh, sz): each document's hashed shingle set and its size,
+    cached — it feeds both candidate generation and the verify join, so
+    it's materialized once instead of recomputed in three scans; at
+    cluster scale this is a persisted intermediate, exactly like a CTE a
+    warehouse would spool."""
+    check_literal_parsing(df.sparkSession)
+    return (
+        _parallel_floor(df)
+        .select(
+            F.col(id_col).alias("id"),
+            F.expr(shingle_hashes(sql_ident(text_col), shingle_k)).alias("sh"),
         )
+        .withColumn("sz", F.size("sh"))
+        .cache()
     )
-    return j.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
 def ngram_jaccard_dedup(
@@ -379,23 +330,18 @@ def ngram_jaccard_dedup(
     text_col: str = "text",
     shingle_k: int = 3,
     threshold: float = 0.7,
-    **lsh_kwargs,
 ) -> DataFrame:
     """Full fuzzy-dedup pipeline: LSH candidates → exact Jaccard verify →
     survivor set. Rows whose id appears as the *greater* member of a dup
     pair are dropped (min-id canonical survivor).
 
-    The shingle-hash computation feeds both candidate generation and the
-    verify join, so it's materialized once (cache) instead of recomputed
-    in three scans; at cluster scale this is a persisted intermediate,
-    exactly like a CTE a warehouse would spool. Jaccard verification runs
-    on the hashed shingle sets — identical counts modulo (negligible)
-    64-bit collisions, and long-array intersects beat string-array ones.
+    The shingle-hash frame is cached (see ``_shingle_hash_frame``).
+    Jaccard verification runs on the hashed shingle sets — identical
+    counts modulo (negligible) 64-bit collisions, and long-array
+    intersects beat string-array ones.
     """
-    sh = _parallel_floor(df).select(
-        F.col(id_col).alias("id"), shingle_hashes(text_col, shingle_k).alias("sh")
-    ).withColumn("sz", F.size("sh")).cache()
-    j = _jaccard_verified_pairs(sh, threshold, **lsh_kwargs)
+    sh = _shingle_hash_frame(df, id_col, text_col, shingle_k)
+    j = _jaccard_verified_pairs(sh, threshold)
     # Materialize the (tiny: ids only) loser set eagerly so the shingle
     # cache can be released here instead of leaking for the session's
     # lifetime — the returned frame then depends only on the checkpoint.
@@ -404,10 +350,10 @@ def ngram_jaccard_dedup(
     return df.join(losers, id_col, "left_anti")
 
 
-def _jaccard_verified_pairs(sh, threshold: float, **lsh_kwargs) -> DataFrame:
+def _jaccard_verified_pairs(sh, threshold: float) -> DataFrame:
     """LSH candidates → exact Jaccard verify over a (id, sh, sz) shingle
     frame; returns the verified pairs (id_a < id_b, jaccard)."""
-    cands = _lsh_candidates_from_shingles(sh, **lsh_kwargs)
+    cands = _lsh_candidates_from_shingles(sh)
     # |A∪B| from sizes (one array op per pair, not two), with a cheap
     # size-ratio pre-filter: J ≥ t needs min/max ≥ t, and the conjunct
     # ordering short-circuits the intersect for pairs that can't qualify.
@@ -440,7 +386,6 @@ def ngram_jaccard_dedup_keep_best(
     score_col: str | None = None,
     shingle_k: int = 3,
     threshold: float = 0.7,
-    **lsh_kwargs,
 ) -> DataFrame:
     """Cluster-CANONICAL fuzzy dedup: keep the best-scored row per
     transitive duplicate cluster (RefinedWeb-style keep-longest /
@@ -462,10 +407,8 @@ def ngram_jaccard_dedup_keep_best(
         if score_col
         else F.length(F.col(text_col)).cast("double")
     )
-    sh = _parallel_floor(df).select(
-        F.col(id_col).alias("id"), shingle_hashes(text_col, shingle_k).alias("sh")
-    ).withColumn("sz", F.size("sh")).cache()
-    pairs = _jaccard_verified_pairs(sh, threshold, **lsh_kwargs).select(
+    sh = _shingle_hash_frame(df, id_col, text_col, shingle_k)
+    pairs = _jaccard_verified_pairs(sh, threshold).select(
         "id_a", "id_b"
     ).localCheckpoint(eager=True)
     sh.unpersist()
@@ -728,14 +671,15 @@ def _shingle_frame(
     diagnostics. The parallelism floor spreads the per-doc
     shingle+hash work when the scan is narrower than the cluster
     (no-op at scale; see _parallel_floor)."""
+    check_literal_parsing(df.sparkSession)
     blk = F.col(block_col) if block_col else F.lit("")
     return (
         _parallel_floor(df).select(
             F.col(id_col).alias("id"),
             blk.alias("blk"),
-            raw_shingles(text_col, shingle_k).alias("raw"),
+            F.expr(raw_shingles(sql_ident(text_col), shingle_k)).alias("raw"),
         )
-        .withColumn("sh", F.array_distinct(F.transform("raw", lambda s: F.xxhash64(s))))
+        .withColumn("sh", F.expr("array_distinct(transform(raw, __s -> xxhash64(__s)))"))
         .withColumn("sz", F.size("raw"))
     )
 
@@ -790,7 +734,7 @@ def _prefix_buckets(
     plen = (F.col("sz") - F.ceil(F.col("sz") * threshold) + 1).cast("int")
     pref = arr.select(
         "id", "blk", "sz",
-        F.posexplode(F.slice(F.transform("st", lambda s: s["h"]), 1, plen)).alias(
+        F.posexplode(F.slice(F.expr("transform(st, __s -> __s.h)"), 1, plen)).alias(
             "pos", "h"
         ),
     )
@@ -835,27 +779,14 @@ def _bucket_pairs(threshold: float) -> Column:
     and remaining >= inter always — so any verify-accepted pair passes,
     with no ceil/float-rounding edge for non-dyadic thresholds."""
 
-    def keep(x: Column, y: Column) -> Column:
-        ratio_ok = F.least(x["sz"], y["sz"]) >= F.lit(threshold) * F.greatest(
-            x["sz"], y["sz"]
-        )
-        szsum = x["sz"] + y["sz"]
-        remaining = F.least(x["sz"] - x["pos"], y["sz"] - y["pos"])
-        pos_ok = remaining >= F.lit(threshold) * (szsum - remaining)
-        return ratio_ok & pos_ok
-
-    base = F.col("ci") * F.col("ck")
-    return F.flatten(
-        F.transform(
-            F.slice(F.col("xs"), base + 1, F.col("ck")),
-            lambda x, i: F.transform(
-                F.filter(
-                    F.slice(F.col("xs"), base + i + 2, F.size(F.col("xs"))),
-                    lambda y: keep(x, y),
-                ),
-                lambda y: F.struct(x["id"].alias("id_a"), y["id"].alias("id_b")),
-            ),
-        )
+    t = sql_double(threshold)
+    ratio_ok = f"least(__x.sz, __y.sz) >= {t} * greatest(__x.sz, __y.sz)"
+    remaining = "least(__x.sz - __x.pos, __y.sz - __y.pos)"
+    pos_ok = f"{remaining} >= {t} * (__x.sz + __y.sz - {remaining})"
+    return F.expr(
+        "flatten(transform(slice(xs, ci * ck + 1, ck), (__x, __i) -> transform("
+        f"filter(slice(xs, ci * ck + __i + 2, size(xs)), __y -> {ratio_ok} AND {pos_ok}),"
+        " __y -> struct(__x.id AS id_a, __y.id AS id_b))))"
     )
 
 
@@ -876,76 +807,29 @@ def prefix_bucket_sizes(
     )
 
 
-def simhash64(text_col: Column | str, ngram: int = 2) -> Column:
-    """64-bit SimHash over word n-gram features, as pure expressions.
+def simhash_blocks_md5(text: str, ngram: int = 2, blocks: int = 4) -> Column:
+    """64-bit SimHash of the SQL text ``text`` as an array of ``blocks``
+    block values (16 bits each at blocks=4), feature-hashed with **md5**.
 
-    Each feature votes ±1 per bit (from xxhash64 of the feature); the
-    signature packs the vote signs. aggregate+zip_with keeps it one
-    projection — no shuffle, no UDF.
-    """
-    feats = shingles(text_col, ngram)
+    md5 exists with identical output in DuckDB, so a catalog entry built
+    on it is fully oracle-checkable in SQL (plans/textops.py
+    _SIMHASH_ORACLE mirrors every step bit-for-bit). Bit i of a feature
+    = bit (i mod 4) of hex digit (i div 4) of md5(feature); signature bit
+    = vote sum > 0; block b packs bits [16b, 16b+16) little-endian. All
+    expressions, one md5 per feature, no shuffle.
 
-    def bit_votes(t):
-        # Literal shift amounts (shiftright needs a Python int), one ±1
-        # vote per bit of xxhash64(feature).
-        return F.array(
-            *[
-                F.when(F.shiftrightunsigned(F.xxhash64(t), i).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1)
-                .cast("long")
-                for i in range(64)
-            ]
-        )
-
-    votes = F.aggregate(
-        feats,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(acc, bit_votes(t), lambda a, v: a + v),
-    )
-    # Pack vote signs into one long; bit 63 is the sign bit (Long.MIN).
-    bit_terms = [
-        F.when(F.element_at(votes, i + 1) > 0, F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-        for i in range(64)
-    ]
-    packed = bit_terms[0]
-    for term in bit_terms[1:]:
-        packed = packed.bitwiseOR(term)
-    return packed
-
-
-def simhash_blocks_md5(text_col: Column | str, ngram: int = 2, blocks: int = 4) -> Column:
-    """64-bit SimHash as an array of ``blocks`` block values (16 bits
-    each at blocks=4), feature-hashed with **md5** instead of xxhash64.
-
-    Why a second hash: md5 exists with identical output in DuckDB, so a
-    catalog entry built on this variant is fully oracle-checkable in SQL
-    (plans/textops.py _SIMHASH_ORACLE mirrors every step bit-for-bit) —
-    the xxhash64 variant (`simhash64`) stays the cheap JVM-hash default
-    for production pipelines. Bit i of a feature = bit (i mod 4) of hex
-    digit (i div 4) of md5(feature); signature bit = vote sum > 0; block
-    b packs bits [16b, 16b+16) little-endian. All expressions, one md5
-    per feature, no shuffle."""
+    The vote fold is SQL text; the block packing reads the fold 64 times,
+    so it is built on the fold's Column rather than repeating its text."""
     width = 64 // blocks
-    feats = shingles(text_col, ngram)
-    hexes = F.transform(feats, lambda t: F.md5(t))
-
-    def bit_votes(h: Column) -> Column:
-        votes = []
-        for i in range(64):
-            c, b = divmod(i, 4)
-            digit = F.conv(F.substring(h, c + 1, 1), 16, 10).cast("int")
-            votes.append(
-                F.when(F.shiftright(digit, b).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1)
-                .cast("long")
-            )
-        return F.array(*votes)
-
-    votes = F.aggregate(
-        hexes,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(acc, bit_votes(h), lambda a, v: a + v),
+    hexes = f"transform({shingles(text, ngram)}, __t -> md5(__t))"
+    bit_votes = ", ".join(
+        f"CAST(CASE WHEN (shiftright(CAST(conv(substring(__h, {c + 1}, 1), 16, 10) AS INT), {b})"
+        " & 1) = 1 THEN 1 ELSE -1 END AS BIGINT)"
+        for c, b in (divmod(i, 4) for i in range(64))
+    )
+    votes = F.expr(
+        f"aggregate({hexes}, array_repeat(CAST(0 AS BIGINT), 64),"
+        f" (__acc, __h) -> zip_with(__acc, array({bit_votes}), (__a, __v) -> __a + __v))"
     )
     block_cols = []
     for bidx in range(blocks):
@@ -959,11 +843,11 @@ def simhash_blocks_md5(text_col: Column | str, ngram: int = 2, blocks: int = 4) 
     return F.array(*block_cols)
 
 
-def _hamming_blocks(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda p, q: F.bit_count(p.bitwiseXOR(q)).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
+def _hamming_blocks(a: str, b: str) -> str:
+    """Hamming distance between two block arrays (SQL text)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (__p, __q) -> CAST(bit_count(__p ^ __q) AS INT)),"
+        " 0, (__acc, __d) -> __acc + __d)"
     )
 
 
@@ -974,9 +858,9 @@ def simhash_candidates(
     blocks: int = 4,
     max_hamming: int = 3,
     max_bucket: int = 200,
-    feature_hash: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash near-dup pairs: split the 64-bit signature into ``blocks``
+    """SimHash near-dup pairs over the md5 signature (see
+    simhash_blocks_md5): split the 64-bit signature into ``blocks``
     16-bit blocks; by pigeonhole, pairs within ``max_hamming`` ≤ blocks-1
     share ≥1 exact block → group per block value, verify Hamming ≤ max.
     Output: (id_a, id_b, hamming).
@@ -986,19 +870,9 @@ def simhash_candidates(
     MinHash LSH path, so a skewed block value can't make the pair stage
     quadratic — per-bucket work is O(cap²), ONE shuffle total. The slice
     keeps the lowest ids, so the cap is deterministic (and mirrored
-    exactly in the SQL oracle). ``feature_hash='md5'`` selects the
-    DuckDB-portable signature (see simhash_blocks_md5)."""
-    width = 64 // blocks
-    if feature_hash == "md5":
-        blocks_arr = simhash_blocks_md5(text_col, ngram=2, blocks=blocks)
-    else:
-        sig = simhash64(text_col)
-        blocks_arr = F.array(
-            *[
-                F.shiftrightunsigned(sig, b * width).bitwiseAND(F.lit((1 << width) - 1))
-                for b in range(blocks)
-            ]
-        )
+    exactly in the SQL oracle)."""
+    check_literal_parsing(df.sparkSession)
+    blocks_arr = simhash_blocks_md5(sql_ident(text_col), ngram=2, blocks=blocks)
     sigd = df.select(F.col(id_col).alias("id"), blocks_arr.alias("blk"))
     exploded = sigd.select(
         "id", F.posexplode(F.col("blk")).alias("block_idx", "block_val"), "blk"
@@ -1010,22 +884,14 @@ def simhash_candidates(
             max_bucket,
         ).alias("members")
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("members"),
-            lambda x, i: F.transform(
-                F.slice(F.col("members"), i + 2, max_bucket),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    _hamming_blocks(x["blk"], y["blk"]).alias("hamming"),
-                ),
-            ),
-        )
+    pairs = _bucket_pair_structs(
+        "members",
+        max_bucket,
+        f"__x.id AS id_a, __y.id AS id_b, {_hamming_blocks('__x.blk', '__y.blk')} AS hamming",
     )
     return (
         buckets.filter(F.size("members") > 1)
-        .select(F.explode(pairs).alias("p"))
+        .select(F.explode(F.expr(pairs)).alias("p"))
         .select("p.id_a", "p.id_b", "p.hamming")
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
@@ -1066,7 +932,7 @@ def symdelete_fuzzy_pairs(
     # DESCEND; for s='' the lone variant equals s and is harmless.
     variants = F.expr(
         "transform(sequence(1, greatest(length(s), 1)),"
-        " i -> concat(substring(s, 1, i - 1), substring(s, i + 1, length(s))))"
+        " __i -> concat(substring(s, 1, __i - 1), substring(s, __i + 1, length(s))))"
     )
     keys = base.select(
         "id",

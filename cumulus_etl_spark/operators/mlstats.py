@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import check_literal_parsing, sql_ident
+from cumulus_etl_spark.operators.dedup import tokens
+
 
 def _xcols(features: list[str]) -> list[Column]:
     return [F.col(c).cast("double") for c in features]
@@ -299,11 +302,8 @@ def nb_score(
     # with no second explode of the corpus, no token-sized shuffle, and
     # no extra join (guide §2.3 aggregate-before-shuffle / §4 prefer
     # expressions).
-    n_tok_row = F.size(
-        F.filter(
-            F.split(F.lower(F.trim(text_col)), r"\s+"), lambda w: w != ""
-        )
-    ).cast("double")
+    check_literal_parsing(docs.sparkSession)
+    n_tok_row = F.expr(f"CAST(size(filter({tokens(sql_ident(text_col))}, __w -> __w != '')) AS DOUBLE)")
     doc_len = (
         docs.select(F.col(id_col).alias("id"), n_tok_row.alias("__n"))
         .groupBy("id")

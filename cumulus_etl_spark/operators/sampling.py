@@ -2,9 +2,9 @@
 
 The reference's reservoir sampler (sample/cli.py:118-137, Algorithm R with
 a seedable RNG) is a single-stream algorithm; the distributed equivalent
-is a seeded-random total order + limit (exact-N) or Bernoulli sample()
-(approximate, no shuffle). Both deterministic under a fixed seed +
-partitioning.
+is a seeded-random total order + limit (exact-N) or per-stratum Bernoulli
+``sampleBy`` (approximate, no shuffle). Both deterministic under a fixed
+seed + partitioning.
 """
 
 from __future__ import annotations
@@ -21,12 +21,6 @@ def reservoir_sample(df: DataFrame, n: int, seed: int = 42, tiebreak: list[str] 
     for c in tiebreak or []:
         order.append(F.col(c).asc())
     return df.orderBy(*order).limit(n)
-
-
-def bernoulli_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """Approximate fraction sample — no shuffle at all; the scan filter is
-    pushed into the scan stage. Use at 100TB where exact-N isn't needed."""
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
 
 
 def stratified_sample(df: DataFrame, strata_col: str, fractions: dict, seed: int = 42) -> DataFrame:

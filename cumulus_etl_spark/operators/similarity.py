@@ -38,6 +38,8 @@ import random
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import sql_double
+
 
 def as_double(v: str) -> str:
     return f"transform({v}, x -> cast(x as double))"
@@ -137,7 +139,7 @@ def double_array_sql(xs, depth: int) -> str:
     parses this string once, and ``repr`` round-trips every double
     exactly."""
     if depth == 0:
-        return repr(float(xs)) + "D"
+        return sql_double(xs)
     return "array(" + ",".join(double_array_sql(x, depth - 1) for x in xs) + ")"
 
 

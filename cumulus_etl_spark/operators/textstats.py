@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import check_literal_parsing, sql_ident, sql_str
+
 # Tiny per-language stopword sets for the n-gram/stopword language heuristic.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "and", "of", "to", "in", "is"),
@@ -44,11 +46,14 @@ def punct_count(text: Column | str) -> Column:
     return F.size(F.regexp_extract_all(t, F.lit(PUNCT_PATTERN), F.lit(0)))
 
 
+def _stopword_pattern(lang: str) -> str:
+    return r"(?i)\b(?:" + "|".join(LANG_STOPWORDS[lang]) + r")\b"
+
+
 def stopword_count(text: Column | str, lang: str = "en") -> Column:
     """Count of stopword hits (word-bounded, case-insensitive)."""
     t = F.col(text) if isinstance(text, str) else text
-    pattern = r"(?i)\b(?:" + "|".join(LANG_STOPWORDS[lang]) + r")\b"
-    return F.size(F.regexp_extract_all(t, F.lit(pattern), F.lit(0)))
+    return F.size(F.regexp_extract_all(t, F.lit(_stopword_pattern(lang)), F.lit(0)))
 
 
 def quality_features(text: Column | str) -> dict[str, Column]:
@@ -68,33 +73,26 @@ def quality_features(text: Column | str) -> dict[str, Column]:
     }
 
 
-def lang_id(text: Column | str) -> Column:
-    """Stopword-vote language ID: the language whose stopword set hits the
-    text most wins; ties broken by language code order; no hits → 'und'.
+def lang_id(text: str) -> str:
+    """Stopword-vote language ID of the SQL text ``text``: the language
+    whose stopword set hits the text most wins; ties broken by language
+    code order; no hits → 'und'.
 
     A real deployment swaps in fastText/CLD3 via pandas_udf — this is the
     dependency-free heuristic baseline, fully JVM-side.
     """
-    t = F.col(text) if isinstance(text, str) else text
-    # struct(hits, negated lang) sorted desc by hits picks the winner.
-    scored = F.array(
-        *[
-            F.struct(
-                stopword_count(t, lang).alias("hits"),
-                F.lit(lang).alias("lang"),
-            )
-            for lang in sorted(LANG_STOPWORDS)
-        ]
+    # struct(hits, lang) sorted desc by hits picks the winner.
+    scored = ", ".join(
+        f"struct(size(regexp_extract_all({text}, {sql_str(_stopword_pattern(lang))}, 0)) AS hits,"
+        f" {sql_str(lang)} AS lang)"
+        for lang in sorted(LANG_STOPWORDS)
     )
-    best = F.array_sort(
-        scored,
-        lambda a, b: F.when(a["hits"] > b["hits"], -1)
-        .when(a["hits"] < b["hits"], 1)
-        .when(a["lang"] < b["lang"], -1)
-        .when(a["lang"] > b["lang"], 1)
-        .otherwise(0),
-    )[0]
-    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
+    best = (
+        f"array_sort(array({scored}), (__a, __b) -> CASE WHEN __a.hits > __b.hits THEN -1"
+        " WHEN __a.hits < __b.hits THEN 1 WHEN __a.lang < __b.lang THEN -1"
+        " WHEN __a.lang > __b.lang THEN 1 ELSE 0 END)[0]"
+    )
+    return f"CASE WHEN {best}.hits > 0 THEN {best}.lang ELSE 'und' END"
 
 
 def fingerprint(text: Column | str) -> Column:
@@ -105,35 +103,26 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.lower(F.regexp_replace(F.trim(t), r"\s+", " ")))
 
 
-def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis feature set to a documents DataFrame."""
-    feats = quality_features(text_col)
-    return df.select(
-        "*",
-        *[c.alias(name) for name, c in feats.items()],
-        bpe_ish_token_count(text_col).alias("n_bpe_tokens"),
-        lang_id(text_col).alias("lang_pred"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
-
-
-def words_array(text: Column | str) -> Column:
-    """Whitespace word array; empty array for blank OR NULL text.
+def words_array(text: str) -> str:
+    """Whitespace word array of the SQL text ``text``; empty array for
+    blank OR NULL text.
 
     The coalesce matters: with NULL text, size(split(NULL)) is -1 in Spark
     (n_words=-1, keep=false) while the DuckDB oracles propagate NULL — a
     latent parity break if documents.text ever becomes nullable.  Treating
     NULL as blank keeps both engines identical."""
-    t = F.trim(F.coalesce(F.col(text) if isinstance(text, str) else text, F.lit("")))
-    return F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, TOKEN_SPLIT)
+    t = f"trim(coalesce({text}, ''))"
+    return (
+        f"CASE WHEN {t} = '' THEN CAST(array() AS ARRAY<STRING>)"
+        f" ELSE split({t}, {sql_str(TOKEN_SPLIT)}) END"
     )
 
 
-def repetition_features(words: Column) -> dict[str, Column]:
-    """Gopher-style repetition/quality features over a word array
-    (Rae et al. 2021 §A1.1 repetition-removal rules, re-expressed as pure
-    Catalyst expressions — row-local, no shuffle, scale-free):
+def repetition_features(words: str) -> dict[str, str]:
+    """Gopher-style repetition/quality features over the word array
+    ``words`` (SQL text), each as SQL text (Rae et al. 2021 §A1.1
+    repetition-removal rules, re-expressed as pure Catalyst expressions —
+    row-local, no shuffle, scale-free):
 
     - ``dup_word_frac``: fraction of word occurrences that are repeats
     - ``dup_bigram_frac``: same for adjacent word bigrams
@@ -143,39 +132,28 @@ def repetition_features(words: Column) -> dict[str, Column]:
     - ``mean_word_len``: average word length
     - ``alpha_word_frac``: fraction of words containing a letter
     """
-    n = F.size(words)
-    safe_n = F.greatest(n, F.lit(1))
-    nd = F.size(F.array_distinct(words))
-    bigrams = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(words, 1, safe_n - 1),
-            F.slice(words, 2, safe_n - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    nb = F.size(bigrams)
-    safe_nb = F.greatest(nb, F.lit(1))
-    top = F.coalesce(
-        F.array_max(
-            F.transform(
-                F.array_distinct(words),
-                lambda u: F.size(F.filter(words, lambda w: w == u)),
-            )
-        ),
-        F.lit(0),
+    n = f"size({words})"
+    safe_n = f"greatest({n}, 1)"
+    nd = f"size(array_distinct({words}))"
+    bigrams = (
+        f"CASE WHEN {n} >= 2 THEN zip_with(slice({words}, 1, {safe_n} - 1),"
+        f" slice({words}, 2, {safe_n} - 1), (__a, __b) -> concat_ws(' ', __a, __b))"
+        " ELSE CAST(array() AS ARRAY<STRING>) END"
     )
-    sum_len = F.coalesce(
-        F.aggregate(words, F.lit(0), lambda acc, w: acc + F.length(w)), F.lit(0)
+    nb = f"size({bigrams})"
+    top = (
+        f"coalesce(array_max(transform(array_distinct({words}),"
+        f" __u -> size(filter({words}, __w -> __w = __u)))), 0)"
     )
-    alpha = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
+    sum_len = f"coalesce(aggregate({words}, 0, (__acc, __w) -> __acc + length(__w)), 0)"
+    alpha = f"size(filter({words}, __w -> __w RLIKE '[A-Za-z]'))"
     return {
         "n_words": n,
-        "dup_word_frac": (n - nd) / safe_n,
-        "dup_bigram_frac": (nb - F.size(F.array_distinct(bigrams))) / safe_nb,
-        "top_word_frac": top / safe_n,
-        "mean_word_len": sum_len / safe_n,
-        "alpha_word_frac": alpha / safe_n,
+        "dup_word_frac": f"({n} - {nd}) / {safe_n}",
+        "dup_bigram_frac": f"({nb} - size(array_distinct({bigrams}))) / greatest({nb}, 1)",
+        "top_word_frac": f"{top} / {safe_n}",
+        "mean_word_len": f"{sum_len} / {safe_n}",
+        "alpha_word_frac": f"{alpha} / {safe_n}",
     }
 
 
@@ -215,8 +193,9 @@ def _bpe_vocab_state(docs, text_col: str, keep_word: bool = False):
     raw word ``w`` when keep_word (the encoder needs it back)."""
     from pyspark.sql import functions as F
 
+    check_literal_parsing(docs.sparkSession)
     words = docs.select(
-        F.explode(words_array(F.lower(F.col(text_col)))).alias("w")
+        F.explode(F.expr(words_array(f"lower({sql_ident(text_col)})"))).alias("w")
     ).filter(F.length("w") > 0)
     wc = words.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     cols = (["w"] if keep_word else []) + [
@@ -236,14 +215,13 @@ def _bpe_merge_loop(state, n_merges: int):
 
     merges: list[tuple[int, str, int]] = []
     for r in range(1, n_merges + 1):
-        arr = F.split("s", " ")
-        pairs = F.zip_with(
-            F.slice(arr, 1, F.size(arr) - 1),
-            F.slice(arr, 2, F.size(arr) - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
+        arr = "split(s, ' ')"
+        pairs = F.expr(
+            f"zip_with(slice({arr}, 1, size({arr}) - 1), slice({arr}, 2, size({arr}) - 1),"
+            " (__a, __b) -> concat_ws(' ', __a, __b))"
         )
         top = (
-            state.filter(F.size(arr) >= 2)
+            state.filter(F.expr(f"size({arr}) >= 2"))
             .select(F.explode(pairs).alias("pair"), "n")
             .groupBy("pair")
             .agg(F.sum("n").alias("cnt"))

@@ -1747,17 +1747,10 @@ def _support2_copurchase_pairs(li: DataFrame) -> DataFrame:
     lists = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_list("l_partkey")).alias("xs")
     ).filter(F.size("xs") > 1)
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("xs"),
-            lambda x, i: F.transform(
-                F.filter(
-                    F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                    lambda y: y != x,
-                ),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
+    pair_expr = F.expr(
+        "flatten(transform(xs, (__x, __i) -> transform("
+        "filter(slice(xs, __i + 2, size(xs)), __y -> __y != __x),"
+        " __y -> struct(__x AS u, __y AS v))))"
     )
     return (
         lists.select(F.explode(pair_expr).alias("p"))
@@ -1882,14 +1875,9 @@ def agg_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("l_partkey")).alias("xs"))
         .filter(F.size("xs") > 1)
     )
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("xs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                lambda y: F.struct(x.alias("ante"), y.alias("cons")),
-            ),
-        )
+    pair_expr = F.expr(
+        "flatten(transform(xs, (__x, __i) -> transform(slice(xs, __i + 2, size(xs)),"
+        " __y -> struct(__x AS ante, __y AS cons))))"
     )
     pair = (
         lists.select(F.explode(pair_expr).alias("p"))

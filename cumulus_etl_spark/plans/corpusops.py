@@ -7,7 +7,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import check_literal_parsing
 from cumulus_etl_spark.operators import corpus as C
+from cumulus_etl_spark.operators import dedup as D
 from cumulus_etl_spark.operators import textstats as T
 from cumulus_etl_spark.plans.catalog import register
 from cumulus_etl_spark.sources import table
@@ -576,7 +578,8 @@ def corpus_importance_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pytest-verified against numpy). Two shuffles: (doc,word) counts and
     the vocab join — the vocab side broadcasts at scale (Heaps' law)."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", "source", F.explode(C._tokens("text")).alias("word"))
+    check_literal_parsing(spark)
+    toks = d.select("doc_id", "source", F.explode(F.expr(D.tokens("`text`"))).alias("word"))
     dc = toks.groupBy("doc_id", "source", "word").agg(F.count(F.lit(1)).alias("c"))
     stats = toks.groupBy("word").agg(
         F.sum(F.when(F.col("source") == "src0", 1).otherwise(0)).alias("t_w"),

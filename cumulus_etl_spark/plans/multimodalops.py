@@ -42,15 +42,6 @@ def _le_hex(expr: str, nbytes: int) -> str:
     return f"concat({pairs})"
 
 
-def _payloads(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.encode("text", "utf-8").alias("payload"),
-        F.lit(f"{kind}/synthetic").alias("ct"),
-    )
-
-
 # ---- image: planted BMP headers, real struct parse ----
 
 _BMP_W = "16 + length(text) % 240"
@@ -316,19 +307,9 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.length("frame_payload")).cast("bigint").alias("total_frame_bytes"),
         F.min("frame_offset").alias("first_frame_offset"),
         F.max("frame_offset").alias("last_frame_offset"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("frame_index").alias("i"),
-                            F.hex("frame_payload").alias("hx"),
-                        )
-                    )
-                ),
-                lambda x: x["hx"],
-            ),
-            "",
+        F.expr(
+            "array_join(transform(array_sort(collect_list(struct(frame_index AS i,"
+            " hex(frame_payload) AS hx))), __x -> __x.hx), '')"
         ).alias("all_hex"),
     )
     return per_video.select(

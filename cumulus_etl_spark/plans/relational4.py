@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import check_literal_parsing, sql_str
 from cumulus_etl_spark.plans.catalog import dec, register
 from cumulus_etl_spark.sources import table
 
@@ -482,21 +483,21 @@ def scalar_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     all Catalyst lambda expressions mirrored by DuckDB list functions.
     Row-local, rides the scan, no shuffle."""
     d = table(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
-    w = F.split(F.trim(F.col("text")), r"\s+")
+    check_literal_parsing(spark)
+    w = "split(trim(`text`), " + sql_str(r"\s+") + ")"
     return d.select(
         "doc_id",
-        F.size(w).alias("n_words"),
-        F.size(F.filter(w, lambda x: F.length(x) >= 5)).alias("n_long_words"),
-        F.aggregate(
-            F.transform(w, lambda x: F.length(x).cast("bigint")),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
+        F.expr(f"size({w})").alias("n_words"),
+        F.expr(f"size(filter({w}, __x -> length(__x) >= 5))").alias("n_long_words"),
+        F.expr(
+            f"aggregate(transform({w}, __x -> CAST(length(__x) AS BIGINT)), CAST(0 AS BIGINT),"
+            " (__acc, __n) -> __acc + __n)"
         ).alias("total_chars"),
-        F.array_contains(w, "spark").alias("has_spark"),
-        F.array_join(
-            F.array_sort(F.array_distinct(F.transform(F.slice(w, 1, 3), F.upper))), ","
+        F.expr(f"array_contains({w}, 'spark')").alias("has_spark"),
+        F.expr(
+            f"array_join(array_sort(array_distinct(transform(slice({w}, 1, 3), __x -> upper(__x)))), ',')"
         ).alias("first3_upper_sorted"),
-        F.element_at(w, -1).alias("last_word"),
+        F.expr(f"element_at({w}, -1)").alias("last_word"),
     )
 
 

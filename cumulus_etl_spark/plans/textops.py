@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import check_literal_parsing
 from cumulus_etl_spark.operators import dedup as D
 from cumulus_etl_spark.operators import textstats as T
 from cumulus_etl_spark.plans.catalog import register
@@ -129,7 +130,8 @@ FROM hits
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID (ties → lang code order)."""
     d = table(spark, sf_dir, "documents")
-    return d.select("doc_id", "lang", T.lang_id("text").alias("lang_pred"))
+    check_literal_parsing(spark)
+    return d.select("doc_id", "lang", F.expr(T.lang_id("`text`")).alias("lang_pred"))
 
 
 _FP_ORACLE = r"""
@@ -396,7 +398,7 @@ def text_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming verify."""
     d = table(spark, sf_dir, "documents")
     return D.simhash_candidates(
-        d, "doc_id", "text", blocks=4, max_hamming=3, feature_hash="md5"
+        d, "doc_id", "text", blocks=4, max_hamming=3
     )
 
 
@@ -447,16 +449,18 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local Catalyst expressions (no shuffle; the filter rides the scan
     at any corpus size)."""
     d = table(spark, sf_dir, "documents")
-    withw = d.select("doc_id", T.words_array("text").alias("words"))
-    feats = T.repetition_features(F.col("words"))
+    check_literal_parsing(spark)
+    withw = d.select("doc_id", F.expr(T.words_array("`text`")).alias("words"))
+    feats = T.repetition_features("`words`")
     g = withw.select(
         "doc_id",
-        feats["n_words"].alias("n_words"),
-        feats["mean_word_len"].alias("mean_word_len"),
-        feats["dup_word_frac"].alias("dup_word_frac"),
-        feats["dup_bigram_frac"].alias("dup_bigram_frac"),
-        feats["top_word_frac"].alias("top_word_frac"),
-        feats["alpha_word_frac"].alias("alpha_word_frac"),
+        *[
+            F.expr(feats[name]).alias(name)
+            for name in (
+                "n_words", "mean_word_len", "dup_word_frac", "dup_bigram_frac",
+                "top_word_frac", "alpha_word_frac",
+            )
+        ],
     )
     # Thresholds are intentionally LOOSENED from the paper's §A1.1 values
     # (50-100,000 words, mean word length 3-10): the synthetic documents
@@ -805,7 +809,8 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry must be scalar-only (pinned by
     test_catalog_guards.py::test_oracled_outputs_are_scalar_only)."""
     d = table(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
-    toks = d.select("doc_id", F.explode(T.words_array(F.lower(F.col("text")))).alias("word"))
+    check_literal_parsing(spark)
+    toks = d.select("doc_id", F.explode(F.expr(T.words_array("lower(`text`)"))).alias("word"))
     tf = toks.groupBy("word").agg(F.count(F.lit(1)).alias("tf"))
     members = toks.select("word", "doc_id").distinct()
     w = Window.partitionBy("word").orderBy("doc_id")
@@ -816,9 +821,8 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(
             F.max("df_full").cast("bigint").alias("df"),
-            F.array_join(
-                F.transform(F.array_sort(F.collect_list("doc_id")), lambda x: x.cast("string")),
-                ",",
+            F.expr(
+                "array_join(transform(array_sort(collect_list(doc_id)), __x -> CAST(__x AS STRING)), ',')"
             ).alias("postings"),
         )
     )

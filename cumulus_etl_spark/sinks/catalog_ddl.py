@@ -61,12 +61,6 @@ def register_table(spark: SparkSession, table: ManagedTable, db: str = "default"
     return qualified
 
 
-def register_all(spark: SparkSession, output_dir: str, names: list[str], db: str = "default") -> list[str]:
-    return [
-        register_table(spark, ManagedTable(spark, output_dir, n), db=db) for n in names
-    ]
-
-
 # ---- Athena external-table DDL emission (K6 proper) ----
 #
 # For lakes that Athena queries directly, emit the same CREATE EXTERNAL

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cumulus_etl_spark.functions import check_literal_parsing, sql_ident
 from cumulus_etl_spark.operators.dedup import banded_signatures, shingle_hashes
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
 from cumulus_etl_spark.streaming.ckpt import fold_stream
@@ -67,8 +68,10 @@ class DedupIndex:
     def ingest_batch(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> None:
         """Index a batch of new docs and record verified near-dups
         against everything ingested before them (and within the batch)."""
+        check_literal_parsing(docs.sparkSession)
         sh = docs.select(
-            F.col(id_col).alias("id"), shingle_hashes(text_col, self.shingle_k).alias("sh")
+            F.col(id_col).alias("id"),
+            F.expr(shingle_hashes(sql_ident(text_col), self.shingle_k)).alias("sh"),
         ).localCheckpoint(eager=True)  # feeds banding, verify, and the merge
         banded = banded_signatures(sh, num_hashes=self.num_hashes, bands=self.bands)
 

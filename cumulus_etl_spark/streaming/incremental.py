@@ -73,10 +73,9 @@ def incremental_etl(
 
     def fold(lines: DataFrame, batch_id: int) -> None:
         good, bad = parse_lines(lines, [resource_type], task.fields(census(lines)))
-        # The batch's session, a clone: the rows Observation completes only there.
         summary = _run_task(
-            lines.sparkSession, task, good, bad, tombstones(lines), output_dir, codebook,
-            scrubber, None, errors_dir=errors_dir, errors_mode="append",
+            task, good, bad, tombstones(lines), output_dir, codebook, scrubber, None,
+            errors_dir=errors_dir, errors_mode="append",
         )
         for key in total:
             total[key] += summary[key]

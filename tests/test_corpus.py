@@ -514,13 +514,32 @@ def test_remove_repeated_spans_planted_dups(spark):
         assert all(r["clean_len"] >= 0 for r in out.values())
 
 
-def test_raw_shingles_matches_reference_shingles(spark):
-    """raw_shingles (the O(tokens·k) zip_with form feeding exact
-    verification) must equal shingles() (the readable O(tokens²)
-    reference) for k=1..3 including short-doc and empty edge cases."""
+def _reference_shingles(text: str, k: int):
+    """Distinct word k-shingles, Column form: a slice per start position
+    of the lowercased whitespace tokens (the test's own reference, built
+    apart from the package's SQL-text builders)."""
     from pyspark.sql import functions as F
 
-    from cumulus_etl_spark.operators.dedup import raw_shingles, shingles, tokens
+    toks = F.split(F.lower(F.trim(F.col(text))), r"\s+")
+    n = F.size(toks)
+    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(0), n - k),
+                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+            )
+        )
+    )
+
+
+def test_raw_shingles_matches_reference_shingles(spark):
+    """raw_shingles (the O(tokens·k) zip_with form feeding exact
+    verification) and shingles() (the O(tokens²) slice form) must each
+    equal the Column-form reference for k=1..3, including short-doc and
+    empty edge cases."""
+    from pyspark.sql import functions as F
+
+    from cumulus_etl_spark.operators.dedup import raw_shingles, shingles
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -532,15 +551,13 @@ def test_raw_shingles_matches_reference_shingles(spark):
     ]
     df = spark.createDataFrame(rows, "id long, text string")
     for k in (1, 2, 3):
-        ref = F.array_sort(F.array_distinct(shingles("text", k)))
-        got = F.array_sort(raw_shingles("text", k))
-        bad = df.select(
-            "id", ref.alias("ref"), got.alias("got")
-        ).filter(F.col("ref") != F.col("got")).collect()
-        if k == 1:
-            # shingles(k=1) builds 1-grams via concat_ws — same tokens
-            bad = [b for b in bad if sorted(b["ref"]) != sorted(b["got"])]
-        assert not bad, (k, bad)
+        ref = F.array_sort(_reference_shingles("text", k))
+        for built in (raw_shingles, shingles):
+            got = F.array_sort(F.array_distinct(F.expr(built("`text`", k))))
+            bad = df.select(
+                "id", ref.alias("ref"), got.alias("got")
+            ).filter(F.col("ref") != F.col("got")).collect()
+            assert not bad, (built.__name__, k, bad)
 
 
 def test_prefix_filter_pairs_k3_equals_bruteforce(spark):
@@ -551,13 +568,13 @@ def test_prefix_filter_pairs_k3_equals_bruteforce(spark):
 
     from pyspark.sql import functions as F
 
-    from cumulus_etl_spark.operators.dedup import prefix_filter_pairs, raw_shingles
+    from cumulus_etl_spark.operators.dedup import prefix_filter_pairs
     from cumulus_etl_spark.sources import table
 
     d = table(spark, "/root/testdata/sf0.001", "documents")
     sets = {
         r["doc_id"]: set(r["sh"])
-        for r in d.select("doc_id", raw_shingles("text", 3).alias("sh")).collect()
+        for r in d.select("doc_id", _reference_shingles("text", 3).alias("sh")).collect()
     }
     t = 0.4
     expect = set()
@@ -1529,7 +1546,7 @@ def test_simhash_bucket_cap_bounds_pair_explosion(spark):
         F.col("id").alias("doc_id"),
         F.lit("the quick brown fox jumps over the lazy dog every day").alias("text"),
     )
-    pairs = D.simhash_candidates(docs, max_bucket=50, feature_hash="md5")
+    pairs = D.simhash_candidates(docs, max_bucket=50)
     rows = pairs.collect()
     assert len(rows) == 50 * 49 // 2  # C(cap, 2), not C(5000, 2)
     assert max(max(r["id_a"], r["id_b"]) for r in rows) < 50  # lowest ids kept
@@ -1544,9 +1561,9 @@ def test_simhash_cap_does_not_change_candidates_on_real_corpus(spark):
 
     d = table(spark, SF, "documents")
     capped = {(r["id_a"], r["id_b"]) for r in
-              D.simhash_candidates(d, feature_hash="md5").collect()}
+              D.simhash_candidates(d).collect()}
     uncapped = {(r["id_a"], r["id_b"]) for r in
-                D.simhash_candidates(d, max_bucket=10**6, feature_hash="md5").collect()}
+                D.simhash_candidates(d, max_bucket=10**6).collect()}
     assert capped == uncapped
 
 
@@ -1560,7 +1577,7 @@ def test_minhash_survivors_equal_exact(spark):
     lsh = {r["doc_id"] for r in
            D.ngram_jaccard_dedup(d, "doc_id", "text", shingle_k=3, threshold=0.7)
            .select("doc_id").collect()}
-    sh = d.select(F.col("doc_id").alias("id"), D.shingles("text", 3).alias("sh")) \
+    sh = d.select(F.col("doc_id").alias("id"), _reference_shingles("text", 3).alias("sh")) \
           .withColumn("sz", F.size("sh"))
     a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b"))

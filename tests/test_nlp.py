@@ -169,11 +169,18 @@ def test_filter_by_coding_ed_notes(spark, tmp_path):
     other = docref("other", text="x")
     other["type"] = {"coding": [{"system": "http://loinc.org", "code": "99999-9"}]}
     bare = docref("bare", text="x")
-    write_ndjson(str(tmp_path), "d.ndjson", [ed, ed2, other, bare])
+    # a system and a code holding a quote and a backslash match exactly:
+    # "near" differs from the allowed code only by a doubled backslash
+    odd_system, odd_code = "urn:o'brien\\notes", "a'b\\c"
+    quoted = docref("quoted", text="x")
+    quoted["type"] = {"coding": [{"system": odd_system, "code": odd_code}]}
+    near = docref("near", text="x")
+    near["type"] = {"coding": [{"system": odd_system, "code": "a'b\\\\c"}]}
+    write_ndjson(str(tmp_path), "d.ndjson", [ed, ed2, other, bare, quoted, near])
     df = load_docrefs(spark, tmp_path, [])  # already written above
-    allowed = {"http://loinc.org": {"18842-5", "34878-9"}}
+    allowed = {"http://loinc.org": {"18842-5", "34878-9"}, odd_system: {odd_code}}
     got = {r["id"] for r in filter_by_coding(df, allowed).collect()}
-    assert got == {"ed1", "ed2"}
+    assert got == {"ed1", "ed2", "quoted"}
 
 
 def test_covid_symptom_study_task(spark, tmp_path):

@@ -4,6 +4,9 @@ SemDeDup, and the SQL-text vector builders (operators/similarity.py)."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -388,12 +391,12 @@ def test_cluster_quality_silhouette_bounds(spark):
     assert rows and all(-1.0 <= r["avg_silhouette"] <= 1.0 for r in rows)
 
 
-def test_vector_plans_build_without_python_lambdas(spark, tmp_path, monkeypatch):
-    """Every vector catalog entry, the vector bench rigs (the IVF index
-    lifecycle among them) and an IVF-PQ index's ingest and refined search
-    build their plans without one Python lambda: the vector math is SQL
-    text the JVM parses in one call, not a lambda whose every node costs
-    py4j round trips at plan build."""
+def test_catalog_plans_build_without_python_lambdas(spark, tmp_path, monkeypatch):
+    """Every catalog entry, every bench rig (the IVF index lifecycle among
+    them) and an IVF-PQ index's ingest and refined search build their
+    plans without one Python lambda: the higher-order math is SQL text
+    the JVM parses in one call, not a lambda whose every node costs py4j
+    round trips at plan build."""
     import pyspark.sql.functions.builtin as B
 
     from cumulus_etl_spark.plans import CATALOG
@@ -408,9 +411,8 @@ def test_vector_plans_build_without_python_lambdas(spark, tmp_path, monkeypatch)
         return create(f)
 
     monkeypatch.setattr(B, "_create_lambda", counted)
-    queries = {n: q for n, q in CATALOG.items() if n.startswith("vector_")}
-    queries.update({n: q for n, q in BENCH_RIGS.items() if "vector" in q.tags})
-    assert len(queries) >= 17
+    queries = {**CATALOG, **BENCH_RIGS}
+    assert len(queries) == len(CATALOG) + len(BENCH_RIGS) >= 159
     per_query = {}
     for name, q in sorted(queries.items()):
         before = len(made)
@@ -427,7 +429,85 @@ def test_vector_plans_build_without_python_lambdas(spark, tmp_path, monkeypatch)
     hits = idx.search(emb.filter(F.col("vec_id") < 3), k=3, n_probe=2, refine_with=emb)
     per_query["IvfIndex pq ingest+search"] = len(made) - before
     assert hits.count() == 9
-    assert per_query == dict.fromkeys(per_query, 0)
+    assert {n: c for n, c in per_query.items() if c} == {}
+
+
+# pyspark.sql.functions higher-order functions: each takes a Python
+# callable and builds a lambda at plan time (array_sort only with a
+# comparator).
+_HIGHER_ORDER = {
+    "transform", "filter", "aggregate", "reduce", "exists", "forall", "zip_with",
+    "transform_keys", "transform_values", "map_filter", "map_zip_with",
+}
+_FUNCTIONS_MODULES = {"pyspark.sql.functions", "pyspark.sql.functions.builtin"}
+
+
+def _dotted(node) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        base = _dotted(node.value)
+        return base and f"{base}.{node.attr}"
+    return None
+
+
+def _higher_order_calls(tree):
+    """(line, function) of each call to a pyspark.sql.functions
+    higher-order function in ``tree``, through a module alias
+    (``F.transform``) or a direct import (``from ... import transform``)."""
+    modules, direct = set(_FUNCTIONS_MODULES), {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            modules.update(a.asname for a in node.names if a.name in _FUNCTIONS_MODULES and a.asname)
+        elif isinstance(node, ast.ImportFrom):
+            for a in node.names:
+                if f"{node.module}.{a.name}" in _FUNCTIONS_MODULES:
+                    modules.add(a.asname or a.name)
+                elif node.module in _FUNCTIONS_MODULES:
+                    direct[a.asname or a.name] = a.name
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        func = _dotted(node.func) or ""
+        mod, _, attr = func.rpartition(".")
+        name = attr if mod in modules else direct.get(func)
+        if name in _HIGHER_ORDER or (
+            name == "array_sort" and (len(node.args) > 1 or node.keywords)
+        ):
+            yield node.lineno, name
+
+
+def test_higher_order_calls_finder():
+    src = (
+        "import pyspark.sql.functions as G\n"
+        "from pyspark.sql import functions as F\n"
+        "from pyspark.sql.functions import transform as t, array_sort\n"
+        "F.transform(c, F.upper)\n"
+        "G.exists(c, f)\n"
+        "t(c, f)\n"
+        "array_sort(c)\n"
+        "array_sort(c, cmp)\n"
+        "F.array_sort(c, comparator=cmp)\n"
+        "df.filter(c)\n"
+        "F.expr('transform(c, __x -> __x)')\n"
+    )
+    assert list(_higher_order_calls(ast.parse(src))) == [
+        (4, "transform"), (5, "exists"), (6, "transform"), (8, "array_sort"), (9, "array_sort"),
+    ]
+
+
+def test_package_passes_no_python_callable_to_a_higher_order_function():
+    """No module of the package calls a pyspark.sql.functions
+    higher-order function: each is SQL text in ``F.expr`` instead. This
+    reaches the code no catalog build does (ETL, NLP, upload) and
+    function-reference arguments such as ``F.transform(c, F.upper)``."""
+    root = Path(__file__).resolve().parents[1] / "cumulus_etl_spark"
+    found = [
+        f"{path.relative_to(root.parent)}:{line} {name}"
+        for path in sorted(root.rglob("*.py"))
+        for line, name in sorted(_higher_order_calls(ast.parse(path.read_text(), str(path))))
+    ]
+    assert found == []
 
 
 def test_composed_vector_builders_match_numpy(spark):
