@@ -553,11 +553,30 @@ def test_raw_shingles_matches_reference_shingles(spark):
     for k in (1, 2, 3):
         ref = F.array_sort(_reference_shingles("text", k))
         for built in (raw_shingles, shingles):
-            got = F.array_sort(F.array_distinct(F.expr(built("`text`", k))))
+            got = F.array_sort(F.expr(built("`text`", k)))
             bad = df.select(
                 "id", ref.alias("ref"), got.alias("got")
             ).filter(F.col("ref") != F.col("got")).collect()
             assert not bad, (built.__name__, k, bad)
+
+
+def test_text_dedup_refuses_escaped_string_literals(spark):
+    """With ``spark.sql.parser.escapedStringLiterals`` on, the ``\\s+``
+    token split in the SQL-text builders would parse with its escaping
+    backslash and split nothing, so the dedup operators raise instead of
+    returning wrong shingles."""
+    from cumulus_etl_spark.operators import dedup as D
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            D.ngram_jaccard_dedup(docs, "doc_id", "text")
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            D.simhash_candidates(docs)
+    finally:
+        spark.conf.set(key, "false")
 
 
 def test_prefix_filter_pairs_k3_equals_bruteforce(spark):
